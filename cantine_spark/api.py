@@ -47,6 +47,10 @@ class BadRequest(ValueError):
     """The 400-response analog (unknown field, bad cursor, bad range)."""
 
 
+def _agg_ranges(query: SearchQuery) -> dict[str, list[tuple]]:
+    return {f_: [tuple(r) for r in v] for f_, v in query.agg.items()}
+
+
 @dataclass
 class SearchQuery:
     fulltext: str | None = None
@@ -130,7 +134,7 @@ class SearchResult:
 class SearchEngine:
     reader: IndexReader
     agg_threshold: int | None = None  # None = ∞ (main.rs:193; prod 300k)
-    # pin segment/docmeta tables in cluster memory — set for long-lived
+    # pin segment/champion tables in cluster memory — set for long-lived
     # serving processes (see FastTopK.pin_tables)
     pin_tables: bool = False
     # driver-tier execution (wand.FastTopK.use_driver): small-posting
@@ -242,15 +246,28 @@ class SearchEngine:
         return SearchCursor.f64_field(float(value), uuid).encode()
 
     # ------------------------------------------------------- segment search
+    def _on_segments(self, node: QueryNode, query: SearchQuery) -> bool:
+        """The engine's one routing decision: the segment kernel answers a
+        query iff its tree is segment-eligible and the fast-field sidecar
+        covers every feature it filters, sorts or aggregates on. Anything
+        else — match-all / pure-negative trees, a stale or absent sidecar,
+        a column added to docmeta after the build — runs on the relational
+        path, the reference implementation."""
+        if self._fast is None or not segment_eligible(node):
+            return False
+        feats = set(query.filter or ()) | set(query.agg or ())
+        if query.sort not in (None, "relevance"):
+            feats.add(query.sort)
+        return self._fast.covers(feats)
+
     def _search_segments(self, node: QueryNode, k: int,
-                         after: tuple | None, query: SearchQuery,
-                         preds: list | None = None,
-                         sort_feature: str | None = None) -> SearchResult:
+                         after: tuple | None,
+                         query: SearchQuery) -> SearchResult:
         """Search on the block-max kernel: one applyInPandas job for
-        candidates+filter+prune+heap (range filters ride a shard-cogrouped
-        docmeta id set; field sorts rank in-kernel by the shard-local
-        fast-field sidecar), one pruned isin-scan hydration for the ≤255
-        winners. total/visited are exact (kernel counts from doc ids).
+        candidates+filter+prune+heap (range filters, field-sort keys and
+        agg inputs all read from the shard-local fast-field sidecar), one
+        pruned isin-scan hydration for the ≤255 winners. total/visited are
+        exact (kernel counts from doc ids).
 
         Aggregations: when no agg gate is configured (agg_threshold None —
         the engine default; the reference's prod default is a 300k gate,
@@ -262,51 +279,34 @@ class SearchEngine:
         only when total ≤ threshold — at 100 TB the gate exists precisely so
         a hot query does NOT pay the aggregation scan, which a fuse-anyway-
         and-discard design would re-introduce."""
-        ctx = self._segment_ctx(node, k, after, query, preds, sort_feature)
-        res = self._fast.search(**ctx["spec"])
+        spec = self._segment_spec(node, k, after, query)
+        res = self._fast.search(**spec)
         # hits are already kernel-ordered (sort key, doc_id tiebreak);
         # hydration is one pruned isin-scan of the doc store
         by_id = (self.executor.hydrate_ids([d for d, _ in res.hits])
                  if res.hits else {})
-        return self._assemble_segment_result(ctx, res, by_id)
+        return self._assemble_segment_result(spec, query, res, by_id)
 
-    def _segment_ctx(self, node: QueryNode, k: int, after: tuple | None,
-                     query: SearchQuery, preds: list | None,
-                     sort_feature: str | None) -> dict:
-        """Build the kernel spec + assembly context for one segment-path
-        query (shared by _search_segments and search_batch)."""
-        fuse_agg = (query.agg is not None and self.agg_threshold is None
-                    and self._fast.has_fastfields
-                    and set(query.agg) <= self._fast._ff_cols)
-        agg_q = ({k_: [tuple(r) for r in v] for k_, v in query.agg.items()}
-                 if fuse_agg else None)
-        # range filters evaluate IN-KERNEL against the shard-local sidecar
-        # when it covers every filtered feature (the reference composes
-        # RangeQuery into the per-segment query, main.rs:152-172); Column
-        # preds + docmeta cogroup remain the pre-sidecar fallback
-        kernel_filters = None
-        if (query.filter and self._fast.has_fastfields
-                and set(query.filter) <= self._fast._ff_cols):
-            kernel_filters = {f_: (lo, hi)
-                              for f_, (lo, hi) in query.filter.items()}
-            preds = None
-        spec = dict(node=node, k=k, after=after,
-                    ascending=query.ascending, preds=preds,
-                    sort_feature=sort_feature, agg_query=agg_q,
-                    range_filters=kernel_filters)
-        return {"spec": spec, "query": query, "node": node, "k": k,
-                "preds": preds, "sort_feature": sort_feature,
-                "fuse_agg": fuse_agg, "kernel_filters": kernel_filters}
+    def _segment_spec(self, node: QueryNode, k: int, after: tuple | None,
+                      query: SearchQuery) -> dict:
+        """FastTopK.search kwargs for one segment-path query (shared by
+        _search_segments and search_batch)."""
+        return dict(
+            node=node, k=k, after=after, ascending=query.ascending,
+            sort_feature=(None if query.sort in (None, "relevance")
+                          else query.sort),
+            agg_query=(_agg_ranges(query)
+                       if query.agg and self.agg_threshold is None else None),
+            range_filters=({f_: tuple(r) for f_, r in query.filter.items()}
+                           if query.filter else None))
 
-    def _assemble_segment_result(self, ctx: dict, res,
+    def _assemble_segment_result(self, spec: dict, query: SearchQuery,
+                                 res: KernelResult,
                                  by_id: dict[int, dict]) -> SearchResult:
         """Turn one KernelResult + hydrated winner rows into a
         SearchResult (items, cursor, agg, stats). by_id may cover a whole
         batch's winners — only this query's ids are read."""
-        query: SearchQuery = ctx["query"]
-        k, sort_feature = ctx["k"], ctx["sort_feature"]
-        fuse_agg, kernel_filters = ctx["fuse_agg"], ctx["kernel_filters"]
-        node, preds = ctx["node"], ctx["preds"]
+        sort_feature = spec["sort_feature"]
         feat = self.features[sort_feature] if sort_feature else None
         items: list[dict] = []
         if res.hits:
@@ -329,15 +329,14 @@ class SearchEngine:
         agg = None
         if query.agg and (self.agg_threshold is None
                           or res.total <= self.agg_threshold):
-            if fuse_agg:
+            if spec["agg_query"]:
                 raw = res.agg  # partials came out of the ONE kernel job
             else:
                 # gated: second collector pass on the segments
                 # (main.rs:137-147), run only now that total is known
-                raw = self._fast.aggregate(
-                    node, {k_: [tuple(r) for r in v]
-                           for k_, v in query.agg.items()}, preds=preds,
-                    range_filters=kernel_filters)
+                raw = self._fast.search(
+                    spec["node"], k=1, range_filters=spec["range_filters"],
+                    agg_query=_agg_ranges(query)).agg
             agg = {}
             for feat, rngs in query.agg.items():
                 kind = self.features[feat].kind
@@ -416,14 +415,11 @@ class SearchEngine:
         # segment reader, cantine/src/index.rs:69-129; filters are Must
         # clauses of the ONE segment query, main.rs:152-172; aggregations
         # are a second collector pass, main.rs:137-147). The relational
-        # postings path remains only for match-all / pure-negative trees
-        # (zero-token docs never appear in segments).
-        if self._fast is not None and segment_eligible(node):
-            sort_feature = (None if query.sort in (None, "relevance")
-                            else query.sort)
-            return self._search_segments(node, k, after, query,
-                                         preds=preds,
-                                         sort_feature=sort_feature)
+        # path takes what the kernel cannot: match-all / pure-negative
+        # trees (zero-token docs never appear in segments) and features
+        # the fast-field sidecar does not cover (_on_segments).
+        if self._on_segments(node, query):
+            return self._search_segments(node, k, after, query)
 
         matched = self._matched(node, preds)
         if matched is None:
@@ -524,10 +520,9 @@ class SearchEngine:
         the serving-throughput lever behind httpserve.QueryBatcher).
 
         Per-query results are identical to search() (differential-tested).
-        Shapes the batch kernel does not cover run solo transparently:
-        relational-path trees (match-all / pure-negative), docmeta-cogroup
-        fallbacks (pre-sidecar indexes), and gated or sidecar-uncovered
-        aggregations (their second pass needs per-query totals first).
+        Queries routed to the relational path (_on_segments) run solo; a
+        gated aggregation's second pass runs per query at assembly, once
+        its total is known.
 
         Per-query error isolation: a query that fails to parse, validate,
         or resolve its cursor (all BadRequest shapes) fails ONLY its own
@@ -552,30 +547,19 @@ class SearchEngine:
                 results[i] = e
                 continue
             resolved.append((i, q, k, node, preds, after))
-        ctxs: dict[int, dict] = {}
+        specs: dict[int, tuple[dict, SearchQuery]] = {}
         for i, query, k, node, preds, after in resolved:
-            if self._fast is None or not segment_eligible(node):
+            if self._on_segments(node, query):
+                specs[i] = (self._segment_spec(node, k, after, query), query)
+            else:
                 results[i] = self._search_resolved(query, k, node, preds,
                                                    after)
-                continue
-            sort_feature = (None if query.sort in (None, "relevance")
-                            else query.sort)
-            ctx = self._segment_ctx(node, k, after, query, preds,
-                                    sort_feature)
-            if ctx["spec"]["preds"] or (query.agg and not ctx["fuse_agg"]):
-                # docmeta cogroup / two-pass agg: solo (absent in serving —
-                # the sidecar always exists there and the gate is off)
-                results[i] = self._search_segments(
-                    node, k, after, query, preds=preds,
-                    sort_feature=sort_feature)
-                continue
-            ctxs[i] = ctx
-        if ctxs:
-            order = list(ctxs)
-            kres = self._fast.search_many([ctxs[i]["spec"] for i in order])
+        if specs:
+            order = list(specs)
+            kres = self._fast.search_many([specs[i][0] for i in order])
             all_ids = sorted({d for r in kres for d, _ in r.hits})
             by_id = (self.executor.hydrate_ids(all_ids) if all_ids else {})
             for i, res in zip(order, kres):
                 results[i] = self._assemble_segment_result(
-                    ctxs[i], res, by_id)
+                    *specs[i], res, by_id)
         return results

@@ -60,9 +60,10 @@ doc shards. Per-partition row metrics land in the manifest.
 from __future__ import annotations
 
 import hashlib
+import logging
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -70,6 +71,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cantine_spark import fsutil
+
+_log = logging.getLogger(__name__)
 
 TEXT_FIELDS = ("content", "path")  # multi-field index (C6 analog of
 # cantine's name/ingredients/instructions, cantine/src/index.rs:195-197)
@@ -526,43 +529,50 @@ class IndexBuilder:
         # critical path entirely and proceeds on a sibling thread while
         # index_stats → segments → term_stats run. Only a resumed build
         # whose postings stage is already on disk reads the parquet back
-        # (cheaper than re-inverting). docs ∥ docmeta ∥ postings-write ∥
-        # (docs → uuid_map) all overlap the segments chain.
+        # (cheaper than re-inverting). (docs → uuid_map) ∥ docmeta ∥
+        # postings-write all overlap the segments chain; uuid_map reads
+        # docs/, so the two run as ONE sequential pool task.
         from cantine_spark.build.segments import build_segments
         seg_path = os.path.join(self.index_dir, "segments")
         ts_path = os.path.join(self.index_dir, "term_stats")
         postings_prebuilt = (not force) and _stage_done(post_path, fingerprint)
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            docs_future = pool.submit(stage_docs)
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            docs_uuid_future = pool.submit(
+                lambda: (stage_docs(), stage_uuid_map()))
             docmeta_future = pool.submit(stage_docmeta)
-            postings_future = pool.submit(stage_postings)
-            uuid_future = pool.submit(
-                lambda: (docs_future.result(), stage_uuid_map()))
-            docmeta_future.result()
-            stage_index_stats()
-            seg_src = (None if postings_prebuilt
-                       else self._postings_df(tokenized))
-            run_stage("segments", seg_path,
-                      lambda: build_segments(spark, self.index_dir,
-                                             n_docs=n_docs,
-                                             postings_df=seg_src))
-            # term_stats: df/cf per (field, term, bucket) — ONE agg over
-            # the small champion sidecar (exactly one row per (field, term,
-            # shard) carrying the group's full df/cf), replacing the old
-            # full postings re-scan. Same layout, same values.
-            run_stage("term_stats", ts_path, lambda: (
-                spark.read.parquet(os.path.join(self.index_dir, "champions"))
-                .groupBy("field", "term")
-                .agg(F.sum("n_total").cast("long").alias("df"),
-                     F.sum("cf").cast("long").alias("cf"))
-                .withColumn("bucket",
-                            bucket_expr(F.col("field"), F.col("term")))
-                .repartition(self.n_buckets, "bucket")
-                .sortWithinPartitions("bucket", "field", "term")
-                .write.mode("overwrite").partitionBy("bucket")
-                .parquet(ts_path)))
-            postings_future.result()
-            uuid_future.result()
+            futures = [docs_uuid_future, docmeta_future,
+                       pool.submit(stage_postings)]
+            try:
+                docmeta_future.result()
+                stage_index_stats()
+                seg_src = (None if postings_prebuilt
+                           else self._postings_df(tokenized))
+                run_stage("segments", seg_path,
+                          lambda: build_segments(spark, self.index_dir,
+                                                 n_docs=n_docs,
+                                                 postings_df=seg_src))
+                # term_stats: df/cf per (field, term, bucket) — ONE agg
+                # over the small champion sidecar (exactly one row per
+                # (field, term, shard) carrying the group's full df/cf),
+                # replacing the old full postings re-scan. Same layout,
+                # same values.
+                run_stage("term_stats", ts_path, lambda: (
+                    spark.read.parquet(
+                        os.path.join(self.index_dir, "champions"))
+                    .groupBy("field", "term")
+                    .agg(F.sum("n_total").cast("long").alias("df"),
+                         F.sum("cf").cast("long").alias("cf"))
+                    .withColumn("bucket",
+                                bucket_expr(F.col("field"), F.col("term")))
+                    .repartition(self.n_buckets, "bucket")
+                    .sortWithinPartitions("bucket", "field", "term")
+                    .write.mode("overwrite").partitionBy("bucket")
+                    .parquet(ts_path)))
+                for f in futures:
+                    f.result()
+            except BaseException as exc:
+                _log_sibling_failures(futures, exc)
+                raise
 
         # per-partition metrics: rows per bucket (skew visibility) — derived
         # from term_stats (Σdf per bucket, a 64-group agg over the small
@@ -600,6 +610,17 @@ class IndexBuilder:
         fsutil.write_json(os.path.join(self.index_dir, "manifest.json"),
                           manifest)
         return manifest
+
+
+def _log_sibling_failures(futures: list, raised: BaseException) -> None:
+    """After a build stage raised, wait for the concurrent stage tasks and
+    log every OTHER failure among them: the pool would otherwise finish
+    them silently, and only `raised` would reach the caller."""
+    wait(futures)
+    for f in futures:
+        exc = f.exception()
+        if exc is not None and exc is not raised:
+            _log.error("concurrent build stage also failed", exc_info=exc)
 
 
 def build_index(spark: SparkSession, corpus_with_ids: DataFrame,

@@ -323,7 +323,8 @@ def write_fastfields(spark: SparkSession, index_dir: str,
 
     Must be (re)written whenever segments are re-encoded with a different
     span — build_segments calls this, and _FF_META.json records the span so
-    readers can detect a stale sidecar and fall back to the cogroup path."""
+    readers can detect a stale sidecar; the engine then answers filtered,
+    sorted and aggregating queries on the relational path."""
     from pyspark.sql.types import NumericType
 
     dm = spark.read.parquet(os.path.join(index_dir, "docmeta"))

@@ -284,15 +284,24 @@ class SearchHTTPServer:
             def do_POST(self):  # noqa: N802
                 if self.path != "/search":
                     return self._json(404, {"error": "not found"})
-                length = int(self.headers.get("Content-Length", 0))
-                if length > MAX_BODY_BYTES:
+                # validate before reading: rfile.read(-1) blocks until the
+                # client closes, and int() of a non-integer raises
+                length = self.headers.get("Content-Length", "0").strip()
+                if not (length.isascii() and length.isdigit()):
+                    return self._json(400, {
+                        "error": "Content-Length must be a non-negative "
+                                 "integer"})
+                if int(length) > MAX_BODY_BYTES:
                     return self._json(413, {
                         "error": f"body exceeds {MAX_BODY_BYTES} bytes"})
-                raw = self.rfile.read(length)
+                raw = self.rfile.read(int(length))
                 try:
                     query = json.loads(raw or b"{}")
                 except json.JSONDecodeError as e:
                     return self._json(400, {"error": f"bad JSON: {e}"})
+                if not isinstance(query, dict):
+                    return self._json(400, {
+                        "error": "body must be a JSON object"})
                 try:
                     res = (batcher.search(query) if batcher is not None
                            else backend.search(query))

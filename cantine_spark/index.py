@@ -133,7 +133,7 @@ class IndexReader:
         return self.spark.read.parquet(fsutil.join(self.index_dir, "segments"))
 
     # ---- segment-path providers. FastTopK consumes the index through these
-    #      four methods (never through raw paths), so a reader that spans
+    #      methods (never through raw paths), so a reader that spans
     #      MULTIPLE tier directories (tiered.TieredIndexReader — the serving
     #      layer's incremental-compaction shape) can present itself as one
     #      logical index by overriding them.
@@ -145,9 +145,6 @@ class IndexReader:
         """Segments table read through the GIVEN session (FastTopK queries on
         a conf-isolated clone of the reader's session)."""
         return spark.read.parquet(fsutil.join(self.index_dir, "segments"))
-
-    def docmeta_df(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(fsutil.join(self.index_dir, "docmeta"))
 
     def fastfields_spec(self) -> dict | None:
         """Fast-field sidecar descriptor: {shard_span, columns, locations}.

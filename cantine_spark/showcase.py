@@ -641,10 +641,10 @@ ORDER BY rn
 
 def bm25_filtered(spark, sf_dir, term="spark", lo=150, hi=350, k=10) -> DataFrame:
     """VERDICT r2 next-round #1 through the REAL engine: fulltext + numeric
-    range filter. The filter's doc-id set cogroups with the compressed
-    segment blocks per shard and is intersected in-kernel like a Must clause
-    (cantine/src/main.rs:152-172 composes filters into the ONE segment
-    query) — the row-per-posting table is never scanned."""
+    range filter, evaluated in-kernel over the shard-local fast-field
+    sidecar like a Must clause (cantine/src/main.rs:152-172 composes
+    filters into the ONE segment query) — the row-per-posting table is
+    never scanned."""
     res = _engine(spark, sf_dir).search(
         {"fulltext": term, "filter": {"content_bytes": [lo, hi]},
          "num_items": k})
@@ -676,8 +676,8 @@ stats AS (
 
 def bm25_sorted_field(spark, sf_dir, term="spark", k=15) -> DataFrame:
     """VERDICT r2 next-round #3 through the REAL engine: fulltext + field
-    sort. The kernel ranks the match set by the docmeta fast-field value
-    (shard-cogrouped, doc_id-asc tie-break) and exact-scores only the ≤k
+    sort. The kernel ranks the match set by the sidecar fast-field value
+    (shard-local, doc_id-asc tie-break) and exact-scores only the ≤k
     winners (tique top_fast_field, top_collector.rs:136-166)."""
     res = _engine(spark, sf_dir).search(
         {"fulltext": term, "sort": "content_bytes", "num_items": k})
@@ -716,9 +716,9 @@ LIMIT {k}
 
 def bm25_filtered_sorted(spark, sf_dir, term="spark", lo=150, hi=400,
                          k=12) -> DataFrame:
-    """r4: filter + field sort in ONE kernel job — the filter's doc-id set
-    cogroups as bare 8-byte ids while the sort values come from the
-    shard-local fast-field sidecar (build/segments.write_fastfields), so
+    """r4: filter + field sort in ONE kernel job — filter and sort values
+    both come from the shard-local fast-field sidecar
+    (build/segments.write_fastfields), so
     neither the filter nor the ranking moves feature columns through a
     shuffle (VERDICT r3 next-round #1; tantivy's FAST columns,
     index.rs:193 + top_collector.rs:136-166)."""

@@ -228,9 +228,6 @@ class TieredIndexReader(IndexReader):
     def segments(self) -> DataFrame:
         return self.segments_df(self.spark)
 
-    def docmeta_df(self, spark: SparkSession) -> DataFrame:
-        return self._union("docmeta", spark)
-
     def doc_store_dirs(self) -> list[str]:
         return [fsutil.join(d, "docs") for d in self.tier_dirs]
 

@@ -8,13 +8,13 @@ live NEXT TO the shard's postings, so a field-sorted or aggregating query
 never moves docmeta through a shuffle. These tests pin:
 
 - the layout invariants (one row per doc, shard = doc_id // span, sorted);
-- the PLAN shape: unfiltered field-sorted fulltext is a plain groupBy
-  kernel (no cogroup, no docmeta scan) — the r3 scale-killer is gone;
-- filtered queries cogroup bare doc_ids only (8 B/passing doc);
-- fused aggregation ≡ the two-pass collector, and the agg_threshold gate
-  still selects the two-pass form;
-- a stale sidecar (span mismatch after re-encode) is detected and the
-  engine falls back to the r3 cogroup path with identical results.
+- the PLAN shape: filtered / field-sorted / aggregating fulltext is a
+  plain groupBy kernel (no cogroup, no docmeta scan);
+- kernel answers ≡ the relational reference engine, and the agg_threshold
+  gate still selects the two-pass form;
+- a stale sidecar (span mismatch after re-encode) is detected: the engine
+  answers such queries on the relational path with identical results, and
+  the kernel refuses features the sidecar does not cover.
 """
 
 from __future__ import annotations
@@ -29,8 +29,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cantine_spark.aggregate import range_filter
-from cantine_spark.api import SearchEngine
+from cantine_spark.api import SearchEngine, SearchQuery
 from cantine_spark.execution.wand import FastTopK
 from cantine_spark.plans.nodes import Term
 
@@ -40,6 +39,23 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def relational(reader, node, q: dict):
+    """The relational reference engine's SearchResult for query tree
+    `node` under the filter / sort / agg of dict query `q`."""
+    eng = SearchEngine(reader)
+    eng._fast = None
+    sq = SearchQuery.from_dict(q, features=eng.features)
+    _, preds = eng.interpret(sq)
+    return eng._search_resolved(sq, sq.num_items or 10, node, preds, None)
+
+
+def as_partials(agg) -> dict:
+    """SearchResult.agg RangeStats → the kernel's (count, min, max)."""
+    return {f: [(s.count, float(s.min), float(s.max)) if s.count
+                else (0, None, None) for s in stats]
+            for f, stats in agg.items()}
 
 
 # ---------------------------------------------------------------- layout
@@ -107,33 +123,17 @@ def test_filtered_query_runs_in_kernel_no_cogroup(reader):
     assert "docmeta" not in plan
     locs = [ln for ln in plan.splitlines() if "Location:" in ln]
     assert len(locs) == 1 and "segments" in locs[0]
-    # totals agree with the Column-pred cogroup fallback
-    ref = fast.search(Term("content", "def"), k=5,
-                      preds=[range_filter("num_lines", 3, 50)],
-                      sort_feature="content_bytes")
-    assert (res.total, res.hits, res.sort_vals) == \
-        (ref.total, ref.hits, ref.sort_vals)
+    # identical to the relational reference engine
+    ref = relational(reader, Term("content", "def"),
+                     {"filter": {"num_lines": [3, 50]},
+                      "sort": "content_bytes", "num_items": 5,
+                      "agg": {"num_lines": [[0, 30], [30, 10**6]]}})
+    assert res.total == ref.total_found
+    assert ([(d, float(v)) for (d, _), v in zip(res.hits, res.sort_vals)]
+            == [(i["doc_id"], float(i["sort_val"])) for i in ref.items])
+    assert res.agg == as_partials(ref.agg)
     # agg buckets partition the filtered match set exactly
     assert sum(c for c, _, _ in res.agg["num_lines"]) == res.total
-
-
-def test_filtered_query_cogroups_bare_doc_ids(reader):
-    """Pre-sidecar FALLBACK (Column preds): the cogroup right side must
-    scan docmeta with the range filter pushed and read ONLY doc_id — the
-    sort column comes from the shard-local sidecar, not the shuffle."""
-    fast = FastTopK(reader, pin_tables=False)
-    res = fast.search(Term("content", "def"), k=5,
-                      preds=[range_filter("num_lines", 3, 50)],
-                      sort_feature="content_bytes")
-    assert res.hits
-    plan = plan_of(fast.last_job)
-    assert "FlatMapCoGroupsInPandas" in plan
-    docmeta_scan = [p for p in plan.split("Scan parquet")
-                    if "docmeta" in p and "ReadSchema" in p]
-    assert len(docmeta_scan) == 1
-    schema = docmeta_scan[0].split("ReadSchema", 1)[1].splitlines()[0]
-    assert "doc_id" in schema and "num_lines" in schema
-    assert "content_bytes" not in schema  # sort values stay shard-local
 
 
 # -------------------------------------------------------------- fused agg
@@ -144,22 +144,23 @@ AGG = {"num_lines": [(0, 20), (20, 40), (40, 10**6)],
 
 
 def test_fused_agg_equals_two_pass(reader):
-    """Differential: the fused sidecar kernel vs the r3 cogroup collector
-    (forced by disabling the sidecar on a second instance) — identical
+    """Differential: the fused kernel agg (k=3) vs the gated second pass
+    (k=1, hits discarded) vs the relational reference engine — identical
     partial merges, filtered and unfiltered."""
     fast = FastTopK(reader)
-    legacy = FastTopK(reader)
-    legacy._ff_dir = None  # force the pre-sidecar cogroup implementation
     node = Term("content", "def")
-    fused = fast.search(node, k=3, agg_query=AGG)
-    assert fused.agg is not None
-    assert fused.agg == fast.aggregate(node, AGG)      # delegates to fused
-    assert fused.agg == legacy.aggregate(node, AGG)    # r3 cogroup path
-    # and with a filter, every path sees the same (filtered) match set
-    preds = [range_filter("content_bytes", 0, 5000)]
-    fused_f = fast.search(node, k=3, preds=preds, agg_query=AGG)
-    assert fused_f.agg == fast.aggregate(node, AGG, preds=preds)
-    assert fused_f.agg == legacy.aggregate(node, AGG, preds=preds)
+    agg_q = {f: [list(r) for r in rs] for f, rs in AGG.items()}
+    for filt in (None, {"content_bytes": (0, 5000)}):
+        fused = fast.search(node, k=3, range_filters=filt, agg_query=AGG)
+        assert fused.agg is not None
+        assert fused.agg == fast.search(node, k=1, range_filters=filt,
+                                        agg_query=AGG).agg
+        q = {"agg": agg_q}
+        if filt:
+            q["filter"] = {f: list(r) for f, r in filt.items()}
+        ref = relational(reader, node, q)
+        assert fused.total == ref.total_found
+        assert fused.agg == as_partials(ref.agg)
 
 
 def test_fused_engine_agg_matches_gated_engine(reader):
@@ -208,39 +209,62 @@ def stale_sidecar_dir(index_dir, tmp_path_factory):
     return d
 
 
-def test_stale_sidecar_falls_back_to_cogroup(spark, reader, stale_sidecar_dir):
+STALE_QUERIES = [
+    {"fulltext": "def", "filter": {"num_lines": [3, 50]},
+     "sort": "content_bytes", "num_items": 6},
+    {"fulltext": "def", "sort": "num_lines", "num_items": 6},
+    {"fulltext": "def return", "sort": "avg_line_len", "ascending": True,
+     "agg": {"num_lines": [[0, 20], [20, 10**6]]}, "num_items": 5},
+]
+
+
+def test_stale_sidecar_routes_to_relational(spark, reader, stale_sidecar_dir,
+                                            monkeypatch):
+    """A stale sidecar covers no feature, so every filtered, sorted or
+    aggregating query on it runs on the relational path: answers (pages
+    1 and 2) equal the fresh engine's, no Spark job cogroups anything, and
+    the kernel itself refuses the uncovered features on the driver."""
     from cantine_spark.index import IndexReader
-    stale = IndexReader(spark, stale_sidecar_dir)
-    fast = FastTopK(stale, pin_tables=False)
-    assert not fast.has_fastfields  # span mismatch detected
-    good = FastTopK(reader, pin_tables=False)
-    q = dict(k=6, sort_feature="num_lines")
-    a = fast.search(Term("content", "def"), **q)
-    b = good.search(Term("content", "def"), **q)
-    assert (a.total, a.hits, a.sort_vals) == (b.total, b.hits, b.sort_vals)
-    plan = plan_of(fast.last_job)
-    assert "FlatMapCoGroupsInPandas" in plan  # r3 fallback shape
-    # fused aggregation is refused (api routes to two-pass aggregate())
-    with pytest.raises(ValueError, match="sidecar"):
-        fast.search(Term("content", "def"), agg_query={"num_lines": [(0, 5)]})
-    # and the engine surface still answers agg queries on the stale index
-    eng = SearchEngine(stale)
-    res = eng.search({"fulltext": "def",
-                      "agg": {"num_lines": [[0, 20], [20, 10**6]]}})
-    ref = SearchEngine(reader).search({"fulltext": "def",
-                                       "agg": {"num_lines": [[0, 20],
-                                                             [20, 10**6]]}})
-    assert res.agg == ref.agg
-    # engine-level FILTERED query on the stale index routes to Column
-    # preds (cogroup fallback) and still equals the sidecar engine
-    fq = {"fulltext": "def", "filter": {"num_lines": [3, 50]},
-          "sort": "num_lines", "num_items": 6}
-    a = eng.search(dict(fq))
-    b = SearchEngine(reader).search(dict(fq))
-    assert a.total_found == b.total_found
-    assert ([(i["doc_id"], i["sort_val"]) for i in a.items]
-            == [(i["doc_id"], i["sort_val"]) for i in b.items])
-    assert "FlatMapCoGroupsInPandas" in plan_of(eng._fast.last_job)
+    stale = SearchEngine(IndexReader(spark, stale_sidecar_dir))
+    assert not stale._fast.has_fastfields  # span mismatch detected
+    fresh = SearchEngine(reader)
+
+    def pages(eng, q):
+        p1 = eng.search(dict(q))
+        assert p1.next is not None
+        return p1, eng.search(dict(q, after=p1.next))
+
+    expected = [pages(fresh, q) for q in STALE_QUERIES]
+    # record the physical plan of every job the stale engine runs
+    plans: list[str] = []
+    df_cls = type(spark.range(0))
+    for action in ("collect", "toPandas"):
+        orig = getattr(df_cls, action)
+
+        def recording(df, *a, _orig=orig, **kw):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return _orig(df, *a, **kw)
+
+        monkeypatch.setattr(df_cls, action, recording)
+    got = [pages(stale, q) for q in STALE_QUERIES]
+    monkeypatch.undo()
+    for exp, res in zip(expected, got):
+        for b, a in zip(exp, res):
+            assert a.total_found == b.total_found
+            assert ([(i["doc_id"], i["sort_val"]) for i in a.items]
+                    == [(i["doc_id"], i["sort_val"]) for i in b.items])
+            assert a.agg == b.agg
+    assert plans  # the relational path ran Spark jobs ...
+    assert not any("FlatMapCoGroupsInPandas" in p for p in plans)  # ... flat
+
+    node = Term("content", "def")
+    for kw in (dict(sort_feature="num_lines"),
+               dict(range_filters={"num_lines": (0, 5)}),
+               dict(agg_query={"num_lines": [(0, 5)]})):
+        with pytest.raises(ValueError, match="sidecar"):
+            stale._fast.search(node, **kw)
+    # an empty filter set names no feature, so nothing is uncovered
+    assert stale._fast.search(node, k=3, range_filters={}).total > 0
 
 
 # --------------------------------------------------- pruning observability

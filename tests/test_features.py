@@ -54,20 +54,49 @@ def test_new_column_filterable(extended_engine):
     assert r.total_found == expect
 
 
+def _relational_twin(engine: SearchEngine) -> SearchEngine:
+    ref = SearchEngine(engine.reader)
+    ref._fast = None  # force the relational reference path
+    return ref
+
+
 def test_new_column_sortable_and_paginatable(extended_engine):
+    """A column the fast-field sidecar predates routes to the relational
+    path: the cursor walk equals the relational engine item for item."""
+    ref = _relational_twin(extended_engine)
+    base = {"fulltext": "def", "sort": "stars", "num_items": 7}
     seen = []
-    cursor = None
-    for _ in range(4):
-        q = {"fulltext": "def", "sort": "stars", "num_items": 7}
-        if cursor:
-            q["after"] = cursor
-        r = extended_engine.search(q)
+    cur = cur_r = None
+    for _ in range(50):
+        q, qr = dict(base), dict(base)
+        if cur is not None:
+            q["after"], qr["after"] = cur, cur_r
+        r, rr = extended_engine.search(q), ref.search(qr)
+        assert r.total_found == rr.total_found
+        assert ([(i["doc_id"], i["sort_val"]) for i in r.items]
+                == [(i["doc_id"], i["sort_val"]) for i in rr.items])
         seen.extend(it["sort_val"] for it in r.items)
+        assert (r.next is None) == (rr.next is None)
         if r.next is None:
             break
-        cursor = r.next
+        cur, cur_r = r.next, rr.next
+    else:
+        raise AssertionError("pagination did not terminate")
     assert seen == sorted(seen, reverse=True)
     assert len(seen) > 7  # pagination actually advanced through the cursor
+    assert len(seen) == r.total_found
+
+
+def test_new_column_filtered_agg_fulltext_matches_relational(extended_engine):
+    q = {"fulltext": "def", "filter": {"stars": [2, 6]}, "sort": "weight",
+         "agg": {"stars": [[0, 3], [3, 7]], "weight": [[0.0, 10.0]]},
+         "num_items": 5}
+    a = extended_engine.search(dict(q))
+    b = _relational_twin(extended_engine).search(dict(q))
+    assert a.total_found == b.total_found > 0
+    assert ([(i["doc_id"], i["sort_val"]) for i in a.items]
+            == [(i["doc_id"], i["sort_val"]) for i in b.items])
+    assert a.agg == b.agg
 
 
 def test_new_column_aggregatable(extended_engine):

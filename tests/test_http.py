@@ -14,6 +14,7 @@ import os
 import time
 import urllib.error
 import urllib.request
+from http.client import HTTPConnection
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,6 +33,20 @@ def _post(url: str, payload, raw: bytes | None = None):
                                  headers={"Content-Type": "application/json"})
     with urllib.request.urlopen(req, timeout=120) as r:
         return r.status, json.load(r)
+
+
+def _post_with_length(url: str, length: str) -> int:
+    """POST /search with a hand-set Content-Length header; returns the
+    response status."""
+    host, port = url.removeprefix("http://").split(":")
+    conn = HTTPConnection(host, int(port), timeout=10)
+    try:
+        conn.putrequest("POST", "/search")
+        conn.putheader("Content-Length", length)
+        conn.endheaders()
+        return conn.getresponse().status
+    finally:
+        conn.close()
 
 
 def _get(url: str, path: str):
@@ -83,10 +98,19 @@ def test_request_hygiene(http_env):
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(http.url, None, raw=b"{not json")
     assert e.value.code == 400
+    # a JSON body that is not an object → 400
+    for body in (5, [1, 2], "def", None):
+        with pytest.raises(urllib.error.HTTPError) as e:
+            _post(http.url, body)
+        assert e.value.code == 400
     # body over the 4 KiB reference cap → 413
     with pytest.raises(urllib.error.HTTPError) as e:
         _post(http.url, {"fulltext": "x" * 5000})
     assert e.value.code == 413
+    # negative or non-integer Content-Length → 400, answered at once
+    # (reading a -1 length would block until the client closes)
+    for length in ("-1", "abc", "1.5", ""):
+        assert _post_with_length(http.url, length) == 400
     # unknown route → 404
     with pytest.raises(urllib.error.HTTPError) as e:
         _get(http.url, "/nope")

@@ -88,30 +88,6 @@ def engine_like_reader(reader):
     return reader
 
 
-def test_kernel_filter_meta_side_is_pruned(reader):
-    """The cogroup right side of a filtered kernel query (r3) must push the
-    range predicate into the docmeta parquet scan and read ONLY the id +
-    filter/sort columns — shuffling anything wider would defeat the
-    8-16-bytes-per-passing-doc scale argument in wand.py."""
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from cantine_spark.aggregate import range_filter
-    from cantine_spark.execution.wand import FastTopK
-
-    fast = FastTopK(reader, pin_tables=False)  # assert the COLD scan plan
-    meta = (fast._meta.filter(range_filter("num_lines", 5, 40))
-            .select("doc_id")
-            .withColumn("shard",
-                        (F.col("doc_id") / F.lit(fast._span)).cast("int")))
-    plan = plan_of(meta)
-    pushed = plan.split("PushedFilters", 1)[1].split("]", 1)[0]
-    assert "num_lines" in pushed, "range filter not pushed to the scan"
-    schema = plan.split("ReadSchema", 1)[1].splitlines()[0]
-    assert "doc_id" in schema and "num_lines" in schema
-    for heavy in ("avg_line_len", "content_bytes", "comment_ratio", "path"):
-        assert heavy not in schema, f"meta side read unneeded column {heavy}"
-
-
 def test_kernel_scan_prunes_positions_for_term_queries(reader):
     """Non-phrase kernel queries drop the positions column BEFORE the
     groupBy — the drop must reach the parquet scan's ReadSchema (positions

@@ -294,7 +294,7 @@ def test_concurrent_queries_leave_session_conf_alone(spark, executor, fast):
 
 
 # ---------------------------------------------------------------------------
-# filtered / field-sorted fulltext on the cogrouped kernel (r3)
+# filtered / field-sorted / aggregating fulltext on the sidecar kernel
 # ---------------------------------------------------------------------------
 
 
@@ -327,9 +327,9 @@ SORTED_QUERIES = [
 
 @pytest.mark.parametrize("q", FILTERED_QUERIES)
 def test_kernel_filtered_matches_relational(reader, q):
-    """Range filters run IN the segment kernel (shard-cogrouped docmeta ids
-    intersected like a Must clause) and must equal the relational engine:
-    same totals, same top-k up to f32 score ties."""
+    """Range filters run IN the segment kernel (numpy masks over the
+    shard-local fast-field sidecar, like a Must clause) and must equal the
+    relational engine: same totals, same top-k up to f32 score ties."""
     eng_k, eng_r = _engines(reader)
     a, b = eng_k.search(dict(q)), eng_r.search(dict(q))
     assert a.total_found == b.total_found
@@ -340,7 +340,7 @@ def test_kernel_filtered_matches_relational(reader, q):
 
 @pytest.mark.parametrize("q", SORTED_QUERIES)
 def test_kernel_field_sort_matches_relational(reader, q):
-    """Field-sorted fulltext ranks in-kernel by the docmeta fast-field value
+    """Field-sorted fulltext ranks in-kernel by the sidecar fast-field value
     (missing → 0 fill) with doc_id-asc tie-break: items must be IDENTICAL to
     the relational path — (doc_id, sort_val) exactly, scores f32-close."""
     eng_k, eng_r = _engines(reader)
@@ -402,9 +402,9 @@ AGG_QUERIES = [
 
 @pytest.mark.parametrize("q", AGG_QUERIES)
 def test_kernel_agg_matches_relational(reader, q):
-    """Aggregations with fulltext run as a SECOND kernel collector pass
-    (main.rs:137-147) — candidates from doc_deltas only, feature values from
-    the shard-cogrouped docmeta, partials merged on the driver. Must equal
+    """Aggregations with fulltext fuse into the kernel job — candidates
+    decoded once, feature values from the shard-local sidecar, partials
+    merged on the driver. Must equal
     the relational engine exactly: same RangeStats (inverted seeds for empty
     buckets, nulls never collected), same items, same totals."""
     eng_k, eng_r = _engines(reader)
