@@ -134,8 +134,8 @@ class SearchResult:
 class SearchEngine:
     reader: IndexReader
     agg_threshold: int | None = None  # None = ∞ (main.rs:193; prod 300k)
-    # pin segment/champion tables in cluster memory — set for long-lived
-    # serving processes (see FastTopK.pin_tables)
+    # pin the hydration doc-store projection in cluster memory — set for
+    # long-lived serving processes (SearchExecutor.pin_hydration)
     pin_tables: bool = False
     # driver-tier execution (wand.FastTopK.use_driver): small-posting
     # queries answered by driver-side point reads + the local kernel —
@@ -151,7 +151,7 @@ class SearchEngine:
         self.features = self.reader.features  # schema-derived (U5)
         self._fast: FastTopK | None = (
             FastTopK(self.reader, executor=self.executor,
-                     pin_tables=self.pin_tables, use_driver=self.use_driver)
+                     use_driver=self.use_driver)
             if self.reader.has_segments else None)
         if self.pin_tables:
             self.executor.pin_hydration()
@@ -176,8 +176,6 @@ class SearchEngine:
 
     def close(self) -> None:
         """Release pinned tables (serving refresh swaps engines)."""
-        if self._fast is not None:
-            self._fast.close()
         self.executor.unpin_hydration()
 
     # ------------------------------------------------------------ interpret
@@ -263,7 +261,7 @@ class SearchEngine:
     def _search_segments(self, node: QueryNode, k: int,
                          after: tuple | None,
                          query: SearchQuery) -> SearchResult:
-        """Search on the block-max kernel: one applyInPandas job for
+        """Search on the block-max kernel: one shard-task job for
         candidates+filter+prune+heap (range filters, field-sort keys and
         agg inputs all read from the shard-local fast-field sidecar), one
         pruned isin-scan hydration for the ≤255 winners. total/visited are

@@ -157,10 +157,19 @@ def _encode_sorted(pdf: pd.DataFrame, avgdl: dict) -> pd.DataFrame:
 
     # avgdl by field, vectorized: a Series.map here is a Python-level call
     # per posting row (~1 s per 3M rows measured); TEXT_FIELDS is tiny so
-    # two object-array compares beat it by an order of magnitude
+    # two object-array compares beat it by an order of magnitude. A field
+    # without an avgdl would leave its rows uninitialized (garbage
+    # max_tfnorm bounds), so it fails here instead.
     av = np.empty(n, dtype=np.float64)
+    known = np.zeros(n, dtype=bool)
     for k, v in avgdl.items():
-        av[fields == k] = v
+        hit = fields == k
+        av[hit] = v
+        known |= hit
+    if not known.all():
+        missing = sorted(set(fields[~known].tolist()))
+        raise ValueError(f"no avgdl for field(s) {missing}; index_stats "
+                         f"covers {sorted(avgdl)}")
     tfd = tfs.astype(np.float64)
     tfn = tfd * (K1 + 1.0) / (tfd + K1 * (1.0 - B + B * dls / av))
 

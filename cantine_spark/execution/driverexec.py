@@ -13,8 +13,13 @@ coordinator: when the TOTAL posting count of a query's terms (known
 driver-side from term_stats — the df lookup is already a point read) fits
 under a budget, the driver point-reads exactly those terms' segment rows
 with pyarrow and executes the UNMODIFIED per-shard kernel closure
-(wand.make_kernel(raw=True)) locally — zero Spark jobs, bit-equal results
-by construction because it is the same code over the same rows.
+(wand.make_kernel) locally — zero Spark jobs, bit-equal results by
+construction because it is the same code over the same rows.
+
+The cluster tier reads through the same function: each task of the
+shard-task kernel job (wand.FastTopK._shard_job) point-reads its own
+shards' rows with `read_rows(..., shards=...)`, so there is one segment
+reader for both tiers and no per-query shuffle.
 
 100-TB semantics — this is a *tier*, not a toy:
 - The budget is in absolute postings (default 2^17 ≈ a few MB of blocks),
@@ -35,8 +40,9 @@ by construction because it is the same code over the same rows.
 Fallback discipline (same as the hydration/df/cursor point-read family):
 any failure falls through to the cluster kernel — one slower query,
 never a wrong answer. Tiered readers rescale each tier's stored
-max_tfnorm by max(1, avgdl_global/avgdl_tier) exactly like
-TieredIndexReader.segments_df, so bounds stay true under avgdl drift.
+max_tfnorm by max(1, avgdl_global/avgdl_tier) (and min_tfnorm by
+min(1, ...)) from TieredIndexReader.segment_point_spec, so bounds stay
+true under avgdl drift.
 """
 
 from __future__ import annotations
@@ -154,26 +160,51 @@ def invalidate_caches() -> None:
         _ROW_CACHE.clear()
 
 
-def read_rows(spec, terms, columns: tuple[str, ...]) -> pd.DataFrame:
+def _spec_dirs(spec) -> list[tuple[str, dict]]:
+    return [(s, {}) if isinstance(s, str) else (s[0], dict(s[1]))
+            for s in spec]
+
+
+def shard_ids(spec) -> list[int]:
+    """Sorted shard ids of a hive `shard=N`-partitioned table (segments),
+    the union over every tier dir of `spec`."""
+    import pyarrow.dataset as pads  # noqa: PLC0415
+
+    out = set()
+    for d, _ in _spec_dirs(spec):
+        for frag in _dataset(d).get_fragments():
+            keys = pads.get_partition_keys(frag.partition_expression)
+            out.add(int(keys["shard"]))
+    return sorted(out)
+
+
+def read_rows(spec, terms, columns: tuple[str, ...],
+              shards=None) -> pd.DataFrame:
     """Point-read the rows of `terms` from a (possibly tiered) table.
 
     spec: [(dir, {field: (max_factor, min_factor)})] or [dir, ...] — one
     entry per tier; a non-empty factor dict rescales that tier's
-    max_tfnorm/min_tfnorm bounds (TieredIndexReader.segments_df parity,
-    lossless-bound algebra in tiered.py). Columns in OPTIONAL_ZERO_COLS
-    that a (pre-r6) table lacks come back as 0.0 — the valid weaker
-    bound. Returns a pandas frame with a `shard` column (hive partition
-    column for segments, data column for champions)."""
-    norm = [(s, {}) if isinstance(s, str) else (s[0], dict(s[1]))
-            for s in spec]
+    max_tfnorm/min_tfnorm bounds by max(1, r) / min(1, r) with
+    r = avgdl_global/avgdl_tier (lossless-bound algebra in tiered.py).
+    Columns in OPTIONAL_ZERO_COLS that a (pre-r6) table lacks come back
+    as 0.0 — the valid weaker bound. shards: restrict the read to these
+    shard ids (prunes the hive `shard=` dirs of segments; a row filter on
+    champions); None reads every shard. Returns a pandas frame with a
+    `shard` column (hive partition column for segments, data column for
+    champions)."""
+    norm = _spec_dirs(spec)
+    shard_key = None if shards is None else tuple(sorted(shards))
     key = (tuple(d for d, _ in norm),
-           tuple(sorted(terms)), tuple(columns),
+           tuple(sorted(terms)), tuple(columns), shard_key,
            tuple(_dir_token(d)[1] for d, _ in norm))
     with _CACHE_LOCK:
         hit = _ROW_CACHE.get(key)
     if hit is not None:
         return hit
     expr = _term_expr(terms)
+    if shard_key is not None:
+        import pyarrow.dataset as pads  # noqa: PLC0415
+        expr = expr & pads.field("shard").isin(list(shard_key))
     want = list(columns) + (["shard"] if "shard" not in columns else [])
     frames = []
     for d, factors in norm:

@@ -12,9 +12,9 @@ the request body at 4 KiB). This is the same surface over IndexServer:
   GET  /healthz  200 once an engine is open
 
 Concurrency: stdlib ThreadingHTTPServer — one thread per request, all
-sharing the engine. That is safe by construction (kernel jobs run on a
-cloned never-mutated session, pinned tables are read-only; pytest pins a
-4-thread concurrent search) and FAIR scheduling interleaves the resulting
+sharing the engine. That is safe by construction (kernel jobs set no
+session conf, pinned tables are read-only; pytest pins a 4-thread
+concurrent search) and FAIR scheduling interleaves the resulting
 small Spark jobs (bench.py QPS measurements). A background thread polls
 IndexServer.maybe_refresh(), so a generation landing mid-traffic swaps the
 engine blue/green under the running endpoint — requests always read
@@ -29,6 +29,7 @@ endpoint adds no measurable latency over engine.search() — the QPS bench
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from dataclasses import dataclass
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -36,6 +37,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from cantine_spark.api import BadRequest, SearchQuery, SearchResult
 
 MAX_BODY_BYTES = 4096  # the reference's request cap (main.rs:253)
+
+_log = logging.getLogger(__name__)
 
 
 class _Pending:
@@ -63,10 +66,12 @@ class QueryBatcher:
     lone client pays ≤ window_ms extra on a ~400 ms query).
 
     Error isolation: each request is parsed individually — a BadRequest
-    fails only its own request, never the batch. The engine is resolved
-    from the backend once per dispatch, so a blue/green refresh swap is
-    picked up at the next batch exactly as the unbatched path picks it up
-    at the next request.
+    fails only its own request, never the batch. When search_batch itself
+    raises, every query of the batch is retried alone with engine.search,
+    so an engine-level error reaches only the request that causes it.
+    The engine is resolved from the backend once per dispatch, so a
+    blue/green refresh swap is picked up at the next batch exactly as the
+    unbatched path picks it up at the next request.
 
     Overlap: batches dispatch on a pool of `max_concurrent` threads, so up
     to that many batch jobs run concurrently under FAIR scheduling —
@@ -210,19 +215,30 @@ class QueryBatcher:
             else:
                 # search_batch isolates per-query errors (bad cursor etc.)
                 # in-slot as BadRequest instances — only engine-level
-                # failures raise, and only those fail the whole batch
+                # failures raise
                 results = engine.search_batch([q for _, q in valid])
         except Exception as e:  # noqa: BLE001
-            for p, _ in valid:
-                p.error = e
-                p.event.set()
-            return
+            if len(valid) == 1:
+                results = [e]
+            else:
+                # an engine-level batch failure: retry each query solo so
+                # that only the offending request gets the error
+                _log.warning("search_batch failed; retrying %d queries "
+                             "one by one", len(valid), exc_info=True)
+                results = [_search_or_error(engine, q) for _, q in valid]
         for (p, _), r in zip(valid, results):
             if isinstance(r, Exception):
                 p.error = r
             else:
                 p.result = r
             p.event.set()
+
+
+def _search_or_error(engine, q: SearchQuery):
+    try:
+        return engine.search(q)
+    except Exception as e:  # noqa: BLE001 — delivered to its own request
+        return e
 
 
 def result_to_dict(res: SearchResult) -> dict:

@@ -128,10 +128,6 @@ class IndexReader:
             return False
         return fsutil.read_json(meta).get("format", 1) >= 2
 
-    @cached_property
-    def segments(self) -> DataFrame:
-        return self.spark.read.parquet(fsutil.join(self.index_dir, "segments"))
-
     # ---- segment-path providers. FastTopK consumes the index through these
     #      methods (never through raw paths), so a reader that spans
     #      MULTIPLE tier directories (tiered.TieredIndexReader — the serving
@@ -140,11 +136,6 @@ class IndexReader:
     def segments_meta(self) -> dict:
         from cantine_spark.build.segments import load_segments_meta
         return load_segments_meta(self.index_dir)
-
-    def segments_df(self, spark: SparkSession) -> DataFrame:
-        """Segments table read through the GIVEN session (FastTopK queries on
-        a conf-isolated clone of the reader's session)."""
-        return spark.read.parquet(fsutil.join(self.index_dir, "segments"))
 
     def fastfields_spec(self) -> dict | None:
         """Fast-field sidecar descriptor: {shard_span, columns, locations}.
@@ -171,14 +162,15 @@ class IndexReader:
             return None
         return {"shard_span": int(m["shard_span"]), "cap": int(m["cap"])}
 
-    def champions_df(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(fsutil.join(self.index_dir, "champions"))
+    def champions_df(self) -> DataFrame:
+        return self.spark.read.parquet(
+            fsutil.join(self.index_dir, "champions"))
 
-    # ---- driver-tier point-read specs (execution/driverexec): the same
-    #      tables as segments_df/champions_df, addressed for pyarrow point
-    #      reads. A tiered reader overrides these with per-tier dirs and
-    #      max_tfnorm rescale factors so driver-side bounds match the
-    #      rescaled plan bit-for-bit.
+    # ---- point-read specs (execution/driverexec): the segments and
+    #      champions tables addressed for pyarrow point reads — by the
+    #      driver tier and by the cluster kernel's shard tasks alike. A
+    #      tiered reader overrides these with per-tier dirs and per-field
+    #      max_tfnorm/min_tfnorm rescale factors.
     def segment_point_spec(self) -> list[tuple[str, dict[str, float]]]:
         return [(fsutil.join(self.index_dir, "segments"), {})]
 

@@ -54,11 +54,17 @@ def get_spark(
         # direct task commits: no serial driver-side rename of hundreds of
         # bucket files at job commit
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # Reused python workers in this PySpark build degrade into a
-        # kernel-time spin after their first UDF stage (measured: an
-        # identical build ran 27s with reuse off vs 60-160s with reuse on at
-        # local[32], with 80-90% system CPU). Fresh workers per task cost
-        # ~0.1s each — cheap against that pathology.
+        # Reused python workers are not free per task either: pyspark calls
+        # importlib.invalidate_caches() at every task start, and on CPython
+        # 3.11 every cached zipimporter then re-reads its archive directory
+        # (pyspark.zip, ~1,300 entries, once per cached package path) —
+        # measured ~210 ms of CPU per task in a reused worker on 4 vCPUs.
+        # That per-task cost is consistent with the "kernel-time spin"
+        # seen with reuse on (an identical build ran 27s with reuse off vs
+        # 60-160s with reuse on at local[32], 80-90% system CPU). The
+        # build keeps reuse off; fresh workers cost ~0.1s each. Serving
+        # processes turn reuse on, and every query-side UDF drops the zip
+        # finders first (execution/wand._drop_zip_finders).
         .config("spark.python.worker.reuse", "false")
         .config("spark.ui.enabled", "false")
     )

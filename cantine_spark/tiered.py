@@ -15,7 +15,7 @@ Why the union is exact (bit-identical to full compaction):
   and per-(field,term) posting arrays concatenate sorted.
 - **shards**: every tier encodes segments with the SAME shard_span
   (validated here), so `shard = doc_id // span` means the same doc range in
-  every tier and groupBy(shard) co-locates all tiers' blocks for a range.
+  every tier and a shard task reads all tiers' blocks for a range.
   Spans need NOT align to tier boundaries: a boundary shard simply receives
   blocks (and sidecar files) from two tiers, with disjoint doc ranges.
 - **scoring**: exact BM25 uses per-posting tf/dl (stored exact) with GLOBAL
@@ -107,9 +107,8 @@ class TieredIndexReader(IndexReader):
         return int(row[0]), int(row[1]) + 1
 
     # --------------------------------------------------------------- tables
-    def _union(self, name: str, spark: SparkSession | None = None) -> DataFrame:
-        s = spark or self.spark
-        frames = [s.read.parquet(fsutil.join(d, name))
+    def _union(self, name: str) -> DataFrame:
+        frames = [self.spark.read.parquet(fsutil.join(d, name))
                   for d in self.tier_dirs]
         return functools.reduce(lambda a, b: a.unionByName(b), frames)
 
@@ -186,48 +185,6 @@ class TieredIndexReader(IndexReader):
         m["tiers"] = len(self.tier_dirs)
         return m
 
-    def segments_df(self, spark: SparkSession) -> DataFrame:
-        """Union of tier segment tables with each tier's stored block
-        bounds rescaled to stay TRUE bounds under GLOBAL-avgdl scoring:
-        max_tfnorm × max(1, avgdl_global/avgdl_tier) stays an upper bound,
-        min_tfnorm × min(1, avgdl_global/avgdl_tier) stays a lower bound
-        (tfnorm(a2) ≥ tfnorm(a1)·min(1, a2/a1) by the same monotonicity
-        lemma, applied with the roles swapped — module docstring). Scaling
-        happens here, once, in the plan — the kernel is tier-oblivious.
-        Tiers from a pre-min_tfnorm build drop the column from the union
-        (readers fall back to the 0.0 floor)."""
-        g = self.stats
-        frames = []
-        for d, ts in zip(self.tier_dirs, self.tier_stats):
-            df = spark.read.parquet(fsutil.join(d, "segments"))
-            ratios = {fld: g[fld]["avgdl"] / s["avgdl"]
-                      for fld, s in ts.items() if s["avgdl"] > 0}
-            up = {fld: r for fld, r in ratios.items() if r > 1.0}
-            if up:
-                expr = F.lit(1.0)
-                for fld, fac in up.items():
-                    expr = F.when(F.col("field") == fld,
-                                  F.lit(fac)).otherwise(expr)
-                df = df.withColumn("max_tfnorm", F.col("max_tfnorm") * expr)
-            dn = {fld: r for fld, r in ratios.items() if r < 1.0}
-            if dn and "min_tfnorm" in df.columns:
-                expr = F.lit(1.0)
-                for fld, fac in dn.items():
-                    expr = F.when(F.col("field") == fld,
-                                  F.lit(fac)).otherwise(expr)
-                df = df.withColumn("min_tfnorm", F.col("min_tfnorm") * expr)
-            frames.append(df)
-        common = set(frames[0].columns)
-        for f_ in frames[1:]:
-            common &= set(f_.columns)
-        cols = [c for c in frames[0].columns if c in common]
-        frames = [f_.select(*cols) for f_ in frames]
-        return functools.reduce(lambda a, b: a.unionByName(b), frames)
-
-    @cached_property
-    def segments(self) -> DataFrame:
-        return self.segments_df(self.spark)
-
     def doc_store_dirs(self) -> list[str]:
         return [fsutil.join(d, "docs") for d in self.tier_dirs]
 
@@ -278,15 +235,18 @@ class TieredIndexReader(IndexReader):
         return {"shard_span": self._span,
                 "cap": min(int(m["cap"]) for m in metas)}
 
-    def champions_df(self, spark: SparkSession) -> DataFrame:
-        return self._union("champions", spark)
+    def champions_df(self) -> DataFrame:
+        return self._union("champions")
 
     # ----------------------------------------------- driver-tier point specs
     def segment_point_spec(self) -> list[tuple[str, dict[str, tuple]]]:
-        """Per-tier segments dirs with the SAME bound rescale factors
-        segments_df applies in the plan — {field: (max_factor, min_factor)}
-        with max(1, r) / min(1, r) per field — so driver-side point reads
-        see identical bounds."""
+        """Per-tier segments dirs with their block-bound rescale factors
+        {field: (max_factor, min_factor)}, r = avgdl_global/avgdl_tier:
+        max_tfnorm × max(1, r) stays an upper bound and min_tfnorm ×
+        min(1, r) a lower bound under GLOBAL-avgdl scoring (tfnorm(a2) ≥
+        tfnorm(a1)·min(1, a2/a1) by the same monotonicity lemma with the
+        roles swapped — module docstring). driverexec.read_rows applies
+        them to every point read, so the kernel is tier-oblivious."""
         g = self.stats
         out = []
         for d, ts in zip(self.tier_dirs, self.tier_stats):

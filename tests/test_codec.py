@@ -66,3 +66,22 @@ def test_encode_sorted_rejects_misaligned_positions():
     bad.loc[1, "positions"] = b""  # position-less row in a positional table
     with pytest.raises(ValueError, match="positions blob misaligned"):
         _encode_sorted(bad, {"content": 5.0})
+
+
+def test_encode_sorted_rejects_field_without_avgdl():
+    """A field missing from the avgdl map must fail loudly, naming the
+    field — not encode uninitialized max_tfnorm bounds."""
+    import pandas as pd
+    import pytest
+
+    from cantine_spark.build.segments import _encode_sorted
+
+    pdf = pd.DataFrame({
+        "field": ["content", "path"], "term": ["x", "x"], "shard": [0, 0],
+        "doc_id": [1, 2], "tf": [1, 1], "dl": [5, 3],
+        "positions": [np.array([0], "<i4").tobytes(),
+                      np.array([1], "<i4").tobytes()],
+    })
+    assert len(_encode_sorted(pdf, {"content": 5.0, "path": 3.0})) == 2
+    with pytest.raises(ValueError, match=r"no avgdl for field\(s\) \['path'\]"):
+        _encode_sorted(pdf, {"content": 5.0})

@@ -150,15 +150,23 @@ def test_admission_permits_constructor_exposed(reader):
 
 
 def test_unreadable_spec_falls_back_to_cluster(reader, monkeypatch):
+    """A failing driver-tier execution falls back to the cluster kernel:
+    counted, not driver-served, same answer. (The failure is injected
+    into _driver_search rather than into the reader's point spec, which
+    the cluster kernel's shard tasks read too.)"""
+    from cantine_spark.execution import wand
+
     fd = FastTopK(reader)
     ref = fd.search(SHAPES["dismax"], k=5)
-    monkeypatch.setattr(
-        type(reader), "segment_point_spec",
-        lambda self: [("/nonexistent/segments", {})], raising=True)
-    monkeypatch.setattr(
-        type(reader), "champion_point_spec",
-        lambda self: ["/nonexistent/champions"], raising=True)
+    assert ref.driver_served
+
+    def unreadable(*a, **kw):
+        raise OSError("segments unreadable")
+
+    monkeypatch.setattr(fd, "_driver_search", unreadable)
+    before = wand.DRIVER_TIER_FALLBACKS
     res = fd.search(SHAPES["dismax"], k=5)
+    assert wand.DRIVER_TIER_FALLBACKS == before + 1
     assert not res.driver_served  # fell back
     _same(res, ref)
 
@@ -329,3 +337,34 @@ def test_read_rows_prunes_and_caches(reader):
     again = driverexec.read_rows(spec, {("content", "def")},
                                  driverexec.SEG_COLUMNS)
     assert again is rows
+
+
+def test_read_rows_shard_restriction(reader):
+    """read_rows(..., shards=S) equals the unrestricted read limited to S,
+    and the row cache never answers one shard set with another's rows."""
+    import pandas as pd
+
+    spec = reader.segment_point_spec()
+    terms = {("content", "def"), ("path", "def")}
+    ids = driverexec.shard_ids(spec)
+    assert len(ids) >= 3  # the shared fixture's span gives several shards
+    full = driverexec.read_rows(spec, terms, driverexec.SEG_COLUMNS)
+    assert sorted(set(full["shard"])) == ids
+
+    def canon(df):
+        return (df.sort_values(["shard", "field", "term", "first_doc"])
+                .reset_index(drop=True))
+
+    for sel in ({ids[0]}, set(ids[1::2]), set(ids)):
+        part = driverexec.read_rows(spec, terms, driverexec.SEG_COLUMNS,
+                                    shards=sel)
+        assert set(part["shard"]) == sel
+        want = full[full["shard"].isin(sel)]
+        pd.testing.assert_frame_equal(canon(part), canon(want))
+    one = driverexec.read_rows(spec, terms, driverexec.SEG_COLUMNS,
+                               shards={ids[0]})
+    other = driverexec.read_rows(spec, terms, driverexec.SEG_COLUMNS,
+                                 shards={ids[1]})
+    assert other is not one and set(other["shard"]) == {ids[1]}
+    assert driverexec.read_rows(spec, terms, driverexec.SEG_COLUMNS,
+                                shards={ids[0]}) is one

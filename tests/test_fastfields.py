@@ -8,8 +8,8 @@ live NEXT TO the shard's postings, so a field-sorted or aggregating query
 never moves docmeta through a shuffle. These tests pin:
 
 - the layout invariants (one row per doc, shard = doc_id // span, sorted);
-- the PLAN shape: filtered / field-sorted / aggregating fulltext is a
-  plain groupBy kernel (no cogroup, no docmeta scan);
+- the PLAN shape: filtered / field-sorted / aggregating fulltext is one
+  shard-task kernel job (no shuffle, no Spark-side table scan at all);
 - kernel answers ≡ the relational reference engine, and the agg_threshold
   gate still selects the two-pass form;
 - a stale sidecar (span mismatch after re-encode) is detected: the engine
@@ -84,27 +84,32 @@ def test_sidecar_layout_invariants(spark, reader, index_dir):
 # ------------------------------------------------------------ plan shape
 
 
+def assert_shard_task_plan(plan: str) -> None:
+    """The shard-task kernel job: no shuffle, no grouped/cogrouped pandas
+    node and no parquet scan — each task point-reads its own shards'
+    rows, so nothing but shard ids enters the Spark plan."""
+    assert "Exchange" not in plan
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "FlatMapCoGroupsInPandas" not in plan
+    assert "MapInPandas" in plan
+    assert not [ln for ln in plan.splitlines() if "Location:" in ln]
+
+
 def test_unfiltered_field_sort_is_plain_groupby(reader):
     """The r3 scale-killer: an UNFILTERED field-sorted fulltext query used
     to cogroup the segments with a projection of the ENTIRE docmeta
-    (O(n_docs) through a shuffle per query). With the sidecar the job must
-    be a single-input groupBy kernel whose only scan is the term-pruned
-    segments table — O(matches-per-shard) rows move, period."""
+    (O(n_docs) through a shuffle per query). With the sidecar the job is
+    the shard-task kernel: no shuffle and no scan of any table in the
+    plan — each task reads its shards' term rows and sidecar values,
+    O(matches-per-shard) rows, period."""
     # use_driver=False: this test asserts the CLUSTER plan shape (the
     # driver tier would answer without any Spark job; its equality is
     # pinned in test_driverexec.py)
-    fast = FastTopK(reader, pin_tables=False, use_driver=False)
+    fast = FastTopK(reader, use_driver=False)
     res = fast.search(Term("content", "def"), k=5,
                       sort_feature="num_lines")
     assert res.hits  # sanity: the query matched
-    plan = plan_of(fast.last_job)
-    assert "FlatMapCoGroupsInPandas" not in plan
-    assert "docmeta" not in plan  # no docmeta scan anywhere in the job
-    # exactly one parquet source: the segments table (explain('formatted')
-    # prints every scan once in the tree and once in the details section —
-    # count the details' Location lines, one per distinct scan)
-    locs = [ln for ln in plan.splitlines() if "Location:" in ln]
-    assert len(locs) == 1 and "segments" in locs[0]
+    assert_shard_task_plan(plan_of(fast.last_job))
 
 
 def test_filtered_query_runs_in_kernel_no_cogroup(reader):
@@ -112,17 +117,13 @@ def test_filtered_query_runs_in_kernel_no_cogroup(reader):
     (the reference composes RangeQuery into the per-segment query,
     main.rs:152-172) — a filtered, sorted, aggregating fulltext query is
     ONE single-input groupBy kernel job with no docmeta scan at all."""
-    fast = FastTopK(reader, pin_tables=False, use_driver=False)
+    fast = FastTopK(reader, use_driver=False)
     res = fast.search(Term("content", "def"), k=5,
                       range_filters={"num_lines": (3, 50)},
                       sort_feature="content_bytes",
                       agg_query={"num_lines": [(0, 30), (30, 10**6)]})
     assert res.hits and res.agg is not None
-    plan = plan_of(fast.last_job)
-    assert "FlatMapCoGroupsInPandas" not in plan
-    assert "docmeta" not in plan
-    locs = [ln for ln in plan.splitlines() if "Location:" in ln]
-    assert len(locs) == 1 and "segments" in locs[0]
+    assert_shard_task_plan(plan_of(fast.last_job))
     # identical to the relational reference engine
     ref = relational(reader, Term("content", "def"),
                      {"filter": {"num_lines": [3, 50]},

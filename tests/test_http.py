@@ -235,6 +235,56 @@ def test_batches_overlap_up_to_max_concurrent():
         b.stop()
 
 
+def test_batch_failure_fails_only_the_offending_request():
+    """An engine-level exception from search_batch must not fail every
+    request of the batch: each query is retried alone, and only the one
+    whose own search raises gets the error."""
+    import threading
+    import types
+
+    from cantine_spark.httpserve import QueryBatcher
+
+    batch_sizes = []
+
+    class FakeEngine:
+        features = {}
+
+        def search(self, q):
+            if q.fulltext == "poison":
+                raise RuntimeError("engine failure on poison")
+            return types.SimpleNamespace(items=[q.fulltext], total_found=1,
+                                         next=None, agg=None)
+
+        def search_batch(self, qs):
+            batch_sizes.append(len(qs))
+            raise RuntimeError("batch job failed")
+
+    b = QueryBatcher(types.SimpleNamespace(engine=FakeEngine()),
+                     window_ms=200, max_batch=4, max_concurrent=1)
+    texts = ["alpha", "poison", "beta", "gamma"]
+    out: dict = {}
+
+    def call(t):
+        try:
+            out[t] = b.search({"fulltext": t})
+        except Exception as e:  # noqa: BLE001 — asserted below
+            out[t] = e
+
+    try:
+        th = [threading.Thread(target=call, args=(t,)) for t in texts]
+        for t in th:
+            t.start()
+        for t in th:
+            t.join()
+    finally:
+        b.stop()
+    assert max(batch_sizes) > 1, "requests were never batched"
+    assert isinstance(out["poison"], RuntimeError)
+    assert "poison" in str(out["poison"])
+    for t in ("alpha", "beta", "gamma"):
+        assert out[t].items == [t]
+
+
 def test_batching_disabled_still_serves(http_env):
     """batch_window_ms=0 keeps the legacy per-request dispatch path."""
     http, *_ = http_env

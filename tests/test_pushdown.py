@@ -40,8 +40,8 @@ def test_postings_scan_prunes_columns(executor):
     assert "doc_id" in schema and "tf" in schema
 
 
-def test_segments_scan_pushes_term_filter(reader):
-    seg = reader.segments.filter(
+def test_segments_scan_pushes_term_filter(spark, reader):
+    seg = spark.read.parquet(f"{reader.index_dir}/segments").filter(
         (F.col("field") == "content") & (F.col("term") == "def"))
     plan = plan_of(seg)
     assert "PushedFilters" in plan
@@ -88,16 +88,54 @@ def engine_like_reader(reader):
     return reader
 
 
-def test_kernel_scan_prunes_positions_for_term_queries(reader):
-    """Non-phrase kernel queries drop the positions column BEFORE the
-    groupBy — the drop must reach the parquet scan's ReadSchema (positions
-    are the largest blob in a hot term's blocks; shipping them through
-    scan+shuffle+Arrow for a term query is pure waste)."""
-    from cantine_spark.execution.wand import FastTopK
+def test_kernel_scan_prunes_positions_for_term_queries(reader, monkeypatch):
+    """A phrase-free kernel job never reads the positions column (positions
+    are the largest blob in a hot term's blocks; reading them for a term
+    query is pure waste); a job with a phrase query does. The shard tasks
+    read in Python workers, so the test captures each job's task function
+    and replays it in this process over every shard id, recording the
+    columns of each point read."""
+    import numpy as np
+    import pandas as pd
 
-    fast = FastTopK(reader, pin_tables=False)  # assert the COLD scan plan
-    seg = fast._segments_for({("content", "def")}).drop("positions")
-    plan = plan_of(seg)
-    schema = plan.split("ReadSchema", 1)[1].splitlines()[0]
-    assert "positions" not in schema
-    assert "doc_deltas" in schema and "max_tfnorm" in schema
+    from cantine_spark.execution import driverexec
+    from cantine_spark.execution.wand import FastTopK
+    from cantine_spark.plans.nodes import Boolean, Phrase, Term
+
+    tasks = []
+    frame_cls = type(reader.spark.range(1))  # the session's DataFrame class
+    map_in_pandas = frame_cls.mapInPandas
+
+    def spy(self, func, schema, *a, **kw):
+        tasks.append(func)
+        return map_in_pandas(self, func, schema, *a, **kw)
+
+    monkeypatch.setattr(frame_cls, "mapInPandas", spy)
+    fast = FastTopK(reader, use_driver=False)
+    terms = Boolean(shoulds=(Term("content", "def"),
+                             Term("content", "return")))
+    assert fast.search(terms, k=5, use_champions=False).hits
+    fast.search_many([{"node": terms, "k": 5},
+                      {"node": Term("path", "def"), "k": 3,
+                       "use_champions": False}])
+    fast.search(Phrase("content", ("def", "the")), k=5)
+    assert len(tasks) == 3
+
+    reads = []
+    read_rows = driverexec.read_rows
+
+    def recording(spec, terms_, columns, shards=None):
+        reads.append(tuple(columns))
+        return read_rows(spec, terms_, columns, shards=shards)
+
+    monkeypatch.setattr(driverexec, "read_rows", recording)
+    ids = pd.DataFrame({"id": np.arange(len(fast._shards))})
+    per_job = []
+    for task in tasks:
+        reads.clear()
+        assert list(task(iter([ids])))  # the replay produces output rows
+        per_job.append(set(reads))
+    for cols in per_job[0] | per_job[1]:  # segment and champion reads
+        assert "positions" not in cols
+    assert all(any("doc_deltas" in cols for cols in job) for job in per_job)
+    assert any("positions" in cols for cols in per_job[2])

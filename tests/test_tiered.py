@@ -142,18 +142,25 @@ def test_tiered_bound_scaling_is_safe(spark, tiered_env):
     import numpy as np
 
     from cantine_spark.build.merge import segments_to_postings
+    from cantine_spark.execution import driverexec
     from cantine_spark.execution.scoring import B, K1
 
     full_dir, tiers, _, _ = tiered_env
     r_tier = TieredIndexReader(spark, tiers)
     avgdl = {f: s["avgdl"] for f, s in r_tier.stats.items()}
-    blocks = (r_tier.segments_df(spark)
-              .select("field", "term", "first_doc", "last_doc",
-                      "max_tfnorm").toPandas())
+    posts = [segments_to_postings(spark, os.path.join(tier, "segments"))
+             .select("field", "term", "doc_id", "tf", "dl").toPandas()
+             for tier in tiers]
+    terms = set()
+    for post in posts:
+        terms |= set(zip(post["field"], post["term"]))
+    # the rescaled blocks exactly as the kernel sees them (driver tier and
+    # shard tasks read through the same point spec)
+    blocks = driverexec.read_rows(
+        r_tier.segment_point_spec(), terms,
+        ("field", "term", "first_doc", "last_doc", "max_tfnorm"))
     checked = 0
-    for tier in tiers:
-        post = segments_to_postings(spark, os.path.join(tier, "segments")) \
-            .select("field", "term", "doc_id", "tf", "dl").toPandas()
+    for post in posts:
         m = post.merge(blocks, on=["field", "term"], how="inner")
         m = m[(m["doc_id"] >= m["first_doc"]) & (m["doc_id"] <= m["last_doc"])]
         av = m["field"].map(avgdl).to_numpy(np.float64)

