@@ -17,9 +17,11 @@ with pyarrow and executes the UNMODIFIED per-shard kernel closure
 construction because it is the same code over the same rows.
 
 The cluster tier reads through the same function: each task of the
-shard-task kernel job (wand.FastTopK._shard_job) point-reads its own
-shards' rows with `read_rows(..., shards=...)`, so there is one segment
-reader for both tiers and no per-query shuffle.
+query-side RDD jobs (wand.FastTopK._shard_job — the shard-task kernel and
+the champion job) point-reads its own shards' rows with
+`read_rows(..., shards=...)`, so the segments and the champions each have
+one reader for both tiers, and no query job scans a table through Spark
+SQL.
 
 100-TB semantics — this is a *tier*, not a toy:
 - The budget is in absolute postings (default 2^17 ≈ a few MB of blocks),
@@ -47,6 +49,7 @@ true under avgdl drift.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 
@@ -84,6 +87,26 @@ DRIVER_MAX_POSTINGS = 1 << 18
 # class silently doubled and 16-thread qps dropped 8→5 (measured) from
 # un-permitted mid-size queries monopolizing the interpreter.
 DRIVER_TINY_POSTINGS = 1 << 14
+
+# process-wide count of driver-side reads that failed and fell back to a
+# Spark job: the driver tier and the champion read (→ cluster kernel), the
+# df lookup, hydration, the uuid resolve and explain's postings read (→
+# Spark scan). Every fallback gives a correct but slower answer, so without
+# the count it would be invisible (ADVICE r6); bench and tests read it.
+DRIVER_TIER_FALLBACKS = 0
+_FALLBACK_LOCK = threading.Lock()
+_log = logging.getLogger(__name__)
+
+
+def note_fallback(where: str) -> None:
+    """Count one failed driver-side read (call from the except block: the
+    exception goes to the debug log)."""
+    global DRIVER_TIER_FALLBACKS
+    with _FALLBACK_LOCK:
+        DRIVER_TIER_FALLBACKS += 1
+    _log.debug("driver-side %s failed; falling back to Spark", where,
+               exc_info=True)
+
 
 # dataset cache: index dirs are immutable by construction (blue/green —
 # every refresh writes a NEW versioned dir); mtime joins the key where

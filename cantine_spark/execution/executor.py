@@ -31,7 +31,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cantine_spark.execution import scoring
+from cantine_spark.execution import driverexec, scoring
 from cantine_spark.index import IndexReader
 from cantine_spark.plans.nodes import (
     All, Boolean, Boost, DisMax, Phrase, QueryNode, Term, simplify,
@@ -101,6 +101,7 @@ class SearchExecutor:
             try:
                 found = self._term_dfs_driver(missing)
             except Exception:  # noqa: BLE001 — any driver-read issue → Spark
+                driverexec.note_fallback("term_dfs")
                 ts = self.reader.term_stats
                 cond = functools.reduce(
                     lambda a, b: a | b,
@@ -345,6 +346,7 @@ class SearchExecutor:
         try:
             return self._hydrate_driver(ids, cols)
         except Exception:  # noqa: BLE001 — any driver-read issue → Spark
+            driverexec.note_fallback("hydrate_ids")
             src = self.reader.docs
             if (self._hydration_df is not None
                     and set(cols) <= set(self.HYDRATE_COLS)):

@@ -6,17 +6,21 @@ tique/src/conditional_collector/top_collector.rs:228-237); the north rule
 asks for block-max pruning beyond the reference. Catalyst cannot express it,
 so it lives inside a Python kernel (SURVEY §4 O10). Like the reference,
 which scores each tantivy segment in place, every shard is scored where its
-rows are read — one task per shard, no shuffle:
+rows are read — one task per shard group, no shuffle:
 
-  spark.range(n_shards).mapInPandas(task)    [one task per shard group]
-    → read_rows(terms, shards=task's shards) [pyarrow point read: hive
-                                               shard= dirs + row-group
-                                               stats pruned]
-    → per-shard kernel                       [candidates + prune + heap]
-    → driver merge of ≤ k+1 rows per shard   [the merge_fruits analog]
+  sc.parallelize(shard ids).mapPartitions(task)  [one task per shard group]
+    → read_rows(terms, shards=task's shards)     [pyarrow point read: hive
+                                                   shard= dirs + row-group
+                                                   stats pruned]
+    → per-shard kernel                           [candidates + prune + heap]
+    → collect ≤ k+1 rows per query and shard     [pickled pandas frames]
+    → driver merge                               [the merge_fruits analog]
 
-The driver tier (execution/driverexec) runs the same reader and the same
-kernel closure on the driver instead of in a task.
+Nothing a task reads goes through Spark SQL, so the job is a plain RDD job:
+no Catalyst plan, no Arrow collect. The champion job (single-term queries
+served from the champion sidecar) takes the same shape. The driver tier
+(execution/driverexec) runs the same reader and the same kernel closure on
+the driver instead of in a task.
 
 Per shard the kernel is all-numpy, two-phase:
 
@@ -56,16 +60,16 @@ per-kernel working set; size span explicitly when executors are small.
 
 from __future__ import annotations
 
-import logging
+import gc
 import os
+import sys
 import threading
+import zipimport
 from dataclasses import dataclass, field as dc_field
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+from pyspark import RDD, TaskContext
 
 from cantine_spark.build.codec import decode_varint
 from cantine_spark.execution import driverexec
@@ -75,31 +79,8 @@ from cantine_spark.plans.nodes import (
     All, Boolean, Boost, DisMax, Phrase, QueryNode, Term,
 )
 
-KERNEL_SCHEMA = T.StructType([
-    T.StructField("shard", T.IntegerType(), False),
-    T.StructField("doc_id", T.LongType(), False),   # -1 counts row, -2 agg row
-    T.StructField("score", T.DoubleType(), False),  # f32-valued
-    T.StructField("sort_val", T.DoubleType(), False),  # = score for relevance
-    T.StructField("shard_total", T.LongType(), False),
-    T.StructField("shard_visited", T.LongType(), False),
-    T.StructField("blocks_total", T.LongType(), False),
-    T.StructField("blocks_scored", T.LongType(), False),
-    # fused-aggregation partials (doc_id == -2 rows; null elsewhere) — the
-    # reference's second collector pass folded into the ONE kernel job
-    # (VERDICT r3 "What's wrong" #1): same candidate set, zero recompute
-    T.StructField("feat", T.StringType(), True),
-    T.StructField("range_idx", T.IntegerType(), True),
-    T.StructField("vmin", T.DoubleType(), True),
-    T.StructField("vmax", T.DoubleType(), True),
-    T.StructField("cnt", T.LongType(), True),
-])
-
 SEED_MIN = 256  # exact-score at least this many docs before pruning
 
-# shard-task job output: KERNEL_SCHEMA rows tagged with the query id they
-# belong to (FastTopK._shard_job — one job answers a whole micro-batch)
-BATCH_KERNEL_SCHEMA = T.StructType(
-    [T.StructField("qid", T.IntegerType(), False)] + list(KERNEL_SCHEMA))
 
 def collect_terms(node: QueryNode, out: set[tuple[str, str]]) -> None:
     if isinstance(node, Term):
@@ -822,15 +803,20 @@ def _topk_f32(docs: np.ndarray, scores64: np.ndarray, k: int,
 
 
 def _empty_kernel_frame() -> pd.DataFrame:
+    """The per-shard kernel frame's columns and dtypes, with no rows."""
     return pd.DataFrame({
         "shard": pd.Series([], dtype=np.int32),
-        "doc_id": pd.Series([], dtype=np.int64),
-        "score": pd.Series([], dtype=np.float64),
-        "sort_val": pd.Series([], dtype=np.float64),
+        "doc_id": pd.Series([], dtype=np.int64),  # -1 counts row, -2 agg row
+        "score": pd.Series([], dtype=np.float64),     # f32-valued
+        "sort_val": pd.Series([], dtype=np.float64),  # = score for relevance
         "shard_total": pd.Series([], dtype=np.int64),
         "shard_visited": pd.Series([], dtype=np.int64),
         "blocks_total": pd.Series([], dtype=np.int64),
         "blocks_scored": pd.Series([], dtype=np.int64),
+        # fused-aggregation partials (doc_id == -2 rows; null elsewhere) —
+        # the reference's second collector pass folded into the ONE kernel
+        # job (VERDICT r3 "What's wrong" #1): same candidate set, zero
+        # recompute
         "feat": pd.Series([], dtype=object),
         "range_idx": pd.Series([], dtype="Int32"),
         "vmin": pd.Series([], dtype=np.float64),
@@ -942,42 +928,41 @@ def _ff_select(ff_ids: np.ndarray, C: np.ndarray) -> np.ndarray:
     return sel_c
 
 
-def _drop_zip_finders() -> None:
-    """Delete the zipimporter entries from sys.path_importer_cache. Every
-    query-side UDF calls this first. pyspark calls
-    importlib.invalidate_caches() at the start of every task, and on
-    CPython 3.11 each cached zipimporter then re-reads its whole archive
-    directory (pyspark.zip: ~1,300 entries, once per cached package path).
-    In a reused worker that cost about 210 ms of CPU per task before the
-    UDF ran. Python rebuilds a deleted entry on the next import that needs
-    it, so imports keep working; a warm worker imports nothing new, so the
-    next task's invalidate_caches() has nothing to re-read."""
-    import sys  # noqa: PLC0415
-    import zipimport  # noqa: PLC0415
+def _worker_prologue() -> None:
+    """First statement of every query-side Spark task. Two fixed per-task
+    costs of a reused pyspark worker go away here:
 
+    - pyspark calls importlib.invalidate_caches() at the start of every
+      task, and on CPython 3.11 each cached zipimporter then re-reads its
+      whole archive directory (pyspark.zip: ~1,300 entries, once per cached
+      package path) — about 210 ms of CPU per task. Deleting the
+      zipimporter entries from sys.path_importer_cache removes it. Python
+      rebuilds a deleted entry on the next import that needs it, so
+      imports keep working; a warm worker imports nothing new, so the next
+      task's invalidate_caches() has nothing to re-read.
+    - pyspark's daemon runs a full gc.collect() after every task of a
+      reused worker, which sweeps the whole import-time heap (pandas,
+      pyarrow, pyspark) — about 31 ms of CPU per task. The first task of
+      each worker process collects once and freezes what is left
+      (gc.freeze), so later collections scan only objects allocated since.
+      Only inside a Spark task: a caller without a TaskContext (a test
+      replaying a task in-process) never freezes its own heap."""
     cache = sys.path_importer_cache
     for path, finder in list(cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             cache.pop(path, None)
+    if gc.get_freeze_count() == 0 and TaskContext.get() is not None:
+        gc.collect()
+        gc.freeze()
 
 
-CHAMP_KERNEL_SCHEMA = T.StructType([
-    T.StructField("shard", T.IntegerType(), False),
-    T.StructField("doc_id", T.LongType(), False),   # -1 = summary row
-    T.StructField("score", T.DoubleType(), False),  # f32-valued
-    T.StructField("n_total", T.LongType(), False),
-    T.StructField("tail_bound", T.DoubleType(), False),
-    T.StructField("n_blocks", T.LongType(), False),
-])
-
-
-def make_champion_kernel(idf: float, avgdl_now: float, factor: float, k: int):
-    """mapInPandas kernel over champion rows (build/champions.py) for ONE
-    (field, term): decode the ≤C impact-ordered postings, score them with
-    the CURRENT global avgdl (bit-identical arithmetic to
-    _ShardEval._tfnorm — f64 in, f32 at the heap boundary), and emit this
-    row's top-k plus a summary row carrying the exact match count and the
-    shard's non-champion score bound:
+def _champ_row_frame(r, idf: float, avgdl_now: float, factor: float,
+                     k: int) -> pd.DataFrame:
+    """Score ONE champion-sidecar row (a (field, term, shard) posting head,
+    build/champions.py) with the current idf/avgdl: decode the ≤C
+    impact-ordered postings and return the row's top-k plus a summary row
+    (doc_id == -1) carrying the exact match count and the shard's
+    non-champion score bound:
 
         tail_bound = idf_now · tail_tfnorm_build · max(1, avgdl_now/avgdl_build)
 
@@ -985,32 +970,11 @@ def make_champion_kernel(idf: float, avgdl_now: float, factor: float, k: int):
     algebra as the tiered block-max rescale, tiered.py docstring — so the
     bound stays TRUE under avgdl drift across tiers/generations). The
     driver serves from champions only when its k-th f32 score strictly
-    beats every row's f32 tail bound; f32 round-to-nearest is monotone, so
-    any non-champion score s ≤ tail_bound satisfies f32(s) ≤ f32(bound)
-    < θ — no tie is possible and doc-id tie-breaks never engage."""
-
-    def gen(batches):
-        _drop_zip_finders()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for r in pdf.itertuples(index=False):
-                out.append(_champ_row_frame(r, idf, avgdl_now, factor, k))
-            if out:
-                yield pd.concat(out, ignore_index=True)
-
-    return gen
-
-
-def _champ_row_frame(r, idf: float, avgdl_now: float, factor: float,
-                     k: int) -> pd.DataFrame:
-    """Score ONE champion-sidecar row (a (field, term, shard) posting head)
-    with the current idf/avgdl and return its CHAMP_KERNEL_SCHEMA frame:
-    the row's top-k plus a summary row (doc_id == -1) carrying the exact
-    match count and the f32-safe non-champion tail bound. Shared by the
-    single-query and batched champion kernels — the arithmetic must stay
-    bit-identical to _ShardEval._tfnorm (f64 in, f32 at the heap)."""
+    beats every row's f32 tail bound (_champ_verify); f32 round-to-nearest
+    is monotone, so any non-champion score s ≤ tail_bound satisfies
+    f32(s) ≤ f32(bound) < θ — no tie is possible and doc-id tie-breaks
+    never engage. The arithmetic must stay bit-identical to
+    _ShardEval._tfnorm (f64 in, f32 at the heap)."""
     docs = np.frombuffer(r.doc_ids, dtype="<u8").astype(np.int64)
     tfs = np.frombuffer(r.tfs, dtype="<u4").astype(np.float64)
     dls = np.frombuffer(r.dls, dtype="<u4").astype(np.float64)
@@ -1031,35 +995,36 @@ def _champ_row_frame(r, idf: float, avgdl_now: float, factor: float,
     }, index=range(n + 1))
 
 
-BATCH_CHAMP_KERNEL_SCHEMA = T.StructType(
-    [T.StructField("qid", T.IntegerType(), False)] + list(CHAMP_KERNEL_SCHEMA))
+def _champ_frames(rows: pd.DataFrame, by_ft: dict, avgdl_by_field: dict):
+    """(qid, frame) for every champion row of `rows` and every query
+    registered on its (field, term). by_ft maps (field, term) → [(qid, idf,
+    factor, k), ...] (two queries may hit the same term). The per-row math
+    is _champ_row_frame, so the driver read and the Spark task score
+    bit-equal frames."""
+    for r in rows.itertuples(index=False):
+        for qid, idf, factor, k in by_ft.get((r.field, r.term), ()):
+            yield qid, _champ_row_frame(
+                r, idf, float(avgdl_by_field[r.field]), factor, k)
 
 
-def make_champion_batch_kernel(by_ft: dict, avgdl_by_field: dict):
-    """Batched champion kernel: ONE mapInPandas job serves every
-    champion-eligible single-term query in a micro-batch. by_ft maps
-    (field, term) → [(qid, idf, factor, k), ...] (two queries may hit the
-    same term); each champion row is scored once per registered query and
-    emitted tagged with that query's qid. Per-row math is _champ_row_frame
-    — identical to the single-query path, so batched results are
-    bit-equal."""
+def make_champion_task(champ_spec, by_ft: dict, avgdl_by_field: dict):
+    """Task function of the champion job (FastTopK._serve_champions), the
+    same shape as make_shard_task: its input is an iterator of shard ids;
+    it point-reads those shards' champion rows for every registered term
+    with driverexec.read_rows and yields _champ_frames' (qid, frame)
+    pairs."""
+    terms = set(by_ft)
 
-    def gen(batches):
-        _drop_zip_finders()
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out = []
-            for r in pdf.itertuples(index=False):
-                for qid, idf, factor, k in by_ft.get((r.field, r.term), ()):
-                    f = _champ_row_frame(
-                        r, idf, float(avgdl_by_field[r.field]), factor, k)
-                    f.insert(0, "qid", np.int32(qid))
-                    out.append(f)
-            if out:
-                yield pd.concat(out, ignore_index=True)
+    def task(shards):
+        _worker_prologue()
+        shards = set(shards)
+        if shards:
+            yield from _champ_frames(
+                driverexec.read_rows(champ_spec, terms,
+                                     driverexec.CHAMP_COLUMNS, shards=shards),
+                by_ft, avgdl_by_field)
 
-    return gen
+    return task
 
 
 def make_kernel(node: QueryNode, idfs: dict, avgdl: dict, k: int,
@@ -1103,10 +1068,9 @@ def make_kernel(node: QueryNode, idfs: dict, avgdl: dict, k: int,
 
     lean=True (driver-tier callers only): emit per-shard output as raw
     numpy column dicts — `(core_dict, agg_pdf|None)` — instead of pandas
-    frames. The Spark paths must keep the full KERNEL_SCHEMA for Arrow,
-    but on the driver 32 per-shard DataFrame constructions were ~37% of a
-    warm query's wall time; _lean_concat assembles ONE frame per query
-    from the dicts."""
+    frames (_empty_kernel_frame's columns). On the driver 32 per-shard
+    DataFrame constructions were ~37% of a warm query's wall time;
+    _lean_concat assembles ONE frame per query from the dicts."""
 
     def run(shard: int, pdf: pd.DataFrame,
             champs: pd.DataFrame | None = None) -> pd.DataFrame:
@@ -1417,11 +1381,9 @@ def _term_keys(pdf: pd.DataFrame) -> pd.MultiIndex:
     return pd.MultiIndex.from_arrays([pdf["field"], pdf["term"]])
 
 
-def make_shard_task(shard_ids: list[int], seg_spec, champ_spec,
-                    queries: dict[int, tuple]):
-    """mapInPandas function of the shard-task kernel job
-    (FastTopK._shard_job). Its input rows are ids of
-    spark.range(len(shard_ids)); id i names shard shard_ids[i].
+def make_shard_task(seg_spec, champ_spec, queries: dict[int, tuple]):
+    """Task function of the shard-task kernel job (FastTopK._shard_job):
+    its input is an iterator of the shard ids of one RDD partition.
 
     queries: qid → (run, live terms, champion-seeded, has phrase), with
     `run` the query's make_kernel closure. A task point-reads its shards'
@@ -1431,7 +1393,7 @@ def make_shard_task(shard_ids: list[int], seg_spec, champ_spec,
     seeded queries' terms. Per shard it slices the rows per query by
     (field, term) membership and runs that query's closure, so each
     query's result is bit-equal to a job of its own and to the driver
-    tier. Output rows carry their qid (BATCH_KERNEL_SCHEMA)."""
+    tier. It yields one (qid, kernel frame) pair per query and shard."""
     all_terms = set().union(*(q[1] for q in queries.values()))
     champ_terms = set().union(*(q[1] for q in queries.values() if q[2]))
     cols = driverexec.SEG_COLUMNS + (
@@ -1449,31 +1411,39 @@ def make_shard_task(shard_ids: list[int], seg_spec, champ_spec,
             if seeded and ch_keys is not None:
                 cs = ch[ch_keys.isin(keys[qid])]
                 champs = cs if len(cs) else None
-            res = run(shard, sub, champs=champs)
-            res.insert(0, "qid", np.full(len(res), qid, dtype=np.int32))
-            yield res
+            yield qid, run(shard, sub, champs=champs)
 
-    def task(batches):
-        _drop_zip_finders()
-        for ids in batches:
-            shards = {shard_ids[i] for i in ids["id"].tolist()}
-            rows = driverexec.read_rows(seg_spec, all_terms, cols,
-                                        shards=shards)
-            if not len(rows):
-                continue
-            champs = (driverexec.read_rows(champ_spec, champ_terms,
-                                           driverexec.CHAMP_COLUMNS,
-                                           shards=shards)
-                      if champ_terms else None)
-            outs = []
-            for shard, g in rows.groupby("shard", sort=True):
-                ch = (None if champs is None
-                      else champs[champs["shard"].to_numpy() == shard])
-                outs.extend(_dispatch(int(shard), g, ch))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+    def task(shards):
+        _worker_prologue()
+        shards = set(shards)
+        if not shards:
+            return
+        rows = driverexec.read_rows(seg_spec, all_terms, cols, shards=shards)
+        if not len(rows):
+            return
+        champs = (driverexec.read_rows(champ_spec, champ_terms,
+                                       driverexec.CHAMP_COLUMNS,
+                                       shards=shards)
+                  if champ_terms else None)
+        for shard, g in rows.groupby("shard", sort=True):
+            ch = (None if champs is None
+                  else champs[champs["shard"].to_numpy() == shard])
+            yield from _dispatch(int(shard), g, ch)
 
     return task
+
+
+def _by_qid(pairs) -> dict[int, pd.DataFrame]:
+    """One frame per qid from (qid, frame) pairs, in arrival order."""
+    out: dict[int, list] = {}
+    for qid, frame in pairs:
+        out.setdefault(qid, []).append(frame)
+    return {qid: pd.concat(fs, ignore_index=True) for qid, fs in out.items()}
+
+
+# a query no task produced rows for: _merge_kernel_frame and _champ_verify
+# both check len() first
+_NO_ROWS = pd.DataFrame()
 
 
 def _merge_kernel_frame(pdf: pd.DataFrame, k: int, ascending: bool,
@@ -1588,21 +1558,6 @@ def champ_tree_ok(node: QueryNode) -> bool:
 
 # ===================================================================== driver
 
-_log = logging.getLogger(__name__)
-# process-wide count of driver-tier executions that failed and silently
-# spilled to the cluster kernel (ADVICE r6: every swallowed exception here
-# degrades to a correct-but-slow query with zero signal — bench and tests
-# read this counter to catch unexpected driver-tier failures)
-DRIVER_TIER_FALLBACKS = 0
-
-
-def _note_driver_fallback(where: str) -> None:
-    global DRIVER_TIER_FALLBACKS
-    DRIVER_TIER_FALLBACKS += 1
-    _log.debug("driver-tier %s failed; falling back to the cluster kernel",
-               where, exc_info=True)
-
-
 @dataclass
 class KernelResult:
     total: int
@@ -1671,9 +1626,14 @@ class FastTopK:
         # compaction — presents N tier dirs as one logical index here
         # (tiered.TieredIndexReader scales block-max bounds per tier).
         self._span = int(self.reader.segments_meta()["shard_span"])
-        # the shard-task kernel job runs one task per group of these ids
-        # (the segments' hive shard= dirs, united over tiers)
+        # the query-side Spark jobs map their task over these ids (the
+        # segments' hive shard= dirs, united over tiers), one task per
+        # group of shards: at most defaultParallelism partitions
         self._shards = driverexec.shard_ids(self.reader.segment_point_spec())
+        sc = self.reader.spark.sparkContext
+        self._shard_rdd = sc.parallelize(
+            self._shards,
+            max(1, min(len(self._shards), sc.defaultParallelism)))
         # fast-field sidecar (write_fastfields): present + span-consistent →
         # kernels read filter/sort/agg feature values shard-locally; stale
         # or absent → covers() is False for every feature and the engine
@@ -1689,13 +1649,12 @@ class FastTopK:
         # relevance page-1 queries — the one shape block-max pruning cannot
         # prune on tfnorm-saturated corpora — are answered from O(C)
         # impact-ordered postings per shard with a lossless fallback bound.
+        # A stale sidecar (span mismatch after a re-encode) is never read.
         ch = self.reader.champions_spec()
-        if ch is not None and int(ch["shard_span"]) == self._span:
-            self._champ = self.reader.champions_df()
-        else:
-            self._champ = None
-        # observability for plan tests: the last kernel job's DataFrame
-        self.last_job: DataFrame | None = None
+        self._champions = (ch is not None
+                           and int(ch["shard_span"]) == self._span)
+        # observability for plan tests: the last Spark job's RDD
+        self.last_job: RDD | None = None
 
     @property
     def has_fastfields(self) -> bool:
@@ -1708,65 +1667,65 @@ class FastTopK:
         return not features or (self._ff_dir is not None
                                 and set(features) <= self._ff_cols)
 
-    @staticmethod
-    def _term_cond(terms: set[tuple[str, str]]):
-        by_field: dict[str, list[str]] = {}
-        for f_, t_ in terms:
-            by_field.setdefault(f_, []).append(t_)
-        cond = None
-        for f_, ts in by_field.items():
-            c = (F.col("field") == f_) & F.col("term").isin(*ts)
-            cond = c if cond is None else (cond | c)
-        return cond
+    def _shard_job(self, task) -> dict[int, pd.DataFrame]:
+        """Run `task` (make_shard_task / make_champion_task) as ONE plain
+        RDD job over the shard ids: one task per group of shards, each
+        reading its own shards' rows — the reference scores each segment in
+        place. Nothing enters through Spark SQL, so there is no Catalyst
+        plan to build and no Arrow collect; the tasks' (qid, frame) pairs
+        come back pickled and are concatenated per qid for the driver-side
+        merge, the reference's merge_fruits (tique top_collector.rs:180-182).
+        Shard count scales with cluster parallelism (span =
+        n_docs/(parallelism·4)), so the collected frames stay driver-sized
+        (≤ k+1 rows per query and matched shard) even at 10^12 docs."""
+        job = self._shard_rdd.mapPartitions(task)
+        self.last_job = job
+        return _by_qid(job.collect())
 
-    def _champ_frames_driver(self, field: str, term: str, idf: float,
-                             factor: float, k: int) -> pd.DataFrame:
-        """Driver-side champion read + score for ONE (field, term): pyarrow
-        point read of the champion rows (row-group pruned on the sorted
-        layout), scored with the SAME _champ_row_frame the Spark kernel
-        uses. Raises on any read failure — the caller falls back to the
-        Spark champion job. Champion rows are ≤ cap postings per shard
-        regardless of df, so this read is bounded even for the hottest
-        term (unlike the segment driver tier, which is df-budgeted)."""
-        rows = driverexec.read_rows(self.reader.champion_point_spec(),
-                                    {(field, term)}, driverexec.CHAMP_COLUMNS)
-        avgdl_now = float(self.avgdl_by_field[field])
-        frames = [_champ_row_frame(r, idf, avgdl_now, factor, k)
-                  for r in rows.itertuples(index=False)]
-        if not frames:
-            return pd.DataFrame(
-                columns=[f.name for f in CHAMP_KERNEL_SCHEMA.fields])
-        return pd.concat(frames, ignore_index=True)
+    def _kernel_job(self, queries: dict[int, tuple]) -> dict[int, pd.DataFrame]:
+        """The shard-task kernel job over `queries` (make_shard_task's
+        contract); champion rows are read only for seeded queries."""
+        seeded = any(q[2] for q in queries.values())
+        return self._shard_job(make_shard_task(
+            self.reader.segment_point_spec(),
+            self.reader.champion_point_spec() if seeded else None, queries))
 
-    def _champion_search(self, field: str, term: str, idf: float,
-                         factor: float, k: int) -> KernelResult | None:
-        """Serve a single-term top-k from the champion sidecar, or return
-        None when the lossless bound cannot be established (the caller then
-        runs the full block kernel — never a wrong answer).
+    def _serve_champions(self, targets: dict[int, tuple]) -> dict:
+        """Serve single-term top-k queries from the champion sidecar.
+        targets: qid → (field, term, idf, boost, k). Returns {qid:
+        KernelResult} for the queries whose lossless bound holds
+        (_champ_verify); the others are absent and run the full block
+        kernel — never a wrong answer.
 
-        Zero Spark jobs in the common case: the champion rows are a
-        driver-side pyarrow point read (bounded at cap postings/shard even
-        for the hottest term) scored locally with the same _champ_row_frame
-        arithmetic. Any read failure falls back to the r5 shape — one tiny
-        Spark job over the champions scan (row-group pruned to ~one file),
-        same kernel math, same _champ_verify."""
+        With the driver tier on, the champion rows are one pyarrow point
+        read — bounded at cap postings per shard and term even for the
+        hottest term, so zero Spark jobs. Otherwise, or when that read
+        fails (counted), one shard-task job reads each shard's rows where
+        it runs (make_champion_task)."""
+        by_ft: dict[tuple, list] = {}
+        for i, (f_, t_, idf, fac, k) in targets.items():
+            by_ft.setdefault((f_, t_), []).append((i, idf, fac, k))
+        spec = self.reader.champion_point_spec()
+        parts = None
         if self.use_driver:
             try:
-                res = _champ_verify(
-                    self._champ_frames_driver(field, term, idf, factor, k), k)
-                if res is not None:
-                    res.driver_served = True
-                return res
+                parts = _by_qid(_champ_frames(
+                    driverexec.read_rows(spec, set(by_ft),
+                                         driverexec.CHAMP_COLUMNS),
+                    by_ft, self.avgdl_by_field))
             except Exception:
-                # unreadable sidecar path → Spark fallback below
-                _note_driver_fallback("champion read")
-        avgdl_now = float(self.avgdl_by_field[field])
-        kern = make_champion_kernel(idf, avgdl_now, factor, k)
-        job = (self._champ
-               .filter((F.col("field") == field) & (F.col("term") == term))
-               .mapInPandas(kern, CHAMP_KERNEL_SCHEMA))
-        self.last_job = job
-        return _champ_verify(job.toPandas(), k)
+                driverexec.note_fallback("champion read")
+        on_driver = parts is not None
+        if not on_driver:
+            parts = self._shard_job(make_champion_task(
+                spec, by_ft, self.avgdl_by_field))
+        out = {}
+        for i, target in targets.items():
+            res = _champ_verify(parts.get(i, _NO_ROWS), target[-1])
+            if res is not None:
+                res.driver_served = on_driver
+                out[i] = res
+        return out
 
     def _make_kernel(self, node: QueryNode, idfs: dict, k: int, after,
                      ascending: bool, seed_min: int,
@@ -1788,7 +1747,7 @@ class FastTopK:
                       sort_feature: str | None, use_champions: bool) -> bool:
         """Whether the block kernel reads champion rows to seed θ
         (relevance-descending page-1 queries over champion-shaped trees)."""
-        return (use_champions and self._champ is not None and after is None
+        return (use_champions and self._champions and after is None
                 and not ascending and sort_feature is None
                 and champ_tree_ok(node))
 
@@ -1798,7 +1757,7 @@ class FastTopK:
         """(field, term, idf, boost) when the query can be served from the
         champion sidecar alone — a (boosted) single-term relevance-
         descending page-1 query with no filter, sort or agg — else None."""
-        if not (use_champions and self._champ is not None and after is None
+        if not (use_champions and self._champions and after is None
                 and not ascending and sort_feature is None and not agg_query
                 and not range_filters):
             return None
@@ -1919,16 +1878,16 @@ class FastTopK:
         # relevance-descending page-1 queries with no filter/sort/agg read
         # O(C) impact-ordered postings per shard instead of decoding every
         # block (hot-term block-max saturation, VERDICT r4 "What's missing"
-        # #3). Lossless: _champion_search verifies the k-th f32 score
+        # #3). Lossless: _serve_champions verifies the k-th f32 score
         # strictly beats every shard's non-champion tail bound, else
-        # returns None and the full block kernel runs below. Pagination
+        # leaves the query to the full block kernel below. Pagination
         # (`after`), ascending order, filters, field sorts and fused aggs
         # all need postings beyond the heads, so they never route here.
         target = self._champion_target(node, idfs, after, ascending,
                                        sort_feature, agg_query,
                                        range_filters, use_champions)
         if target is not None:
-            res = self._champion_search(*target, k)
+            res = self._serve_champions({0: (*target, k)}).get(0)
             if res is not None:
                 return res
 
@@ -1981,38 +1940,16 @@ class FastTopK:
                         use_champs, empty_agg)
             except Exception:
                 # unreadable path / stale layout → cluster kernel
-                _note_driver_fallback("search")
+                driverexec.note_fallback("search")
             finally:
                 for _ in range(got):
                     self._driver_permits.release()
         run = self._make_kernel(node, idfs, k, after, ascending, seed_min,
                                 sort_feature, agg_query, range_filters)
-        pdf = self._shard_job({0: (run, live, use_champs,
-                                   tree_has_phrase(node))})
-        return _merge_kernel_frame(pdf, k, ascending, sort_feature,
-                                   agg_query, empty_agg)
-
-    def _shard_job(self, queries: dict[int, tuple]) -> pd.DataFrame:
-        """Run the kernels of `queries` (make_shard_task's contract) as ONE
-        shuffle-free Spark job: spark.range over the shard ids →
-        mapInPandas, one task per group of shards, each reading its own
-        shards' rows — the reference scores each segment in place. The
-        collected output (≤ k+1 rows per query and matched shard) is merged
-        on the driver, the reference's merge_fruits (tique
-        top_collector.rs:180-182). Shard count scales with cluster
-        parallelism (span = n_docs/(parallelism·4)), so that frame stays
-        driver-sized even at 10^12 docs."""
-        n = len(self._shards)
-        seeded = any(q[2] for q in queries.values())
-        task = make_shard_task(
-            self._shards, self.reader.segment_point_spec(),
-            self.reader.champion_point_spec() if seeded else None, queries)
-        spark = self.reader.spark
-        par = spark.sparkContext.defaultParallelism
-        job = (spark.range(n, numPartitions=max(1, min(n, par)))
-               .mapInPandas(task, BATCH_KERNEL_SCHEMA))
-        self.last_job = job
-        return job.toPandas()
+        parts = self._kernel_job({0: (run, live, use_champs,
+                                      tree_has_phrase(node))})
+        return _merge_kernel_frame(parts.get(0, _NO_ROWS), k, ascending,
+                                   sort_feature, agg_query, empty_agg)
 
     def _check_sidecar_cover(self, sort_feature, agg_query,
                              range_filters) -> None:
@@ -2048,10 +1985,12 @@ class FastTopK:
         same sidecar-cover contract as search().
 
         Job 1 serves every champion-eligible single-term query from the
-        champion sidecar (make_champion_batch_kernel, rows dispatched per
-        (field, term) → qids); the per-query lossless bound check is the
-        SAME _champ_verify as the single path, and failures drop into job 2.
-        Job 2 is ONE shard-task job (_shard_job) over every remaining
+        champion sidecar (_serve_champions: one driver-side read with the
+        driver tier on, else one shard-task job of make_champion_task, rows
+        dispatched per (field, term) → qids); the per-query lossless bound
+        check is the SAME _champ_verify as the single path, and failures
+        drop into job 2.
+        Job 2 is ONE shard-task job (_kernel_job) over every remaining
         query: each task point-reads its shards' rows for the UNION of
         their terms, slices them per query by (field, term) membership and
         dispatches them to that query's unmodified single-query kernel
@@ -2112,7 +2051,7 @@ class FastTopK:
                         use_champs, empty_agg)
                     continue
                 except Exception:
-                    _note_driver_fallback("search_many")
+                    driverexec.note_fallback("search_many")
             block[i] = dict(node=node, k=k, ascending=ascending,
                             sort_feature=sort_feature, agg_query=agg_query,
                             live=set(idfs), empty_agg=empty_agg,
@@ -2126,50 +2065,23 @@ class FastTopK:
             if target is not None:
                 champ_direct[i] = (*target, k)
 
-        # driver-side champion reads first (bounded at cap postings/shard
-        # even for the hottest term): each served query leaves the batch;
-        # a verify-fail drops to job 2 exactly like the Spark shape. Only
-        # an unreadable sidecar path leaves entries for the Spark job 1.
-        if champ_direct and self.use_driver:
-            for i in list(champ_direct):
-                f_, t_, idf, fac, k = champ_direct[i]
-                try:
-                    res = _champ_verify(
-                        self._champ_frames_driver(f_, t_, idf, fac, k), k)
-                except Exception:
-                    _note_driver_fallback("batched champion read")
-                    break
-                del champ_direct[i]
-                if res is not None:
-                    res.driver_served = True
-                    out[i] = res
-                    del block[i]
-
-        # job 1: every champion-eligible single-term query in one pass
+        # job 1 (or one driver-side read): every champion-eligible
+        # single-term query in one pass; a verify-fail stays in `block`
         if champ_direct:
-            by_ft: dict[tuple, list] = {}
-            for i, (f_, t_, idf, fac, k) in champ_direct.items():
-                by_ft.setdefault((f_, t_), []).append((i, idf, fac, k))
-            kern = make_champion_batch_kernel(by_ft, self.avgdl_by_field)
-            pdf = (self._champ.filter(self._term_cond(set(by_ft)))
-                   .mapInPandas(kern, BATCH_CHAMP_KERNEL_SCHEMA)
-                   .toPandas())
-            for i, (_f, _t, _idf, _fac, k) in champ_direct.items():
-                res = _champ_verify(pdf[pdf["qid"] == i], k)
-                if res is not None:      # else: lossless fallback to job 2
-                    out[i] = res
-                    del block[i]
+            for i, res in self._serve_champions(champ_direct).items():
+                out[i] = res
+                del block[i]
 
         # job 2: ONE shard-task job over every remaining query; per-qid
         # dispatch happens IN the task
         if block:
-            pdf = self._shard_job({
+            parts = self._kernel_job({
                 i: (c["run"], c["live"], c["use_champs"],
                     tree_has_phrase(c["node"]))
                 for i, c in block.items()})
             for i, c in block.items():
                 out[i] = _merge_kernel_frame(
-                    pdf[pdf["qid"] == i], c["k"], c["ascending"],
+                    parts.get(i, _NO_ROWS), c["k"], c["ascending"],
                     c["sort_feature"], c["agg_query"], c["empty_agg"])
         return out
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from cantine_spark.execution import driverexec
 from cantine_spark.execution.scoring import B, K1
 from cantine_spark.execution.scoring import idf as idf_fn
 from cantine_spark.plans.nodes import (
@@ -182,6 +183,7 @@ def explain_hits(reader, executor, node: QueryNode,
         try:
             post = _postings_driver(reader, fts, doc_ids)
         except Exception:  # noqa: BLE001 — any driver-read issue → Spark
+            driverexec.note_fallback("explain postings read")
             post = _postings_spark(executor, fts, doc_ids)
     else:
         post = {}

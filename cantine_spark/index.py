@@ -162,10 +162,6 @@ class IndexReader:
             return None
         return {"shard_span": int(m["shard_span"]), "cap": int(m["cap"])}
 
-    def champions_df(self) -> DataFrame:
-        return self.spark.read.parquet(
-            fsutil.join(self.index_dir, "champions"))
-
     # ---- point-read specs (execution/driverexec): the segments and
     #      champions tables addressed for pyarrow point reads — by the
     #      driver tier and by the cluster kernel's shard tasks alike. A
@@ -209,7 +205,9 @@ class IndexReader:
         except ValueError:
             raise  # the duplicate-uuid invariant, not a read failure
         except Exception:  # noqa: BLE001 — any driver-read issue → Spark
-            pass
+            # lazy: cantine_spark.execution imports this module
+            from cantine_spark.execution import driverexec  # noqa: PLC0415
+            driverexec.note_fallback("id_for_uuid")
         try:
             um = self.uuid_map
         except SchemaMismatch:

@@ -11,7 +11,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                  len(os.sched_getaffinity(0))))
+
+
+def _default_heap() -> str:
+    """Driver heap: a quarter of the host's RAM, at least 1 GiB and at most
+    2 GiB — the same rule as perfbench/run.py's session sizing."""
+    with open("/proc/meminfo") as f:
+        total_kb = int(f.readline().split()[1])
+    return f"{max(1024, min(2048, total_kb // 1024 // 4))}m"
 
 
 def get_spark(
@@ -29,6 +38,7 @@ def get_spark(
     """
     cores = cores or DEFAULT_CPUS
     shuffle = shuffle_partitions or cores
+    heap = os.environ.get("SPARK_DRIVER_MEM") or _default_heap()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -41,30 +51,34 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.memory.fraction", "0.7")
-        # Pin + pre-touch the heap and use a non-uncommitting GC: G1's
+        # Pin the heap (-Xms = -Xmx) and use a non-uncommitting GC: G1's
         # region commit/uncommit churn caused TLB-shootdown IPI storms at
         # local[32] (70-90% system CPU, threads stuck in
         # irqentry_exit_to_user_mode) — a 200k-doc build dropped from 262s
         # to 47s with this alone.
         .config("spark.driver.extraJavaOptions",
                 os.environ.get("SPARK_DRIVER_JAVA_OPTS",
-                               "-Xms16g -XX:+AlwaysPreTouch -XX:+UseParallelGC"))
+                               f"-Xms{heap} -XX:+UseParallelGC"))
         # direct task commits: no serial driver-side rename of hundreds of
         # bucket files at job commit
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-        # Reused python workers are not free per task either: pyspark calls
-        # importlib.invalidate_caches() at every task start, and on CPython
-        # 3.11 every cached zipimporter then re-reads its archive directory
-        # (pyspark.zip, ~1,300 entries, once per cached package path) —
-        # measured ~210 ms of CPU per task in a reused worker on 4 vCPUs.
-        # That per-task cost is consistent with the "kernel-time spin"
-        # seen with reuse on (an identical build ran 27s with reuse off vs
+        # Reused python workers are not free per task either. pyspark
+        # calls importlib.invalidate_caches() at every task start, and on
+        # CPython 3.11 every cached zipimporter then re-reads its archive
+        # directory (pyspark.zip, ~1,300 entries, once per cached package
+        # path) — measured ~210 ms of CPU per task in a reused worker on 4
+        # vCPUs. After every task the daemon also runs a full gc.collect()
+        # over the worker's whole import-time heap (~31 ms per task).
+        # The zip re-read is consistent with the "kernel-time spin" seen
+        # with reuse on (an identical build ran 27s with reuse off vs
         # 60-160s with reuse on at local[32], 80-90% system CPU). The
         # build keeps reuse off; fresh workers cost ~0.1s each. Serving
-        # processes turn reuse on, and every query-side UDF drops the zip
-        # finders first (execution/wand._drop_zip_finders).
+        # processes turn reuse on, and every query-side task starts with
+        # execution/wand._worker_prologue, which drops the zip finders and
+        # freezes the worker's heap once so the per-task collection scans
+        # only what the tasks allocate.
         .config("spark.python.worker.reuse", "false")
         .config("spark.ui.enabled", "false")
     )

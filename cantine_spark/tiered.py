@@ -225,7 +225,7 @@ class TieredIndexReader(IndexReader):
         make the union lossy — fall back to the block kernel). No avgdl
         rescale is needed here: each champion row stores its tier's
         avgdl_build, and the query-side tail bound applies
-        max(1, avgdl_global/avgdl_build) per row (make_champion_kernel)."""
+        max(1, avgdl_global/avgdl_build) per row (wand._champ_row_frame)."""
         from cantine_spark.build.champions import load_champions_meta
         metas = [load_champions_meta(d) for d in self.tier_dirs]
         if any(m is None for m in metas):
@@ -234,9 +234,6 @@ class TieredIndexReader(IndexReader):
             return None
         return {"shard_span": self._span,
                 "cap": min(int(m["cap"]) for m in metas)}
-
-    def champions_df(self) -> DataFrame:
-        return self._union("champions")
 
     # ----------------------------------------------- driver-tier point specs
     def segment_point_spec(self) -> list[tuple[str, dict[str, tuple]]]:
@@ -262,5 +259,5 @@ class TieredIndexReader(IndexReader):
 
     def champion_point_spec(self) -> list[str]:
         # no rescale: champion rows store avgdl_build, the query-side tail
-        # bound applies the drift factor per row (make_champion_kernel)
+        # bound applies the drift factor per row (wand._champ_row_frame)
         return [fsutil.join(d, "champions") for d in self.tier_dirs]

@@ -125,9 +125,9 @@ def main() -> None:
     eng = SearchEngine(IndexReader(spark, idx), use_driver=False)
     for name, q in BENCH_QUERIES:
         eng.search(dict(q))
-        job = eng._fast.last_job
+        job = eng._fast.last_job  # a plain RDD job: its lineage, no plan
         if job is not None:
-            plans[name + "_cluster"] = fmt(job)
+            plans[name + "_cluster"] = job.toDebugString().decode()
 
     for name, text in plans.items():
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:

@@ -240,6 +240,26 @@ def test_driver_hydration_equals_spark_scan(engine):
     assert r_fast.total_found == r_fb.total_found
 
 
+def test_hydration_fallback_is_counted(engine, monkeypatch):
+    """A failed driver-side hydration read falls back to the Spark scan
+    and is counted in driverexec.DRIVER_TIER_FALLBACKS — never silent —
+    while the answer stays the same."""
+    from cantine_spark.execution import driverexec
+
+    q = {"fulltext": "def return", "num_items": PAGE}
+    ref = engine.search(dict(q))
+
+    def boom(ids_, cols_):
+        raise RuntimeError("driver store unreadable")
+
+    monkeypatch.setattr(engine.executor, "_hydrate_driver", boom)
+    before = driverexec.DRIVER_TIER_FALLBACKS
+    res = engine.search(dict(q))
+    assert driverexec.DRIVER_TIER_FALLBACKS == before + 1
+    assert res.items == ref.items
+    assert res.total_found == ref.total_found
+
+
 def test_driver_term_dfs_equals_spark_scan(engine):
     """term_dfs' driver-side bucket point lookup must return the same
     document frequencies as the pruned Spark scan, including df=0 for

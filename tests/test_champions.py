@@ -56,15 +56,6 @@ def _same(a, b):
         [(d, np.float32(s)) for d, s in b.hits]
 
 
-def plan_of(df) -> str:
-    import io
-    from contextlib import redirect_stdout
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 # ------------------------------------------------------------ build side
 
 
@@ -173,15 +164,46 @@ def test_champion_rows_are_true_tfnorm_heads(spark, champ_idx):
 # ------------------------------------------------------- query-side paths
 
 
-def test_bare_term_served_without_touching_segments(champ_fast):
+def test_bare_term_served_without_touching_segments(champ_fast,
+                                                    monkeypatch):
     """A single-term relevance top-k reads ONLY the champion sidecar — no
-    segments scan in the plan, zero blocks decoded — and is bit-equal to
-    the block path."""
+    segments read, zero blocks decoded — and is bit-equal to the block
+    path. The champion tasks read in Python workers, so the test captures
+    the job's task function and replays it in this process over every
+    shard id, recording each point read's table."""
+    from cantine_spark.execution import driverexec, wand
+
+    champ_tasks, kernel_tasks = [], []
+    make_champion_task, make_shard_task = (wand.make_champion_task,
+                                           wand.make_shard_task)
+
+    def champion_spy(*a):
+        champ_tasks.append(make_champion_task(*a))
+        return champ_tasks[-1]
+
+    def kernel_spy(*a):
+        kernel_tasks.append(make_shard_task(*a))
+        return kernel_tasks[-1]
+
+    monkeypatch.setattr(wand, "make_champion_task", champion_spy)
+    monkeypatch.setattr(wand, "make_shard_task", kernel_spy)
     a = champ_fast.search(HOT, k=K)
     assert a.champion_served and a.blocks_scored == 0
-    plan = plan_of(champ_fast.last_job)
-    locs = [ln for ln in plan.splitlines() if "Location:" in ln]
-    assert len(locs) == 1 and "champions" in locs[0]
+    assert len(champ_tasks) == 1 and not kernel_tasks
+    monkeypatch.undo()
+
+    specs = []
+    read_rows = driverexec.read_rows
+
+    def recording(spec, terms, columns, shards=None):
+        specs.append(spec)
+        return read_rows(spec, terms, columns, shards=shards)
+
+    monkeypatch.setattr(driverexec, "read_rows", recording)
+    assert list(champ_tasks[0](iter(champ_fast._shards)))
+    champ_spec = champ_fast.reader.champion_point_spec()
+    assert specs and all(s == champ_spec for s in specs)
+    monkeypatch.undo()
     b = champ_fast.search(HOT, k=K, use_champions=False)
     assert not b.champion_served
     _same(a, b)
@@ -283,7 +305,7 @@ def test_stale_span_disables_champions(spark, champ_idx):
         with open(meta_p, "w") as f:
             json.dump(m, f)
         fast = FastTopK(IndexReader(spark, champ_idx))
-        assert fast._champ is None
+        assert not fast._champions
         a = fast.search(HOT, k=K)
         assert not a.champion_served and a.hits
     finally:

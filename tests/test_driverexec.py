@@ -154,8 +154,6 @@ def test_unreadable_spec_falls_back_to_cluster(reader, monkeypatch):
     counted, not driver-served, same answer. (The failure is injected
     into _driver_search rather than into the reader's point spec, which
     the cluster kernel's shard tasks read too.)"""
-    from cantine_spark.execution import wand
-
     fd = FastTopK(reader)
     ref = fd.search(SHAPES["dismax"], k=5)
     assert ref.driver_served
@@ -164,9 +162,9 @@ def test_unreadable_spec_falls_back_to_cluster(reader, monkeypatch):
         raise OSError("segments unreadable")
 
     monkeypatch.setattr(fd, "_driver_search", unreadable)
-    before = wand.DRIVER_TIER_FALLBACKS
+    before = driverexec.DRIVER_TIER_FALLBACKS
     res = fd.search(SHAPES["dismax"], k=5)
-    assert wand.DRIVER_TIER_FALLBACKS == before + 1
+    assert driverexec.DRIVER_TIER_FALLBACKS == before + 1
     assert not res.driver_served  # fell back
     _same(res, ref)
 
@@ -257,14 +255,12 @@ def test_agg_with_zero_matches_stays_on_driver(pair):
     agg partials (filter excludes every doc) used to KeyError in
     _merge_kernel_frame and silently fall back to the cluster. It must be
     driver-served with all-empty agg buckets, equal to the cluster path."""
-    from cantine_spark.execution import wand
-
     fd, fc = pair
     kw = dict(k=5, range_filters={"num_lines": (1e9, 2e9)},  # matches nothing
               agg_query={"content_bytes": [(0.0, 2000.0), (2000.0, 1e12)]})
-    before = wand.DRIVER_TIER_FALLBACKS
+    before = driverexec.DRIVER_TIER_FALLBACKS
     a = fd.search(SHAPES["term"], **kw)
-    assert wand.DRIVER_TIER_FALLBACKS == before, \
+    assert driverexec.DRIVER_TIER_FALLBACKS == before, \
         "driver tier silently fell back (lean zero-agg regression)"
     assert a.driver_served and a.hits == []
     assert a.agg == {"content_bytes": [(0, None, None), (0, None, None)]}

@@ -93,24 +93,20 @@ def test_kernel_scan_prunes_positions_for_term_queries(reader, monkeypatch):
     are the largest blob in a hot term's blocks; reading them for a term
     query is pure waste); a job with a phrase query does. The shard tasks
     read in Python workers, so the test captures each job's task function
-    and replays it in this process over every shard id, recording the
-    columns of each point read."""
-    import numpy as np
-    import pandas as pd
-
-    from cantine_spark.execution import driverexec
+    from make_shard_task and replays it in this process over every shard
+    id, recording the columns of each point read."""
+    from cantine_spark.execution import driverexec, wand
     from cantine_spark.execution.wand import FastTopK
     from cantine_spark.plans.nodes import Boolean, Phrase, Term
 
     tasks = []
-    frame_cls = type(reader.spark.range(1))  # the session's DataFrame class
-    map_in_pandas = frame_cls.mapInPandas
+    make_shard_task = wand.make_shard_task
 
-    def spy(self, func, schema, *a, **kw):
-        tasks.append(func)
-        return map_in_pandas(self, func, schema, *a, **kw)
+    def spy(*a, **kw):
+        tasks.append(make_shard_task(*a, **kw))
+        return tasks[-1]
 
-    monkeypatch.setattr(frame_cls, "mapInPandas", spy)
+    monkeypatch.setattr(wand, "make_shard_task", spy)
     fast = FastTopK(reader, use_driver=False)
     terms = Boolean(shoulds=(Term("content", "def"),
                              Term("content", "return")))
@@ -129,11 +125,10 @@ def test_kernel_scan_prunes_positions_for_term_queries(reader, monkeypatch):
         return read_rows(spec, terms_, columns, shards=shards)
 
     monkeypatch.setattr(driverexec, "read_rows", recording)
-    ids = pd.DataFrame({"id": np.arange(len(fast._shards))})
     per_job = []
     for task in tasks:
         reads.clear()
-        assert list(task(iter([ids])))  # the replay produces output rows
+        assert list(task(iter(fast._shards)))  # the replay produces output
         per_job.append(set(reads))
     for cols in per_job[0] | per_job[1]:  # segment and champion reads
         assert "positions" not in cols

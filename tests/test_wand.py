@@ -150,16 +150,18 @@ def test_kernel_unit_skips_low_bound_blocks():
 
 
 def test_drop_zip_finders_keeps_imports_working(tmp_path, monkeypatch):
-    """Query-side UDFs delete the zipimporter entries from
-    sys.path_importer_cache (wand._drop_zip_finders) so that pyspark's
+    """Query-side tasks start with wand._worker_prologue, which deletes the
+    zipimporter entries from sys.path_importer_cache so that pyspark's
     per-task importlib.invalidate_caches() has no zip directory to re-read.
-    Imports from the zip must still work afterwards."""
+    Imports from the zip must still work afterwards. Outside a Spark task
+    (no TaskContext, as here) the prologue freezes nothing."""
+    import gc
     import importlib
     import sys
     import zipfile
     import zipimport
 
-    from cantine_spark.execution.wand import _drop_zip_finders
+    from cantine_spark.execution.wand import _worker_prologue
 
     z = tmp_path / "zipmods.zip"
     with zipfile.ZipFile(z, "w") as f:
@@ -171,15 +173,58 @@ def test_drop_zip_finders_keeps_imports_working(tmp_path, monkeypatch):
     assert importlib.import_module("cantine_zipmod_a").A == 1
     assert isinstance(sys.path_importer_cache[str(z)],
                       zipimport.zipimporter)
+    frozen = gc.get_freeze_count()
     try:
-        _drop_zip_finders()
+        _worker_prologue()
         assert not any(isinstance(f, zipimport.zipimporter)
                        for f in sys.path_importer_cache.values())
+        assert gc.get_freeze_count() == frozen
         importlib.invalidate_caches()
         assert importlib.import_module("cantine_zipmod_b").B == 2
     finally:
         for m in ("cantine_zipmod_a", "cantine_zipmod_b"):
             sys.modules.pop(m, None)
+
+
+_PROLOGUE_SCRIPT = """
+import gc
+from cantine_spark.execution import wand
+
+wand._worker_prologue()
+assert gc.get_freeze_count() == 0, "froze without a task context"
+
+class InTask:
+    @staticmethod
+    def get():
+        return object()
+
+wand.TaskContext = InTask
+wand._worker_prologue()
+first = gc.get_freeze_count()
+assert first > 0, "first task did not freeze the heap"
+junk = [[i] for i in range(10_000)]
+wand._worker_prologue()
+assert gc.get_freeze_count() == first, "second task froze again"
+print("ok")
+"""
+
+
+def test_worker_prologue_freezes_heap_once_per_worker():
+    """Inside a Spark task the prologue collects and freezes the worker's
+    heap once, so pyspark's full gc.collect() after every task of a reused
+    worker scans only what later tasks allocate. Checked in a subprocess
+    with a stubbed TaskContext: this process's GC state stays untouched."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        p for p in (root, os.environ.get("PYTHONPATH")) if p))
+    out = subprocess.run([sys.executable, "-c", _PROLOGUE_SCRIPT], env=env,
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "ok"
 
 
 def test_and_rare_hot_skips_hot_blocks(big_fast):
