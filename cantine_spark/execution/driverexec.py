@@ -29,15 +29,25 @@ SQL.
   it instantly and takes the cluster kernel, unchanged; a tail term is 3
   blocks there too, and THOSE are the queries a 1000-executor cluster
   should not burn a distributed job on.
-- Reads route through pyarrow.dataset over fsutil-resolved filesystems,
-  so the same point reads work on s3://, hdfs://, file:// (VERDICT r5
-  "what's wrong" #2 discipline). Parquet row-group statistics on the
-  (field, term)-sorted segment layout prune the read to ~one row group
-  per term; dataset objects (file listings + footers) are cached per
-  immutable index dir, so steady-state cost is stat-pruned row-group
-  reads only.
-- The driver holds at most `budget` postings per query plus a bounded
-  row cache — it never materializes anything O(corpus).
+- Reads go through a cached KEY DIRECTORY per immutable table dir
+  (`_TableDir`): the dir's parquet file list, each file's hive partition
+  value and — loaded on first use of that file — its (field, term[,
+  shard]) key columns, sorted for lookup, plus its row-group bounds. A
+  read looks the wanted keys up in the directory and decodes only the
+  row groups of the files that hold them (`ParquetFile.read_row_groups`
+  over fsutil-resolved filesystems, so s3://, hdfs://, file:// work too
+  — VERDICT r5 "what's wrong" #2 discipline). Parquet statistics cannot
+  do this pruning: each file is one row group whose terms the encode
+  shuffle hash-scatters, and pyarrow does not prune on `isin`. A term of
+  one shard lives in one segment file, so a one-term read decodes at most
+  one segment file per shard that holds it; a shard task restricted to
+  its shards never loads another shard's keys.
+- The driver holds at most `budget` postings per query, a bounded row
+  cache, and the key directories: O(distinct keys) bytes per table —
+  one Python string (~66 B) per distinct key of a file plus ~16 B of
+  index arrays per key row, ~2.4 MB for a 30k-row segments table
+  (PERF_NOTES "Point reads that decode only what they return") — never
+  the postings themselves.
 
 Fallback discipline (same as the hydration/df/cursor point-read family):
 any failure falls through to the cluster kernel — one slower query,
@@ -76,7 +86,11 @@ CHAMP_COLUMNS = ("field", "term", "shard", "n_total", "n_champ", "n_blocks",
 # sits near ~5·10^5 postings; 2^18 keeps ~2× headroom under it so the tier
 # stays a win even with co-tenant noise, while still declining every hot
 # query on a big corpus (at 800k docs the suite's hot terms are ~760k
-# postings each — absolute budget, never a corpus fraction).
+# postings each — absolute budget, never a corpus fraction). Most of
+# that "60 ms fixed" was read_rows decoding every row of every segments
+# and champions file; the key directory removed it (PERF_NOTES "Point
+# reads that decode only what they return"), so the crossover now sits
+# higher. The budget is not retuned from that yet.
 DRIVER_MAX_POSTINGS = 1 << 18
 
 # always-drive threshold (absolute, NOT budget-relative): a ≤2^14-posting
@@ -108,12 +122,11 @@ def note_fallback(where: str) -> None:
                exc_info=True)
 
 
-# dataset cache: index dirs are immutable by construction (blue/green —
-# every refresh writes a NEW versioned dir); mtime joins the key where
-# stat() works (local fs, catches in-place test rebuilds) — the same
-# belt-and-braces as wand._read_ff_shard
-_DS_CACHE: dict[tuple, object] = {}
-_DS_CACHE_CAP = 32
+# key-directory cache: index dirs are immutable by construction
+# (blue/green — every refresh writes a NEW versioned dir); the key is
+# _dir_token, so mtime or the manifest generation joins it where it can
+_DIR_CACHE: dict[tuple, "_TableDir"] = {}
+_DIR_CACHE_CAP = 32
 # row cache: hot terms repeat across serving queries/batches; one entry
 # is ≤ budget postings, the cap bounds driver memory
 _ROW_CACHE: dict[tuple, pd.DataFrame] = {}
@@ -145,41 +158,177 @@ def _dir_token(path: str) -> tuple:
         return (path, None)
 
 
-def _dataset(dir_path: str):
-    import pyarrow.dataset as pads  # noqa: PLC0415
+class _FileKeys:
+    """Key directory of one parquet file: its distinct keys (field and
+    term joined by a NUL) sorted (`keys`), the file rows of key j at
+    `order[bounds[j]:bounds[j+1]]` (ascending), the `shard` value of
+    every row when the table is not hive-partitioned on shard
+    (champions), and the first row of every row group (`rg_bounds`, with
+    the row count appended)."""
 
-    key = _dir_token(dir_path)
+    __slots__ = ("meta", "keys", "order", "bounds", "shard", "rg_bounds")
+
+    def __init__(self, fsys, path: str, with_shard: bool):
+        import pyarrow.compute as pc  # noqa: PLC0415
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        cols = ["field", "term"] + (["shard"] if with_shard else [])
+        with fsys.open_input_file(path) as src:
+            pf = pq.ParquetFile(src)
+            t = pf.read(columns=cols, use_threads=False)
+        self.meta = pf.metadata
+        joined = pc.binary_join_element_wise(
+            t.column("field"), t.column("term"), "\0")
+        self.keys, inv = np.unique(
+            joined.to_numpy(zero_copy_only=False), return_inverse=True)
+        self.order = np.argsort(inv, kind="stable").astype(np.int32)
+        self.bounds = np.zeros(len(self.keys) + 1, np.int32)
+        np.cumsum(np.bincount(inv, minlength=len(self.keys)),
+                  out=self.bounds[1:])
+        self.shard = (t.column("shard").to_numpy().astype(np.int32)
+                      if with_shard else None)
+        self.rg_bounds = np.zeros(self.meta.num_row_groups + 1, np.int64)
+        np.cumsum([self.meta.row_group(g).num_rows
+                   for g in range(self.meta.num_row_groups)],
+                  out=self.rg_bounds[1:])
+
+    def rows(self, wanted: np.ndarray) -> np.ndarray:
+        """Ascending file rows whose key is in `wanted` (sorted keys)."""
+        pos = np.searchsorted(self.keys, wanted)
+        hit = pos < len(self.keys)
+        hit[hit] = self.keys[pos[hit]] == wanted[hit]
+        runs = [self.order[self.bounds[j]:self.bounds[j + 1]]
+                for j in pos[hit]]
+        if not runs:
+            return np.empty(0, np.int32)
+        return np.sort(np.concatenate(runs))
+
+
+class _TableDir:
+    """Key directory of one immutable table dir (module docstring): the
+    parquet files in pyarrow.dataset discovery order — sorted by path,
+    `.`/`_`-prefixed entries skipped — with each file's hive partition
+    value; each file's _FileKeys load on first use."""
+
+    def __init__(self, dir_path: str):
+        import pyarrow as pa  # noqa: PLC0415
+        import pyarrow.parquet as pq  # noqa: PLC0415
+        from pyarrow import fs as pafs  # noqa: PLC0415
+
+        self.fs, local = fsutil.resolve(dir_path)
+        base = local.rstrip("/")
+        found = []
+        for info in self.fs.get_file_info(
+                pafs.FileSelector(base, recursive=True)):
+            rel = info.path[len(base) + 1:].split("/")
+            if (info.is_file and rel[-1].endswith(".parquet")
+                    and not any(p.startswith((".", "_")) for p in rel)):
+                hive = [p.split("=", 1) for p in rel[:-1] if "=" in p]
+                found.append((info.path, hive))
+        found.sort(key=lambda f: f[0])
+        self.paths = [p for p, _ in found]
+        # hive partition column (segments: shard, term_stats: bucket)
+        self.part_col = found[0][1][0][0] if found and found[0][1] else None
+        self.part_vals = [int(h[0][1]) if h else None for _, h in found]
+        self._keys: list[_FileKeys | None] = [None] * len(found)
+        if found:
+            with self.fs.open_input_file(self.paths[0]) as src:
+                self.schema = pq.read_schema(src)
+        else:
+            self.schema = pa.schema([])
+        if self.part_col is not None:
+            self.schema = self.schema.append(
+                pa.field(self.part_col, pa.int32()))
+
+    def file_keys(self, i: int) -> _FileKeys:
+        fk = self._keys[i]
+        if fk is None:
+            fk = _FileKeys(self.fs, self.paths[i],
+                           self.part_col is None
+                           and "shard" in self.schema.names)
+            self._keys[i] = fk
+        return fk
+
+    def read(self, terms, columns: list[str], parts=None):
+        """Arrow table of `columns` for the rows whose (field, term) is in
+        `terms`, in file order. parts: restrict to these values of the
+        hive partition column, or, in a table without one, of the `shard`
+        column; None reads every partition."""
+        import pyarrow as pa  # noqa: PLC0415
+
+        wanted = np.array(sorted(f"{f}\0{t}" for f, t in terms),
+                          dtype=object)
+        parts = None if parts is None else set(parts)
+        tables = []
+        for i in range(len(self.paths)):
+            if (parts is not None and self.part_col is not None
+                    and self.part_vals[i] not in parts):
+                continue
+            fk = self.file_keys(i)
+            rows = fk.rows(wanted)
+            if parts is not None and self.part_col is None:
+                rows = rows[np.isin(fk.shard[rows], list(parts))]
+            if not len(rows):
+                continue
+            # decode only the row groups holding `rows`, then take them
+            rg = np.searchsorted(fk.rg_bounds, rows, side="right") - 1
+            groups = np.unique(rg)
+            sizes = fk.rg_bounds[groups + 1] - fk.rg_bounds[groups]
+            offs = np.concatenate(([0], np.cumsum(sizes)[:-1]))
+            local = (rows - fk.rg_bounds[rg]
+                     + offs[np.searchsorted(groups, rg)])
+            t = self._decode(i, fk, groups.tolist(),
+                             [c for c in columns if c != self.part_col])
+            t = t.take(pa.array(local))
+            if self.part_col in columns:
+                t = t.append_column(
+                    self.schema.field(self.part_col),
+                    pa.array(np.full(len(t), self.part_vals[i], np.int32)))
+            tables.append(t.select(columns))
+        if tables:
+            return pa.concat_tables(tables)
+        if not self.paths:  # an empty partitioned write leaves no files
+            return pa.table({c: [] for c in columns})
+        return self.schema.empty_table().select(columns)
+
+    def _decode(self, i: int, fk: _FileKeys, groups: list[int],
+                columns: list[str]):
+        """Decode row groups `groups` of file i — a read's only data
+        decode."""
+        import pyarrow.parquet as pq  # noqa: PLC0415
+
+        with self.fs.open_input_file(self.paths[i]) as src:
+            return pq.ParquetFile(src, metadata=fk.meta).read_row_groups(
+                groups, columns=columns, use_threads=False)
+
+
+def _table_dir(dir_path: str, token=None) -> _TableDir:
+    key = token or _dir_token(dir_path)
     with _CACHE_LOCK:
-        ds = _DS_CACHE.get(key)
-    if ds is None:
-        fsys, local = fsutil.resolve(dir_path)
-        ds = pads.dataset(local, filesystem=fsys, format="parquet",
-                          partitioning="hive")
+        td = _DIR_CACHE.get(key)
+    if td is None:
+        td = _TableDir(dir_path)
         with _CACHE_LOCK:
-            while len(_DS_CACHE) >= _DS_CACHE_CAP:
-                _DS_CACHE.pop(next(iter(_DS_CACHE)), None)
-            _DS_CACHE[key] = ds
-    return ds
+            while len(_DIR_CACHE) >= _DIR_CACHE_CAP:
+                _DIR_CACHE.pop(next(iter(_DIR_CACHE)), None)
+            _DIR_CACHE[key] = td
+    return td
 
 
-def _term_expr(terms):
-    import pyarrow.dataset as pads  # noqa: PLC0415
-
-    by_field: dict[str, list[str]] = {}
-    for f_, t_ in terms:
-        by_field.setdefault(f_, []).append(t_)
-    expr = None
-    for f_, ts in by_field.items():
-        e = (pads.field("field") == f_) & pads.field("term").isin(ts)
-        expr = e if expr is None else (expr | e)
-    return expr
+def read_keys(dir_path: str, terms, columns, parts=None):
+    """Point-read `columns` of the rows of `terms` from ONE table dir
+    through its cached key directory (pyarrow table, file order) — the
+    reader read_rows uses per tier dir, also behind the driver-side
+    term-df lookup. parts: as in _TableDir.read."""
+    return _table_dir(dir_path).read(terms, list(columns), parts)
 
 
 def invalidate_caches() -> None:
-    """Drop cached datasets/rows — for writers that rebuild an index dir
-    in place (tests with force=True; production dirs are immutable)."""
+    """Drop cached key directories/rows — for writers that rebuild an
+    index dir in place (tests with force=True; production dirs are
+    immutable)."""
     with _CACHE_LOCK:
-        _DS_CACHE.clear()
+        _DIR_CACHE.clear()
         _ROW_CACHE.clear()
 
 
@@ -191,14 +340,8 @@ def _spec_dirs(spec) -> list[tuple[str, dict]]:
 def shard_ids(spec) -> list[int]:
     """Sorted shard ids of a hive `shard=N`-partitioned table (segments),
     the union over every tier dir of `spec`."""
-    import pyarrow.dataset as pads  # noqa: PLC0415
-
-    out = set()
-    for d, _ in _spec_dirs(spec):
-        for frag in _dataset(d).get_fragments():
-            keys = pads.get_partition_keys(frag.partition_expression)
-            out.add(int(keys["shard"]))
-    return sorted(out)
+    return sorted({v for d, _ in _spec_dirs(spec)
+                   for v in _table_dir(d).part_vals})
 
 
 def read_rows(spec, terms, columns: tuple[str, ...],
@@ -214,32 +357,28 @@ def read_rows(spec, terms, columns: tuple[str, ...],
     shard ids (prunes the hive `shard=` dirs of segments; a row filter on
     champions); None reads every shard. Returns a pandas frame with a
     `shard` column (hive partition column for segments, data column for
-    champions)."""
+    champions), rows in file order per tier, tiers in spec order."""
     norm = _spec_dirs(spec)
+    tokens = [_dir_token(d) for d, _ in norm]
     shard_key = None if shards is None else tuple(sorted(shards))
     key = (tuple(d for d, _ in norm),
            tuple(sorted(terms)), tuple(columns), shard_key,
-           tuple(_dir_token(d)[1] for d, _ in norm))
+           tuple(t[1] for t in tokens))
     with _CACHE_LOCK:
         hit = _ROW_CACHE.get(key)
     if hit is not None:
         return hit
-    expr = _term_expr(terms)
-    if shard_key is not None:
-        import pyarrow.dataset as pads  # noqa: PLC0415
-        expr = expr & pads.field("shard").isin(list(shard_key))
     want = list(columns) + (["shard"] if "shard" not in columns else [])
     frames = []
-    for d, factors in norm:
-        ds = _dataset(d)
-        have = set(ds.schema.names)
+    for (d, factors), token in zip(norm, tokens):
+        td = _table_dir(d, token)
+        have = set(td.schema.names)
         missing = [c for c in want if c not in have]
         bad = [c for c in missing if c not in OPTIONAL_ZERO_COLS]
         if bad:
             raise KeyError(f"columns {bad} absent in {d}")
-        pdf = (ds.to_table(filter=expr,
-                           columns=[c for c in want if c in have])
-               .to_pandas())
+        pdf = td.read(terms, [c for c in want if c in have],
+                      shard_key).to_pandas()
         for c in missing:
             pdf[c] = 0.0
         if factors and len(pdf):

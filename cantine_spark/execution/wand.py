@@ -9,9 +9,11 @@ which scores each tantivy segment in place, every shard is scored where its
 rows are read — one task per shard group, no shuffle:
 
   sc.parallelize(shard ids).mapPartitions(task)  [one task per shard group]
-    → read_rows(terms, shards=task's shards)     [pyarrow point read: hive
-                                                   shard= dirs + row-group
-                                                   stats pruned]
+    → read_rows(terms, shards=task's shards)     [pyarrow point read: the
+                                                   key directory picks the
+                                                   files of the task's
+                                                   shards that hold the
+                                                   terms]
     → per-shard kernel                           [candidates + prune + heap]
     → collect ≤ k+1 rows per query and shard     [pickled pandas frames]
     → driver merge                               [the merge_fruits analog]
@@ -1774,8 +1776,8 @@ class FastTopK:
                        agg_query, range_filters, seed_min: int,
                        use_champs: bool, empty_agg) -> KernelResult:
         """Execute ONE query entirely on the driver: point-read the live
-        terms' segment rows (pyarrow, row-group pruned, tier bounds
-        rescaled), group by shard in pandas, and run the UNMODIFIED
+        terms' segment rows (pyarrow, only the files that hold them via
+        the key directory, tier bounds rescaled), group by shard in pandas, and run the UNMODIFIED
         per-shard kernel closure on each group — the exact code the
         cluster path runs inside its shard tasks, over the exact same
         rows read by the same read_rows, so results are bit-equal by
