@@ -258,37 +258,13 @@ class SearchEngine:
             feats.add(query.sort)
         return self._fast.covers(feats)
 
-    def _search_segments(self, node: QueryNode, k: int,
-                         after: tuple | None,
-                         query: SearchQuery) -> SearchResult:
-        """Search on the block-max kernel: one shard-task job for
-        candidates+filter+prune+heap (range filters, field-sort keys and
-        agg inputs all read from the shard-local fast-field sidecar), one
-        pruned isin-scan hydration for the ≤255 winners. total/visited are
-        exact (kernel counts from doc ids).
-
-        Aggregations: when no agg gate is configured (agg_threshold None —
-        the engine default; the reference's prod default is a 300k gate,
-        main.rs:193) the range aggregation FUSES into the same kernel job —
-        candidates are decoded once and the job emits both top-k rows and
-        agg partials (VERDICT r3 'What's wrong' #1). With a gate set we keep
-        the reference's two-pass shape (main.rs:137-147): the gate needs
-        `total` before deciding whether to aggregate at all, so pass 2 runs
-        only when total ≤ threshold — at 100 TB the gate exists precisely so
-        a hot query does NOT pay the aggregation scan, which a fuse-anyway-
-        and-discard design would re-introduce."""
-        spec = self._segment_spec(node, k, after, query)
-        res = self._fast.search(**spec)
-        # hits are already kernel-ordered (sort key, doc_id tiebreak);
-        # hydration is one pruned isin-scan of the doc store
-        by_id = (self.executor.hydrate_ids([d for d, _ in res.hits])
-                 if res.hits else {})
-        return self._assemble_segment_result(spec, query, res, by_id)
-
     def _segment_spec(self, node: QueryNode, k: int, after: tuple | None,
                       query: SearchQuery) -> dict:
-        """FastTopK.search kwargs for one segment-path query (shared by
-        _search_segments and search_batch)."""
+        """FastTopK.search_many spec of one segment-path query. Without
+        an agg gate (agg_threshold None, the default) the aggregation
+        FUSES into the kernel job; with one, the reference's two-pass
+        shape (main.rs:137-147): pass 2 runs at assembly, only when
+        total ≤ threshold."""
         return dict(
             node=node, k=k, after=after, ascending=query.ascending,
             sort_feature=(None if query.sort in (None, "relevance")
@@ -379,46 +355,45 @@ class SearchEngine:
     # ---------------------------------------------------------------- search
     def search(self, query: SearchQuery | dict,
                explain: bool = False) -> SearchResult:
-        """explain=True attaches an `explanation` dict to every returned
+        """ONE query — a batch of one, `search_batch([query])[0]`, except
+        that a BadRequest is raised instead of returned.
+
+        explain=True attaches an `explanation` dict to every returned
         item — the tantivy Explanation analog (tique/src/dismax.rs:308-358):
         a tree of per-leaf BM25 contributions (idf/tf/dl/tfnorm, boosts,
         DisMax combine) whose root value casts f32-equal to the item's
         score. Computed driver-side for the ≤255 winners only (bucket-
         pruned postings point reads — no extra Spark job on the serving
         path; see explain.py)."""
-        if isinstance(query, dict):
-            query = SearchQuery.from_dict(query, features=self.features)
-        else:
-            query.validate_features(self.features)
-        k = query.num_items or DEFAULT_ITEMS
-        node, preds = self.interpret(query)
-        after = self._decode_after(query)
-        res = self._search_resolved(query, k, node, preds, after)
+        [res] = self._run_batch([query])
+        if isinstance(res, BadRequest):
+            raise res
         if explain and res.items:
             from cantine_spark.explain import explain_hits
+            node, _ = self.interpret(self._parse(query))
             ex = explain_hits(self.reader, self.executor, node,
                               [it["doc_id"] for it in res.items])
             for it in res.items:
                 it["explanation"] = ex[it["doc_id"]]
         return res
 
-    def _search_resolved(self, query: SearchQuery, k: int, node: QueryNode,
-                         preds: list, after: tuple | None) -> SearchResult:
-        """Execute a query whose cursor/tree are already resolved — shared
-        by search() and the search_batch fallback paths, so a paginated
-        query never pays the cursor uuid point-read twice."""
-        # DEFAULT PATH: every fulltext query over a pure term/phrase tree —
-        # relevance or field-sorted, filtered, aggregating or not — runs on
-        # the compressed block-max segments (the reference's searcher IS its
-        # segment reader, cantine/src/index.rs:69-129; filters are Must
-        # clauses of the ONE segment query, main.rs:152-172; aggregations
-        # are a second collector pass, main.rs:137-147). The relational
-        # path takes what the kernel cannot: match-all / pure-negative
-        # trees (zero-token docs never appear in segments) and features
-        # the fast-field sidecar does not cover (_on_segments).
-        if self._on_segments(node, query):
-            return self._search_segments(node, k, after, query)
+    def _parse(self, query: SearchQuery | dict) -> SearchQuery:
+        if isinstance(query, dict):
+            return SearchQuery.from_dict(query, features=self.features)
+        query.validate_features(self.features)
+        return query
 
+    def _search_relational(self, query: SearchQuery, k: int,
+                           node: QueryNode, preds: list,
+                           after: tuple | None) -> SearchResult:
+        """The relational path, for the queries the segment kernel does not
+        take (_on_segments): match-all / pure-negative trees (zero-token
+        docs never appear in segments) and features the fast-field sidecar
+        does not cover. Every other query — relevance or field-sorted,
+        filtered, aggregating or not — runs on the compressed block-max
+        segments (the reference's searcher IS its segment reader,
+        cantine/src/index.rs:69-129; filters are Must clauses of the ONE
+        segment query, main.rs:152-172)."""
         matched = self._matched(node, preds)
         if matched is None:
             # zero matches (e.g. an unknown term): the reference still runs
@@ -517,44 +492,40 @@ class SearchEngine:
         floor, so batching N concurrent queries amortizes it N-fold —
         the serving-throughput lever behind httpserve.QueryBatcher).
 
-        Per-query results are identical to search() (differential-tested).
-        Queries routed to the relational path (_on_segments) run solo; a
-        gated aggregation's second pass runs per query at assembly, once
-        its total is known.
+        Queries routed to the relational path (_on_segments) run one by
+        one; a gated aggregation's second pass runs per query at assembly.
 
         Per-query error isolation: a query that fails to parse, validate,
         or resolve its cursor (all BadRequest shapes) fails ONLY its own
-        slot — that slot holds the BadRequest instance instead of a
-        SearchResult, and every other query in the batch still runs. This
-        matches the HTTP batcher's documented isolation (a stale cursor
-        from one client must never 400 its batch-mates). Engine-level
-        failures (Spark job errors) still raise for the whole batch."""
+        slot, which holds the BadRequest instance; every other query still
+        runs (a stale cursor from one HTTP client must never 400 its
+        batch-mates). Engine-level failures (Spark job errors) raise for
+        the whole batch."""
+        return self._run_batch(queries)
+
+    def _run_batch(self, queries: list[SearchQuery | dict]
+                   ) -> list[SearchResult | BadRequest]:
+        """The one request core behind search() and search_batch()."""
         results: list[SearchResult | BadRequest | None] = [None] * len(queries)
-        resolved: list[tuple[int, SearchQuery, int, QueryNode, list,
-                             tuple | None]] = []
+        specs: dict[int, tuple[dict, SearchQuery]] = {}
         for i, q in enumerate(queries):
             try:
-                if isinstance(q, dict):
-                    q = SearchQuery.from_dict(q, features=self.features)
-                else:
-                    q.validate_features(self.features)
+                q = self._parse(q)
                 k = q.num_items or DEFAULT_ITEMS
                 node, preds = self.interpret(q)
                 after = self._decode_after(q)
             except BadRequest as e:
                 results[i] = e
                 continue
-            resolved.append((i, q, k, node, preds, after))
-        specs: dict[int, tuple[dict, SearchQuery]] = {}
-        for i, query, k, node, preds, after in resolved:
-            if self._on_segments(node, query):
-                specs[i] = (self._segment_spec(node, k, after, query), query)
+            if self._on_segments(node, q):
+                specs[i] = (self._segment_spec(node, k, after, q), q)
             else:
-                results[i] = self._search_resolved(query, k, node, preds,
-                                                   after)
+                results[i] = self._search_relational(q, k, node, preds,
+                                                     after)
         if specs:
             order = list(specs)
             kres = self._fast.search_many([specs[i][0] for i in order])
+            # one pruned isin-scan of the doc store for every winner
             all_ids = sorted({d for r in kres for d, _ in r.hits})
             by_id = (self.executor.hydrate_ids(all_ids) if all_ids else {})
             for i, res in zip(order, kres):

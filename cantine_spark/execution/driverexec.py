@@ -31,8 +31,9 @@ SQL.
   should not burn a distributed job on.
 - Reads go through a cached KEY DIRECTORY per immutable table dir
   (`_TableDir`): the dir's parquet file list, each file's hive partition
-  value and — loaded on first use of that file — its (field, term[,
-  shard]) key columns, sorted for lookup, plus its row-group bounds. A
+  value and — loaded on first use of that file — its key columns
+  ((field, term[, shard]), or uuid for uuid_map), sorted for lookup,
+  plus its row-group bounds. A
   read looks the wanted keys up in the directory and decodes only the
   row groups of the files that hold them (`ParquetFile.read_row_groups`
   over fsutil-resolved filesystems, so s3://, hdfs://, file:// work too
@@ -102,6 +103,14 @@ DRIVER_MAX_POSTINGS = 1 << 18
 # un-permitted mid-size queries monopolizing the interpreter.
 DRIVER_TINY_POSTINGS = 1 << 14
 
+# mid-size driver executions allowed in flight before further mid-size
+# queries spill to the cluster (wand.FastTopK._try_driver); a large query
+# takes every permit. Driver execution is GIL-bound numpy, so this bounds
+# interpreter serialization under load: 2 ≈ the point where a third
+# concurrent mid-size query beats the cluster's scheduler round-trip only
+# if the first two finish first
+DRIVER_PERMITS = 2
+
 # process-wide count of driver-side reads that failed and fell back to a
 # Spark job: the driver tier and the champion read (→ cluster kernel), the
 # df lookup, hydration, the uuid resolve and explain's postings read (→
@@ -158,9 +167,23 @@ def _dir_token(path: str) -> tuple:
         return (path, None)
 
 
+# the key columns of segments, champions and term_stats; uuid_map is
+# keyed by ("uuid",)
+TERM_KEY = ("field", "term")
+
+
+def _key_strings(keys, key_cols: tuple[str, ...]) -> np.ndarray:
+    """Sorted lookup strings of `keys`: (field, term) tuples joined by a
+    NUL, or the plain values of a one-column key."""
+    if len(key_cols) == 1:
+        return np.array(sorted(keys), dtype=object)
+    return np.array(sorted("\0".join(k) for k in keys), dtype=object)
+
+
 class _FileKeys:
-    """Key directory of one parquet file: its distinct keys (field and
-    term joined by a NUL) sorted (`keys`), the file rows of key j at
+    """Key directory of one parquet file: its distinct keys (the values of
+    the key columns, joined by a NUL when there are several) sorted
+    (`keys`), the file rows of key j at
     `order[bounds[j]:bounds[j+1]]` (ascending), the `shard` value of
     every row when the table is not hive-partitioned on shard
     (champions), and the first row of every row group (`rg_bounds`, with
@@ -168,17 +191,19 @@ class _FileKeys:
 
     __slots__ = ("meta", "keys", "order", "bounds", "shard", "rg_bounds")
 
-    def __init__(self, fsys, path: str, with_shard: bool):
+    def __init__(self, fsys, path: str, key_cols: tuple[str, ...],
+                 with_shard: bool):
         import pyarrow.compute as pc  # noqa: PLC0415
         import pyarrow.parquet as pq  # noqa: PLC0415
 
-        cols = ["field", "term"] + (["shard"] if with_shard else [])
+        cols = list(key_cols) + (["shard"] if with_shard else [])
         with fsys.open_input_file(path) as src:
             pf = pq.ParquetFile(src)
             t = pf.read(columns=cols, use_threads=False)
         self.meta = pf.metadata
-        joined = pc.binary_join_element_wise(
-            t.column("field"), t.column("term"), "\0")
+        joined = (t.column(key_cols[0]) if len(key_cols) == 1
+                  else pc.binary_join_element_wise(
+                      *(t.column(c) for c in key_cols), "\0"))
         self.keys, inv = np.unique(
             joined.to_numpy(zero_copy_only=False), return_inverse=True)
         self.order = np.argsort(inv, kind="stable").astype(np.int32)
@@ -208,13 +233,14 @@ class _TableDir:
     """Key directory of one immutable table dir (module docstring): the
     parquet files in pyarrow.dataset discovery order — sorted by path,
     `.`/`_`-prefixed entries skipped — with each file's hive partition
-    value; each file's _FileKeys load on first use."""
+    value; each file's _FileKeys over `key_cols` load on first use."""
 
-    def __init__(self, dir_path: str):
+    def __init__(self, dir_path: str, key_cols: tuple[str, ...] = TERM_KEY):
         import pyarrow as pa  # noqa: PLC0415
         import pyarrow.parquet as pq  # noqa: PLC0415
         from pyarrow import fs as pafs  # noqa: PLC0415
 
+        self.key_cols = key_cols
         self.fs, local = fsutil.resolve(dir_path)
         base = local.rstrip("/")
         found = []
@@ -243,21 +269,21 @@ class _TableDir:
     def file_keys(self, i: int) -> _FileKeys:
         fk = self._keys[i]
         if fk is None:
-            fk = _FileKeys(self.fs, self.paths[i],
+            fk = _FileKeys(self.fs, self.paths[i], self.key_cols,
                            self.part_col is None
                            and "shard" in self.schema.names)
             self._keys[i] = fk
         return fk
 
     def read(self, terms, columns: list[str], parts=None):
-        """Arrow table of `columns` for the rows whose (field, term) is in
-        `terms`, in file order. parts: restrict to these values of the
-        hive partition column, or, in a table without one, of the `shard`
-        column; None reads every partition."""
+        """Arrow table of `columns` for the rows whose key is in `terms`
+        ((field, term) tuples, or plain values of a one-column key), in
+        file order. parts: restrict to these values of the hive partition
+        column, or, in a table without one, of the `shard` column; None
+        reads every partition."""
         import pyarrow as pa  # noqa: PLC0415
 
-        wanted = np.array(sorted(f"{f}\0{t}" for f, t in terms),
-                          dtype=object)
+        wanted = _key_strings(terms, self.key_cols)
         parts = None if parts is None else set(parts)
         tables = []
         for i in range(len(self.paths)):
@@ -302,12 +328,13 @@ class _TableDir:
                 groups, columns=columns, use_threads=False)
 
 
-def _table_dir(dir_path: str, token=None) -> _TableDir:
-    key = token or _dir_token(dir_path)
+def _table_dir(dir_path: str, token=None,
+               key_cols: tuple[str, ...] = TERM_KEY) -> _TableDir:
+    key = (token or _dir_token(dir_path), key_cols)
     with _CACHE_LOCK:
         td = _DIR_CACHE.get(key)
     if td is None:
-        td = _TableDir(dir_path)
+        td = _TableDir(dir_path, key_cols)
         with _CACHE_LOCK:
             while len(_DIR_CACHE) >= _DIR_CACHE_CAP:
                 _DIR_CACHE.pop(next(iter(_DIR_CACHE)), None)
@@ -315,12 +342,15 @@ def _table_dir(dir_path: str, token=None) -> _TableDir:
     return td
 
 
-def read_keys(dir_path: str, terms, columns, parts=None):
+def read_keys(dir_path: str, terms, columns, parts=None,
+              key_cols: tuple[str, ...] = TERM_KEY):
     """Point-read `columns` of the rows of `terms` from ONE table dir
     through its cached key directory (pyarrow table, file order) — the
     reader read_rows uses per tier dir, also behind the driver-side
-    term-df lookup. parts: as in _TableDir.read."""
-    return _table_dir(dir_path).read(terms, list(columns), parts)
+    term-df lookup and, with key_cols=("uuid",), the cursor uuid resolve.
+    parts: as in _TableDir.read."""
+    return _table_dir(dir_path, key_cols=key_cols).read(
+        terms, list(columns), parts)
 
 
 def invalidate_caches() -> None:

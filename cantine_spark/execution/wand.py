@@ -82,6 +82,10 @@ from cantine_spark.plans.nodes import (
 )
 
 SEED_MIN = 256  # exact-score at least this many docs before pruning
+# search() keyword defaults: a search_many spec omits any of them
+_SPEC_DEFAULTS = dict(k=10, after=None, ascending=False, sort_feature=None,
+                      seed_min=SEED_MIN, agg_query=None, range_filters=None,
+                      use_champions=True)
 
 
 def collect_terms(node: QueryNode, out: set[tuple[str, str]]) -> None:
@@ -1454,9 +1458,8 @@ def _merge_kernel_frame(pdf: pd.DataFrame, k: int, ascending: bool,
                         empty_agg: dict | None) -> "KernelResult":
     """Driver-side merge of ONE query's kernel output (≤ k+1 rows + one
     counts row + agg partials per matched shard) — the reference's
-    merge_fruits (tique top_collector.rs:180-182). Shared by search() and
-    the batched search_many() (which splits its single job's output frame
-    by qid and merges each slice here)."""
+    merge_fruits (tique top_collector.rs:180-182). FastTopK._run splits
+    its job's output frame by qid and merges each slice here."""
     if not len(pdf):
         return KernelResult(0, 0, [], agg=empty_agg)
     per_shard = pdf[pdf["doc_id"] == -1]
@@ -1571,15 +1574,11 @@ class KernelResult:
     # fused aggregation output: {feat: [(count, min, max), ...]} aligned
     # with the requested ranges; None unless agg_query was passed
     agg: dict[str, list[tuple[int, float | None, float | None]]] | None = None
-    # True when the result was served from the per-term champion sidecar
-    # (impact-ordered posting heads) instead of the block kernel — results
-    # are identical either way (lossless tail bound); this flag is pure
-    # observability for tests and the bench's blocks counters
+    # the route, pure observability (results are bit-equal on every
+    # route): served from the champion sidecar's impact-ordered posting
+    # heads instead of the block kernel; computed on the driver
+    # (execution/driverexec) with zero Spark jobs
     champion_served: bool = False
-    # True when the result was computed ON THE DRIVER (execution/driverexec:
-    # pyarrow point read of the query terms' rows + the same kernel closure
-    # run locally — zero Spark jobs). Pure observability: results are
-    # bit-equal to the cluster kernel by construction (same code, same rows)
     driver_served: bool = False
 
 
@@ -1598,12 +1597,6 @@ class FastTopK:
     # tests; bench's forced-cluster comparison leg).
     use_driver: bool = True
     driver_max_postings: int = driverexec.DRIVER_MAX_POSTINGS
-    # concurrent mid-size driver executions allowed before spilling to the
-    # cluster (constructor-exposed, VERDICT r6 #3): driver execution is
-    # GIL-bound numpy, so this bounds interpreter serialization under load;
-    # 2 ≈ the point where a third concurrent mid-size query beats the
-    # cluster's scheduler round-trip only if the first two finish first
-    driver_permits: int = 2
     avgdl_by_field: dict = dc_field(init=False)
 
     def __post_init__(self):
@@ -1612,15 +1605,15 @@ class FastTopK:
             self.executor = SearchExecutor(self.reader)
         self.avgdl_by_field = {f: s["avgdl"]
                                for f, s in self.reader.stats.items()}
-        # concurrency admission for MID-SIZE driver-tier queries (see the
-        # gate in search()): at most 2 GIL-bound driver executions in
-        # flight; excess concurrent callers spill to the cluster kernel,
+        # concurrency admission for MID-SIZE driver-tier queries
+        # (_try_driver): at most DRIVER_PERMITS GIL-bound driver executions
+        # in flight; excess concurrent callers spill to the cluster kernel,
         # which parallelizes across executors instead of one interpreter
-        self._driver_permits = threading.Semaphore(self.driver_permits)
-        # concurrent search() calls in this engine right now — the LARGE
-        # driver-tier admission gate (see search()): large queries only
-        # drive when nothing else is in flight, so their ~200 ms of held
-        # GIL can never starve concurrent serving traffic
+        self._driver_permits = threading.Semaphore(driverexec.DRIVER_PERMITS)
+        # concurrent search()/search_many() calls in this engine right now
+        # — the LARGE driver-tier admission gate (_try_driver): large
+        # queries only drive when nothing else is in flight, so their
+        # ~200 ms of held GIL can never starve concurrent serving traffic
         self._inflight = 0
         self._inflight_lock = threading.Lock()
         # All index tables come THROUGH the reader's provider methods (never
@@ -1697,13 +1690,10 @@ class FastTopK:
         targets: qid → (field, term, idf, boost, k). Returns {qid:
         KernelResult} for the queries whose lossless bound holds
         (_champ_verify); the others are absent and run the full block
-        kernel — never a wrong answer.
-
-        With the driver tier on, the champion rows are one pyarrow point
-        read — bounded at cap postings per shard and term even for the
-        hottest term, so zero Spark jobs. Otherwise, or when that read
-        fails (counted), one shard-task job reads each shard's rows where
-        it runs (make_champion_task)."""
+        kernel — never a wrong answer. With the driver tier on the rows
+        are one point read (≤ cap postings per shard and term, zero Spark
+        jobs); otherwise, or when that read fails (counted), one
+        shard-task job of make_champion_task."""
         by_ft: dict[tuple, list] = {}
         for i, (f_, t_, idf, fac, k) in targets.items():
             by_ft.setdefault((f_, t_), []).append((i, idf, fac, k))
@@ -1729,15 +1719,15 @@ class FastTopK:
                 out[i] = res
         return out
 
-    def _make_kernel(self, node: QueryNode, idfs: dict, k: int, after,
-                     ascending: bool, seed_min: int,
-                     sort_feature: str | None, agg_query, range_filters,
-                     **kw):
-        """make_kernel over this index's sidecar, with the query's filter
-        and aggregation ranges normalized to float bounds."""
+    def _make_kernel(self, q: dict, **kw):
+        """make_kernel for one prepared query (_run) over this index's
+        sidecar, with its filter and aggregation ranges normalized to
+        float bounds."""
+        agg_query, range_filters = q["agg_query"], q["range_filters"]
         return make_kernel(
-            node, idfs, self.avgdl_by_field, k, after, ascending,
-            seed_min=seed_min, sort_field=sort_feature,
+            q["node"], q["idfs"], self.avgdl_by_field, q["k"], q["after"],
+            q["ascending"], seed_min=q["seed_min"],
+            sort_field=q["sort_feature"],
             fastfield_dir=self._ff_dir, shard_span=self._span,
             agg_spec={f: [(float(lo), float(hi)) for lo, hi in r]
                       for f, r in agg_query.items()} if agg_query else None,
@@ -1745,58 +1735,51 @@ class FastTopK:
                          for f, (lo, hi) in range_filters.items()}
             if range_filters else None, **kw)
 
-    def _champ_seeded(self, node: QueryNode, after, ascending: bool,
-                      sort_feature: str | None, use_champions: bool) -> bool:
+    @staticmethod
+    def _merge(q: dict, pdf: pd.DataFrame) -> KernelResult:
+        return _merge_kernel_frame(pdf, q["k"], q["ascending"],
+                                   q["sort_feature"], q["agg_query"],
+                                   q["empty_agg"])
+
+    def _champ_seeded(self, q: dict) -> bool:
         """Whether the block kernel reads champion rows to seed θ
         (relevance-descending page-1 queries over champion-shaped trees)."""
-        return (use_champions and self._champions and after is None
-                and not ascending and sort_feature is None
-                and champ_tree_ok(node))
+        return (q["use_champions"] and self._champions and q["after"] is None
+                and not q["ascending"] and q["sort_feature"] is None
+                and champ_tree_ok(q["node"]))
 
-    def _champion_target(self, node: QueryNode, idfs: dict, after,
-                         ascending: bool, sort_feature: str | None,
-                         agg_query, range_filters, use_champions: bool):
-        """(field, term, idf, boost) when the query can be served from the
-        champion sidecar alone — a (boosted) single-term relevance-
+    def _champion_target(self, q: dict) -> tuple | None:
+        """(field, term, idf, boost, k) when the query can be served from
+        the champion sidecar alone — a (boosted) single-term relevance-
         descending page-1 query with no filter, sort or agg — else None."""
-        if not (use_champions and self._champions and after is None
-                and not ascending and sort_feature is None and not agg_query
-                and not range_filters):
+        if not (q["use_champs"] and not q["agg_query"]
+                and not q["range_filters"]):
             return None
-        base, fac = node, 1.0
+        base, fac = q["node"], 1.0
         if isinstance(base, Boost) and base.factor > 0:
             base, fac = base.child, float(base.factor)
-        if isinstance(base, Term) and (base.field, base.text) in idfs:
-            return (base.field, base.text,
-                    idfs[(base.field, base.text)], fac)
+        ft = (base.field, base.text) if isinstance(base, Term) else None
+        if ft in q["idfs"]:
+            return (*ft, q["idfs"][ft], fac, q["k"])
         return None
 
-    def _driver_search(self, node: QueryNode, live: set, idfs: dict, k: int,
-                       after, ascending: bool, sort_feature: str | None,
-                       agg_query, range_filters, seed_min: int,
-                       use_champs: bool, empty_agg) -> KernelResult:
-        """Execute ONE query entirely on the driver: point-read the live
-        terms' segment rows (pyarrow, only the files that hold them via
-        the key directory, tier bounds rescaled), group by shard in pandas, and run the UNMODIFIED
-        per-shard kernel closure on each group — the exact code the
-        cluster path runs inside its shard tasks, over the exact same
-        rows read by the same read_rows, so results are bit-equal by
-        construction (differential-tested). Fast-field sidecar reads
-        (_load_fastfields) and champion rows resolve driver-side through
-        the same fsutil-routed readers the executor tasks use. Raises on
-        any failure — the caller falls back to the cluster kernel."""
-        need_pos = tree_has_phrase(node)
-        cols = driverexec.SEG_COLUMNS + (("positions",) if need_pos else ())
+    def _driver_search(self, q: dict) -> KernelResult:
+        """Execute ONE prepared query entirely on the driver: point-read
+        its live terms' rows with read_rows and run the UNMODIFIED
+        per-shard kernel closure on each shard's group — the code and the
+        rows of the cluster path's shard tasks, so results are bit-equal
+        by construction (differential-tested). Raises on any failure."""
+        live = set(q["idfs"])
+        cols = driverexec.SEG_COLUMNS + (
+            ("positions",) if tree_has_phrase(q["node"]) else ())
         rows = driverexec.read_rows(
             self.reader.segment_point_spec(), live, cols)
         champs_pdf = None
-        if use_champs and len(rows):
+        if q["use_champs"] and len(rows):
             champs_pdf = driverexec.read_rows(
                 self.reader.champion_point_spec(), live,
                 driverexec.CHAMP_COLUMNS)
-        run = self._make_kernel(node, idfs, k, after, ascending, seed_min,
-                                sort_feature, agg_query, range_filters,
-                                lean=True)
+        run = self._make_kernel(q, lean=True)
         frames = []
         if len(rows):
             for shard, g in rows.groupby("shard", sort=True):
@@ -1805,10 +1788,36 @@ class FastTopK:
                     cg = champs_pdf[champs_pdf["shard"].to_numpy() == shard]
                     ch = cg if len(cg) else None
                 frames.append(run(int(shard), g, champs=ch))
-        res = _merge_kernel_frame(_lean_concat(frames), k, ascending,
-                                  sort_feature, agg_query, empty_agg)
+        res = self._merge(q, _lean_concat(frames))
         res.driver_served = True
         return res
+
+    def _try_driver(self, q: dict, tiny: int) -> KernelResult | None:
+        """The driver tier under concurrency ADMISSION (driver execution
+        is GIL-bound numpy on ONE process: measured, 16-thread HTTP qps
+        fell 9.2 → 1.6 when every suite query drove); None, or a counted
+        failure, sends the query to the cluster kernel. Tiny queries
+        (~10 ms) always drive; mid-size ones (≤ budget/2) need one free
+        permit right now; large ones need every permit and an otherwise
+        idle engine (solo 0.19 s vs 0.45-0.53 s on the cluster, but
+        admitting them under load dropped 16-thread qps 8.1 → 5.0)."""
+        n = q["postings"]
+        large = n > self.driver_max_postings // 2
+        need = 0 if n <= tiny else driverexec.DRIVER_PERMITS if large else 1
+        got = 0
+        if not (large and self._inflight > 1):
+            while got < need and self._driver_permits.acquire(blocking=False):
+                got += 1
+        try:
+            if got == need:
+                return self._driver_search(q)
+        except Exception:
+            # unreadable path / stale layout → cluster kernel
+            driverexec.note_fallback("driver tier")
+        finally:
+            for _ in range(got):
+                self._driver_permits.release()
+        return None
 
     def search(self, node: QueryNode, k: int = 10,
                after: tuple[float, int] | None = None,
@@ -1819,157 +1828,27 @@ class FastTopK:
                range_filters: dict[str, tuple] | None = None,
                use_champions: bool = True,
                ) -> KernelResult:
-        """Public entry — tracks in-flight concurrency around _search (the
-        large driver-tier admission gate reads it); see _search for the
-        full contract."""
-        with self._inflight_lock:
-            self._inflight += 1
-        try:
-            return self._search(node, k, after, ascending, sort_feature,
-                                seed_min, agg_query, range_filters,
-                                use_champions)
-        finally:
-            with self._inflight_lock:
-                self._inflight -= 1
-
-    def _search(self, node: QueryNode, k: int = 10,
-                after: tuple[float, int] | None = None,
-                ascending: bool = False,
-                sort_feature: str | None = None,
-                seed_min: int = SEED_MIN,
-                agg_query: dict[str, list[tuple]] | None = None,
-                range_filters: dict[str, tuple] | None = None,
-                use_champions: bool = True,
-                ) -> KernelResult:
-        """ONE segment query: candidates, filters, top-k and aggregation
-        partials in a single shard-task kernel job (or on the driver
-        tier), merged here. Every feature the query reads comes from the
-        shard-local fast-field sidecar, which must cover it (ValueError
-        otherwise — SearchEngine sends such queries to the relational
-        path instead).
+        """ONE segment query — a batch of one, `search_many([spec])[0]`
+        (_run). Every feature the query reads comes from the shard-local
+        fast-field sidecar, which must cover it (ValueError otherwise —
+        SearchEngine sends such queries to the relational path instead).
 
         range_filters: {feat: (lo, hi)} half-open null-excluding range
-        filters, evaluated in-kernel — the reference's own shape
-        (RangeQuery composed into the ONE per-segment query over
-        segment-local fast-field columns, main.rs:152-172). No docmeta
-        scan and no shuffle: each task reads only its shards' rows of the
-        query terms.
+        filters, evaluated in-kernel over the shard-local fast-field
+        columns — the reference's RangeQuery composed into the ONE
+        per-segment query (main.rs:152-172); no docmeta scan, no shuffle.
 
-        sort_feature: feature column to rank by instead of relevance; the
-        kernel reads this shard's values locally, so a field sort reads
-        only the query terms' blocks — O(matches), never O(n_docs).
+        sort_feature: feature to rank by instead of relevance, read
+        shard-locally — a field sort reads only the query terms' blocks.
 
-        agg_query: {feat: [(lo, hi), ...]} — fused range aggregation over
-        the SAME kernel job; partials come back as doc_id == -2 rows and
-        are merged here. Result lands in .agg."""
-        self._check_sidecar_cover(sort_feature, agg_query, range_filters)
-        terms: set[tuple[str, str]] = set()
-        collect_terms(node, terms)
-        empty_agg = ({f: [(0, None, None)] * len(r)
-                      for f, r in agg_query.items()} if agg_query else None)
-        if not terms:
-            return KernelResult(0, 0, [], agg=empty_agg)
-        dfs = self.executor.term_dfs(terms)
-        stats = self.reader.stats
-        idfs = {ft: idf_fn(dfs[ft], stats[ft[0]]["n_docs"])
-                for ft in terms if dfs[ft] > 0}
-        live = set(idfs)
-        if not live:
-            return KernelResult(0, 0, [], agg=empty_agg)
-        # Champion fast path: single-term (or boosted single-term)
-        # relevance-descending page-1 queries with no filter/sort/agg read
-        # O(C) impact-ordered postings per shard instead of decoding every
-        # block (hot-term block-max saturation, VERDICT r4 "What's missing"
-        # #3). Lossless: _serve_champions verifies the k-th f32 score
-        # strictly beats every shard's non-champion tail bound, else
-        # leaves the query to the full block kernel below. Pagination
-        # (`after`), ascending order, filters, field sorts and fused aggs
-        # all need postings beyond the heads, so they never route here.
-        target = self._champion_target(node, idfs, after, ascending,
-                                       sort_feature, agg_query,
-                                       range_filters, use_champions)
-        if target is not None:
-            res = self._serve_champions({0: (*target, k)}).get(0)
-            if res is not None:
-                return res
+        agg_query: {feat: [(lo, hi), ...]} — range aggregation fused into
+        the SAME kernel job (doc_id == -2 partial rows); lands in .agg."""
+        return self._run([dict(
+            node=node, k=k, after=after, ascending=ascending,
+            sort_feature=sort_feature, seed_min=seed_min,
+            agg_query=agg_query, range_filters=range_filters,
+            use_champions=use_champions)])[0]
 
-        # champion-seeded kernel (multi-leaf trees — the 2-field DisMax
-        # every fulltext query expands to): read the shard's champion
-        # rows next to its blocks; the kernel seeds θ from the exact
-        # impact-ordered heads and prunes the rest with per-doc tail
-        # bounds.
-        use_champs = self._champ_seeded(node, after, ascending,
-                                        sort_feature, use_champions)
-        # driver tier: when the query's total posting count fits under the
-        # budget, point-read exactly those rows and run the same kernel
-        # closure locally — zero Spark jobs (module rationale in
-        # execution/driverexec). Cluster fallback on any failure.
-        #
-        # ADMISSION under concurrency: driver execution is GIL-bound numpy
-        # on ONE process, so N concurrent mid-size driver queries serialize
-        # while the 32-core cluster sits idle — measured: 16-thread
-        # unbatched HTTP qps collapsed 9.2 → 1.6 when every suite query
-        # drove. Three tiers (r7, crossover-sized — VERDICT r6 #3):
-        # - tiny (≤ budget/8, ~10 ms): always drive — even fully serialized
-        #   they out-throughput a scheduler round-trip;
-        # - mid (≤ budget/2, ≲100 ms): need ONE free permit RIGHT NOW
-        #   (non-blocking), else cluster;
-        # - large (≤ budget, ~100-250 ms of GIL): need EVERY permit — they
-        #   drive when the tier is otherwise idle (solo latency 0.19 s vs
-        #   0.45-0.53 s cluster, measured) but spill under concurrency
-        #   (measured: flat-admitting them dropped 16-thread qps 8.1 → 5.0).
-        # Latency-optimal solo, throughput-safe at saturation, no tuning
-        # knob that breaks at a different load.
-        total_postings = sum(dfs[ft] for ft in live)
-        if self.use_driver and total_postings <= self.driver_max_postings:
-            tiny = total_postings <= min(driverexec.DRIVER_TINY_POSTINGS,
-                                         self.driver_max_postings // 8)
-            large = total_postings > self.driver_max_postings // 2
-            need = 0 if tiny else self.driver_permits if large else 1
-            # large queries additionally require an otherwise-idle engine:
-            # holding every permit for ~200 ms of GIL is fine solo but
-            # starves concurrent serving traffic (measured 8.1 → 5.0 qps)
-            got = 0
-            if not (large and self._inflight > 1):
-                while (got < need
-                       and self._driver_permits.acquire(blocking=False)):
-                    got += 1
-            try:
-                if got == need:
-                    return self._driver_search(
-                        node, live, idfs, k, after, ascending, sort_feature,
-                        agg_query, range_filters, seed_min,
-                        use_champs, empty_agg)
-            except Exception:
-                # unreadable path / stale layout → cluster kernel
-                driverexec.note_fallback("search")
-            finally:
-                for _ in range(got):
-                    self._driver_permits.release()
-        run = self._make_kernel(node, idfs, k, after, ascending, seed_min,
-                                sort_feature, agg_query, range_filters)
-        parts = self._kernel_job({0: (run, live, use_champs,
-                                      tree_has_phrase(node))})
-        return _merge_kernel_frame(parts.get(0, _NO_ROWS), k, ascending,
-                                   sort_feature, agg_query, empty_agg)
-
-    def _check_sidecar_cover(self, sort_feature, agg_query,
-                             range_filters) -> None:
-        """A feature absent from the sidecar (stale span, a column added to
-        docmeta after the build) must fail HERE, on the driver, with a
-        clear error — not as a pyarrow missing-column error deep in an
-        executor task."""
-        feats = set(agg_query or ()) | set(range_filters or ())
-        if sort_feature is not None:
-            feats.add(sort_feature)
-        if not self.covers(feats):
-            raise ValueError(
-                "the fast-field sidecar does not cover every filter, sort "
-                f"and agg feature (missing: "
-                f"{sorted(feats - self._ff_cols)}); such queries run on "
-                "the relational path (SearchEngine routes them there)")
-
-    # -------------------------------------------------------- batched search
     def search_many(self, specs: list[dict]) -> list[KernelResult]:
         """Answer a MICRO-BATCH of queries in at most TWO Spark jobs.
 
@@ -1983,109 +1862,90 @@ class FastTopK:
         concurrent HTTP requests; the reference has no analog because an
         in-process tantivy searcher has no per-query scheduling floor).
 
-        Each spec is a dict of search() kwargs (node required), with the
-        same sidecar-cover contract as search().
+        Each spec is a dict of search() kwargs (node required). A query's
+        result does not depend on its batch-mates (tests/test_batch.py);
+        only its route may (_run step 3)."""
+        return self._run(specs)
 
-        Job 1 serves every champion-eligible single-term query from the
-        champion sidecar (_serve_champions: one driver-side read with the
-        driver tier on, else one shard-task job of make_champion_task, rows
-        dispatched per (field, term) → qids); the per-query lossless bound
-        check is the SAME _champ_verify as the single path, and failures
-        drop into job 2.
-        Job 2 is ONE shard-task job (_kernel_job) over every remaining
-        query: each task point-reads its shards' rows for the UNION of
-        their terms, slices them per query by (field, term) membership and
-        dispatches them to that query's unmodified single-query kernel
-        closure, so per-query results are BIT-EQUAL to search()
-        (differential-tested, tests/test_batch.py). A hot term shared by
-        several queries is read ONCE per shard — the common case for
-        serving workloads. positions blobs are read only when a phrase
-        query is in the batch."""
-        out: list[KernelResult | None] = [None] * len(specs)
-        champ_direct: dict[int, tuple] = {}  # qid → (field, term, idf, fac, k)
-        block: dict[int, dict] = {}          # qid → prepared context
-        stats = self.reader.stats
+    def _run(self, specs: list[dict]) -> list[KernelResult]:
+        """The one query core behind search() and search_many(); every
+        call counts as in-flight traffic for the large-query gate.
 
-        for i, sp in enumerate(specs):
-            node = sp["node"]
-            k = int(sp.get("k", 10))
-            after = sp.get("after")
-            ascending = bool(sp.get("ascending", False))
-            sort_feature = sp.get("sort_feature")
-            agg_query = sp.get("agg_query")
-            range_filters = sp.get("range_filters")
-            use_champions = bool(sp.get("use_champions", True))
-            seed_min = int(sp.get("seed_min", SEED_MIN))
-            self._check_sidecar_cover(sort_feature, agg_query, range_filters)
-            terms: set[tuple[str, str]] = set()
-            collect_terms(node, terms)
-            empty_agg = ({f: [(0, None, None)] * len(r)
-                          for f, r in agg_query.items()}
-                         if agg_query else None)
-            if not terms:
-                out[i] = KernelResult(0, 0, [], agg=empty_agg)
-                continue
-            dfs = self.executor.term_dfs(terms)
-            idfs = {ft: idf_fn(dfs[ft], stats[ft[0]]["n_docs"])
-                    for ft in terms if dfs[ft] > 0}
-            if not idfs:
-                out[i] = KernelResult(0, 0, [], agg=empty_agg)
-                continue
-            use_champs = self._champ_seeded(node, after, ascending,
-                                            sort_feature, use_champions)
-            # driver tier for TINY queries only (budget/8): batched
-            # queries serve on ONE driver thread, so per-query driver cost
-            # must stay well under the shared batch kernel's amortized
-            # slice — a rare term (3 blocks, ~10 ms) wins, a hot 2-field
-            # DisMax (~100 ms of GIL-bound decode) would SERIALIZE the
-            # batch and collapse concurrent QPS (measured: 13.7 → 2.1 qps
-            # at 16 threads when every suite query driver-served in-batch).
-            # Solo search() keeps the full budget — one caller, latency-
-            # optimal either way.
-            if (self.use_driver
-                    and sum(dfs[ft] for ft in idfs)
-                    <= min(driverexec.DRIVER_TINY_POSTINGS,
-                           self.driver_max_postings // 8)):
-                try:
-                    out[i] = self._driver_search(
-                        node, set(idfs), idfs, k, after, ascending,
-                        sort_feature, agg_query, range_filters, seed_min,
-                        use_champs, empty_agg)
+        1. Per spec: the sidecar-cover check (a feature the sidecar lacks
+           fails HERE, not deep in an executor task), terms, dfs/idfs;
+           queries with no live term finish here.
+        2. Champion-eligible single-term queries: ONE _serve_champions
+           pass; a query whose lossless bound fails goes on.
+        3. Driver tier (zero Spark jobs, _try_driver). A batch of one gets
+           the full posting budget; a larger batch serves on ONE driver
+           thread, so only tiny queries drive (measured: 13.7 → 2.1 qps at
+           16 threads when every suite query drove in-batch).
+        4. ONE shard-task job over the rest (_kernel_job): each task reads
+           its shards' rows for the UNION of their terms once and hands
+           each query its slice."""
+        with self._inflight_lock:
+            self._inflight += 1
+        try:
+            out: list[KernelResult | None] = [None] * len(specs)
+            todo: dict[int, dict] = {}       # qid → prepared query
+            targets: dict[int, tuple] = {}   # qid → champion target
+            stats = self.reader.stats
+            for i, sp in enumerate(specs):
+                q = {**_SPEC_DEFAULTS, **sp}
+                feats = {*(q["agg_query"] or ()), *(q["range_filters"] or ()),
+                         q["sort_feature"]} - {None}
+                if not self.covers(feats):
+                    raise ValueError(
+                        "the fast-field sidecar does not cover every filter,"
+                        f" sort and agg feature (missing: "
+                        f"{sorted(feats - self._ff_cols)}); such queries run "
+                        "on the relational path (SearchEngine routes them "
+                        "there)")
+                terms: set[tuple[str, str]] = set()
+                collect_terms(q["node"], terms)
+                dfs = self.executor.term_dfs(terms) if terms else {}
+                q["idfs"] = {ft: idf_fn(dfs[ft], stats[ft[0]]["n_docs"])
+                             for ft in terms if dfs[ft] > 0}
+                q["empty_agg"] = ({f: [(0, None, None)] * len(r)
+                                   for f, r in q["agg_query"].items()}
+                                  if q["agg_query"] else None)
+                if not q["idfs"]:
+                    out[i] = KernelResult(0, 0, [], agg=q["empty_agg"])
                     continue
-                except Exception:
-                    driverexec.note_fallback("search_many")
-            block[i] = dict(node=node, k=k, ascending=ascending,
-                            sort_feature=sort_feature, agg_query=agg_query,
-                            live=set(idfs), empty_agg=empty_agg,
-                            use_champs=use_champs,
-                            run=self._make_kernel(
-                                node, idfs, k, after, ascending, seed_min,
-                                sort_feature, agg_query, range_filters))
-            target = self._champion_target(node, idfs, after, ascending,
-                                           sort_feature, agg_query,
-                                           range_filters, use_champions)
-            if target is not None:
-                champ_direct[i] = (*target, k)
+                q["postings"] = sum(dfs[ft] for ft in q["idfs"])
+                q["use_champs"] = self._champ_seeded(q)
+                todo[i] = q
+                target = self._champion_target(q)
+                if target is not None:
+                    targets[i] = target
 
-        # job 1 (or one driver-side read): every champion-eligible
-        # single-term query in one pass; a verify-fail stays in `block`
-        if champ_direct:
-            for i, res in self._serve_champions(champ_direct).items():
-                out[i] = res
-                del block[i]
+            if targets:
+                for i, res in self._serve_champions(targets).items():
+                    out[i] = res
+                    del todo[i]
 
-        # job 2: ONE shard-task job over every remaining query; per-qid
-        # dispatch happens IN the task
-        if block:
-            parts = self._kernel_job({
-                i: (c["run"], c["live"], c["use_champs"],
-                    tree_has_phrase(c["node"]))
-                for i, c in block.items()})
-            for i, c in block.items():
-                out[i] = _merge_kernel_frame(
-                    parts.get(i, _NO_ROWS), c["k"], c["ascending"],
-                    c["sort_feature"], c["agg_query"], c["empty_agg"])
-        return out
+            tiny = min(driverexec.DRIVER_TINY_POSTINGS,
+                       self.driver_max_postings // 8)
+            budget = self.driver_max_postings if len(specs) == 1 else tiny
+            if self.use_driver:
+                for i in [i for i, q in todo.items()
+                          if q["postings"] <= budget]:
+                    res = self._try_driver(todo[i], tiny)
+                    if res is not None:
+                        out[i] = res
+                        del todo[i]
+
+            if todo:
+                parts = self._kernel_job({
+                    i: (self._make_kernel(q), set(q["idfs"]),
+                        q["use_champs"], tree_has_phrase(q["node"]))
+                    for i, q in todo.items()})
+                for i, q in todo.items():
+                    out[i] = self._merge(q, parts.get(i, _NO_ROWS))
+            return out
+        finally:
+            with self._inflight_lock:
+                self._inflight -= 1
 
     # ------------------------------------------------- legacy test surface
     def topk(self, field: str, terms: list[str], k: int = 10,
@@ -2094,5 +1954,5 @@ class FastTopK:
         path's results exactly (tests/test_wand.py)."""
         ts = tuple(Term(field, t) for t in sorted(set(terms)))
         node = Boolean(musts=ts) if mode == "and" else Boolean(shoulds=ts)
-        r = self.search(node, k=k)
+        r = self._run([{"node": node, "k": k}])[0]
         return r.total, r.hits

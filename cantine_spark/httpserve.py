@@ -63,12 +63,13 @@ class QueryBatcher:
     job + ONE hydration scan (api.SearchEngine.search_batch), amortizing
     the floor N-fold while leaving single-client latency almost untouched
     (the window only opens after a first request is already in hand, so a
-    lone client pays ≤ window_ms extra on a ~400 ms query).
+    lone client pays ≤ window_ms extra on a ~400 ms query). Every batch,
+    a lone request included, goes through search_batch.
 
     Error isolation: each request is parsed individually — a BadRequest
     fails only its own request, never the batch. When search_batch itself
-    raises, every query of the batch is retried alone with engine.search,
-    so an engine-level error reaches only the request that causes it.
+    raises for a batch of several, each of its queries is run again on its
+    own, so an engine-level error reaches only the request that causes it.
     The engine is resolved from the backend once per dispatch, so a
     blue/green refresh swap is picked up at the next batch exactly as the
     unbatched path picks it up at the next request.
@@ -210,18 +211,15 @@ class QueryBatcher:
         if not valid:
             return
         try:
-            if len(valid) == 1:  # no batching overhead for a lone request
-                results = [engine.search(valid[0][1])]
-            else:
-                # search_batch isolates per-query errors (bad cursor etc.)
-                # in-slot as BadRequest instances — only engine-level
-                # failures raise
-                results = engine.search_batch([q for _, q in valid])
+            # search_batch isolates per-query errors (bad cursor etc.)
+            # in-slot as BadRequest instances — only engine-level failures
+            # raise
+            results = engine.search_batch([q for _, q in valid])
         except Exception as e:  # noqa: BLE001
             if len(valid) == 1:
                 results = [e]
             else:
-                # an engine-level batch failure: retry each query solo so
+                # an engine-level batch failure: retry each query alone so
                 # that only the offending request gets the error
                 _log.warning("search_batch failed; retrying %d queries "
                              "one by one", len(valid), exc_info=True)

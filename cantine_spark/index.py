@@ -194,12 +194,11 @@ class IndexReader:
         analog of the reference's O(1) uuid HashMap (readerwriter.rs:30-55).
         The bucket is computed driver-side (pure-Python xxhash64 parity with
         the build-side Spark expression), so the lookup reads ONE bucket
-        directory regardless of corpus size — driver-side with pyarrow on
-        the serving path (a cursor resolve must not pay a Spark job's
-        scheduling floor), Spark scan as the fallback. Indexes built before
-        uuid_map existed fall back to a (full) doc-store scan rather than
-        erroring. Raises on duplicate uuids — a cursor must never silently
-        resume from the wrong doc."""
+        regardless of corpus size: a driver-side point read on the serving
+        path (no Spark job's scheduling floor), a Spark scan as the
+        fallback, a full doc-store scan for indexes built before uuid_map.
+        Raises on duplicate uuids — a cursor must never silently resume
+        from the wrong doc."""
         try:
             return self._id_for_uuid_driver(uuid)
         except ValueError:
@@ -226,33 +225,22 @@ class IndexReader:
         return int(rows[0]["doc_id"])
 
     def _id_for_uuid_driver(self, uuid: str) -> int | None:
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-
+        """The uuid's `ubucket=K` rows of every uuid_map dir, point-read
+        through driverexec's cached key directory (keyed by uuid, like
+        the term-df lookup's term_stats read): no listing and no dataset
+        per call."""
+        from cantine_spark.execution import driverexec  # noqa: PLC0415
         from cantine_spark.functions.xxhash import spark_xxhash64_strings
+
         n_buckets = int(self.manifest.get("n_buckets", 64))
         b = spark_xxhash64_strings(uuid) % n_buckets
-        # pyarrow.fs routing (fsutil): the same point read works on any
-        # index URI — posix, file://, s3://, hdfs:// (VERDICT r5 #2)
-        parts = []
-        for d in self.uuid_map_dirs():
-            if not fsutil.is_dir(d):
-                raise FileNotFoundError(d)
-            files = fsutil.list_parquet(fsutil.join(d, f"ubucket={b}"))
-            if not files:
-                continue  # empty bucket in this dir
-            parts.append(pads.dataset(
-                [p for _, p in files], format="parquet",
-                filesystem=files[0][0]).to_table(
-                columns=["uuid", "doc_id"], filter=pads.field("uuid") == uuid))
-        if not parts:
-            return None  # empty bucket → uuid unseen
-        tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-        if tbl.num_rows == 0:
-            return None
-        if tbl.num_rows > 1:
+        ids = [d for dir_ in self.uuid_map_dirs()
+               for d in driverexec.read_keys(
+                   dir_, {uuid}, ("uuid", "doc_id"), parts={b},
+                   key_cols=("uuid",)).column("doc_id").to_pylist()]
+        if len(ids) > 1:
             raise ValueError(f"duplicate uuid {uuid!r} in doc store")
-        return int(tbl.column("doc_id")[0].as_py())
+        return int(ids[0]) if ids else None
 
     def uuid_for_id(self, doc_id: int) -> str | None:
         row = self.find_by_id(doc_id)

@@ -288,22 +288,50 @@ def test_driver_term_dfs_equals_spark_scan(engine):
     assert ex3.term_dfs(set(terms)) == via_api
 
 
-def test_driver_uuid_resolve_equals_spark_scan(engine):
+def test_driver_uuid_resolve_equals_spark_scan(engine, spark, index_dir,
+                                               monkeypatch):
     """id_for_uuid's driver-side bucket point read must agree with the
-    Spark bucket scan (hit, miss, and fallback-on-failure)."""
-    reader = engine.reader
-    row = reader.docs.select("uuid", "doc_id").first()
-    assert reader._id_for_uuid_driver(row["uuid"]) == int(row["doc_id"])
-    assert reader._id_for_uuid_driver("0" * 32) is None
-    orig = reader._id_for_uuid_driver
-    try:
+    Spark bucket scan for every uuid of the index and an absent one, on a
+    plain and a tiered reader, and fall back on failure. The read goes
+    through the cached key directory: a second resolve opens no dataset."""
+    import pyarrow.dataset as pads
+
+    from cantine_spark.execution import driverexec
+    from cantine_spark.tiered import TieredIndexReader
+
+    want = {r["uuid"]: int(r["doc_id"])
+            for r in engine.reader.docs.select("uuid", "doc_id").collect()}
+    absent = "0" * 32
+    assert absent not in want
+    for reader in (engine.reader, TieredIndexReader(spark, [index_dir])):
+        got = {u: reader._id_for_uuid_driver(u) for u in want}
+        assert got == want
+        assert reader._id_for_uuid_driver(absent) is None
+        opened = []
+        dataset, table_dir = pads.dataset, driverexec._TableDir
+
+        def spy(*a, **kw):
+            opened.append(a)
+            return dataset(*a, **kw)
+
+        def dir_spy(*a, **kw):
+            opened.append(a)
+            return table_dir(*a, **kw)
+
+        monkeypatch.setattr(pads, "dataset", spy)
+        monkeypatch.setattr(driverexec, "_TableDir", dir_spy)
+        u = next(iter(want))
+        assert reader._id_for_uuid_driver(u) == want[u]
+        assert opened == []
+        monkeypatch.undo()
+
         def boom(u):
             raise RuntimeError("driver store unreadable")
-        reader._id_for_uuid_driver = boom
-        assert reader.id_for_uuid(row["uuid"]) == int(row["doc_id"])
-        assert reader.id_for_uuid("0" * 32) is None
-    finally:
-        reader._id_for_uuid_driver = orig
+
+        monkeypatch.setattr(reader, "_id_for_uuid_driver", boom)
+        assert reader.id_for_uuid(u) == want[u]
+        assert reader.id_for_uuid(absent) is None
+        monkeypatch.undo()
 
 
 def test_malformed_json_types_rejected():

@@ -1,20 +1,22 @@
-"""Batched query execution — search_batch must be BIT-EQUAL to search().
+"""Batched query execution — a query's answer must not depend on its
+batch-mates.
 
-The batch path (api.SearchEngine.search_batch → execution.wand.FastTopK.
-search_many) answers a micro-batch of queries with at most two kernel
-Spark jobs plus one shared hydration scan, dispatching each (qid, shard)
-group to the query's UNMODIFIED single-query kernel closure. These tests
-pin: per-query equality over every serving query shape (the bench suite),
-pagination cursors round-tripping across the two paths, per-query routing
-(champion sidecar / relational fallback) staying intact, seeded fuzz over
-mixed batches, and the structural claim itself — no hidden per-query solo
-jobs for batchable shapes.
+SearchEngine.search(q) is search_batch([q])[0] and FastTopK.search(**spec)
+is search_many([spec])[0]: one core each (api.SearchEngine._run_batch,
+execution.wand.FastTopK._run). A micro-batch is answered with at most two
+kernel Spark jobs plus one shared hydration scan, each (qid, shard) group
+dispatched to the query's unmodified kernel closure. These tests compare a
+batch of N with N batches of one over every serving query shape (the bench
+suite), pagination cursors round-tripping across the two, per-query
+routing (champion sidecar / relational fallback) staying intact, seeded
+fuzz over mixed batches, per-slot error isolation, and the structural
+claim itself — no hidden per-query jobs for batchable shapes.
 
 Reference note: the reference has no batching analog (an in-process
 tantivy searcher has no per-query scheduling floor, cantine/src/main.rs
-handles each request on its own actix worker); this is Spark-serving
-work on top of reference semantics, so the ground truth is our own
-single-query path, itself oracle-checked elsewhere.
+handles each request on its own actix worker). The ground truth for the
+answers themselves is the independent oracle (oracle.py, the goldens),
+checked elsewhere; here the batch of one is only the comparison point.
 """
 
 from __future__ import annotations
@@ -256,3 +258,19 @@ def test_batch_all_invalid_returns_all_errors(engine):
 
     r = engine.search_batch([{"bogus": 1}, {"num_items": 0}])
     assert all(isinstance(x, BadRequest) for x in r)
+
+
+def test_search_raises_what_search_batch_returns(engine):
+    """search() raises the BadRequest that search_batch() returns in the
+    slot of a stale cursor, while the slot's batch-mates still answer."""
+    from cantine_spark.api import BadRequest
+    from cantine_spark.cursor import SearchCursor
+
+    ghost = SearchCursor.relevance(1.0, b"\x00" * 16).encode()
+    stale = {"fulltext": "def", "after": ghost}
+    good = {"fulltext": "def", "num_items": 5}
+    with pytest.raises(BadRequest, match="unknown uuid"):
+        engine.search(dict(stale))
+    r = engine.search_batch([dict(stale), dict(good)])
+    assert isinstance(r[0], BadRequest) and "unknown uuid" in str(r[0])
+    _assert_result_equal(r[1], engine.search(dict(good)), "batch-mate")

@@ -103,40 +103,43 @@ def test_budget_gates_driver_tier(reader):
     assert single.driver_served and single.champion_served
 
 
+def _dismax_postings(reader) -> int:
+    dfs = FastTopK(reader).executor.term_dfs(
+        [("content", "def"), ("path", "def")])
+    return sum(dfs.values())
+
+
 def test_admission_spills_midsize_to_cluster(reader):
     """Concurrency admission: a MID-SIZE query (> budget/8 postings) takes
-    the driver tier only when a permit is free — with both permits held
-    (two mid-size driver executions in flight) it spills to the cluster
-    kernel with identical results; tiny queries always drive."""
+    the driver tier only when a permit is free — with every permit held
+    (DRIVER_PERMITS mid-size driver executions in flight) it spills to the
+    cluster kernel with identical results; tiny queries always drive."""
     fd = FastTopK(reader)
-    dfs = fd.executor.term_dfs(
-        [("content", "def"), ("path", "def")])
-    total = sum(dfs.values())
-    mid = FastTopK(reader, driver_max_postings=total)  # budget/8 < total
+    # budget/8 < total: not tiny, so the dismax needs permits
+    mid = FastTopK(reader, driver_max_postings=_dismax_postings(reader))
     ref = mid.search(SHAPES["dismax"], k=5)
     assert ref.driver_served
-    assert mid._driver_permits.acquire(blocking=False)
-    assert mid._driver_permits.acquire(blocking=False)
+    for _ in range(driverexec.DRIVER_PERMITS):
+        assert mid._driver_permits.acquire(blocking=False)
     try:
         spilled = mid.search(SHAPES["dismax"], k=5)
-        assert not spilled.driver_served  # both permits busy → cluster
+        assert not spilled.driver_served  # every permit busy → cluster
         _same(spilled, ref)
         # tiny queries are exempt from admission (even serialized they
         # beat a scheduler round-trip)
         assert fd.search(SHAPES["term"], k=5).driver_served
     finally:
-        mid._driver_permits.release()
-        mid._driver_permits.release()
+        for _ in range(driverexec.DRIVER_PERMITS):
+            mid._driver_permits.release()
     assert mid.search(SHAPES["dismax"], k=5).driver_served
 
 
-def test_admission_permits_constructor_exposed(reader):
-    """r7 (VERDICT r6 #3): the permit count is a constructor knob; with
-    driver_permits=1 a single held permit spills mid-size queries."""
-    fd = FastTopK(reader)
-    dfs = fd.executor.term_dfs([("content", "def"), ("path", "def")])
-    total = sum(dfs.values())
-    one = FastTopK(reader, driver_max_postings=total, driver_permits=1)
+def test_admission_permit_count_is_driverexec_constant(reader, monkeypatch):
+    """The permit count has one home, driverexec.DRIVER_PERMITS: an engine
+    opened under DRIVER_PERMITS=1 has exactly one permit, and holding it
+    spills mid-size queries."""
+    monkeypatch.setattr(driverexec, "DRIVER_PERMITS", 1)
+    one = FastTopK(reader, driver_max_postings=_dismax_postings(reader))
     ref = one.search(SHAPES["dismax"], k=5)
     assert ref.driver_served
     assert one._driver_permits.acquire(blocking=False)
@@ -147,6 +150,47 @@ def test_admission_permits_constructor_exposed(reader):
         _same(spilled, ref)
     finally:
         one._driver_permits.release()
+
+
+def test_midsize_drives_alone_not_in_a_batch(reader):
+    """A batch of one keeps the full driver budget under admission; a
+    batch of two serves on one driver thread, so only tiny queries drive
+    there. Same answers either way."""
+    # budget/8 < total ≤ budget/2: mid-size, one permit when alone
+    mid = FastTopK(reader, driver_max_postings=2 * _dismax_postings(reader))
+    spec = {"node": SHAPES["dismax"], "k": 5}
+    [alone] = mid.search_many([spec])
+    pair_ = mid.search_many([spec, dict(spec, k=3)])
+    assert alone.driver_served
+    assert not any(r.driver_served for r in pair_)
+    _same(alone, pair_[0])
+    _same(mid.search(SHAPES["dismax"], k=3), pair_[1])
+
+
+VARIANTS = {
+    "plain": {},
+    "after": {"after": (1.0, 10)},
+    "asc": {"ascending": True},
+    "sort": {"sort_feature": "num_lines"},
+    "filter": {"range_filters": {"num_lines": (3.0, 80.0)}},
+    "agg": {"agg_query": {"content_bytes": [(0.0, 2000.0),
+                                            (2000.0, 1e12)]}},
+    "nochamp": {"use_champions": False},
+}
+
+
+@pytest.mark.parametrize("variant", sorted(VARIANTS))
+@pytest.mark.parametrize("shape", sorted(SHAPES))
+def test_search_is_a_batch_of_one(pair, shape, variant):
+    """FastTopK.search(**spec) ≡ search_many([spec])[0], field by field —
+    route flags and block counters included."""
+    import dataclasses
+
+    fd, _ = pair
+    spec = {"node": SHAPES[shape], "k": 5, **VARIANTS[variant]}
+    a = fd.search(**spec)
+    [b] = fd.search_many([spec])
+    assert dataclasses.asdict(a) == dataclasses.asdict(b)
 
 
 def test_unreadable_spec_falls_back_to_cluster(reader, monkeypatch):

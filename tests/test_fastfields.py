@@ -39,7 +39,7 @@ def relational(reader, node, q: dict):
     eng._fast = None
     sq = SearchQuery.from_dict(q, features=eng.features)
     _, preds = eng.interpret(sq)
-    return eng._search_resolved(sq, sq.num_items or 10, node, preds, None)
+    return eng._search_relational(sq, sq.num_items or 10, node, preds, None)
 
 
 def as_partials(agg) -> dict:

@@ -297,6 +297,29 @@ def test_batching_disabled_still_serves(http_env):
         legacy.stop()
 
 
+def test_one_request_records_one_span_per_layer(http_env):
+    """A request through the HTTP batcher enters each layer once: exactly
+    one api.* span and one wand.* span, neither nested in a span of its
+    own layer (perfbench's probe wraps both public entry points of each
+    layer, so a public method calling its sibling would show twice)."""
+    from perfbench.probe import Tracer
+
+    http, *_ = http_env
+    tracer = Tracer()
+    tracer.install()
+    try:
+        code, body = _post(http.url, {"fulltext": "def", "num_items": 3})
+    finally:
+        tracer.uninstall()
+    assert code == 200 and body["items"]
+    names = {sid: name for sid, _, _, name, _, _ in tracer.spans}
+    for layer in ("api.", "wand."):
+        spans = [s for s in tracer.spans if s[3].startswith(layer)]
+        assert len(spans) == 1, (layer, sorted(names.values()))
+        parent = spans[0][1]
+        assert parent is None or not names[parent].startswith(layer)
+
+
 def test_same_port_sees_new_generation(http_env):
     """The r5 'done' criterion: HTTP query → generation lands → the SAME
     port serves the new docs (the poll thread refreshes mid-traffic)."""

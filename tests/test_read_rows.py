@@ -228,9 +228,9 @@ def spy(monkeypatch):
         seen["decoded"].append((self.paths[i], tuple(groups)))
         return decode(self, i, fk, groups, columns)
 
-    def keys_spy(fsys, path, with_shard):
+    def keys_spy(fsys, path, *rest):
         seen["keys"].append(path)
-        return file_keys(fsys, path, with_shard)
+        return file_keys(fsys, path, *rest)
 
     monkeypatch.setattr(driverexec._TableDir, "_decode", decode_spy)
     monkeypatch.setattr(driverexec, "_FileKeys", keys_spy)
