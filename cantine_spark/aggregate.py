@@ -1,10 +1,12 @@
-"""Range-bucket aggregations — the cantine_derive Aggregable analog.
+"""Range-bucket aggregation results — the cantine_derive Aggregable analog —
+and the full-index /info view.
 
 The reference generates, per numeric feature, an aggregator that takes a list
 of half-open ranges and produces {min, max, count} of the feature values of
 matching docs per range (cantine_derive/src/lib.rs:26-73; per-segment collect
-+ merge at lib.rs:75-160 — which is exactly Spark's partial/final
-HashAggregate, so ONE wide agg expresses the whole thing in a single pass).
++ merge at lib.rs:75-160). Here the segment kernel collects per-shard
+partials over the fast-field sidecar and the driver merges them
+(execution/wand.py); this module holds the result type.
 
 Semantics pinned by the reference:
 - ranges are half-open [start, end) (RangeQuery semantics,
@@ -30,46 +32,6 @@ class RangeStats:
     min: float | int
     max: float | int
     count: int
-
-
-def range_filter(col: str, lo, hi):
-    """F3: half-open range predicate; nulls excluded by definition."""
-    c = F.col(col)
-    return c.isNotNull() & (c >= F.lit(lo)) & (c < F.lit(hi))
-
-
-def aggregate_ranges(matched_meta: DataFrame,
-                     agg_query: dict[str, list[tuple]],
-                     ) -> dict[str, list[RangeStats]]:
-    """One single-pass wide aggregation over the matched docmeta frame.
-
-    agg_query: {feature: [(lo, hi), ...]} — mirrors the generated
-    FeaturesAggregationQuery JSON shape (internal/src/lib.rs:321-356).
-    Catalyst turns this into partial+final HashAggregate: the same
-    (per-segment collect, merge) shape as the reference's Aggregator.
-    """
-    exprs = []
-    for feat, ranges in agg_query.items():
-        for i, (lo, hi) in enumerate(ranges):
-            v = F.when(range_filter(feat, lo, hi), F.col(feat))
-            exprs.append(F.min(v).alias(f"{feat}__{i}__min"))
-            exprs.append(F.max(v).alias(f"{feat}__{i}__max"))
-            exprs.append(F.count(v).alias(f"{feat}__{i}__count"))
-    if not exprs:
-        return {}
-    row = matched_meta.agg(*exprs).collect()[0]
-    out: dict[str, list[RangeStats]] = {}
-    for feat, ranges in agg_query.items():
-        stats = []
-        for i, (lo, hi) in enumerate(ranges):
-            cnt = int(row[f"{feat}__{i}__count"])
-            if cnt == 0:
-                stats.append(RangeStats(min=hi, max=lo, count=0))  # inverted seed
-            else:
-                stats.append(RangeStats(min=row[f"{feat}__{i}__min"],
-                                        max=row[f"{feat}__{i}__max"], count=cnt))
-        out[feat] = stats
-    return out
 
 
 def full_range_info(docmeta: DataFrame, features: list[str]) -> dict[str, dict]:

@@ -8,10 +8,14 @@ shape, cantine/src/main.rs:42-150 for the request lifecycle):
    "after": "<34-char cursor>"}
 
 Lifecycle (SURVEY §3.1): decode cursor (uuid → doc_id, 400-equivalent on
-unknown) → parse fulltext (DisMax, tiebreaker 0.1; field boosts) → AND range
-filters → ONE cached match frame → [total, visited] in one aggregation →
-pagination predicate → TakeOrdered top-k → broadcast hydration → next cursor
-→ range aggregations iff total ≤ agg_threshold (main.rs:137-147).
+unknown) → parse fulltext (DisMax, tiebreaker 0.1; field boosts; no fulltext
+is match-all) → ONE segment-kernel query with the range filters, the
+pagination predicate, the top-k and the fused range aggregations in it
+(execution/wand.py) → hydration of the winners → next cursor; with an
+agg_threshold, aggregations run as a second kernel pass iff total ≤
+threshold (main.rs:137-147). Every query, match-all and pure-negative ones
+included, runs on the segment kernel: the reference's searcher IS its
+segment reader (cantine/src/index.rs:69-129).
 """
 
 from __future__ import annotations
@@ -20,17 +24,14 @@ import binascii
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from cantine_spark.aggregate import RangeStats, aggregate_ranges, range_filter
+from cantine_spark.aggregate import RangeStats
 from cantine_spark.cursor import (
-    TAG_F64, TAG_RELEVANCE, TAG_U64, InvalidCursor, SearchCursor,
+    TAG_RELEVANCE, TAG_U64, InvalidCursor, SearchCursor,
 )
 from cantine_spark.execution.executor import SearchExecutor
-from cantine_spark.execution.wand import FastTopK, KernelResult, segment_eligible
+from cantine_spark.execution.wand import FastTopK, KernelResult
 from cantine_spark.index import IndexReader
-from cantine_spark.plans.nodes import All, Boolean, QueryNode, simplify
+from cantine_spark.plans.nodes import All, QueryNode, simplify
 from cantine_spark.queryparser.parser import QueryParser
 
 MAX_ITEMS = 255          # u8 page cap (model.rs:192)
@@ -125,7 +126,7 @@ class SearchResult:
     total_found: int
     next: str | None = None
     agg: dict[str, list[RangeStats]] | None = None
-    # engine observability (segment path): blocks_total / blocks_scored /
+    # engine observability: blocks_total / blocks_scored /
     # visited — block-max pruning evidence per query (north rule O10)
     stats: dict | None = None
 
@@ -149,10 +150,8 @@ class SearchEngine:
         self.executor = SearchExecutor(self.reader)
         self.parser = QueryParser(["content", "path"], boosts=FIELD_BOOSTS)
         self.features = self.reader.features  # schema-derived (U5)
-        self._fast: FastTopK | None = (
-            FastTopK(self.reader, executor=self.executor,
-                     use_driver=self.use_driver)
-            if self.reader.has_segments else None)
+        self._fast = FastTopK(self.reader, executor=self.executor,
+                              use_driver=self.use_driver)
         if self.pin_tables:
             self.executor.pin_hydration()
         self._info: dict | None = None
@@ -179,36 +178,16 @@ class SearchEngine:
         self.executor.unpin_hydration()
 
     # ------------------------------------------------------------ interpret
-    def interpret(self, query: SearchQuery) -> tuple[QueryNode, list]:
-        """main.rs:152-172: fulltext (DisMax 0.1) + one range predicate per
-        filtered feature, all Must-composed."""
+    def interpret(self, query: SearchQuery
+                  ) -> tuple[QueryNode, dict[str, tuple]]:
+        """main.rs:152-172: fulltext (DisMax 0.1; none is match-all) and
+        one half-open range filter {feat: (lo, hi)} per filtered feature,
+        all Must-composed in the kernel."""
         node: QueryNode | None = None
         if query.fulltext and query.fulltext.strip():
             node = self.parser.parse_dismax(query.fulltext, DISMAX_TIEBREAKER)
-        preds = []
-        for feat, (lo, hi) in (query.filter or {}).items():
-            preds.append(range_filter(feat, lo, hi))
-        if node is None:
-            node = All()
-        return node, preds
-
-    def _matched(self, node: QueryNode, preds: list) -> DataFrame | None:
-        """(doc_id, score) after fulltext matching AND range filters. Filters
-        are a broadcast-free semi join against docmeta only when needed; a
-        pure-filter query never touches postings at all."""
-        m = self.executor.matches(node)
-        if m is None:
-            return None
-        if preds:
-            cond = preds[0]
-            for p in preds[1:]:
-                cond = cond & p
-            filtered_ids = self.reader.docmeta.filter(cond).select("doc_id")
-            if isinstance(node, All):
-                m = filtered_ids.withColumn("score", F.lit(0.0).cast("float"))
-            else:
-                m = m.join(filtered_ids, "doc_id", "left_semi")
-        return m
+        filters = {f_: tuple(r) for f_, r in (query.filter or {}).items()}
+        return (All() if node is None else node), filters
 
     # ----------------------------------------------------------- cursor I/O
     def _decode_after(self, query: SearchQuery) -> tuple[float | int, int] | None:
@@ -243,24 +222,10 @@ class SearchEngine:
             return SearchCursor.u64_field(int(value), uuid).encode()
         return SearchCursor.f64_field(float(value), uuid).encode()
 
-    # ------------------------------------------------------- segment search
-    def _on_segments(self, node: QueryNode, query: SearchQuery) -> bool:
-        """The engine's one routing decision: the segment kernel answers a
-        query iff its tree is segment-eligible and the fast-field sidecar
-        covers every feature it filters, sorts or aggregates on. Anything
-        else — match-all / pure-negative trees, a stale or absent sidecar,
-        a column added to docmeta after the build — runs on the relational
-        path, the reference implementation."""
-        if self._fast is None or not segment_eligible(node):
-            return False
-        feats = set(query.filter or ()) | set(query.agg or ())
-        if query.sort not in (None, "relevance"):
-            feats.add(query.sort)
-        return self._fast.covers(feats)
-
-    def _segment_spec(self, node: QueryNode, k: int, after: tuple | None,
-                      query: SearchQuery) -> dict:
-        """FastTopK.search_many spec of one segment-path query. Without
+    # ------------------------------------------------------- kernel search
+    def _segment_spec(self, node: QueryNode, filters: dict, k: int,
+                      after: tuple | None, query: SearchQuery) -> dict:
+        """FastTopK.search_many spec of one query. Without
         an agg gate (agg_threshold None, the default) the aggregation
         FUSES into the kernel job; with one, the reference's two-pass
         shape (main.rs:137-147): pass 2 runs at assembly, only when
@@ -271,8 +236,7 @@ class SearchEngine:
                           else query.sort),
             agg_query=(_agg_ranges(query)
                        if query.agg and self.agg_threshold is None else None),
-            range_filters=({f_: tuple(r) for f_, r in query.filter.items()}
-                           if query.filter else None))
+            filters=filters or None)
 
     def _assemble_segment_result(self, spec: dict, query: SearchQuery,
                                  res: KernelResult,
@@ -309,7 +273,7 @@ class SearchEngine:
                 # gated: second collector pass on the segments
                 # (main.rs:137-147), run only now that total is known
                 raw = self._fast.search(
-                    spec["node"], k=1, range_filters=spec["range_filters"],
+                    spec["node"], k=1, filters=spec["filters"],
                     agg_query=_agg_ranges(query)).agg
             agg = {}
             for feat, rngs in query.agg.items():
@@ -337,20 +301,9 @@ class SearchEngine:
                     ascending: bool = False) -> KernelResult:
         """Programmatic query-tree search — the public surface for custom
         query plans (U1/U2 hooks, MLT-generated trees, the showcase's
-        term-level DisMax). Evaluates an arbitrary QueryNode on the engine's
-        default path: the segment kernel when the tree is eligible, the
-        relational executor otherwise. Returns (total, visited,
-        [(doc_id, f32 score)])."""
-        node = simplify(node)
-        if self._fast is not None and segment_eligible(node):
-            return self._fast.search(node, k=k, ascending=ascending)
-        m = self.executor.matches(node)
-        if m is None:
-            return KernelResult(0, 0, [])
-        total = int(m.count())
-        rows = self.executor.top_k(m, k, ascending=ascending).collect()
-        hits = [(int(r["doc_id"]), float(r["score"])) for r in rows]
-        return KernelResult(total=total, visited=total, hits=hits)
+        term-level DisMax). Evaluates an arbitrary QueryNode on the segment
+        kernel. Returns (total, visited, [(doc_id, f32 score)])."""
+        return self._fast.search(simplify(node), k=k, ascending=ascending)
 
     # ---------------------------------------------------------------- search
     def search(self, query: SearchQuery | dict,
@@ -362,9 +315,9 @@ class SearchEngine:
         item — the tantivy Explanation analog (tique/src/dismax.rs:308-358):
         a tree of per-leaf BM25 contributions (idf/tf/dl/tfnorm, boosts,
         DisMax combine) whose root value casts f32-equal to the item's
-        score. Computed driver-side for the ≤255 winners only (bucket-
-        pruned postings point reads — no extra Spark job on the serving
-        path; see explain.py)."""
+        score. Computed driver-side for the ≤255 winners only (point reads
+        of their segment blocks — no extra Spark job on the serving path;
+        see explain.py)."""
         [res] = self._run_batch([query])
         if isinstance(res, BadRequest):
             raise res
@@ -383,106 +336,6 @@ class SearchEngine:
         query.validate_features(self.features)
         return query
 
-    def _search_relational(self, query: SearchQuery, k: int,
-                           node: QueryNode, preds: list,
-                           after: tuple | None) -> SearchResult:
-        """The relational path, for the queries the segment kernel does not
-        take (_on_segments): match-all / pure-negative trees (zero-token
-        docs never appear in segments) and features the fast-field sidecar
-        does not cover. Every other query — relevance or field-sorted,
-        filtered, aggregating or not — runs on the compressed block-max
-        segments (the reference's searcher IS its segment reader,
-        cantine/src/index.rs:69-129; filters are Must clauses of the ONE
-        segment query, main.rs:152-172)."""
-        matched = self._matched(node, preds)
-        if matched is None:
-            # zero matches (e.g. an unknown term): the reference still runs
-            # the aggregation collector when the gate passes (0 ≤ any
-            # threshold, main.rs:137-147) and returns inverted-seeded empty
-            # buckets — agg must NOT silently disappear
-            agg = None
-            if query.agg:
-                agg = {feat: [RangeStats(min=hi, max=lo, count=0)
-                              for lo, hi in (tuple(r) for r in rngs)]
-                       for feat, rngs in query.agg.items()}
-            return SearchResult(items=[], total_found=0, agg=agg)
-
-        sort = query.sort or "relevance"
-        ascending = query.ascending
-        if sort == "relevance":
-            ranked = matched.withColumn("sort_val", F.col("score"))
-        else:
-            # field sort: join the fast-field column; missing → 0, tantivy's
-            # val_if_missing fill for fast fields (SURVEY §2.5 T3)
-            meta = self.reader.docmeta.select("doc_id", F.col(sort).alias("_sv"))
-            ranked = matched.join(meta, "doc_id", "left").withColumn(
-                "sort_val", F.coalesce(F.col("_sv"), F.lit(0))).drop("_sv")
-        # persist BEFORE deriving `visible` so the top-k job reads the cached
-        # match frame instead of recomputing the full match lineage
-        ranked = ranked.persist()
-
-        # pagination predicate (PaginationCondition::check, index.rs:286-295):
-        # include iff ref > val (desc) / ref < val (asc); ties → ref_id < doc_id
-        if after is not None:
-            ref_val, ref_id = after
-            v = F.col("sort_val")
-            if ascending:
-                cond = (v > F.lit(ref_val)) | (
-                    (v == F.lit(ref_val)) & (F.col("doc_id") > F.lit(ref_id)))
-            else:
-                cond = (v < F.lit(ref_val)) | (
-                    (v == F.lit(ref_val)) & (F.col("doc_id") > F.lit(ref_id)))
-            visible = ranked.filter(cond)
-        else:
-            visible = ranked
-
-        try:
-            # total & visited in ONE aggregation (A4, top_collector.rs:228-237)
-            if after is not None:
-                ref_val, ref_id = after
-                v = F.col("sort_val")
-                cnt_cond = ((v > ref_val) | ((v == ref_val) & (F.col("doc_id") > ref_id))
-                            ) if ascending else (
-                    (v < ref_val) | ((v == ref_val) & (F.col("doc_id") > ref_id)))
-                row = ranked.agg(
-                    F.count("*").alias("total"),
-                    F.count(F.when(cnt_cond, 1)).alias("visited")).collect()[0]
-            else:
-                row = ranked.agg(F.count("*").alias("total")).collect()[0]
-            total = int(row["total"])
-            visited = int(row["visited"]) if after is not None else total
-
-            topk = self.executor.top_k(
-                visible.select("doc_id", "score", "sort_val"), k,
-                sort_col="sort_val", ascending=ascending)
-            hydrated = self.executor.hydrate(topk).orderBy(
-                F.col("sort_val").asc() if ascending else F.col("sort_val").desc(),
-                F.col("doc_id").asc())
-            rows = hydrated.collect()
-            items = [{"doc_id": int(r["doc_id"]), "uuid": r["uuid"],
-                      "repo": r["repo"], "path": r["path"], "lang": r["lang"],
-                      "score": float(r["score"]), "sort_val": r["sort_val"]}
-                     for r in rows]
-
-            next_cursor = None
-            if visited - len(items) > 0 and items:  # has_next (top_collector.rs:297-299)
-                last = items[-1]
-                next_cursor = self._encode_next(
-                    query.sort, last["sort_val"], last["uuid"])
-
-            agg = None
-            if query.agg and (self.agg_threshold is None
-                              or total <= self.agg_threshold):
-                matched_meta = self.reader.docmeta.join(
-                    ranked.select("doc_id"), "doc_id", "left_semi")
-                agg = aggregate_ranges(
-                    matched_meta, {k_: [tuple(r) for r in v]
-                                   for k_, v in query.agg.items()})
-            return SearchResult(items=items, total_found=total,
-                                next=next_cursor, agg=agg)
-        finally:
-            ranked.unpersist()
-
     # ---------------------------------------------------------- search_batch
     def search_batch(self, queries: list[SearchQuery | dict]
                      ) -> list[SearchResult | BadRequest]:
@@ -492,8 +345,7 @@ class SearchEngine:
         floor, so batching N concurrent queries amortizes it N-fold —
         the serving-throughput lever behind httpserve.QueryBatcher).
 
-        Queries routed to the relational path (_on_segments) run one by
-        one; a gated aggregation's second pass runs per query at assembly.
+        A gated aggregation's second pass runs per query at assembly.
 
         Per-query error isolation: a query that fails to parse, validate,
         or resolve its cursor (all BadRequest shapes) fails ONLY its own
@@ -512,16 +364,12 @@ class SearchEngine:
             try:
                 q = self._parse(q)
                 k = q.num_items or DEFAULT_ITEMS
-                node, preds = self.interpret(q)
+                node, filters = self.interpret(q)
                 after = self._decode_after(q)
             except BadRequest as e:
                 results[i] = e
                 continue
-            if self._on_segments(node, q):
-                specs[i] = (self._segment_spec(node, k, after, q), q)
-            else:
-                results[i] = self._search_relational(q, k, node, preds,
-                                                     after)
+            specs[i] = (self._segment_spec(node, filters, k, after, q), q)
         if specs:
             order = list(specs)
             kres = self._fast.search_many([specs[i][0] for i in order])

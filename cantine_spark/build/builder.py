@@ -16,13 +16,14 @@ pruning properties via hash buckets + sorted row groups):
   docmeta/     doc_id + per-field doc lengths + numeric features (FIXTURES §2)
                — the "fast fields" (tantivy FAST flag, index.rs:193,199-200):
                parquet is already columnar, sort/filter/agg prune columns.
-  postings/    field, term, bucket, doc_id, tf, positions — the inverted index
-               (F1/F2 source). Written partitionBy(bucket) with
-               bucket = pmod(xxhash64(field, term), n_buckets) so a term
-               lookup prunes to one directory, then row-group min/max on the
-               sorted `term` column prunes within it.
+  uuid_map/    uuid, doc_id, ubucket — the cursor resolve's side table.
+  segments/    the inverted index: compressed block-max posting blocks with
+               positions (build/segments.py), plus the champions/ and
+               fastfields/ sidecars written in the same stage. It is the one
+               index format every query runs on.
   term_stats/  field, term, bucket, df, cf — document/collection frequency
-               (A7); broadcast-joined at query time for idf.
+               (A7), bucket = pmod(xxhash64(field, term), n_buckets) so a
+               df lookup reads one directory.
   index_stats/ one row per field: n_docs, total_len, avgdl (C1 inputs).
   manifest.json  lineage + per-stage metrics.
 
@@ -42,19 +43,21 @@ OPTIMIZATION_r07.md):
                shuffles: tokenized partitions are already doc_id-ordered
                (doc_id = dense rank materialized upstream), so a local
                sort keeps parquet min/max pruning intact.
-  docs / docmeta / postings run CONCURRENTLY on driver threads (all three
-               read only tokenized/): Spark back-fills the tail of one
-               job's stage with the next job's tasks (FIFO scheduling).
+  docs / docmeta run CONCURRENTLY on driver threads with the segments
+               chain (all read only tokenized/): Spark back-fills the tail
+               of one job's stage with the next job's tasks (FIFO
+               scheduling).
+  segments stage: the posting rows are an in-flight lineage (one
+               vectorized invert pass over tokenized/, never written) fed
+               to the single-shuffle fused encode — see build/segments.py.
   term_stats/  derived from the champion sidecar (one row per (field,
-               term, shard) carrying n_total=df and cf) instead of
-               re-scanning the full postings table.
-  segments stage: single-shuffle fused encode — see build/segments.py.
+               term, shard) carrying n_total=df and cf), by the same
+               function compaction uses (write_term_stats).
 
 Skew (SURVEY §7.4 risk 3): hot terms (code keywords) concentrate rows in a
-few (field, term) keys. The postings write is spread by salting the shuffle
-with doc_id before partitionBy, so no single task owns a hot bucket; the
-segment encode key includes shard, so a stopword's postings split over all
-doc shards. Per-partition row metrics land in the manifest.
+few (field, term) keys. The segment encode key includes shard, so a
+stopword's postings split over all doc shards. Per-bucket posting counts
+land in the manifest.
 """
 
 from __future__ import annotations
@@ -77,7 +80,6 @@ _log = logging.getLogger(__name__)
 TEXT_FIELDS = ("content", "path")  # multi-field index (C6 analog of
 # cantine's name/ingredients/instructions, cantine/src/index.rs:195-197)
 N_BUCKETS = 64
-WRITE_SALT = 8
 
 # docmeta column order — pinned (features derive from this schema at open)
 DOCMETA_COLS = (
@@ -230,6 +232,101 @@ def bucket_expr(field_col, term_col):
     return F.pmod(F.xxhash64(field_col, term_col), F.lit(N_BUCKETS)).cast("int")
 
 
+def write_term_stats(spark: SparkSession, champions_dir: str,
+                     dest: str) -> None:
+    """term_stats (df, cf per (field, term), bucket-partitioned) from the
+    champion sidecar: it has exactly one row per (field, term, shard)
+    carrying the group's n_total (= its df) and cf, so df = Σ n_total and
+    cf = Σ cf over shards — ONE agg over a small table instead of a scan
+    of every posting. The batch build and compaction both write it here."""
+    (spark.read.parquet(champions_dir)
+     .groupBy("field", "term")
+     .agg(F.sum("n_total").cast("long").alias("df"),
+          F.sum("cf").cast("long").alias("cf"))
+     .withColumn("bucket", bucket_expr(F.col("field"), F.col("term")))
+     .repartition(N_BUCKETS, "bucket")
+     .sortWithinPartitions("bucket", "field", "term")
+     .write.mode("overwrite").partitionBy("bucket")
+     .parquet(dest))
+
+
+def invert_postings(tokenized: DataFrame) -> DataFrame:
+    """(field, term, doc_id, tf, dl, positions) posting rows of the
+    tokenized table — one frame per text field, unioned — the segment
+    encoder's input (build_segments); never written as a table. The
+    (doc_id, term) grouping is PER-DOCUMENT, so it needs no shuffle: one
+    vectorized mapInPandas pass per partition emits finished posting rows
+    (numpy stable-sort + boundary detection — the classic SPIMI in-memory
+    inversion).
+
+    dl is denormalized per posting: the segment blocks store it, so BM25
+    at query time never joins docmeta (Lucene/tantivy norms do the
+    same)."""
+    import numpy as np  # noqa: PLC0415
+    import pandas as pd  # noqa: PLC0415
+
+    out_schema = T.StructType([
+        T.StructField("field", T.StringType(), False),
+        T.StructField("term", T.StringType(), False),
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("tf", T.IntegerType(), False),
+        T.StructField("dl", T.IntegerType(), False),
+        # positions packed as little-endian int32 bytes: a list<int>
+        # column here costs ~10× in Arrow transfer + shuffle + parquet
+        # list assembly (measured — it dominated the whole build);
+        # the kernel's phrase path slices them per block
+        T.StructField("positions", T.BinaryType(), False),
+    ])
+    fields = list(TEXT_FIELDS)
+
+    def invert(batches):
+        for pdf in batches:
+            outs = []
+            for fld in fields:
+                # tokens stored space-joined; split() round-trips
+                # exactly (token alphabet excludes whitespace)
+                toks = [s.split() for s in pdf[f"_{fld}_tokens"]]
+                lens = np.fromiter((len(t) for t in toks),
+                                   np.int64, len(toks))
+                total = int(lens.sum())
+                if total == 0:
+                    continue
+                docs = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
+                dls = np.repeat(lens, lens).astype(np.int32)
+                terms = np.concatenate(
+                    [np.asarray(t, dtype=object) for t in toks if len(t)])
+                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+                pos = (np.arange(total, dtype=np.int64)
+                       - np.repeat(starts, lens)).astype(np.int32)
+                codes, uniq = pd.factorize(terms, sort=False)
+                # group key (doc, term-code); stable sort keeps positions
+                # ascending within each group
+                key = docs * np.int64(len(uniq)) + codes
+                order = np.argsort(key, kind="stable")
+                key_s = key[order]
+                bounds = np.flatnonzero(np.diff(key_s)) + 1
+                g_starts = np.concatenate(([0], bounds))
+                g_ends = np.concatenate((bounds, [len(key_s)]))
+                pos_sorted = np.ascontiguousarray(
+                    pos[order], dtype="<i4")
+                raw = pos_sorted.tobytes()
+                outs.append(pd.DataFrame({
+                    "field": fld,
+                    "term": uniq[codes[order][g_starts]],
+                    "doc_id": docs[order][g_starts],
+                    "tf": (g_ends - g_starts).astype(np.int32),
+                    "dl": dls[order][g_starts],
+                    "positions": [raw[s * 4:e * 4] for s, e in
+                                  zip(g_starts, g_ends)],
+                }))
+            if outs:
+                yield pd.concat(outs, ignore_index=True)
+
+    src = tokenized.select("doc_id",
+                           *[f"_{f}_tokens" for f in TEXT_FIELDS])
+    return src.mapInPandas(invert, out_schema)
+
+
 def _dir_bytes(path: str) -> int:
     """Total bytes of the parquet files under a directory (split sizing)."""
     try:
@@ -268,85 +365,6 @@ class IndexBuilder:
         unchanged: nullable features reproduce cantine's optional-feature
         behavior, cantine_derive/internal/src/lib.rs:217-224)."""
         return tokenized.select(*DOCMETA_COLS)
-
-    # -------------------------------------------------------------- postings
-    def _postings_df(self, tokenized: DataFrame) -> DataFrame:
-        """(field, term, doc_id, tf, dl, positions) — one frame per text
-        field, unioned. The (doc_id, term) grouping is PER-DOCUMENT, so it
-        needs no shuffle: one vectorized mapInPandas pass per partition emits
-        finished posting rows (numpy stable-sort + boundary detection — the
-        classic SPIMI in-memory inversion). Replacing the naive
-        posexplode→groupBy (which shuffled every token occurrence and paid
-        ObjectHashAggregate collect_list) cut the postings stage ~4×.
-
-        dl is denormalized per posting: BM25 at query time never joins
-        docmeta (Lucene/tantivy norms do the same; one int per posting kills
-        a doc-sized shuffle join per query)."""
-        import numpy as np  # noqa: PLC0415
-        import pandas as pd  # noqa: PLC0415
-
-        out_schema = T.StructType([
-            T.StructField("field", T.StringType(), False),
-            T.StructField("term", T.StringType(), False),
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("tf", T.IntegerType(), False),
-            T.StructField("dl", T.IntegerType(), False),
-            # positions packed as little-endian int32 bytes: a list<int>
-            # column here costs ~10× in Arrow transfer + shuffle + parquet
-            # list assembly (measured — it dominated the whole build);
-            # the phrase path unpacks lazily (analysis.unpack_positions)
-            T.StructField("positions", T.BinaryType(), False),
-        ])
-        fields = list(TEXT_FIELDS)
-
-        def invert(batches):
-            for pdf in batches:
-                outs = []
-                for fld in fields:
-                    # tokens stored space-joined; split() round-trips
-                    # exactly (token alphabet excludes whitespace)
-                    toks = [s.split() for s in pdf[f"_{fld}_tokens"]]
-                    lens = np.fromiter((len(t) for t in toks),
-                                       np.int64, len(toks))
-                    total = int(lens.sum())
-                    if total == 0:
-                        continue
-                    docs = np.repeat(pdf["doc_id"].to_numpy(np.int64), lens)
-                    dls = np.repeat(lens, lens).astype(np.int32)
-                    terms = np.concatenate(
-                        [np.asarray(t, dtype=object) for t in toks if len(t)])
-                    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                    pos = (np.arange(total, dtype=np.int64)
-                           - np.repeat(starts, lens)).astype(np.int32)
-                    codes, uniq = pd.factorize(terms, sort=False)
-                    # group key (doc, term-code); stable sort keeps positions
-                    # ascending within each group
-                    key = docs * np.int64(len(uniq)) + codes
-                    order = np.argsort(key, kind="stable")
-                    key_s = key[order]
-                    bounds = np.flatnonzero(np.diff(key_s)) + 1
-                    g_starts = np.concatenate(([0], bounds))
-                    g_ends = np.concatenate((bounds, [len(key_s)]))
-                    pos_sorted = np.ascontiguousarray(
-                        pos[order], dtype="<i4")
-                    raw = pos_sorted.tobytes()
-                    outs.append(pd.DataFrame({
-                        "field": fld,
-                        "term": uniq[codes[order][g_starts]],
-                        "doc_id": docs[order][g_starts],
-                        "tf": (g_ends - g_starts).astype(np.int32),
-                        "dl": dls[order][g_starts],
-                        "positions": [raw[s * 4:e * 4] for s, e in
-                                      zip(g_starts, g_ends)],
-                    }))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        src = tokenized.select("doc_id",
-                               *[f"_{f}_tokens" for f in TEXT_FIELDS])
-        return (src.mapInPandas(invert, out_schema)
-                .withColumn("bucket",
-                            bucket_expr(F.col("field"), F.col("term"))))
 
     # ----------------------------------------------------------------- build
     def build(self, corpus_with_ids: DataFrame, force: bool = False) -> dict:
@@ -424,12 +442,11 @@ class IndexBuilder:
                     str(max(64 << 10, split // 8)))
         tokenized = rd.read.parquet(tok_path)
 
-        # docs / docmeta / postings all depend ONLY on tokenized —
+        # docs / docmeta / segments all depend ONLY on tokenized —
         # run them on concurrent driver threads (guide §2.6): the scheduler
         # back-fills one job's task tail with the next job's tasks.
         docs_path = os.path.join(self.index_dir, "docs")
         dm_path = os.path.join(self.index_dir, "docmeta")
-        post_path = os.path.join(self.index_dir, "postings")
 
         def stage_docs():
             run_stage("docs", docs_path, lambda: (
@@ -444,27 +461,6 @@ class IndexBuilder:
                 .sortWithinPartitions("doc_id")
                 .write.mode("overwrite").parquet(dm_path)),
                 {"rows": n_docs})
-
-        def stage_postings():
-            # One shuffle partition per (bucket, salt): each task owns a
-            # slice of exactly one bucket → bucket_dir file count =
-            # WRITE_SALT, not n_tasks × n_buckets (a 64×64 = 4096-file
-            # layout caused measurable kernel-time storms on write AND
-            # on every downstream read). Salt spreads hot buckets over
-            # WRITE_SALT writer tasks. The sort MUST lead with the
-            # partition column: otherwise the dynamic-partition writer
-            # injects its own (unstable) sort by bucket, destroying term
-            # order and re-sorting in parallel (measured 4× slower).
-            # rows metric is patched post-hoc from Σdf (a count() here
-            # would re-read the whole table).
-            run_stage("postings", post_path, lambda: (
-                self._postings_df(tokenized)
-                .repartition(self.n_buckets * WRITE_SALT, "bucket",
-                             F.pmod(F.col("doc_id"), F.lit(WRITE_SALT)))
-                .sortWithinPartitions("bucket", "field", "term", "doc_id")
-                .write.mode("overwrite").partitionBy("bucket")
-                .parquet(post_path)),
-                {"rows": None})
 
         # uuid_map: the analog of the reference's in-memory uuid → id HashMap
         # (cantine/src/database/readerwriter.rs:30-55). docs/ is doc_id-
@@ -518,83 +514,43 @@ class IndexBuilder:
                 write_index_stats(is_path, rows)
             run_stage("index_stats", is_path, agg_and_write)
 
-        # segments: the compressed block-max format — the engine's DEFAULT
-        # query path (the row-per-posting postings/ table remains the
-        # build intermediate + relational-fallback source). Needs avgdl
-        # (index_stats) + posting ROWS — not the written postings/ table:
-        # when the postings stage runs in this same call, segments consumes
-        # the SAME invert lineage the postings write shuffles
-        # (build_segments(postings_df=...), bit-identical by construction —
-        # see its docstring), so the 512-task salted write leaves the
-        # critical path entirely and proceeds on a sibling thread while
-        # index_stats → segments → term_stats run. Only a resumed build
-        # whose postings stage is already on disk reads the parquet back
-        # (cheaper than re-inverting). (docs → uuid_map) ∥ docmeta ∥
-        # postings-write all overlap the segments chain; uuid_map reads
-        # docs/, so the two run as ONE sequential pool task.
+        # segments: the compressed block-max format, the one index every
+        # query runs on (the reference's searcher IS its segment reader,
+        # cantine/src/index.rs:69-129). Needs avgdl (index_stats) + the
+        # posting ROWS, which the invert lineage streams straight into the
+        # encode shuffle — no posting table is written. (docs → uuid_map)
+        # ∥ docmeta overlap the index_stats → segments → term_stats chain;
+        # uuid_map reads docs/, so the two run as ONE sequential pool task.
         from cantine_spark.build.segments import build_segments
         seg_path = os.path.join(self.index_dir, "segments")
         ts_path = os.path.join(self.index_dir, "term_stats")
-        postings_prebuilt = (not force) and _stage_done(post_path, fingerprint)
-        with ThreadPoolExecutor(max_workers=3) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             docs_uuid_future = pool.submit(
                 lambda: (stage_docs(), stage_uuid_map()))
             docmeta_future = pool.submit(stage_docmeta)
-            futures = [docs_uuid_future, docmeta_future,
-                       pool.submit(stage_postings)]
+            futures = [docs_uuid_future, docmeta_future]
             try:
                 docmeta_future.result()
                 stage_index_stats()
-                seg_src = (None if postings_prebuilt
-                           else self._postings_df(tokenized))
                 run_stage("segments", seg_path,
-                          lambda: build_segments(spark, self.index_dir,
-                                                 n_docs=n_docs,
-                                                 postings_df=seg_src))
-                # term_stats: df/cf per (field, term, bucket) — ONE agg
-                # over the small champion sidecar (exactly one row per
-                # (field, term, shard) carrying the group's full df/cf),
-                # replacing the old full postings re-scan. Same layout,
-                # same values.
-                run_stage("term_stats", ts_path, lambda: (
-                    spark.read.parquet(
-                        os.path.join(self.index_dir, "champions"))
-                    .groupBy("field", "term")
-                    .agg(F.sum("n_total").cast("long").alias("df"),
-                         F.sum("cf").cast("long").alias("cf"))
-                    .withColumn("bucket",
-                                bucket_expr(F.col("field"), F.col("term")))
-                    .repartition(self.n_buckets, "bucket")
-                    .sortWithinPartitions("bucket", "field", "term")
-                    .write.mode("overwrite").partitionBy("bucket")
-                    .parquet(ts_path)))
+                          lambda: build_segments(
+                              spark, self.index_dir, n_docs=n_docs,
+                              postings_df=invert_postings(tokenized)))
+                run_stage("term_stats", ts_path, lambda: write_term_stats(
+                    spark, os.path.join(self.index_dir, "champions"),
+                    ts_path))
                 for f in futures:
                     f.result()
             except BaseException as exc:
                 _log_sibling_failures(futures, exc)
                 raise
 
-        # per-partition metrics: rows per bucket (skew visibility) — derived
-        # from term_stats (Σdf per bucket, a 64-group agg over the small
-        # stats table) instead of re-scanning the whole postings table
+        # per-partition metrics: postings per bucket (skew visibility) —
+        # Σdf per bucket, a 64-group agg over the small term_stats table
         ts = spark.read.parquet(ts_path)
         bucket_rows = {int(r["bucket"]): int(r["cnt"]) for r in
                        ts.groupBy("bucket").agg(F.sum("df").alias("cnt"))
                        .collect()}
-        if "postings" in metrics:
-            metrics["postings"]["rows"] = sum(bucket_rows.values())
-        # patch the persisted postings stage marker with the Σdf-derived row
-        # count (the marker is written before the count exists; without this
-        # a resumed build that skips the stage never records it — ADVICE r2)
-        try:
-            pm = fsutil.read_json(_stage_marker(post_path))
-        except Exception:  # noqa: BLE001
-            pm = None
-        if pm is not None and pm.get("fingerprint") == fingerprint:
-            pmm = pm.get("metrics") or {}
-            if pmm.get("rows") is None:
-                pmm["rows"] = sum(bucket_rows.values())
-                _mark_stage(post_path, fingerprint, pmm)
         manifest = {
             "version": 1,
             "fingerprint": fingerprint,

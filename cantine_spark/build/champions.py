@@ -70,10 +70,9 @@ CHAMPIONS_SCHEMA = T.StructType([
     T.StructField("dls", T.BinaryType(), False),
     T.StructField("tail_tfnorm", T.DoubleType(), False),
     T.StructField("avgdl_build", T.DoubleType(), False),
-    # r7: collection frequency of the group (Σtf over ALL its postings, not
-    # just the champion heads) — lets term_stats derive from this small
-    # table (df = Σ n_total, cf = Σ cf over shards) instead of re-scanning
-    # the full postings table at build time
+    # collection frequency of the group (Σtf over ALL its postings, not
+    # just the champion heads) — term_stats derives from this small table
+    # (df = Σ n_total, cf = Σ cf over shards, builder.write_term_stats)
     T.StructField("cf", T.LongType(), False),
 ])
 

@@ -60,7 +60,7 @@ _POSTING_SCHEMA = T.StructType([
 ])
 
 
-def _decode_block_full(row):
+def decode_block(row):
     """One block row → (docs, tfs, dls, per-posting position blobs)."""
     docs = np.cumsum(decode_varint(row.doc_deltas), dtype=np.uint64).astype(np.int64)
     tfs = decode_varint(row.tfs).astype(np.int64)
@@ -113,7 +113,7 @@ def merge_segments(spark: SparkSession, segment_paths: list[str],
             field, term, shard = key
             docs, tfs, dls, pos = [], [], [], []
             for row in pdf.itertuples():
-                d, t_, l_, p_ = _decode_block_full(row)
+                d, t_, l_, p_ = decode_block(row)
                 docs.append(d); tfs.append(t_); dls.append(l_); pos.extend(p_)
             docs = np.concatenate(docs)
             tfs = np.concatenate(tfs)
@@ -167,7 +167,7 @@ def _decode_to_postings(batches):
     for pdf in batches:
         outs = []
         for row in pdf.itertuples():
-            d, t_, l_, p_ = _decode_block_full(row)
+            d, t_, l_, p_ = decode_block(row)
             outs.append(pd.DataFrame({
                 "field": row.field, "term": row.term,
                 "doc_id": d,

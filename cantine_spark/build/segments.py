@@ -147,7 +147,7 @@ def _encode_sorted(pdf: pd.DataFrame, avgdl: dict) -> pd.DataFrame:
     pbuf = b"".join(pdf["positions"].tolist())
     if len(pbuf) != 4 * int(tfs.sum()):
         # every posting blob must be exactly 4·tf bytes (<i4 per occurrence);
-        # a malformed postings table must fail AT BUILD TIME — a silent
+        # malformed posting rows must fail AT BUILD TIME — a silent
         # misalignment here would corrupt phrase results only at query time
         raise ValueError(
             f"positions blob misaligned: {len(pbuf)} bytes != "
@@ -330,15 +330,15 @@ def write_fastfields(spark: SparkSession, index_dir: str,
     missing" #1). At ~9 numeric features × 8 B this is ~72 B/doc of extra
     index footprint, written once per (re)encode.
 
-    Must be (re)written whenever segments are re-encoded with a different
-    span — build_segments calls this, and _FF_META.json records the span so
-    readers can detect a stale sidecar; the engine then answers filtered,
-    sorted and aggregating queries on the relational path."""
-    from pyspark.sql.types import NumericType
+    It holds every docmeta row, zero-token docs included, so its doc_id
+    column is also the candidate list of match-all queries.
 
+    Must be (re)written whenever segments are re-encoded with a different
+    span or docmeta gains a column — build_segments and compaction call
+    this, and _FF_META.json records the span and the columns so that
+    index.open_segments can rewrite a stale sidecar when an index opens."""
     dm = spark.read.parquet(os.path.join(index_dir, "docmeta"))
-    num_cols = [f.name for f in dm.schema.fields
-                if f.name != "doc_id" and isinstance(f.dataType, NumericType)]
+    num_cols = fastfield_columns(dm.schema)
     out = os.path.join(index_dir, "fastfields")
     parallelism = spark.sparkContext.defaultParallelism
     (dm.select("doc_id", *num_cols)
@@ -349,6 +349,14 @@ def write_fastfields(spark: SparkSession, index_dir: str,
     meta = {"shard_span": shard_span, "columns": num_cols}
     fsutil.write_json(fsutil.join(out, "_FF_META.json"), meta)
     return meta
+
+
+def fastfield_columns(schema) -> list[str]:
+    """The numeric docmeta columns the sidecar holds, from docmeta's Spark
+    schema."""
+    from pyspark.sql.types import NumericType
+    return [f.name for f in schema.fields
+            if f.name != "doc_id" and isinstance(f.dataType, NumericType)]
 
 
 def load_fastfields_meta(index_dir: str) -> dict | None:
@@ -363,11 +371,18 @@ def load_fastfields_meta(index_dir: str) -> dict | None:
 ENC_SALT = 8  # hot (field, term) spread per shard for the encode shuffle
 
 
+def default_span(n_docs: int, parallelism: int) -> int:
+    """Docs per shard when none is pinned: four shards per task slot, so
+    growing the cluster shrinks each kernel's working set, and at least
+    eight blocks per shard. The batch build and compaction share it."""
+    return max(BLOCK_SIZE * 8, n_docs // (parallelism * 4) + 1)
+
+
 def build_segments(spark: SparkSession, index_dir: str,
                    shard_span: int | None = None,
                    n_docs: int | None = None,
                    postings_df=None) -> dict:
-    """Encode the postings table into the compressed segments table, the
+    """Encode the index's postings into the compressed segments table, the
     champion sidecar and the fast-field sidecar.
 
     r7 shape (guide §2.4/§2.6 — one shuffle, overlapped sidecars): the
@@ -382,27 +397,29 @@ def build_segments(spark: SparkSession, index_dir: str,
     unpersisted. The fast-field sidecar (independent: docmeta only) runs
     concurrently on a second driver thread and back-fills task slots.
 
-    `postings_df` (optional) feeds the encode shuffle from an in-flight
-    posting lineage instead of the written postings/ parquet — the builder
-    passes its invert lineage so the salted postings WRITE leaves the
-    critical path (it proceeds on a sibling thread). Output is
-    bit-identical either way: the shuffle's partition assignment is a pure
-    hash of (shard, xxhash64(field, term) % ENC_SALT), and the encoder
-    sorts each partition on the unique (shard, field, term, doc_id) key,
-    so input partitioning cannot change a single byte."""
+    `postings_df` is the posting-row lineage to encode (the builder passes
+    its invert of the tokenized table); None re-inverts the index's
+    `tokenized/` table, so a re-encode with another span needs no stored
+    postings. Output is bit-identical either way: the shuffle's partition
+    assignment is a pure hash of (shard, xxhash64(field, term) % ENC_SALT),
+    and the encoder sorts each partition on the unique (shard, field,
+    term, doc_id) key, so input partitioning cannot change a single
+    byte."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import StorageLevel
 
     from cantine_spark.build.champions import champion_cap
 
-    postings = (postings_df if postings_df is not None else
-                spark.read.parquet(os.path.join(index_dir, "postings")))
+    from cantine_spark.build.builder import invert_postings
+
+    postings = (postings_df if postings_df is not None else invert_postings(
+        spark.read.parquet(os.path.join(index_dir, "tokenized"))))
     if n_docs is None:
         n_docs = fsutil.read_json(
             fsutil.join(index_dir, "manifest.json"))["n_docs"]
     parallelism = spark.sparkContext.defaultParallelism
-    span = shard_span or max(BLOCK_SIZE * 8, n_docs // (parallelism * 4) + 1)
+    span = shard_span or default_span(n_docs, parallelism)
     cap = champion_cap(span)
 
     stats_rows = spark.read.parquet(

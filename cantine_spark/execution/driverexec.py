@@ -113,8 +113,7 @@ DRIVER_PERMITS = 2
 
 # process-wide count of driver-side reads that failed and fell back to a
 # Spark job: the driver tier and the champion read (→ cluster kernel), the
-# df lookup, hydration, the uuid resolve and explain's postings read (→
-# Spark scan). Every fallback gives a correct but slower answer, so without
+# df lookup, hydration and the uuid resolve (→ Spark scan). Every fallback gives a correct but slower answer, so without
 # the count it would be invisible (ADVICE r6); bench and tests read it.
 DRIVER_TIER_FALLBACKS = 0
 _FALLBACK_LOCK = threading.Lock()
@@ -286,7 +285,8 @@ class _TableDir:
         wanted = _key_strings(terms, self.key_cols)
         parts = None if parts is None else set(parts)
         tables = []
-        for i in range(len(self.paths)):
+        # no keys (a match-all query's segment read): no file keys to load
+        for i in range(len(self.paths) if len(wanted) else 0):
             if (parts is not None and self.part_col is not None
                     and self.part_vals[i] not in parts):
                 continue

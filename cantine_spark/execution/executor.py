@@ -1,26 +1,8 @@
-"""Query executor — lowers the logical query tree to DataFrame algebra.
-
-The reference executes queries as per-segment posting-list iteration with a
-bounded heap (tique/src/conditional_collector/top_collector.rs:168-195);
-Spark's equivalents (SURVEY §2.3, §2.5):
-
-  TermQuery        → partition-pruned postings scan (bucket dir + row-group
-                     min/max on the sorted term column) + BM25 column math
-  PhraseQuery      → per-term postings joined on doc_id + vectorized
-                     position-adjacency check (JVM array functions, no UDF)
-  Must (J1)        → multi-way inner join on doc_id, scores summed
-  Should (J2)      → unionByName → groupBy(doc_id).sum
-  MustNot (J4)     → left_anti join
-  DisMax (J3/C2)   → groupBy(doc_id).agg(max + (sum-max)*tiebreaker)
-  top-k (T1/T2)    → orderBy(score desc, doc_id asc).limit(k)
-                     = TakeOrderedAndProject: per-partition heap + driver
-                     merge, exactly the reference's collector shape (T7)
-  pagination (T5)  → cursor predicate applied BEFORE top-k
-                     (tique conditional_collector/mod.rs:69-98)
-  hydration (J5)   → broadcast semi-join of the ≤255 winner ids into docs
-
-Every frame this module produces has exactly one row per doc_id; `score`
-is float32 (tantivy's Score type — see execution/scoring.py).
+"""Query-side table lookups around the segment kernel: term document
+frequencies (the analog of tantivy's term dictionary) and winner hydration
+from the doc store (J5). Both are point reads on the driver with a pruned
+Spark scan as the counted fallback; query evaluation itself is the segment
+kernel's (execution/wand.py).
 """
 
 from __future__ import annotations
@@ -28,29 +10,11 @@ from __future__ import annotations
 import functools
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cantine_spark.execution import driverexec, scoring
+from cantine_spark.execution import driverexec
 from cantine_spark.index import IndexReader
-from cantine_spark.plans.nodes import (
-    All, Boolean, Boost, DisMax, Phrase, QueryNode, Term, simplify,
-)
-
-
-def _collect_terms(node: QueryNode, out: set[tuple[str, str]]) -> None:
-    if isinstance(node, Term):
-        out.add((node.field, node.text))
-    elif isinstance(node, Phrase):
-        out.update((node.field, t) for t in node.terms)
-    elif isinstance(node, Boost):
-        _collect_terms(node.child, out)
-    elif isinstance(node, DisMax):
-        for c in node.children:
-            _collect_terms(c, out)
-    elif isinstance(node, Boolean):
-        for c in (*node.musts, *node.shoulds, *node.must_nots):
-            _collect_terms(c, out)
 
 
 @dataclass
@@ -148,171 +112,10 @@ class SearchExecutor:
         from cantine_spark.functions.xxhash import bucket_of
         return bucket_of(field, term, N_BUCKETS)
 
-    # --------------------------------------------------------- postings scan
-    def _postings_for(self, field: str, term: str) -> DataFrame:
-        b = self._bucket(field, term)
-        return self.reader.postings.filter(
-            (F.col("bucket") == b) & (F.col("field") == field)
-            & (F.col("term") == term))
-
-    # ----------------------------------------------------------- node → frame
-    def frame(self, node: QueryNode,
-              dfs: dict[tuple[str, str], int]) -> DataFrame | None:
-        """Lower a node to a (doc_id, score:double) frame, one row per doc.
-        Returns None for zero-match nodes (unknown terms) — the executor's
-        analog of the parser's empty-analysis pruning (O3)."""
-        stats = self.reader.stats
-        if isinstance(node, All):
-            return self.reader.docmeta.select(
-                "doc_id", F.lit(0.0).alias("score"))
-        if isinstance(node, Term):
-            df_t = dfs.get((node.field, node.text), 0)
-            if df_t == 0:
-                return None
-            st = stats[node.field]
-            p = self._postings_for(node.field, node.text)
-            return p.select(
-                "doc_id",
-                scoring.bm25_score(F.col("tf"), F.col("dl"), df_t,
-                                   st["n_docs"], st["avgdl"]).alias("score"))
-        if isinstance(node, Phrase):
-            return self._phrase_frame(node, dfs)
-        if isinstance(node, Boost):
-            child = self.frame(node.child, dfs)
-            if child is None:
-                return None
-            return child.withColumn("score", F.col("score") * F.lit(node.factor))
-        if isinstance(node, DisMax):
-            kids = [self.frame(c, dfs) for c in node.children]
-            kids = [k for k in kids if k is not None]
-            if not kids:
-                return None
-            if len(kids) == 1:
-                return kids[0]
-            u = functools.reduce(lambda a, b: a.unionByName(b), kids)
-            return (u.groupBy("doc_id")
-                     .agg(F.max("score").alias("_mx"), F.sum("score").alias("_sm"))
-                     .select("doc_id",
-                             (F.col("_mx") + (F.col("_sm") - F.col("_mx"))
-                              * F.lit(node.tiebreaker)).alias("score")))
-        if isinstance(node, Boolean):
-            return self._boolean_frame(node, dfs)
-        raise TypeError(f"unknown node {node!r}")
-
-    def _phrase_frame(self, node: Phrase,
-                      dfs: dict[tuple[str, str], int]) -> DataFrame | None:
-        """Phrase match via positional postings (F2). A doc matches if some
-        start position p has term_i at p+i for all i. The adjacency check is
-        pure JVM array algebra (F.filter + array_contains) — vectorizable,
-        no Python. tf = number of phrase occurrences; idf = Σ idf(term_i)
-        (tantivy Bm25Weight::for_terms sums constituent idfs)."""
-        st = self.reader.stats[node.field]
-        if any(dfs.get((node.field, t), 0) == 0 for t in node.terms):
-            return None
-        from cantine_spark.analysis import unpack_positions
-        base = self._postings_for(node.field, node.terms[0]).select(
-            "doc_id", "dl", unpack_positions("positions").alias("p0"))
-        for i, t in enumerate(node.terms[1:], start=1):
-            nxt = self._postings_for(node.field, t).select(
-                "doc_id", unpack_positions("positions").alias(f"p{i}"))
-            base = base.join(nxt, "doc_id")
-        n_terms = len(node.terms)
-
-        def _is_start(x):  # single 1-arg lambda (2-arg form means (elem, idx))
-            cond = F.lit(True)
-            for i in range(1, n_terms):
-                cond = cond & F.array_contains(F.col(f"p{i}"), x + i)
-            return cond
-
-        starts = F.filter(F.col("p0"), _is_start)
-        idf_sum = sum(scoring.idf(dfs[(node.field, t)], st["n_docs"])
-                      for t in node.terms)
-        matched = base.withColumn("_ptf", F.size(starts)).filter(F.col("_ptf") > 0)
-        return matched.select(
-            "doc_id",
-            (F.lit(idf_sum) * scoring.bm25_tf_norm(
-                F.col("_ptf"), F.col("dl"), st["avgdl"])).alias("score"))
-
-    def _boolean_frame(self, node: Boolean,
-                       dfs: dict[tuple[str, str], int]) -> DataFrame | None:
-        real_musts = [m for m in node.musts if not isinstance(m, All)]
-        has_all = any(isinstance(m, All) for m in node.musts)
-        must_frames = []
-        for m in real_musts:
-            f = self.frame(m, dfs)
-            if f is None:
-                return None  # a required clause matches nothing → no results
-            must_frames.append(f)
-
-        base: DataFrame | None = None
-        if must_frames:
-            base = must_frames[0]
-            for i, f in enumerate(must_frames[1:], start=1):
-                f = f.withColumnRenamed("score", f"_s{i}")
-                base = base.join(f, "doc_id")
-                base = base.select(
-                    "doc_id", (F.col("score") + F.col(f"_s{i}")).alias("score"))
-        elif has_all:
-            base = self.reader.docmeta.select("doc_id", F.lit(0.0).alias("score"))
-
-        should_frames = [self.frame(s, dfs) for s in node.shoulds]
-        should_frames = [f for f in should_frames if f is not None]
-        if should_frames:
-            u = functools.reduce(lambda a, b: a.unionByName(b), should_frames)
-            grouped = u.groupBy("doc_id").agg(F.sum("score").alias("_ss"))
-            if base is not None:
-                # shoulds only add score when musts exist (tantivy boolean)
-                base = (base.join(grouped, "doc_id", "left")
-                        .select("doc_id", (F.col("score")
-                                           + F.coalesce(F.col("_ss"), F.lit(0.0))
-                                           ).alias("score")))
-            else:
-                base = grouped.select("doc_id", F.col("_ss").alias("score"))
-        if base is None:
-            return None
-
-        mn_frames = [self.frame(m, dfs) for m in node.must_nots]
-        mn_frames = [f for f in mn_frames if f is not None]
-        if mn_frames:
-            u = functools.reduce(
-                lambda a, b: a.unionByName(b),
-                [f.select("doc_id") for f in mn_frames])
-            base = base.join(u.distinct(), "doc_id", "left_anti")
-        return base
-
-    # --------------------------------------------------------------- matches
-    def matches(self, node: QueryNode) -> DataFrame | None:
-        """(doc_id, score:float) for every matching doc — score cast to f32
-        here, once, at the boundary (see scoring.py rationale)."""
-        node = simplify(node)
-        terms: set[tuple[str, str]] = set()
-        _collect_terms(node, terms)
-        dfs = self.term_dfs(terms)
-        f = self.frame(node, dfs)
-        if f is None:
-            return None
-        return f.select("doc_id", F.col("score").cast("float").alias("score"))
-
-    # ----------------------------------------------------------------- top-k
-    @staticmethod
-    def top_k(matched: DataFrame, k: int, sort_col: str = "score",
-              ascending: bool = False) -> DataFrame:
-        """TakeOrderedAndProject — per-partition bounded heap + driver merge,
-        the exact shape of tique's TopCollector (top_collector.rs:168-195).
-        Tie-break: lowest doc_id first in BOTH directions
-        (tique/src/conditional_collector/topk.rs:191-203, 55-86)."""
-        order = (F.col(sort_col).asc() if ascending else F.col(sort_col).desc())
-        return matched.orderBy(order, F.col("doc_id").asc()).limit(k)
-
     # -------------------------------------------------------------- hydration
-    def hydrate(self, topk: DataFrame, columns: list[str] | None = None) -> DataFrame:
-        """J5: winners (≤255 rows) broadcast-joined into the doc store."""
-        cols = columns or ["doc_id", "uuid", "repo", "path", "lang"]
-        return F.broadcast(topk).join(self.reader.docs.select(*cols), "doc_id")
-
     def hydrate_ids(self, ids: list[int],
                     columns: list[str] | None = None) -> dict[int, dict]:
-        """J5 when the winner ids are already on the driver (segment path):
+        """J5 with the winner ids already on the driver (kernel output):
         a point lookup of ≤255 ids in the doc store — docs/ is range-
         partitioned + sorted by doc_id, so parquet min/max stats prune to
         the few row groups holding the winners (the analog of the

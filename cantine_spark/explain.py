@@ -8,11 +8,11 @@ per-term idf / tf / dl / tfnorm, and how the tree combined them.
 
 `explain_hits` reconstructs the exact f64 scoring arithmetic for the ≤255
 returned winners, driver-side: the (tf, dl, positions) of each query term
-for just those docs are point-read from the bucket-pruned postings table
-with pyarrow (the same point-read family as winner hydration — no Spark
-job), falling back to a pruned Spark scan. The tree evaluation reuses
-scoring.py's idf/tfnorm expressions and the kernel's combiners, so the
-root `value` cast to f32 EQUALS the hit's reported score bit-for-bit
+for just those docs come from the segment blocks holding them, point-read
+with driverexec.read_rows (the kernel's own reader, restricted to the
+winners' shards — no Spark job) and decoded per block. The tree evaluation
+reuses scoring.py's idf/tfnorm expressions and the kernel's combiners, so
+the root `value` cast to f32 EQUALS the hit's reported score bit-for-bit
 (pinned in tests/test_explain.py).
 
 Explanation node shape (JSON-ready):
@@ -57,52 +57,25 @@ def _collect_fts(node: QueryNode, out: set) -> None:
             _collect_fts(c, out)
 
 
-def _postings_driver(reader, fts: set, ids: list[int]) -> dict:
+def _winner_postings(reader, fts: set, ids: list[int]) -> dict:
     """{(field, term): {doc_id: (tf, dl, positions_int32)}} for the winner
-    ids — pyarrow point reads of the bucket=K postings dirs (one dir per
-    tier for tiered readers; a doc lives in exactly one tier)."""
-    import pyarrow.dataset as pads
+    ids, decoded from the segment blocks of the terms in the winners'
+    shards (a doc lives in one block per term; tiers hold disjoint docs)."""
+    from cantine_spark.build.merge import decode_block
 
-    from cantine_spark import fsutil
-    from cantine_spark.build.builder import N_BUCKETS
-    from cantine_spark.functions.xxhash import bucket_of
-
-    roots = reader.postings_dirs()
-    for d in roots:
-        if not fsutil.is_dir(d):
-            raise FileNotFoundError(d)
-    want = sorted({int(i) for i in ids})
+    span = int(reader.segments_meta()["shard_span"])
+    want = np.array(sorted({int(i) for i in ids}), dtype=np.int64)
+    rows = driverexec.read_rows(
+        reader.segment_point_spec(), fts,
+        driverexec.SEG_COLUMNS + ("positions",),
+        shards={int(d) // span for d in want})
     out: dict = {ft: {} for ft in fts}
-    for f_, t_ in fts:
-        b = bucket_of(f_, t_, N_BUCKETS)
-        expr = ((pads.field("field") == f_) & (pads.field("term") == t_)
-                & pads.field("doc_id").isin(want))
-        for d in roots:
-            files = fsutil.list_parquet(fsutil.join(d, f"bucket={b}"))
-            if not files:
-                continue
-            tbl = pads.dataset([p for _, p in files], format="parquet",
-                               filesystem=files[0][0]).to_table(
-                columns=["doc_id", "tf", "dl", "positions"], filter=expr)
-            for r in tbl.to_pylist():
-                out[(f_, t_)][int(r["doc_id"])] = (
-                    int(r["tf"]), int(r["dl"]),
-                    np.frombuffer(r["positions"] or b"", dtype="<i4"))
-    return out
-
-
-def _postings_spark(executor, fts: set, ids: list[int]) -> dict:
-    from pyspark.sql import functions as F
-    want = [int(i) for i in ids]
-    out: dict = {ft: {} for ft in fts}
-    for f_, t_ in fts:
-        rows = (executor._postings_for(f_, t_)
-                .filter(F.col("doc_id").isin(want))
-                .select("doc_id", "tf", "dl", "positions").collect())
-        for r in rows:
-            out[(f_, t_)][int(r["doc_id"])] = (
-                int(r["tf"]), int(r["dl"]),
-                np.frombuffer(r["positions"] or b"", dtype="<i4"))
+    for row in rows.itertuples(index=False):
+        docs, tfs, dls, pos = decode_block(row)
+        hit = np.flatnonzero(np.isin(docs, want))
+        for j in hit:
+            out[(row.field, row.term)][int(docs[j])] = (
+                int(tfs[j]), int(dls[j]), np.frombuffer(pos[j], dtype="<i4"))
     return out
 
 
@@ -157,7 +130,7 @@ def _explain_node(node: QueryNode, doc_id: int, post: dict,
                 "children": kids, "value": mx + (sm - mx) * node.tiebreaker}
     if isinstance(node, Boolean):
         musts = [_explain_node(m, doc_id, post, idfs, stats)
-                 for m in node.musts if not isinstance(m, All)]
+                 for m in node.musts]
         shoulds = [_explain_node(s, doc_id, post, idfs, stats)
                    for s in node.shoulds]
         return {"type": "boolean", "musts": musts, "shoulds": shoulds,
@@ -169,8 +142,7 @@ def explain_hits(reader, executor, node: QueryNode,
                  doc_ids: list[int]) -> dict[int, dict]:
     """doc_id → explanation tree for the given (already-returned) hits.
     The root `value` is the hit's f64 relevance score; f32(value) equals
-    the reported score exactly (same arithmetic as the kernel and the
-    relational executor)."""
+    the reported score exactly (same arithmetic as the kernel)."""
     if not doc_ids:
         return {}
     fts: set = set()
@@ -179,13 +151,6 @@ def explain_hits(reader, executor, node: QueryNode,
     stats = reader.stats
     idfs = {ft: idf_fn(dfs[ft], stats[ft[0]]["n_docs"])
             for ft in fts if dfs.get(ft, 0) > 0}
-    if fts:
-        try:
-            post = _postings_driver(reader, fts, doc_ids)
-        except Exception:  # noqa: BLE001 — any driver-read issue → Spark
-            driverexec.note_fallback("explain postings read")
-            post = _postings_spark(executor, fts, doc_ids)
-    else:
-        post = {}
+    post = _winner_postings(reader, fts, doc_ids) if fts else {}
     return {int(d): _explain_node(node, int(d), post, idfs, stats)
             for d in doc_ids}

@@ -1,7 +1,12 @@
 """Index open / schema validation — analog of cantine's index open path
 (cantine/src/main.rs:218-219, RecipeIndex::try_from(&Schema) at
 cantine/src/index.rs:205-226): open the tables, assert the expected fields
-exist, expose cached collection statistics."""
+exist, expose cached collection statistics.
+
+Opening a reader checks that the index has a v2 segments table — the one
+index format every query runs on — and that its fast-field sidecar covers
+docmeta at the segments' shard span, rewriting a stale sidecar
+(open_segments)."""
 
 from __future__ import annotations
 
@@ -12,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cantine_spark import fsutil
+from cantine_spark.build.builder import N_BUCKETS
 
 REQUIRED = {
     "docs": {"doc_id", "uuid", "repo", "path", "commit", "lang",
@@ -19,7 +25,6 @@ REQUIRED = {
     "docmeta": {"doc_id", "doc_len_content", "doc_len_path", "num_lines",
                 "num_tokens", "content_bytes", "num_functions", "num_imports",
                 "comment_ratio", "avg_line_len", "max_line_len"},
-    "postings": {"field", "term", "bucket", "doc_id", "tf", "dl", "positions"},
     "term_stats": {"field", "term", "bucket", "df", "cf"},
     "index_stats": {"field", "n_docs", "total_len", "avgdl"},
     "uuid_map": {"uuid", "doc_id", "ubucket"},
@@ -35,10 +40,52 @@ class SchemaMismatch(Exception):
     pass
 
 
+def open_segments(spark: SparkSession, index_dir: str, docmeta_schema) -> int:
+    """The shard span of a servable index dir. Raises SchemaMismatch when
+    the dir has no v2 segments table. Rewrites the fast-field sidecar with
+    the build's own writer (write_fastfields) when it is absent, was
+    written at another span, or lacks a numeric column of docmeta (Spark
+    schema `docmeta_schema`; a column added after the build): the sidecar
+    is where the kernel reads every filter, sort and agg value and the
+    candidates of match-all queries."""
+    from cantine_spark.build.segments import (
+        fastfield_columns, load_fastfields_meta, write_fastfields,
+    )
+    try:
+        meta = fsutil.read_json(
+            fsutil.join(index_dir, "segments", "_SEGMENTS_META.json"))
+    except Exception as e:  # noqa: BLE001 — absent on any filesystem
+        raise SchemaMismatch(
+            f"{index_dir} has no segments table; rebuild the index "
+            "(build_index)") from e
+    if meta.get("format", 1) < 2:
+        raise SchemaMismatch(
+            f"{index_dir} has a format-{meta.get('format', 1)} segments "
+            "table without positions; rebuild the index (build_index)")
+    span = int(meta["shard_span"])
+    ff = load_fastfields_meta(index_dir)
+    cols = fastfield_columns(docmeta_schema)
+    if (ff is None or int(ff["shard_span"]) != span
+            or not set(cols) <= set(ff["columns"])):
+        try:
+            write_fastfields(spark, index_dir, span)
+        except Exception as e:  # noqa: BLE001 — read-only store, etc.
+            raise SchemaMismatch(
+                f"the fast-field sidecar of {index_dir} is stale and cannot "
+                f"be rewritten: {e}") from e
+    return span
+
+
 @dataclass
 class IndexReader:
     spark: SparkSession
     index_dir: str
+
+    def __post_init__(self):
+        self._open()
+
+    def _open(self) -> None:
+        open_segments(self.spark, self.index_dir, self.docmeta.schema)
 
     def table(self, name: str) -> DataFrame:
         df = self.spark.read.parquet(fsutil.join(self.index_dir, name))
@@ -57,12 +104,6 @@ class IndexReader:
         readerwriter.rs:61-66) reads these directly with pyarrow."""
         return [fsutil.join(self.index_dir, "docs")]
 
-    def postings_dirs(self) -> list[str]:
-        """Locations of the bucket-partitioned postings table — the
-        explanation surface (explain.py) point-reads the query terms'
-        bucket=K subdirs for the ≤255 returned winners."""
-        return [fsutil.join(self.index_dir, "postings")]
-
     def term_stats_dirs(self) -> list[str]:
         """Locations of the bucket-partitioned term dictionary — the
         executor's driver-side df lookup (tantivy's in-memory term dict /
@@ -74,10 +115,6 @@ class IndexReader:
     @cached_property
     def docmeta(self) -> DataFrame:
         return self.table("docmeta")
-
-    @cached_property
-    def postings(self) -> DataFrame:
-        return self.table("postings")
 
     @cached_property
     def term_stats(self) -> DataFrame:
@@ -119,15 +156,6 @@ class IndexReader:
                 "for O(1) cursor resolution")
         return self.table("uuid_map")
 
-    @property
-    def has_segments(self) -> bool:
-        """True when the compressed block-max segment table (format v2, with
-        in-block positions) is present — the engine's default query path."""
-        meta = fsutil.join(self.index_dir, "segments", "_SEGMENTS_META.json")
-        if not fsutil.exists(meta):
-            return False
-        return fsutil.read_json(meta).get("format", 1) >= 2
-
     # ---- segment-path providers. FastTopK consumes the index through these
     #      methods (never through raw paths), so a reader that spans
     #      MULTIPLE tier directories (tiered.TieredIndexReader — the serving
@@ -137,16 +165,14 @@ class IndexReader:
         from cantine_spark.build.segments import load_segments_meta
         return load_segments_meta(self.index_dir)
 
-    def fastfields_spec(self) -> dict | None:
+    def fastfields_spec(self) -> dict:
         """Fast-field sidecar descriptor: {shard_span, columns, locations}.
         `locations` is the sidecar dir (str) for a single-dir index, or a
         doc-range-keyed list [(doc_lo, doc_hi, dir), ...] for tiered readers
         — the kernel resolves a shard to the dir(s) covering its doc range.
-        None when the sidecar is absent (pre-sidecar index)."""
+        Opening the reader made it cover docmeta (open_segments)."""
         from cantine_spark.build.segments import load_fastfields_meta
         m = load_fastfields_meta(self.index_dir)
-        if m is None:
-            return None
         return {"shard_span": int(m["shard_span"]),
                 "columns": list(m["columns"]),
                 "locations": fsutil.join(self.index_dir, "fastfields")}
@@ -214,7 +240,7 @@ class IndexReader:
                     .select("doc_id").limit(2).collect())
         else:
             from cantine_spark.functions.xxhash import spark_xxhash64_strings
-            n_buckets = int(self.manifest.get("n_buckets", 64))
+            n_buckets = int(self.manifest.get("n_buckets", N_BUCKETS))
             b = spark_xxhash64_strings(uuid) % n_buckets
             rows = (um.filter((F.col("ubucket") == b) & (F.col("uuid") == uuid))
                     .limit(2).collect())
@@ -232,7 +258,7 @@ class IndexReader:
         from cantine_spark.execution import driverexec  # noqa: PLC0415
         from cantine_spark.functions.xxhash import spark_xxhash64_strings
 
-        n_buckets = int(self.manifest.get("n_buckets", 64))
+        n_buckets = int(self.manifest.get("n_buckets", N_BUCKETS))
         b = spark_xxhash64_strings(uuid) % n_buckets
         ids = [d for dir_ in self.uuid_map_dirs()
                for d in driverexec.read_keys(

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from cantine_spark.analysis import tokenize_text
 from cantine_spark.index import IndexReader
-from cantine_spark.plans.nodes import Boolean, Boost, QueryNode, Term
+from cantine_spark.plans.nodes import Boolean, Boost, QueryNode, Term, simplify
 
 
 def _idf(df: int, n: int) -> float:
@@ -113,14 +113,10 @@ def check_sim(reader: IndexReader, sample_doc_ids: list[int],
     plain + boosted MLT queries from its own top keywords and report the
     doc's self-rank and same-repo recall within the top `limit`."""
     from cantine_spark.execution.executor import SearchExecutor
+    from cantine_spark.execution.wand import FastTopK
     tt = TopTerms(reader)
     ex = SearchExecutor(reader)
-    # MLT queries are Boolean(shoulds=(Boost(Term)…)) — segment-eligible, so
-    # the harness runs on the engine's default path when segments exist
-    fast = None
-    if reader.has_segments:
-        from cantine_spark.execution.wand import FastTopK
-        fast = FastTopK(reader, executor=ex)
+    fast = FastTopK(reader, executor=ex)
     # Driver memory is bounded by the SAMPLE, never the corpus (VERDICT r2
     # "What's wrong" #2 — the old full docs.toPandas() OOMs at 10^12 docs):
     # same-repo recall needs only (a) each sampled doc's repo (point lookups)
@@ -143,16 +139,8 @@ def check_sim(reader: IndexReader, sample_doc_ids: list[int],
         n_same = repo_sizes.get(row["repo"], 1) - 1
         for name, q in [("plain", into_query(kws)),
                         ("boosted", into_boosted_query(kws, 1.5))]:
-            if fast is not None and kws:
-                ids = [d for d, _ in fast.search(q, k=limit).hits]
-            else:
-                m = ex.matches(q)
-                if m is None:
-                    rec[f"{name}_self_rank"] = None
-                    rec[f"{name}_recall"] = 0.0
-                    continue
-                top = ex.top_k(m, limit).collect()
-                ids = [int(r["doc_id"]) for r in top]
+            # no keywords → an empty Boolean, which simplifies to match-all
+            ids = [d for d, _ in fast.search(simplify(q), k=limit).hits]
             hit_repos = ex.hydrate_ids(ids, columns=["doc_id", "repo"])
             n_hit = sum(1 for i in ids
                         if i != doc_id

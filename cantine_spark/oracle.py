@@ -15,8 +15,9 @@ single-process implementation of the same semantics:
 - DisMax: max + (sum-max)*tiebreaker (tique/src/dismax.rs:19-35),
 - phrase: all terms adjacent in order; tf = occurrence count; idf = Σ term idf.
 
-The executor (cantine_spark/execution) shares NONE of this code path — it
-runs DataFrame algebra; agreement between the two is the correctness gate
+The segment kernel (cantine_spark/execution/wand.py) — the engine's one
+query path — shares NONE of this code: it scores compressed block-max
+segments with pruning; agreement between the two is the correctness gate
 (SURVEY §5).
 """
 

@@ -1,11 +1,12 @@
-"""Logical query tree — the IR between the parser and the DataFrame executor.
+"""Logical query tree — the IR between the parser and the segment kernel.
 
 Mirrors the tantivy query tree cantine assembles (Box<dyn Query> built at
 cantine/src/main.rs:152-172 and tique/src/queryparser/parser.rs:158-233):
 Term / Phrase / Boolean(must, should, must_not) / DisMax / Boost / All.
-The executor lowers each node to DataFrame algebra (SURVEY §2.3):
-Must → inner join, Should → union+groupBy, MustNot → left_anti,
-DisMax → max+(sum-max)*tiebreaker aggregation.
+The kernel (execution/wand.py) evaluates each node as set algebra over
+sorted doc-id arrays per shard: Must → intersect, Should → union, MustNot →
+set difference, All → the shard's every doc, DisMax →
+max+(sum-max)*tiebreaker.
 """
 
 from __future__ import annotations

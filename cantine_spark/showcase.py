@@ -83,7 +83,7 @@ def _sql_bm25_expr(tf_expr: str, df_expr: str, dl="dl") -> str:
 # ======================================================================
 # ENGINE-BACKED ENTRIES (r1 VERDICT item 6): the BM25/phrase/pagination
 # entries below build (or reuse) a REAL index over the documents table and
-# answer through SearchEngine — postings, segments, block-max kernel, uuid
+# answer through SearchEngine — segments, block-max kernel, uuid
 # cursor resolve — so the driver's oracle gate exercises the actual engine,
 # not a parallel algebra. The oracle SQL mirrors the engine's float
 # discipline explicitly: scores pass through f32 (tantivy's Score type,
@@ -163,7 +163,7 @@ def _sql_f32_select(raw_expr: str, where: str, k: int | None) -> str:
 # ======================================================================
 
 def bm25_single_term(spark, sf_dir, term="spark", k=10) -> DataFrame:
-    """F1/C1/T1/T2 through the REAL engine: postings+segments built from the
+    """F1/C1/T1/T2 through the REAL engine: segments built from the
     documents table, query answered by the block-max kernel."""
     res = _engine(spark, sf_dir).search({"fulltext": term, "num_items": k})
     return _items_df(spark, res.items)

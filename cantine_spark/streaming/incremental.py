@@ -4,10 +4,11 @@ The reference's loader commits every COMMIT_EVERY=300k docs
 (cantine/src/bin/load.rs:89-100,150) so readers see new segments as they
 land. The Spark-native equivalent: Structured Streaming over the corpus
 source with `availableNow` + foreachBatch — each micro-batch is one "commit"
-that appends a new index GENERATION (its own docs/docmeta/postings/segments
-tables under gen_NNNN/), and `compact()` merges generations into a single
+that appends a new index GENERATION (its own docs/docmeta/segments tables
+under gen_NNNN/), and `compact()` merges generations into a single
 queryable index (build/merge.py), exactly the small-segment → merged-segment
-lifecycle of the reference.
+lifecycle of the reference. Compaction merges the segments blocks
+themselves; no posting rows are rewritten or re-scanned.
 
 Generation state (generations.json) carries the doc_id watermark so ids stay
 globally unique and reruns of an already-committed epoch are idempotent
@@ -26,8 +27,12 @@ from pyspark.sql import functions as F
 
 from cantine_spark import fsutil
 
-from cantine_spark.build.builder import IndexBuilder
+from cantine_spark.build.builder import (
+    N_BUCKETS, TEXT_FIELDS, IndexBuilder, write_index_stats, write_term_stats,
+)
+from cantine_spark.build.champions import write_champions
 from cantine_spark.build.merge import merge_segments
+from cantine_spark.build.segments import default_span, write_fastfields
 from cantine_spark.corpus import CORPUS_SCHEMA, with_doc_ids
 
 
@@ -52,7 +57,7 @@ class StreamingIndexer:
     # ------------------------------------------------------------- ingest
     def commit_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """One streaming commit: assign ids past the watermark, build a full
-        generation (docs/docmeta/postings/term_stats/index_stats + segments).
+        generation (docs/docmeta/uuid_map/index_stats/segments/term_stats).
         Idempotent per epoch — redelivered batches are skipped."""
         state = self._load_state()
         if any(g["epoch"] == epoch_id for g in state["generations"]):
@@ -142,24 +147,14 @@ class StreamingIndexer:
         docs_u = spark.read.parquet(os.path.join(out, "docs"))
         (docs_u.select(
             "uuid", "doc_id",
-            F.pmod(F.xxhash64("uuid"), F.lit(64)).cast("int").alias("ubucket"))
-         .repartition(64, "ubucket").sortWithinPartitions("ubucket", "uuid")
+            F.pmod(F.xxhash64("uuid"), F.lit(N_BUCKETS)).cast("int")
+            .alias("ubucket"))
+         .repartition(N_BUCKETS, "ubucket")
+         .sortWithinPartitions("ubucket", "uuid")
          .write.mode("overwrite").partitionBy("ubucket")
          .parquet(os.path.join(out, "uuid_map")))
-        (_union("postings").repartition(64, "bucket")
-         .sortWithinPartitions("bucket", "field", "term", "doc_id")
-         .write.mode("overwrite").partitionBy("bucket")
-         .parquet(os.path.join(out, "postings")))
-
-        post = spark.read.parquet(os.path.join(out, "postings"))
-        (post.groupBy("field", "term", "bucket")
-             .agg(F.count("*").cast("long").alias("df"),
-                  F.sum("tf").cast("long").alias("cf"))
-             .write.mode("overwrite").partitionBy("bucket")
-             .parquet(os.path.join(out, "term_stats")))
 
         dm = spark.read.parquet(os.path.join(out, "docmeta"))
-        from cantine_spark.build.builder import TEXT_FIELDS, write_index_stats
         # one agg job covers every field; the TEXT_FIELDS-row result is
         # written driver-side (write_index_stats) — a refresh must not pay
         # a Python-worker spawn for a 2-row frame
@@ -175,20 +170,22 @@ class StreamingIndexer:
 
         avgdl = {r[0]: r[3] for r in rows}
         n_docs = rows[0][1]
-        span = shard_span or max(128 * 8, n_docs // (
-            spark.sparkContext.defaultParallelism * 4) + 1)
+        span = shard_span or default_span(
+            n_docs, spark.sparkContext.defaultParallelism)
         merge_segments(spark, [os.path.join(g, "segments") for g in gens],
                        os.path.join(out, "segments"), avgdl, span)
         # compacted index gets the same shard-local fast-field sidecar as a
         # fresh build (field sorts / fused aggs stay O(matches) after merge)
-        from cantine_spark.build.segments import write_fastfields
         write_fastfields(spark, out, span)
         # ... and the per-term champion sidecar (hot-term fast path); each
         # tier's champions carry ITS avgdl — the query-side tail bound
         # rescales by max(1, avgdl_global/avgdl_tier), mirroring the tiered
         # block-max rescale
-        from cantine_spark.build.champions import write_champions
         write_champions(spark, out, avgdl, span)
+        # term_stats from the merged champions (Σ n_total, Σ cf), as the
+        # batch build does
+        write_term_stats(spark, os.path.join(out, "champions"),
+                         os.path.join(out, "term_stats"))
 
         if covered is None:
             covered = self._load_state()["generations"]
@@ -202,7 +199,7 @@ class StreamingIndexer:
         manifest = {"version": 1, "n_docs": n_docs,
                     "fingerprint": f"compacted-{len(gens)}",
                     "text_fields": list(TEXT_FIELDS),
-                    "n_buckets": 64,
+                    "n_buckets": N_BUCKETS,
                     "shard_span": span,
                     "doc_id_range": doc_range,
                     "generations": covered,

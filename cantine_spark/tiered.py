@@ -43,31 +43,31 @@ from pyspark.sql import functions as F
 
 from cantine_spark import fsutil
 
+from cantine_spark.build.builder import N_BUCKETS
 from cantine_spark.build.segments import load_fastfields_meta, load_segments_meta
-from cantine_spark.index import REQUIRED, IndexReader, SchemaMismatch
+from cantine_spark.index import (
+    REQUIRED, IndexReader, SchemaMismatch, open_segments,
+)
 
 
 class TieredIndexReader(IndexReader):
     """IndexReader over an ordered list of tier directories (each a complete
-    index: docs/docmeta/uuid_map/postings/term_stats/index_stats/segments/
+    index: docs/docmeta/uuid_map/term_stats/index_stats/segments/champions/
     fastfields). Tiers must share shard_span and n_buckets and cover
     disjoint doc_id ranges, ascending in list order."""
 
     def __init__(self, spark: SparkSession, tier_dirs: list[str]):
         if not tier_dirs:
             raise ValueError("TieredIndexReader needs at least one tier")
-        super().__init__(spark=spark, index_dir=tier_dirs[0])
         self.tier_dirs = list(tier_dirs)
-        self._validate()
+        super().__init__(spark=spark, index_dir=tier_dirs[0])
 
     # ------------------------------------------------------------ validation
-    def _validate(self) -> None:
-        spans = []
-        for d in self.tier_dirs:
-            try:
-                spans.append(int(load_segments_meta(d)["shard_span"]))
-            except OSError as e:
-                raise SchemaMismatch(f"tier {d} has no segments table") from e
+    def _open(self) -> None:
+        """Every tier opens like a single index (open_segments: v2
+        segments, a covering sidecar), and the tiers agree on the span."""
+        spans = [open_segments(self.spark, d, self.docmeta.schema)
+                 for d in self.tier_dirs]
         if len(set(spans)) > 1:
             raise SchemaMismatch(
                 f"tiers must share one shard_span, got {spans} — re-encode "
@@ -80,7 +80,7 @@ class TieredIndexReader(IndexReader):
                     f"tier doc_id ranges overlap or are out of order: "
                     f"[{a_lo},{a_hi}) then [{b_lo},{b_hi})")
         self._ranges = ranges
-        buckets = {int(self._tier_manifest(d).get("n_buckets", 64))
+        buckets = {int(self._tier_manifest(d).get("n_buckets", N_BUCKETS))
                    for d in self.tier_dirs}
         if len(buckets) > 1:
             raise SchemaMismatch(f"tiers disagree on n_buckets: {buckets}")
@@ -173,12 +173,6 @@ class TieredIndexReader(IndexReader):
                           for d, t, r in zip(self.tier_dirs, tiers,
                                              self._ranges)]}
 
-    @property
-    def has_segments(self) -> bool:
-        return all(
-            fsutil.exists(fsutil.join(d, "segments", "_SEGMENTS_META.json"))
-            for d in self.tier_dirs)
-
     # ------------------------------------------------- segment-path providers
     def segments_meta(self) -> dict:
         m = dict(load_segments_meta(self.tier_dirs[0]))
@@ -193,24 +187,14 @@ class TieredIndexReader(IndexReader):
         # per-tier rows, matching this class's term_stats groupBy-SUM
         return [fsutil.join(d, "term_stats") for d in self.tier_dirs]
 
-    def postings_dirs(self) -> list[str]:
-        # a doc lives in exactly one tier (disjoint ranges), so the
-        # explanation point read unions per-tier buckets loss-free
-        return [fsutil.join(d, "postings") for d in self.tier_dirs]
-
     def uuid_map_dirs(self) -> list[str]:
         # a uuid lives in exactly one tier (disjoint doc ranges + per-build
         # uniqueness gate); reading every tier's bucket preserves the
         # duplicate-uuid invariant check across tiers
         return [fsutil.join(d, "uuid_map") for d in self.tier_dirs]
 
-    def fastfields_spec(self) -> dict | None:
+    def fastfields_spec(self) -> dict:
         metas = [load_fastfields_meta(d) for d in self.tier_dirs]
-        if any(m is None for m in metas):
-            return None
-        spans = {int(m["shard_span"]) for m in metas}
-        if spans != {self._span}:
-            return None  # stale sidecar somewhere → engine-level fallback
         cols = set(metas[0]["columns"])
         for m in metas[1:]:
             cols &= set(m["columns"])

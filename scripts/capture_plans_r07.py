@@ -80,9 +80,11 @@ def main() -> None:
             .repartition(ib.n_buckets, "bucket")
             .sortWithinPartitions("bucket", "field", "term"))
 
-    # segments encode input→output shape (2 Exchange → 1 claim)
+    # segments encode input→output shape (2 Exchange → 1 claim); a tree
+    # without a written posting table encodes the invert lineage
     from cantine_spark.build import segments as S
-    postings = spark.read.parquet(os.path.join(idx, "postings"))
+    postings = (B.invert_postings(tokenized) if hasattr(B, "invert_postings")
+                else spark.read.parquet(os.path.join(idx, "postings")))
     meta = S.load_segments_meta(idx)
     span = int(meta["shard_span"])
     stats = spark.read.parquet(os.path.join(idx, "index_stats")).collect()

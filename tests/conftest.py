@@ -16,6 +16,8 @@ from cantine_spark.index import IndexReader
 from cantine_spark.oracle import OracleIndex
 from cantine_spark.session import get_spark
 
+from reference import Reference
+
 N_DOCS = 150  # small enough for fast tests, large enough for skew/ties
 
 
@@ -57,3 +59,9 @@ def corpus_pdf(reader):
 @pytest.fixture(scope="session")
 def oracle(corpus_pdf):
     return OracleIndex.build(corpus_pdf, list(TEXT_FIELDS))
+
+
+@pytest.fixture(scope="session")
+def reference(reader, oracle):
+    """Oracle + pandas-over-docmeta answers for SearchEngine queries."""
+    return Reference.of(reader, oracle)

@@ -8,7 +8,7 @@ kernel Spark jobs plus one shared hydration scan, each (qid, shard) group
 dispatched to the query's unmodified kernel closure. These tests compare a
 batch of N with N batches of one over every serving query shape (the bench
 suite), pagination cursors round-tripping across the two, per-query
-routing (champion sidecar / relational fallback) staying intact, seeded
+routing (champion sidecar / match-all kernel) staying intact, seeded
 fuzz over mixed batches, per-slot error isolation, and the structural
 claim itself — no hidden per-query jobs for batchable shapes.
 
@@ -106,10 +106,12 @@ def test_batch_walks_whole_result_set(engine):
 
 
 def test_batch_mixed_with_relational_fallback(engine):
-    """Match-all / pure-negative trees take the relational path; they must
-    ride the same batch call unharmed, in order."""
+    """Match-all / pure-negative trees draw their candidates from the
+    sidecar in the same kernel job; they must ride the same batch call
+    unharmed, in order."""
     qs = [{"fulltext": "def", "num_items": 5},
-          {"fulltext": "-def"},             # pure negative → relational
+          {"fulltext": "-def"},             # pure negative
+          {"filter": {"num_lines": [3, 40]}, "num_items": 4},  # match-all
           {"fulltext": "uniqterm00000042"}]
     singles = [engine.search(dict(q)) for q in qs]
     batched = engine.search_batch([dict(q) for q in qs])

@@ -5,7 +5,7 @@ champion-free block path — while provably decoding fewer blocks. This is
 beyond-reference work on the reference's own hot-term weakness (tantivy
 scores every match, tique top_collector.rs:228-237); correctness is pinned
 by differential equality against the r4 block path, which the rest of the
-suite already pins against the relational path and the DuckDB oracle."""
+suite already pins against the pandas oracle and the DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -101,13 +101,15 @@ def test_fused_equals_standalone_sidecar(spark, index_dir, tmp_path):
 
 
 def test_segments_from_lineage_equals_parquet(spark, champ_idx, tmp_path):
-    """r7 overlap: build_segments fed an in-flight postings DataFrame
-    (builder passes its invert lineage so the salted postings write leaves
-    the critical path) must produce BIT-EQUAL segments + champions tables
-    to the parquet-read path, regardless of input partitioning — the
-    encode shuffle re-keys by a pure hash and sorts on the unique
-    (shard, field, term, doc_id) key."""
+    """build_segments fed a posting-row DataFrame (the builder passes its
+    in-flight invert lineage) must produce BIT-EQUAL segments + champions
+    tables to the encode it re-encodes, regardless of input partitioning —
+    the encode shuffle re-keys by a pure hash and sorts on the unique
+    (shard, field, term, doc_id) key. The rows here are the index's own
+    segments decoded back (merge.segments_to_postings)."""
     import shutil
+
+    from cantine_spark.build.merge import segments_to_postings
 
     d2 = str(tmp_path / "lineage_idx")
     shutil.copytree(champ_idx, d2)
@@ -115,7 +117,7 @@ def test_segments_from_lineage_equals_parquet(spark, champ_idx, tmp_path):
     shutil.rmtree(os.path.join(d2, "champions"))
     # adversarial input layout: different partition count AND ordering
     # from both the builder lineage and the parquet read
-    src = (spark.read.parquet(os.path.join(champ_idx, "postings"))
+    src = (segments_to_postings(spark, os.path.join(champ_idx, "segments"))
            .repartition(7).sortWithinPartitions("doc_id"))
     build_segments(spark, d2, shard_span=300, postings_df=src)
     for table, keys in (("segments", ["shard", "field", "term", "block_id"]),
@@ -133,6 +135,7 @@ def test_champion_rows_are_true_tfnorm_heads(spark, champ_idx):
     """For a hot (field, term, shard): the stored head IS the top-C by
     build tfnorm over that shard's postings, complete groups store
     tail_tfnorm = 0, and truncated groups store the max non-head tfnorm."""
+    from cantine_spark.build.merge import segments_to_postings
     from cantine_spark.execution.scoring import B, K1
     ch = (spark.read.parquet(os.path.join(champ_idx, "champions"))
           .filter("field = 'content' AND term = 'def'").toPandas()
@@ -141,7 +144,7 @@ def test_champion_rows_are_true_tfnorm_heads(spark, champ_idx):
     stats = (spark.read.parquet(os.path.join(champ_idx, "index_stats"))
              .toPandas().set_index("field"))
     av = float(stats.loc["content", "avgdl"])
-    post = (spark.read.parquet(os.path.join(champ_idx, "postings"))
+    post = (segments_to_postings(spark, os.path.join(champ_idx, "segments"))
             .filter("field = 'content' AND term = 'def'")
             .select("doc_id", "tf", "dl").toPandas())
     span = load_segments_meta(champ_idx)["shard_span"]
@@ -238,7 +241,7 @@ def test_filtered_and_fused_agg_ride_the_seeded_kernel(champ_fast):
     """In-kernel range filters and fused aggregation compose with champion
     seeding: the seed intersects the filtered candidate set, agg partials
     come from the FULL candidate set — both bit-equal to the block path."""
-    kw = dict(range_filters={"num_lines": (3, 60)},
+    kw = dict(filters={"num_lines": (3, 60)},
               agg_query={"num_lines": [(0, 30), (30, 10**6)]})
     a = champ_fast.search(HOT_DISMAX, k=K, seed_min=8, **kw)
     b = champ_fast.search(HOT_DISMAX, k=K, seed_min=10_000,
@@ -353,30 +356,35 @@ def test_fielded_dismax_equality_across_k(champ_fast, k):
     _same(a, b)
 
 
-def test_negative_boost_trees_stay_off_the_kernel():
+def test_negative_boost_trees_stay_off_pruning_paths(champ_fast):
     """A negative Boost factor flips monotone upper bounds into lower
-    bounds — both champion and generic kernel pruning would be wrong.
-    Such trees (custom-scorer hook only) must be rejected by the
-    eligibility gates and fall to the relational path."""
-    from cantine_spark.execution.wand import champ_tree_ok, segment_eligible
+    bounds — both champion and block-max pruning would be wrong. Such
+    trees (custom-scorer hook only) fail the champion gate and take the
+    kernel's exhaustive path, which scores every candidate's blocks."""
+    from cantine_spark.execution.wand import (
+        champ_tree_ok, tree_has_negative_boost,
+    )
     neg = Boost(Term("content", "def"), -1.0)
-    assert not segment_eligible(neg)
-    assert not champ_tree_ok(neg)
-    assert not segment_eligible(Boolean(shoulds=(neg, HOT)))
-    assert segment_eligible(Boost(Term("content", "def"), 0.5))
+    mixed = Boolean(shoulds=(neg, HOT))
+    assert not champ_tree_ok(neg) and not champ_tree_ok(mixed)
+    assert tree_has_negative_boost(mixed)
+    assert not tree_has_negative_boost(Boost(HOT, 0.5))
+    for node in (neg, mixed):
+        r = champ_fast.search(node, k=K, seed_min=8)
+        assert not r.champion_served
+        assert r.blocks_scored == r.blocks_total
 
 
-def test_negative_boost_scored_exactly_on_relational_path(reader):
+def test_negative_boost_scored_exactly_on_kernel(reader, oracle):
     """End-to-end: a negative-boost tree through search_node returns the
-    exact relational scores (lowest-scoring docs first under -1.0)."""
+    oracle's exact answer (lowest-scoring docs first under -1.0)."""
     from cantine_spark.api import SearchEngine
+
+    from reference import assert_hits_match
     eng = SearchEngine(reader)
     neg = Boost(Term("content", "def"), -1.0)
-    res = eng.search_node(neg, k=5)
-    pos = eng.search_node(Term("content", "def"), k=max(res.total, 5))
-    assert res.total == pos.total
-    worst = sorted(pos.hits, key=lambda h: (-h[1], -h[0]))[-5:]
-    assert {d for d, _ in res.hits} == {d for d, _ in worst}
+    for node in (neg, Boolean(shoulds=(neg, Term("content", "return")))):
+        assert_hits_match(eng.search_node(node, k=5), oracle.search(node, 5))
 
 
 # ---- r6: deferred-leaf cascade (the flat-leaf q_dismax_fielded hole) ----

@@ -82,7 +82,7 @@ def test_pagination_and_cursor_walk_equal(pair):
 def test_filter_sort_agg_equal(pair):
     fd, fc = pair
     node = SHAPES["term"]
-    kw = dict(k=5, range_filters={"num_lines": (3.0, 80.0)},
+    kw = dict(k=5, filters={"num_lines": (3.0, 80.0)},
               sort_feature="num_lines",
               agg_query={"content_bytes": [(0.0, 2000.0), (2000.0, 1e12)]})
     a, b = fd.search(node, **kw), fc.search(node, **kw)
@@ -172,7 +172,7 @@ VARIANTS = {
     "after": {"after": (1.0, 10)},
     "asc": {"ascending": True},
     "sort": {"sort_feature": "num_lines"},
-    "filter": {"range_filters": {"num_lines": (3.0, 80.0)}},
+    "filter": {"filters": {"num_lines": (3.0, 80.0)}},
     "agg": {"agg_query": {"content_bytes": [(0.0, 2000.0),
                                             (2000.0, 1e12)]}},
     "nochamp": {"use_champions": False},
@@ -300,7 +300,7 @@ def test_agg_with_zero_matches_stays_on_driver(pair):
     _merge_kernel_frame and silently fall back to the cluster. It must be
     driver-served with all-empty agg buckets, equal to the cluster path."""
     fd, fc = pair
-    kw = dict(k=5, range_filters={"num_lines": (1e9, 2e9)},  # matches nothing
+    kw = dict(k=5, filters={"num_lines": (1e9, 2e9)},  # matches nothing
               agg_query={"content_bytes": [(0.0, 2000.0), (2000.0, 1e12)]})
     before = driverexec.DRIVER_TIER_FALLBACKS
     a = fd.search(SHAPES["term"], **kw)

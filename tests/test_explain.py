@@ -2,7 +2,7 @@
 tantivy Explanation analog (tique/src/dismax.rs:308-358). explain=True
 searches attach a per-hit breakdown tree whose root value is f32-equal to
 the reported score, with per-term idf/tf/dl/tfnorm contributions — across
-every production query shape, on both the kernel and relational paths."""
+every production query shape, match-all and pure-negative ones included."""
 
 from __future__ import annotations
 
@@ -19,6 +19,7 @@ QUERIES = [
     {"fulltext": '"permission is hereby granted"', "num_items": 5},
     {"fulltext": "def", "sort": "num_lines", "num_items": 5},
     {"fulltext": "def", "filter": {"num_lines": [5, 60]}, "num_items": 5},
+    {"fulltext": "-def", "num_items": 5},
 ]
 
 
@@ -105,32 +106,36 @@ def test_phrase_explanation_counts_occurrences(engine):
         assert np.float32(ex["value"]) == np.float32(it["score"])
 
 
-def test_explain_spark_fallback_equals_driver(engine, reader, monkeypatch):
-    """Driver point read unavailable → the pruned Spark scan must produce
-    the identical explanation."""
-    import cantine_spark.explain as xp
-
-    q = {"fulltext": "path:src def return", "num_items": 4}
-    a = engine.search(dict(q), explain=True)
-
-    def boom(*args, **kw):
-        raise OSError("driver reads disabled")
-
-    monkeypatch.setattr(xp, "_postings_driver", boom)
-    b = engine.search(dict(q), explain=True)
-    assert [i["explanation"] for i in a.items] == \
-        [i["explanation"] for i in b.items]
+def test_match_all_explanation_is_zero(engine):
+    res = engine.search({"filter": {"num_lines": [5, 60]}, "num_items": 3},
+                        explain=True)
+    assert res.items
+    for it in res.items:
+        assert it["explanation"] == {"type": "all", "value": 0.0}
+        assert it["score"] == 0.0
 
 
 def test_explain_costs_no_spark_job_on_serving_path(engine, monkeypatch):
-    """The breakdown must come from driver point reads — no extra job."""
+    """The breakdown must come from driver point reads of the winners'
+    segment blocks — no extra Spark job, and only the winners' shards."""
+    from cantine_spark.execution import driverexec
+
     q = {"fulltext": "def return", "num_items": 3}
     engine.search(dict(q), explain=True)  # warm term-df cache
 
-    import cantine_spark.explain as xp
-    called = []
-    orig = xp._postings_spark
-    monkeypatch.setattr(xp, "_postings_spark",
-                        lambda *a, **k: called.append(1) or orig(*a, **k))
+    sc = engine.reader.spark.sparkContext
+    jobs_before = sc.statusTracker().getJobIdsForGroup(None)
+    shards_read = []
+    orig = driverexec.read_rows
+
+    def spy(spec, terms, columns, shards=None):
+        if "positions" in columns and shards is not None:
+            shards_read.append(set(shards))
+        return orig(spec, terms, columns, shards=shards)
+
+    monkeypatch.setattr(driverexec, "read_rows", spy)
     res = engine.search(dict(q), explain=True)
-    assert res.items and not called
+    assert res.items
+    assert sc.statusTracker().getJobIdsForGroup(None) == jobs_before
+    span = engine.reader.segments_meta()["shard_span"]
+    assert shards_read == [{i["doc_id"] // span for i in res.items}]

@@ -10,11 +10,11 @@ never moves docmeta through a shuffle. These tests pin:
 - the layout invariants (one row per doc, shard = doc_id // span, sorted);
 - the PLAN shape: filtered / field-sorted / aggregating fulltext is one
   shard-task kernel job (no shuffle, no Spark-side table scan at all);
-- kernel answers ≡ the relational reference engine, and the agg_threshold
-  gate still selects the two-pass form;
-- a stale sidecar (span mismatch after re-encode) is detected: the engine
-  answers such queries on the relational path with identical results, and
-  the kernel refuses features the sidecar does not cover.
+- kernel answers ≡ the oracle + pandas reference (tests/reference.py), and
+  the agg_threshold gate still selects the two-pass form;
+- a stale sidecar (span mismatch after re-encode) or an absent one is
+  rewritten when the index opens, and the engine then answers like a
+  fresh one; the kernel refuses features the sidecar does not hold.
 """
 
 from __future__ import annotations
@@ -23,23 +23,15 @@ import json
 import os
 import shutil
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cantine_spark.api import SearchEngine, SearchQuery
+from cantine_spark.api import SearchEngine
+from cantine_spark.build.segments import (
+    load_fastfields_meta, load_segments_meta,
+)
 from cantine_spark.execution.wand import FastTopK
 from cantine_spark.plans.nodes import Term
-
-
-def relational(reader, node, q: dict):
-    """The relational reference engine's SearchResult for query tree
-    `node` under the filter / sort / agg of dict query `q`."""
-    eng = SearchEngine(reader)
-    eng._fast = None
-    sq = SearchQuery.from_dict(q, features=eng.features)
-    _, preds = eng.interpret(sq)
-    return eng._search_relational(sq, sq.num_items or 10, node, preds, None)
 
 
 def as_partials(agg) -> dict:
@@ -53,9 +45,6 @@ def as_partials(agg) -> dict:
 
 
 def test_sidecar_layout_invariants(spark, reader, index_dir):
-    from cantine_spark.build.segments import (
-        load_fastfields_meta, load_segments_meta,
-    )
     ffm = load_fastfields_meta(index_dir)
     assert ffm is not None
     span = load_segments_meta(index_dir)["shard_span"]
@@ -104,27 +93,26 @@ def test_unfiltered_field_sort_is_plain_groupby(reader):
     assert_shard_task_plan(fast)
 
 
-def test_filtered_query_runs_in_kernel_no_cogroup(reader):
+def test_filtered_query_runs_in_kernel_no_cogroup(reader, reference):
     """r4: range filters evaluate IN-KERNEL against the shard-local sidecar
     (the reference composes RangeQuery into the per-segment query,
     main.rs:152-172) — a filtered, sorted, aggregating fulltext query is
     ONE single-input groupBy kernel job with no docmeta scan at all."""
     fast = FastTopK(reader, use_driver=False)
     res = fast.search(Term("content", "def"), k=5,
-                      range_filters={"num_lines": (3, 50)},
+                      filters={"num_lines": (3, 50)},
                       sort_feature="content_bytes",
                       agg_query={"num_lines": [(0, 30), (30, 10**6)]})
     assert res.hits and res.agg is not None
     assert_shard_task_plan(fast)
-    # identical to the relational reference engine
-    ref = relational(reader, Term("content", "def"),
-                     {"filter": {"num_lines": [3, 50]},
-                      "sort": "content_bytes", "num_items": 5,
-                      "agg": {"num_lines": [[0, 30], [30, 10**6]]}})
-    assert res.total == ref.total_found
-    assert ([(d, float(v)) for (d, _), v in zip(res.hits, res.sort_vals)]
-            == [(i["doc_id"], float(i["sort_val"])) for i in ref.items])
-    assert res.agg == as_partials(ref.agg)
+    # identical to the oracle + pandas reference
+    ref = reference.search(Term("content", "def"), {"num_lines": (3, 50)},
+                           k=5, sort="content_bytes",
+                           agg={"num_lines": [(0, 30), (30, 10**6)]})
+    assert res.total == ref["total"]
+    assert ([(d, s, float(v)) for (d, s), v in zip(res.hits, res.sort_vals)]
+            == [(d, s, float(v)) for d, s, v in ref["items"]])
+    assert res.agg == as_partials(ref["agg"])
     # agg buckets partition the filtered match set exactly
     assert sum(c for c, _, _ in res.agg["num_lines"]) == res.total
 
@@ -136,24 +124,20 @@ AGG = {"num_lines": [(0, 20), (20, 40), (40, 10**6)],
        "avg_line_len": [(0.0, 25.0)]}
 
 
-def test_fused_agg_equals_two_pass(reader):
+def test_fused_agg_equals_two_pass(reader, reference):
     """Differential: the fused kernel agg (k=3) vs the gated second pass
-    (k=1, hits discarded) vs the relational reference engine — identical
+    (k=1, hits discarded) vs the oracle + pandas reference — identical
     partial merges, filtered and unfiltered."""
     fast = FastTopK(reader)
     node = Term("content", "def")
-    agg_q = {f: [list(r) for r in rs] for f, rs in AGG.items()}
     for filt in (None, {"content_bytes": (0, 5000)}):
-        fused = fast.search(node, k=3, range_filters=filt, agg_query=AGG)
+        fused = fast.search(node, k=3, filters=filt, agg_query=AGG)
         assert fused.agg is not None
-        assert fused.agg == fast.search(node, k=1, range_filters=filt,
+        assert fused.agg == fast.search(node, k=1, filters=filt,
                                         agg_query=AGG).agg
-        q = {"agg": agg_q}
-        if filt:
-            q["filter"] = {f: list(r) for f, r in filt.items()}
-        ref = relational(reader, node, q)
-        assert fused.total == ref.total_found
-        assert fused.agg == as_partials(ref.agg)
+        ref = reference.search(node, filt, agg=AGG)
+        assert fused.total == ref["total"]
+        assert fused.agg == as_partials(ref["agg"])
 
 
 def test_fused_engine_agg_matches_gated_engine(reader):
@@ -188,18 +172,22 @@ def test_fused_agg_empty_bucket_and_no_match(reader):
 
 
 @pytest.fixture(scope="module")
-def stale_sidecar_dir(index_dir, tmp_path_factory):
-    """A copy of the index whose sidecar claims the WRONG shard span —
-    exactly what a re-encode that skipped write_fastfields would leave."""
-    d = str(tmp_path_factory.mktemp("stale_ff")) + "/index"
-    shutil.copytree(index_dir, d)
-    meta_p = os.path.join(d, "fastfields", "_FF_META.json")
+def stale_sidecar_dirs(index_dir, tmp_path_factory):
+    """Two copies of the index: one whose sidecar claims the WRONG shard
+    span — exactly what a re-encode that skipped write_fastfields would
+    leave — and one with no sidecar at all."""
+    root = tmp_path_factory.mktemp("stale_ff")
+    stale, absent = str(root / "stale"), str(root / "absent")
+    shutil.copytree(index_dir, stale)
+    meta_p = os.path.join(stale, "fastfields", "_FF_META.json")
     with open(meta_p) as f:
         m = json.load(f)
     m["shard_span"] = m["shard_span"] * 2 + 1
     with open(meta_p, "w") as f:
         json.dump(m, f)
-    return d
+    shutil.copytree(index_dir, absent)
+    shutil.rmtree(os.path.join(absent, "fastfields"))
+    return stale, absent
 
 
 STALE_QUERIES = [
@@ -208,18 +196,18 @@ STALE_QUERIES = [
     {"fulltext": "def", "sort": "num_lines", "num_items": 6},
     {"fulltext": "def return", "sort": "avg_line_len", "ascending": True,
      "agg": {"num_lines": [[0, 20], [20, 10**6]]}, "num_items": 5},
+    {"filter": {"num_lines": [3, 50]}, "sort": "content_bytes",
+     "num_items": 6},
 ]
 
 
-def test_stale_sidecar_routes_to_relational(spark, reader, stale_sidecar_dir,
-                                            monkeypatch):
-    """A stale sidecar covers no feature, so every filtered, sorted or
-    aggregating query on it runs on the relational path: answers (pages
-    1 and 2) equal the fresh engine's, no Spark job cogroups anything, and
-    the kernel itself refuses the uncovered features on the driver."""
+def test_stale_sidecar_is_rewritten_on_open(spark, reader,
+                                            stale_sidecar_dirs):
+    """Opening an index whose sidecar is stale or absent rewrites it at the
+    segments' span, so every filtered, sorted, aggregating or match-all
+    query runs on the kernel and answers (pages 1 and 2) exactly like the
+    fresh engine; the kernel still refuses a feature it does not hold."""
     from cantine_spark.index import IndexReader
-    stale = SearchEngine(IndexReader(spark, stale_sidecar_dir))
-    assert not stale._fast.has_fastfields  # span mismatch detected
     fresh = SearchEngine(reader)
 
     def pages(eng, q):
@@ -228,36 +216,25 @@ def test_stale_sidecar_routes_to_relational(spark, reader, stale_sidecar_dir,
         return p1, eng.search(dict(q, after=p1.next))
 
     expected = [pages(fresh, q) for q in STALE_QUERIES]
-    # record the physical plan of every job the stale engine runs
-    plans: list[str] = []
-    df_cls = type(spark.range(0))
-    for action in ("collect", "toPandas"):
-        orig = getattr(df_cls, action)
-
-        def recording(df, *a, _orig=orig, **kw):
-            plans.append(df._jdf.queryExecution().executedPlan().toString())
-            return _orig(df, *a, **kw)
-
-        monkeypatch.setattr(df_cls, action, recording)
-    got = [pages(stale, q) for q in STALE_QUERIES]
-    monkeypatch.undo()
-    for exp, res in zip(expected, got):
-        for b, a in zip(exp, res):
-            assert a.total_found == b.total_found
-            assert ([(i["doc_id"], i["sort_val"]) for i in a.items]
-                    == [(i["doc_id"], i["sort_val"]) for i in b.items])
-            assert a.agg == b.agg
-    assert plans  # the relational path ran Spark jobs ...
-    assert not any("FlatMapCoGroupsInPandas" in p for p in plans)  # ... flat
-
-    node = Term("content", "def")
-    for kw in (dict(sort_feature="num_lines"),
-               dict(range_filters={"num_lines": (0, 5)}),
-               dict(agg_query={"num_lines": [(0, 5)]})):
-        with pytest.raises(ValueError, match="sidecar"):
-            stale._fast.search(node, **kw)
-    # an empty filter set names no feature, so nothing is uncovered
-    assert stale._fast.search(node, k=3, range_filters={}).total > 0
+    for d in stale_sidecar_dirs:
+        eng = SearchEngine(IndexReader(spark, d))
+        ffm = load_fastfields_meta(d)
+        assert ffm["shard_span"] == load_segments_meta(d)["shard_span"]
+        assert set(ffm["columns"]) == set(
+            load_fastfields_meta(reader.index_dir)["columns"])
+        for exp, res in zip(expected, [pages(eng, q) for q in STALE_QUERIES]):
+            for b, a in zip(exp, res):
+                assert a.total_found == b.total_found
+                assert ([(i["doc_id"], i["score"], i["sort_val"])
+                         for i in a.items]
+                        == [(i["doc_id"], i["score"], i["sort_val"])
+                            for i in b.items])
+                assert a.agg == b.agg
+    with pytest.raises(ValueError, match="sidecar holds no feature"):
+        eng._fast.search(Term("content", "def"), sort_feature="nope")
+    # an empty filter set names no feature
+    assert eng._fast.search(Term("content", "def"), k=3,
+                            filters={}).total > 0
 
 
 # --------------------------------------------------- pruning observability

@@ -12,11 +12,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from cantine_spark.api import BadRequest, SearchEngine
-from cantine_spark.build.builder import build_index
+from cantine_spark.build.builder import TEXT_FIELDS, build_index
 from cantine_spark.corpus import generate_corpus, with_doc_ids
 from cantine_spark.cursor import TAG_F64, TAG_U64
 from cantine_spark.features import features_from_struct
 from cantine_spark.index import IndexReader
+from cantine_spark.oracle import OracleIndex
+
+from reference import Reference, assert_result_matches, walk_pages
 
 
 @pytest.fixture(scope="module")
@@ -54,49 +57,32 @@ def test_new_column_filterable(extended_engine):
     assert r.total_found == expect
 
 
-def _relational_twin(engine: SearchEngine) -> SearchEngine:
-    ref = SearchEngine(engine.reader)
-    ref._fast = None  # force the relational reference path
-    return ref
+@pytest.fixture(scope="module")
+def reference(extended_engine):
+    reader = extended_engine.reader
+    pdf = (reader.docs.select("doc_id", *TEXT_FIELDS).toPandas()
+           .sort_values("doc_id").reset_index(drop=True))
+    return Reference.of(reader, OracleIndex.build(pdf, list(TEXT_FIELDS)))
 
 
-def test_new_column_sortable_and_paginatable(extended_engine):
-    """A column the fast-field sidecar predates routes to the relational
-    path: the cursor walk equals the relational engine item for item."""
-    ref = _relational_twin(extended_engine)
+def test_new_column_sortable_and_paginatable(extended_engine, reference):
+    """Opening the index rewrote the fast-field sidecar with the new
+    columns: the kernel's cursor walk equals the oracle + pandas reference
+    page for page."""
     base = {"fulltext": "def", "sort": "stars", "num_items": 7}
-    seen = []
-    cur = cur_r = None
-    for _ in range(50):
-        q, qr = dict(base), dict(base)
-        if cur is not None:
-            q["after"], qr["after"] = cur, cur_r
-        r, rr = extended_engine.search(q), ref.search(qr)
-        assert r.total_found == rr.total_found
-        assert ([(i["doc_id"], i["sort_val"]) for i in r.items]
-                == [(i["doc_id"], i["sort_val"]) for i in rr.items])
-        seen.extend(it["sort_val"] for it in r.items)
-        assert (r.next is None) == (rr.next is None)
-        if r.next is None:
-            break
-        cur, cur_r = r.next, rr.next
-    else:
-        raise AssertionError("pagination did not terminate")
-    assert seen == sorted(seen, reverse=True)
-    assert len(seen) > 7  # pagination actually advanced through the cursor
-    assert len(seen) == r.total_found
+    n = walk_pages(extended_engine, reference, base)
+    total = extended_engine.search(dict(base)).total_found
+    assert n == total > 7  # pagination actually advanced through the cursor
 
 
-def test_new_column_filtered_agg_fulltext_matches_relational(extended_engine):
+def test_new_column_filtered_agg_fulltext_matches_relational(
+        extended_engine, reference):
     q = {"fulltext": "def", "filter": {"stars": [2, 6]}, "sort": "weight",
          "agg": {"stars": [[0, 3], [3, 7]], "weight": [[0.0, 10.0]]},
          "num_items": 5}
     a = extended_engine.search(dict(q))
-    b = _relational_twin(extended_engine).search(dict(q))
-    assert a.total_found == b.total_found > 0
-    assert ([(i["doc_id"], i["sort_val"]) for i in a.items]
-            == [(i["doc_id"], i["sort_val"]) for i in b.items])
-    assert a.agg == b.agg
+    assert a.total_found > 0
+    assert_result_matches(a, reference.query(extended_engine, q))
 
 
 def test_new_column_aggregatable(extended_engine):

@@ -53,7 +53,7 @@ def test_fsutil_resolves_bare_paths_and_uris(tmp_path):
 
 def test_uri_index_opens_and_reads_metadata(uri_reader, reader):
     assert uri_reader.manifest == reader.manifest
-    assert uri_reader.has_segments
+    assert uri_reader.segments_meta()["format"] == 2
     assert uri_reader.stats == reader.stats
 
 

@@ -6,8 +6,8 @@ shard sees the full impact distribution (see corpus.with_doc_ids). These
 tests pin that the permutation is (a) well-formed — dense ids,
 deterministic, impact-descending within each stripe (at N=200 < stripe
 width there is exactly one stripe, so globally); (b) LOSSLESS — block-max
-pruned results equal unpruned results and the relational path's results on
-the SAME index (the per-layout equality that makes pruning safe); and
+pruned results equal unpruned results and the oracle's results on the
+SAME corpus (the per-layout equality that makes pruning safe); and
 (c) layout-independent — the score multiset matches the ingest-ordered
 layout (the pruning-effectiveness story lives in docs/impact_layout.md
 and tests/test_champions.py; see test_impact_layout_results_match_ingest).
@@ -20,13 +20,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from cantine_spark.api import SearchEngine
-from cantine_spark.build.builder import build_index
+from cantine_spark.build.builder import TEXT_FIELDS, build_index
 from cantine_spark.build.segments import build_segments
 from cantine_spark.corpus import generate_corpus, with_doc_ids
-from cantine_spark.execution.executor import SearchExecutor
 from cantine_spark.execution.wand import FastTopK
 from cantine_spark.index import IndexReader
+from cantine_spark.oracle import OracleIndex
 from cantine_spark.plans.nodes import Boolean, Term
+
+from reference import assert_hits_match
 
 N = 200
 
@@ -49,6 +51,13 @@ def impact_reader(spark, impact_dir):
 @pytest.fixture(scope="module")
 def impact_fast(impact_reader):
     return FastTopK(impact_reader)
+
+
+@pytest.fixture(scope="module")
+def impact_oracle(impact_reader):
+    pdf = (impact_reader.docs.select("doc_id", *TEXT_FIELDS).toPandas()
+           .sort_values("doc_id").reset_index(drop=True))
+    return OracleIndex.build(pdf, list(TEXT_FIELDS))
 
 
 def test_layout_well_formed(spark, impact_reader):
@@ -92,7 +101,7 @@ def test_unknown_order_rejected(spark):
     (["def", "import"], "and"),
     (["uniqterm00000123"], "or"),    # guaranteed one-doc rare term
 ])
-def test_pruned_equals_unpruned_and_relational(impact_fast, impact_reader,
+def test_pruned_equals_unpruned_and_relational(impact_fast, impact_oracle,
                                                terms, mode):
     ts = tuple(Term("content", t) for t in terms)
     node = Boolean(musts=ts) if mode == "and" else Boolean(shoulds=ts)
@@ -103,12 +112,8 @@ def test_pruned_equals_unpruned_and_relational(impact_fast, impact_reader,
                                [s for _, s in full.hits],
                                rtol=1e-6, atol=1e-9)
     assert [d for d, _ in pruned.hits] == [d for d, _ in full.hits]
-    # cross-path: relational executor on the same permuted index
-    ex = SearchExecutor(impact_reader)
-    m = ex.matches(node)
-    rows = ex.top_k(m, 10).collect()
-    assert pruned.total == m.count()
-    assert [d for d, _ in pruned.hits] == [int(r["doc_id"]) for r in rows]
+    # cross-check: the oracle over the same permuted corpus
+    assert_hits_match(pruned, impact_oracle.search(node, 10))
 
 
 def test_pagination_on_impact_layout(spark, impact_dir):

@@ -78,27 +78,32 @@ def test_build_resume_skips_completed_stages(spark, tmp_path_factory):
     corpus = with_doc_ids(generate_corpus(spark, 60, partitions=2)).persist()
     b1 = IndexBuilder(spark, d)
     b1.build(corpus)
-    assert set(b1.stages_run) >= {"docs", "docmeta", "postings"}
+    assert set(b1.stages_run) >= {"docs", "docmeta", "segments"}
+    assert not os.path.exists(os.path.join(d, "postings"))
 
     # rerun: everything skipped (fingerprints match)
     b2 = IndexBuilder(spark, d)
     b2.build(corpus)
     assert b2.stages_run == []
-    assert set(b2.stages_skipped) >= {"docs", "docmeta", "postings",
+    assert set(b2.stages_skipped) >= {"docs", "docmeta", "segments",
                                       "term_stats", "index_stats"}
 
-    # simulate a crash mid-build: postings stage marker lost → only that
-    # stage (and its derived stats) re-run; output identical
-    os.remove(os.path.join(d, "postings", "_STAGE_OK.json"))
-    before = (spark.read.parquet(os.path.join(d, "postings"))
-              .agg(F.sum(F.pmod(F.xxhash64("field", "term", "doc_id", "tf"), F.lit(2**31)))).collect()[0][0])
+    # simulate a crash mid-build: segments stage marker lost → only that
+    # stage re-runs; output identical
+    def digest():
+        return (spark.read.parquet(os.path.join(d, "segments"))
+                .agg(F.sum(F.pmod(F.xxhash64(
+                    "field", "term", "shard", "block_id", "doc_deltas",
+                    "tfs", "dls", "positions"), F.lit(2**31))))
+                .collect()[0][0])
+
+    os.remove(os.path.join(d, "segments", "_STAGE_OK.json"))
+    before = digest()
     b3 = IndexBuilder(spark, d)
     b3.build(corpus)
-    assert "postings" in b3.stages_run
+    assert b3.stages_run == ["segments"]
     assert "docs" in b3.stages_skipped
-    after = (spark.read.parquet(os.path.join(d, "postings"))
-             .agg(F.sum(F.pmod(F.xxhash64("field", "term", "doc_id", "tf"), F.lit(2**31)))).collect()[0][0])
-    assert before == after, "resumed build must reproduce identical postings"
+    assert before == digest(), "resumed build must reproduce identical segments"
     corpus.unpersist()
 
 
@@ -158,27 +163,28 @@ def test_build_rejects_duplicate_identity(spark, tmp_path_factory):
         IndexBuilder(spark, d).build(dup)
 
 
-def test_postings_marker_records_row_count(spark, tmp_path_factory):
-    """ADVICE r2: the postings stage marker must carry the Σdf-derived row
-    count (patched after term_stats exists), so a resumed build that skips
-    the stage still has it on disk."""
+def test_stage_marker_records_metrics(spark, tmp_path_factory):
+    """Stage markers carry their stage's metrics, and a resumed build that
+    skips every stage leaves them intact; the manifest's per-bucket posting
+    counts sum to Σdf of term_stats."""
     import json
 
     d = str(tmp_path_factory.mktemp("marker"))
     corpus = with_doc_ids(generate_corpus(spark, 60, partitions=2)).persist()
-    IndexBuilder(spark, d).build(corpus)
-    marker_path = os.path.join(d, "postings", "_STAGE_OK.json")
+    man = IndexBuilder(spark, d).build(corpus)
+    marker_path = os.path.join(d, "segments", "_STAGE_OK.json")
     with open(marker_path) as f:
         m1 = json.load(f)
-    rows = m1["metrics"]["rows"]
-    assert isinstance(rows, int) and rows > 0
-    # resumed build (all stages skipped) keeps the patched count intact
+    assert m1["metrics"]["n_blocks"] > 0 and m1["metrics"]["format"] == 2
+    n_postings = int(spark.read.parquet(os.path.join(d, "term_stats"))
+                     .agg(F.sum("df")).collect()[0][0])
+    assert sum(man["postings_rows_per_bucket"].values()) == n_postings
     b2 = IndexBuilder(spark, d)
     b2.build(corpus)
-    assert "postings" in b2.stages_skipped
+    assert "segments" in b2.stages_skipped
     with open(marker_path) as f:
         m2 = json.load(f)
-    assert m2["metrics"]["rows"] == rows
+    assert m2["metrics"] == m1["metrics"]
     corpus.unpersist()
 
 

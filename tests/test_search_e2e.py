@@ -1,6 +1,7 @@
-"""End-to-end: engine (DataFrame algebra) vs oracle (pure pandas), the
-correctness gate of SURVEY §5 — rank-identical doc_ids with matching f32
-scores across the whole query-shape zoo."""
+"""End-to-end: engine (the segment kernel, through SearchEngine.search_node)
+vs oracle (pure pandas), the correctness gate of SURVEY §5 — rank-identical
+doc_ids with matching f32 scores across the whole query-shape zoo, match-all
+and pure-negative trees included."""
 
 from __future__ import annotations
 
@@ -8,19 +9,21 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from cantine_spark.api import SearchEngine
 from cantine_spark.plans.nodes import All, Boolean, Boost, DisMax, Phrase, Term
 from cantine_spark.queryparser.parser import QueryParser
 
 K = 10
 
 
-def engine_topk(executor, node, k=K):
-    m = executor.matches(node)
-    if m is None:
-        return 0, []
-    total = m.count()
-    rows = executor.top_k(m, k).collect()
-    return total, [(int(r["doc_id"]), float(r["score"])) for r in rows]
+@pytest.fixture(scope="module")
+def engine(reader):
+    return SearchEngine(reader)
+
+
+def engine_topk(engine, node, k=K):
+    r = engine.search_node(node, k=k)
+    return r.total, r.hits
 
 
 def assert_equivalent(engine, oracle_res):
@@ -71,8 +74,8 @@ NODES = [
 
 
 @pytest.mark.parametrize("node", NODES, ids=lambda n: repr(n)[:60])
-def test_engine_matches_oracle(executor, oracle, node):
-    assert_equivalent(engine_topk(executor, node),
+def test_engine_matches_oracle(engine, oracle, node):
+    assert_equivalent(engine_topk(engine, node),
                       oracle.search(node, K))
 
 
@@ -92,18 +95,18 @@ PARSED_QUERIES = [
 
 
 @pytest.mark.parametrize("q", PARSED_QUERIES)
-def test_parsed_query_matches_oracle(executor, oracle, q):
+def test_parsed_query_matches_oracle(engine, oracle, q):
     parser = QueryParser(["content", "path"],
                          boosts={"path": 1.15, "content": 0.7})
     node = parser.parse_dismax(q, 0.1)
     if node is None:
         return
-    assert_equivalent(engine_topk(executor, node), oracle.search(node, K))
+    assert_equivalent(engine_topk(engine, node), oracle.search(node, K))
 
 
-def test_total_counts_match_all_query(executor, oracle, reader):
-    m = executor.matches(All())
-    assert m.count() == reader.num_docs == oracle.n_docs
+def test_total_counts_match_all_query(engine, oracle, reader):
+    r = engine.search_node(All())
+    assert r.total == reader.num_docs == oracle.n_docs
 
 
 def test_sha256_invariant(reader, spark):

@@ -3,6 +3,7 @@ generations → compaction → search correctness vs the oracle."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -76,6 +77,36 @@ def test_compacted_index_is_correct(spark, stream_env):
     o_total, o_items = oracle.search(Term("content", "def"), 10)
     assert t_total == o_total
     assert [d for d, _ in t_items] == [d for d, _ in o_items]
+
+
+def test_compaction_matches_fresh_build(spark, stream_env, tmp_path_factory):
+    """compact_dirs derives the shard span and term_stats by the batch
+    build's own rules (default_span; Σ n_total / Σ cf over the merged
+    champions): the compacted index's span and term_stats equal a fresh
+    build's over the same docs, and no commit or merge writes a posting
+    table."""
+    from cantine_spark.build.builder import build_index
+    from cantine_spark.build.segments import load_segments_meta
+
+    indexer, *_ = stream_env
+    out = indexer.compact(dest="vs_fresh")
+    fresh = str(tmp_path_factory.mktemp("fresh_build"))
+    build_index(spark, spark.read.parquet(os.path.join(out, "docs")).select(
+        "doc_id", "repo", "path", "commit", "lang", "content"), fresh)
+    with open(os.path.join(out, "manifest.json")) as f:
+        span = json.load(f)["shard_span"]
+    assert span == load_segments_meta(fresh)["shard_span"]
+    assert load_segments_meta(out)["shard_span"] == span
+
+    def term_stats(d):
+        return sorted(tuple(r) for r in spark.read.parquet(
+            os.path.join(d, "term_stats"))
+            .select("field", "term", "bucket", "df", "cf").collect())
+
+    assert term_stats(out) == term_stats(fresh)
+    dirs = [out, fresh] + [g["dir"] for g in
+                           indexer._load_state()["generations"]]
+    assert not any(os.path.exists(os.path.join(d, "postings")) for d in dirs)
 
 
 def test_cursor_survives_compaction_refresh(spark, tmp_path_factory):
