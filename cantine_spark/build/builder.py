@@ -474,6 +474,19 @@ class IndexBuilder:
         def stage_uuid_map():
             def write_and_gate():
                 docs_df = spark.read.parquet(docs_path)
+                # ingest-time uniqueness gate: duplicate (repo, path) rows
+                # would share a uuid and make cursor resumes ambiguous (the
+                # reference's HashMap silently last-wins,
+                # readerwriter.rs:40-47 — we refuse). It groups the flat
+                # docs/ table: a read of uuid_map's bucket directories
+                # would start a parallel file-listing job first.
+                dup = (docs_df.groupBy("uuid").count()
+                       .filter(F.col("count") > 1).limit(1).collect())
+                if dup:
+                    raise ValueError(
+                        f"duplicate document identity (repo, path): uuid "
+                        f"{dup[0]['uuid']!r} maps to {dup[0]['count']} "
+                        f"doc_ids")
                 (docs_df.select(
                     "uuid", "doc_id",
                     F.pmod(F.xxhash64("uuid"), F.lit(self.n_buckets))
@@ -482,17 +495,6 @@ class IndexBuilder:
                  .sortWithinPartitions("ubucket", "uuid")
                  .write.mode("overwrite").partitionBy("ubucket")
                  .parquet(um_path))
-                # ingest-time uniqueness gate: duplicate (repo, path) rows
-                # would share a uuid and make cursor resumes ambiguous (the
-                # reference's HashMap silently last-wins,
-                # readerwriter.rs:40-47 — we refuse)
-                dup = (spark.read.parquet(um_path).groupBy("uuid")
-                       .count().filter(F.col("count") > 1).limit(1).collect())
-                if dup:
-                    raise ValueError(
-                        f"duplicate document identity (repo, path): uuid "
-                        f"{dup[0]['uuid']!r} maps to {dup[0]['count']} "
-                        f"doc_ids")
             run_stage("uuid_map", um_path, write_and_gate)
 
         is_path = os.path.join(self.index_dir, "index_stats")
@@ -545,12 +547,15 @@ class IndexBuilder:
                 _log_sibling_failures(futures, exc)
                 raise
 
-        # per-partition metrics: postings per bucket (skew visibility) —
-        # Σdf per bucket, a 64-group agg over the small term_stats table
-        ts = spark.read.parquet(ts_path)
+        # per-partition metrics: postings per term_stats bucket (skew
+        # visibility) — Σdf per bucket = Σn_total per bucket over the flat
+        # champion sidecar (one row per (field, term, shard)); a read of
+        # term_stats' bucket directories would start a file-listing job
+        champ = spark.read.parquet(os.path.join(self.index_dir, "champions"))
         bucket_rows = {int(r["bucket"]): int(r["cnt"]) for r in
-                       ts.groupBy("bucket").agg(F.sum("df").alias("cnt"))
-                       .collect()}
+                       champ.groupBy(bucket_expr(F.col("field"),
+                                                 F.col("term")).alias("bucket"))
+                       .agg(F.sum("n_total").alias("cnt")).collect()}
         manifest = {
             "version": 1,
             "fingerprint": fingerprint,

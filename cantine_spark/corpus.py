@@ -179,50 +179,66 @@ IMPACT_STRIPE = 1024  # = segments.BLOCK_SIZE * 8, the shard-span FLOOR, so
 # size or cluster parallelism (see with_doc_ids order="impact")
 
 
+# monotonically_increasing_id() = (partition index << 33) + row index in
+# the partition, so a partition's row index must stay below 2^33
+_ROW_BITS = 33
+_MAX_PARTITION_ROWS = 1 << _ROW_BITS
+
+
+def _partition_offsets(counts: dict[int, int]) -> dict[int, int]:
+    """First dense id of each range partition: the rows of every earlier
+    partition. Raises before any id is assigned if a partition holds more
+    rows than monotonically_increasing_id() can index."""
+    offsets = {}
+    acc = 0
+    for pid in sorted(counts):
+        if counts[pid] >= _MAX_PARTITION_ROWS:
+            raise ValueError(
+                f"range partition {pid} holds {counts[pid]} rows; a dense "
+                f"id needs fewer than 2^33 per partition")
+        offsets[pid] = acc
+        acc += counts[pid]
+    return offsets
+
+
 def _dense_rank(df: DataFrame, sort_cols: list, id_name: str,
                 keep: list[T.StructField]) -> DataFrame:
     """Dense 0..n-1 rank over sort_cols, as `id_name`, keeping `keep`
     fields. Scalable two-pass scheme (no single-partition window):
-    range-partition by the key, count rows per partition, broadcast
-    cumulative offsets, then add a partition-local index."""
+    range-partition by the key and cache it, count rows per partition on
+    the driver, then compute each id in the JVM as the row's index within
+    its cached partition plus that partition's offset. No row crosses to
+    Python here, so a Python stage that consumes the ids (the build's
+    tokenize pass) runs one Python worker per task, not two."""
     parts = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(parts, *sort_cols) \
                .sortWithinPartitions(*sort_cols) \
                .select(*[f.name for f in keep]) \
                .withColumn("_pid", F.spark_partition_id())
     # cache the ranged frame: the count below materializes it once, and the
-    # id-assignment pass reads from cache instead of re-running the source
-    # (which may itself be a Python stage) plus the range-sampling job
+    # id pass reads from cache instead of re-running the source (which may
+    # itself be a Python stage) plus the range-sampling job
     ranged = ranged.persist()
-    counts = {r["_pid"]: r["cnt"] for r in
-              ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    out_schema = T.StructType(
-        [T.StructField(id_name, T.LongType(), False)] + list(keep))
-
-    boff = df.sparkSession.sparkContext.broadcast(offsets)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = 0
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pid = int(pdf["_pid"].iloc[0])
-            base = boff.value[pid]
-            pdf = pdf.copy()
-            pdf.insert(0, id_name, np.arange(local, local + len(pdf)) + base)
-            local += len(pdf)
-            yield pdf.drop(columns=["_pid"])
+    offsets = _partition_offsets(
+        {r["_pid"]: r["cnt"] for r in
+         ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()})
+    index = (F.monotonically_increasing_id()
+             - F.shiftleft(F.spark_partition_id().cast("long"), _ROW_BITS))
+    offset = F.lit(0).cast("long")
+    if offsets:
+        by_pid = F.create_map(*[c for pid, off in offsets.items()
+                                for c in (F.lit(pid), F.lit(off).cast("long"))])
+        # coalesce keeps doc_id non-nullable: every cached row's _pid is
+        # a key of the map
+        offset = F.coalesce(by_pid[F.col("_pid")], offset)
 
     # NOTE: ranged stays persisted until the session drops it (LRU) — the
     # returned frame is lazy and downstream consumers (builder stages, the
     # second striping pass) read it repeatedly; an eager unpersist here
-    # would silently recompute the whole source lineage per consumer
-    return ranged.mapInPandas(assign, out_schema)
+    # would silently recompute the whole source lineage per consumer. The
+    # ids follow the cached row order, which is the sort order.
+    return ranged.select((index + offset).alias(id_name),
+                         *[f.name for f in keep])
 
 
 def with_doc_ids(corpus: DataFrame, order: str = "identity") -> DataFrame:

@@ -73,9 +73,14 @@ def get_spark(
         # over the worker's whole import-time heap (~31 ms per task).
         # The zip re-read is consistent with the "kernel-time spin" seen
         # with reuse on (an identical build ran 27s with reuse off vs
-        # 60-160s with reuse on at local[32], 80-90% system CPU). The
-        # build keeps reuse off; fresh workers cost ~0.1s each. Serving
-        # processes turn reuse on, and every query-side task starts with
+        # 60-160s with reuse on at local[32], 80-90% system CPU). This
+        # default keeps reuse off for batch builds; fresh workers cost
+        # ~0.1s each. Serving processes (`cantine_submit serve`, an
+        # ingesting IndexServer, perfbench) turn reuse on and build in the
+        # same session, so the build's idle workers stay pooled until
+        # Spark's idle timeout (60 s) — at most one per task slot, since no
+        # build task runs two Python stages (corpus._dense_rank assigns
+        # doc ids in the JVM). Every query-side task starts with
         # execution/wand._worker_prologue, which drops the zip finders and
         # freezes the worker's heap once so the per-task collection scans
         # only what the tasks allocate.
