@@ -44,8 +44,7 @@ def profile_build() -> dict:
         out["build_seconds"] = round(time.time() - t0, 3)
         # per-stage seconds from the stage markers build_index wrote
         stages = {}
-        for name in ("tokenized", "docs", "docmeta", "term_stats",
-                     "uuid_map", "index_stats"):
+        for name in ("tokenized", "docs", "docmeta", "index_stats"):
             try:
                 m = fsutil.read_json(
                     os.path.join(idx_dir, name, "_STAGE_OK.json"))

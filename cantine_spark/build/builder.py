@@ -7,23 +7,24 @@ stages are declarative DataFrame jobs; "commit" = a checkpointed stage with
 a lineage manifest (resumable — SURVEY §7.4 risk 6).
 
 Tables written under <index_dir>/ (parquet; Iceberg would add snapshot
-metadata but its jars are absent in this image — the layout keeps the same
-pruning properties via hash buckets + sorted row groups):
+metadata but its jars are absent in this image — every table is instead
+point-readable on its key columns through the driver's per-file key
+directory, execution/driverexec.py, and sorted row groups):
 
   docs/        doc_id, uuid, repo, path, commit, lang, content, content_sha256
                — the doc store (S5/S7). sha256 column carries the per-row
-               invariant from BASELINE input_hint.
+               invariant from BASELINE input_hint. It is also the cursor
+               resolve's uuid → doc_id dictionary (keyed on uuid).
   docmeta/     doc_id + per-field doc lengths + numeric features (FIXTURES §2)
                — the "fast fields" (tantivy FAST flag, index.rs:193,199-200):
                parquet is already columnar, sort/filter/agg prune columns.
-  uuid_map/    uuid, doc_id, ubucket — the cursor resolve's side table.
   segments/    the inverted index: compressed block-max posting blocks with
                positions (build/segments.py), plus the champions/ and
                fastfields/ sidecars written in the same stage. It is the one
-               index format every query runs on.
-  term_stats/  field, term, bucket, df, cf — document/collection frequency
-               (A7), bucket = pmod(xxhash64(field, term), n_buckets) so a
-               df lookup reads one directory.
+               index format every query runs on. champions/ holds one row
+               per (field, term, shard) with n_total and cf, so it is also
+               the term dictionary: df = Σ n_total and cf = Σ cf per
+               (field, term) (A7; IndexReader.term_stats).
   index_stats/ one row per field: n_docs, total_len, avgdl (C1 inputs).
   manifest.json  lineage + per-stage metrics.
 
@@ -50,14 +51,11 @@ OPTIMIZATION_r07.md):
   segments stage: the posting rows are an in-flight lineage (one
                vectorized invert pass over tokenized/, never written) fed
                to the single-shuffle fused encode — see build/segments.py.
-  term_stats/  derived from the champion sidecar (one row per (field,
-               term, shard) carrying n_total=df and cf), by the same
-               function compaction uses (write_term_stats).
 
 Skew (SURVEY §7.4 risk 3): hot terms (code keywords) concentrate rows in a
 few (field, term) keys. The segment encode key includes shard, so a
-stopword's postings split over all doc shards. Per-bucket posting counts
-land in the manifest.
+stopword's postings split over all doc shards. Per-shard posting counts
+land in the manifest (`postings_per_shard`).
 """
 
 from __future__ import annotations
@@ -79,7 +77,6 @@ _log = logging.getLogger(__name__)
 
 TEXT_FIELDS = ("content", "path")  # multi-field index (C6 analog of
 # cantine's name/ingredients/instructions, cantine/src/index.rs:195-197)
-N_BUCKETS = 64
 
 # docmeta column order — pinned (features derive from this schema at open)
 DOCMETA_COLS = (
@@ -226,30 +223,6 @@ def write_index_stats(dest: str, rows: list[tuple]) -> None:
                    filesystem=fsys)
 
 
-def bucket_expr(field_col, term_col):
-    """Partition bucket for a (field, term) pair — must match query-side
-    computation in execution/executor.py so lookups prune directories."""
-    return F.pmod(F.xxhash64(field_col, term_col), F.lit(N_BUCKETS)).cast("int")
-
-
-def write_term_stats(spark: SparkSession, champions_dir: str,
-                     dest: str) -> None:
-    """term_stats (df, cf per (field, term), bucket-partitioned) from the
-    champion sidecar: it has exactly one row per (field, term, shard)
-    carrying the group's n_total (= its df) and cf, so df = Σ n_total and
-    cf = Σ cf over shards — ONE agg over a small table instead of a scan
-    of every posting. The batch build and compaction both write it here."""
-    (spark.read.parquet(champions_dir)
-     .groupBy("field", "term")
-     .agg(F.sum("n_total").cast("long").alias("df"),
-          F.sum("cf").cast("long").alias("cf"))
-     .withColumn("bucket", bucket_expr(F.col("field"), F.col("term")))
-     .repartition(N_BUCKETS, "bucket")
-     .sortWithinPartitions("bucket", "field", "term")
-     .write.mode("overwrite").partitionBy("bucket")
-     .parquet(dest))
-
-
 def invert_postings(tokenized: DataFrame) -> DataFrame:
     """(field, term, doc_id, tf, dl, positions) posting rows of the
     tokenized table — one frame per text field, unioned — the segment
@@ -340,7 +313,6 @@ def _dir_bytes(path: str) -> int:
 class IndexBuilder:
     spark: SparkSession
     index_dir: str
-    n_buckets: int = N_BUCKETS
     stages_run: list[str] = field(default_factory=list)
     stages_skipped: list[str] = field(default_factory=list)
 
@@ -389,8 +361,8 @@ class IndexBuilder:
         ).collect()[0]
         n_docs = int(fp_row["n"])
         fingerprint = hashlib.sha256(
-            f"v3:{n_docs}:{fp_row['keys_crc']}:{fp_row['content_bytes']}:"
-            f"{self.n_buckets}:{','.join(TEXT_FIELDS)}".encode()
+            f"v4:{n_docs}:{fp_row['keys_crc']}:{fp_row['content_bytes']}:"
+            f"{','.join(TEXT_FIELDS)}".encode()
         ).hexdigest()[:16]
         metrics: dict = {"n_docs": n_docs}
 
@@ -449,11 +421,23 @@ class IndexBuilder:
         dm_path = os.path.join(self.index_dir, "docmeta")
 
         def stage_docs():
-            run_stage("docs", docs_path, lambda: (
-                self._docs_df(tokenized)
-                .sortWithinPartitions("doc_id")
-                .write.mode("overwrite").parquet(docs_path)),
-                {"rows": n_docs})
+            def write_and_gate():
+                (self._docs_df(tokenized)
+                 .sortWithinPartitions("doc_id")
+                 .write.mode("overwrite").parquet(docs_path))
+                # ingest-time uniqueness gate: duplicate (repo, path) rows
+                # would share a uuid and make cursor resumes ambiguous (the
+                # reference's HashMap silently last-wins,
+                # readerwriter.rs:40-47 — we refuse). It runs inside the
+                # stage, so a docs marker certifies unique uuids.
+                dup = (spark.read.parquet(docs_path).groupBy("uuid").count()
+                       .filter(F.col("count") > 1).limit(1).collect())
+                if dup:
+                    raise ValueError(
+                        f"duplicate document identity (repo, path): uuid "
+                        f"{dup[0]['uuid']!r} maps to {dup[0]['count']} "
+                        f"doc_ids")
+            run_stage("docs", docs_path, write_and_gate, {"rows": n_docs})
 
         def stage_docmeta():
             run_stage("docmeta", dm_path, lambda: (
@@ -461,41 +445,6 @@ class IndexBuilder:
                 .sortWithinPartitions("doc_id")
                 .write.mode("overwrite").parquet(dm_path)),
                 {"rows": n_docs})
-
-        # uuid_map: the analog of the reference's in-memory uuid → id HashMap
-        # (cantine/src/database/readerwriter.rs:30-55). docs/ is doc_id-
-        # ordered, so a uuid lookup there scans everything; this side table
-        # is hash-bucketed by uuid → a cursor resolve reads ONE bucket
-        # directory (pruned by the driver-side pure-Python xxhash64).
-        # Independent of everything after docs/ — runs concurrently with
-        # index_stats + segments below and back-fills their task tails.
-        um_path = os.path.join(self.index_dir, "uuid_map")
-
-        def stage_uuid_map():
-            def write_and_gate():
-                docs_df = spark.read.parquet(docs_path)
-                # ingest-time uniqueness gate: duplicate (repo, path) rows
-                # would share a uuid and make cursor resumes ambiguous (the
-                # reference's HashMap silently last-wins,
-                # readerwriter.rs:40-47 — we refuse). It groups the flat
-                # docs/ table: a read of uuid_map's bucket directories
-                # would start a parallel file-listing job first.
-                dup = (docs_df.groupBy("uuid").count()
-                       .filter(F.col("count") > 1).limit(1).collect())
-                if dup:
-                    raise ValueError(
-                        f"duplicate document identity (repo, path): uuid "
-                        f"{dup[0]['uuid']!r} maps to {dup[0]['count']} "
-                        f"doc_ids")
-                (docs_df.select(
-                    "uuid", "doc_id",
-                    F.pmod(F.xxhash64("uuid"), F.lit(self.n_buckets))
-                     .cast("int").alias("ubucket"))
-                 .repartition(self.n_buckets, "ubucket")
-                 .sortWithinPartitions("ubucket", "uuid")
-                 .write.mode("overwrite").partitionBy("ubucket")
-                 .parquet(um_path))
-            run_stage("uuid_map", um_path, write_and_gate)
 
         is_path = os.path.join(self.index_dir, "index_stats")
 
@@ -520,52 +469,38 @@ class IndexBuilder:
         # query runs on (the reference's searcher IS its segment reader,
         # cantine/src/index.rs:69-129). Needs avgdl (index_stats) + the
         # posting ROWS, which the invert lineage streams straight into the
-        # encode shuffle — no posting table is written. (docs → uuid_map)
-        # ∥ docmeta overlap the index_stats → segments → term_stats chain;
-        # uuid_map reads docs/, so the two run as ONE sequential pool task.
-        from cantine_spark.build.segments import build_segments
+        # encode shuffle — no posting table is written. docs ∥ docmeta
+        # overlap the index_stats → segments chain.
+        from cantine_spark.build.segments import (
+            build_segments, load_segments_meta,
+        )
         seg_path = os.path.join(self.index_dir, "segments")
-        ts_path = os.path.join(self.index_dir, "term_stats")
         with ThreadPoolExecutor(max_workers=2) as pool:
-            docs_uuid_future = pool.submit(
-                lambda: (stage_docs(), stage_uuid_map()))
-            docmeta_future = pool.submit(stage_docmeta)
-            futures = [docs_uuid_future, docmeta_future]
+            futures = [pool.submit(stage_docs), pool.submit(stage_docmeta)]
             try:
-                docmeta_future.result()
+                futures[1].result()
                 stage_index_stats()
                 run_stage("segments", seg_path,
                           lambda: build_segments(
                               spark, self.index_dir, n_docs=n_docs,
                               postings_df=invert_postings(tokenized)))
-                run_stage("term_stats", ts_path, lambda: write_term_stats(
-                    spark, os.path.join(self.index_dir, "champions"),
-                    ts_path))
                 for f in futures:
                     f.result()
             except BaseException as exc:
                 _log_sibling_failures(futures, exc)
                 raise
 
-        # per-partition metrics: postings per term_stats bucket (skew
-        # visibility) — Σdf per bucket = Σn_total per bucket over the flat
-        # champion sidecar (one row per (field, term, shard)); a read of
-        # term_stats' bucket directories would start a file-listing job
-        champ = spark.read.parquet(os.path.join(self.index_dir, "champions"))
-        bucket_rows = {int(r["bucket"]): int(r["cnt"]) for r in
-                       champ.groupBy(bucket_expr(F.col("field"),
-                                                 F.col("term")).alias("bucket"))
-                       .agg(F.sum("n_total").alias("cnt")).collect()}
         manifest = {
             "version": 1,
             "fingerprint": fingerprint,
             "n_docs": n_docs,
             "text_fields": list(TEXT_FIELDS),
-            "n_buckets": self.n_buckets,
             "stages_run": self.stages_run,
             "stages_skipped": self.stages_skipped,
             "metrics": metrics,
-            "postings_rows_per_bucket": bucket_rows,
+            # skew visibility: postings per doc shard (segments meta)
+            "postings_per_shard": load_segments_meta(
+                self.index_dir)["postings_per_shard"],
             "built_at": time.time(),
         }
         fsutil.write_json(os.path.join(self.index_dir, "manifest.json"),

@@ -71,8 +71,8 @@ CHAMPIONS_SCHEMA = T.StructType([
     T.StructField("tail_tfnorm", T.DoubleType(), False),
     T.StructField("avgdl_build", T.DoubleType(), False),
     # collection frequency of the group (Σtf over ALL its postings, not
-    # just the champion heads) — term_stats derives from this small table
-    # (df = Σ n_total, cf = Σ cf over shards, builder.write_term_stats)
+    # just the champion heads) — the term dictionary reads this small
+    # table (df = Σ n_total, cf = Σ cf over shards, IndexReader.term_stats)
     T.StructField("cf", T.LongType(), False),
 ])
 

@@ -473,13 +473,17 @@ def build_segments(spark: SparkSession, index_dir: str,
         ff_future.result()
     seconds = round(time.time() - t0, 3)
 
-    # n_blocks without re-scanning the blob table: every (field, term,
-    # shard) group has exactly one champion row carrying its block count
-    ch = spark.read.parquet(champ_path)
-    n_blocks = int(ch.agg(F.sum("n_blocks")).collect()[0][0] or 0)
+    # block and posting counts per shard without re-scanning the blob
+    # table: every (field, term, shard) group has exactly one champion row
+    # carrying its block count and its posting count (n_total)
+    per_shard = (spark.read.parquet(champ_path).groupBy("shard")
+                 .agg(F.sum("n_blocks").alias("b"),
+                      F.sum("n_total").alias("p")).collect())
     meta = {"format": 2, "shard_span": span, "block_size": BLOCK_SIZE,
-            "n_blocks": n_blocks, "fastfields": True,
-            "encode_seconds": seconds}
+            "n_blocks": sum(int(r["b"]) for r in per_shard),
+            "postings_per_shard": {str(r["shard"]): int(r["p"])
+                                   for r in sorted(per_shard)},
+            "fastfields": True, "encode_seconds": seconds}
     fsutil.write_json(fsutil.join(out_path, "_SEGMENTS_META.json"), meta)
     # an in-place re-encode (tests with force=True; prod dirs are
     # immutable) must not leave stale driver-tier dataset/row caches

@@ -10,7 +10,7 @@ postings it needs straight off the mmap (cantine/src/index.rs:69-129).
 This module is the Spark-deployment analog of that direct read, the same
 move Trino/Presto make when a query's input is small enough to run on the
 coordinator: when the TOTAL posting count of a query's terms (known
-driver-side from term_stats — the df lookup is already a point read) fits
+driver-side from the term dfs — a key-directory lookup, `key_sums`) fits
 under a budget, the driver point-reads exactly those terms' segment rows
 with pyarrow and executes the UNMODIFIED per-shard kernel closure
 (wand.make_kernel) locally — zero Spark jobs, bit-equal results by
@@ -32,7 +32,7 @@ SQL.
 - Reads go through a cached KEY DIRECTORY per immutable table dir
   (`_TableDir`): the dir's parquet file list, each file's hive partition
   value and — loaded on first use of that file — its key columns
-  ((field, term[, shard]), or uuid for uuid_map), sorted for lookup,
+  ((field, term[, shard]), or uuid for the doc store), sorted for lookup,
   plus its row-group bounds. A
   read looks the wanted keys up in the directory and decodes only the
   row groups of the files that hold them (`ParquetFile.read_row_groups`
@@ -43,6 +43,13 @@ SQL.
   one shard lives in one segment file, so a one-term read decodes at most
   one segment file per shard that holds it; a shard task restricted to
   its shards never loads another shard's keys.
+- The same directory answers aggregate lookups without a decode:
+  `key_sums` returns Σ of an integer column per key (the term df is
+  Σ n_total over the champions table). Each file's column is read once,
+  on first use, and folded into one int64 per distinct key (8 B per key
+  and column, `np.add.reduceat` over the key order), so a warm lookup is
+  a binary search per file — the analog of the doc_freq tantivy stores
+  in the TermInfo next to the term.
 - The driver holds at most `budget` postings per query, a bounded row
   cache, and the key directories: O(distinct keys) bytes per table —
   one Python string (~66 B) per distinct key of a file plus ~16 B of
@@ -113,8 +120,9 @@ DRIVER_PERMITS = 2
 
 # process-wide count of driver-side reads that failed and fell back to a
 # Spark job: the driver tier and the champion read (→ cluster kernel), the
-# df lookup, hydration and the uuid resolve (→ Spark scan). Every fallback gives a correct but slower answer, so without
-# the count it would be invisible (ADVICE r6); bench and tests read it.
+# df lookup, hydration and the uuid resolve (→ Spark scan). Every fallback
+# gives a correct but slower answer, so without the count it would be
+# invisible (ADVICE r6); bench and tests read it.
 DRIVER_TIER_FALLBACKS = 0
 _FALLBACK_LOCK = threading.Lock()
 _log = logging.getLogger(__name__)
@@ -166,8 +174,8 @@ def _dir_token(path: str) -> tuple:
         return (path, None)
 
 
-# the key columns of segments, champions and term_stats; uuid_map is
-# keyed by ("uuid",)
+# the key columns of segments and champions; the doc store's uuid
+# resolve is keyed by ("uuid",)
 TERM_KEY = ("field", "term")
 
 
@@ -185,10 +193,12 @@ class _FileKeys:
     (`keys`), the file rows of key j at
     `order[bounds[j]:bounds[j+1]]` (ascending), the `shard` value of
     every row when the table is not hive-partitioned on shard
-    (champions), and the first row of every row group (`rg_bounds`, with
-    the row count appended)."""
+    (champions), the first row of every row group (`rg_bounds`, with
+    the row count appended), and, filled on first use per column, the
+    per-key sums of integer columns (`sums`)."""
 
-    __slots__ = ("meta", "keys", "order", "bounds", "shard", "rg_bounds")
+    __slots__ = ("meta", "keys", "order", "bounds", "shard", "rg_bounds",
+                 "sums")
 
     def __init__(self, fsys, path: str, key_cols: tuple[str, ...],
                  with_shard: bool):
@@ -215,14 +225,20 @@ class _FileKeys:
         np.cumsum([self.meta.row_group(g).num_rows
                    for g in range(self.meta.num_row_groups)],
                   out=self.rg_bounds[1:])
+        self.sums: dict[str, np.ndarray] = {}
 
-    def rows(self, wanted: np.ndarray) -> np.ndarray:
-        """Ascending file rows whose key is in `wanted` (sorted keys)."""
+    def find(self, wanted: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        """(hit, pos): which of `wanted` (sorted keys) this file holds,
+        and the key index of each hit."""
         pos = np.searchsorted(self.keys, wanted)
         hit = pos < len(self.keys)
         hit[hit] = self.keys[pos[hit]] == wanted[hit]
+        return hit, pos[hit]
+
+    def rows(self, wanted: np.ndarray) -> np.ndarray:
+        """Ascending file rows whose key is in `wanted` (sorted keys)."""
         runs = [self.order[self.bounds[j]:self.bounds[j + 1]]
-                for j in pos[hit]]
+                for j in self.find(wanted)[1]]
         if not runs:
             return np.empty(0, np.int32)
         return np.sort(np.concatenate(runs))
@@ -252,7 +268,7 @@ class _TableDir:
                 found.append((info.path, hive))
         found.sort(key=lambda f: f[0])
         self.paths = [p for p, _ in found]
-        # hive partition column (segments: shard, term_stats: bucket)
+        # hive partition column (segments, fastfields: shard)
         self.part_col = found[0][1][0][0] if found and found[0][1] else None
         self.part_vals = [int(h[0][1]) if h else None for _, h in found]
         self._keys: list[_FileKeys | None] = [None] * len(found)
@@ -317,6 +333,31 @@ class _TableDir:
             return pa.table({c: [] for c in columns})
         return self.schema.empty_table().select(columns)
 
+    def key_sums(self, keys, col: str) -> dict:
+        """Σ `col` per key of `keys` over every file of the dir, for the
+        keys some file holds. Each file's per-key sums are computed once
+        (one decode of `col`) and kept in its _FileKeys."""
+        wanted = _key_strings(keys, self.key_cols)
+        total = np.zeros(len(wanted), np.int64)
+        seen = np.zeros(len(wanted), bool)
+        for i in range(len(self.paths) if len(wanted) else 0):
+            fk = self.file_keys(i)
+            sums = fk.sums.get(col)
+            if sums is None:
+                vals = self._decode(
+                    i, fk, list(range(fk.meta.num_row_groups)), [col]
+                ).column(col).to_numpy().astype(np.int64)
+                sums = (np.add.reduceat(vals[fk.order], fk.bounds[:-1])
+                        if len(fk.keys) else np.zeros(0, np.int64))
+                fk.sums[col] = sums
+            hit, pos = fk.find(wanted)
+            total[hit] += sums[pos]
+            seen |= hit
+        if len(self.key_cols) == 1:
+            return {k: int(v) for k, v in zip(wanted[seen], total[seen])}
+        return {tuple(k.split("\0")): int(v)
+                for k, v in zip(wanted[seen], total[seen])}
+
     def _decode(self, i: int, fk: _FileKeys, groups: list[int],
                 columns: list[str]):
         """Decode row groups `groups` of file i — a read's only data
@@ -346,11 +387,19 @@ def read_keys(dir_path: str, terms, columns, parts=None,
               key_cols: tuple[str, ...] = TERM_KEY):
     """Point-read `columns` of the rows of `terms` from ONE table dir
     through its cached key directory (pyarrow table, file order) — the
-    reader read_rows uses per tier dir, also behind the driver-side
-    term-df lookup and, with key_cols=("uuid",), the cursor uuid resolve.
+    reader read_rows uses per tier dir and, with key_cols=("uuid",), the
+    cursor uuid resolve over the doc store.
     parts: as in _TableDir.read."""
     return _table_dir(dir_path, key_cols=key_cols).read(
         terms, list(columns), parts)
+
+
+def key_sums(dir_path: str, keys, col: str,
+             key_cols: tuple[str, ...] = TERM_KEY) -> dict:
+    """Σ `col` (an integer column) per key of `keys` over ONE table dir,
+    from its cached key directory — {key: sum} for the keys present; the
+    term-df lookup sums n_total over champions this way."""
+    return _table_dir(dir_path, key_cols=key_cols).key_sums(keys, col)
 
 
 def invalidate_caches() -> None:

@@ -1,8 +1,9 @@
 """Query-side table lookups around the segment kernel: term document
-frequencies (the analog of tantivy's term dictionary) and winner hydration
-from the doc store (J5). Both are point reads on the driver with a pruned
-Spark scan as the counted fallback; query evaluation itself is the segment
-kernel's (execution/wand.py).
+frequencies (the analog of tantivy's term dictionary, read from the
+champions table's key directory) and winner hydration from the doc store
+(J5). Both are point reads on the driver with a Spark read as the counted
+fallback; query evaluation itself is the segment kernel's
+(execution/wand.py).
 """
 
 from __future__ import annotations
@@ -51,29 +52,25 @@ class SearchExecutor:
 
     # ------------------------------------------------------------ term stats
     def term_dfs(self, terms: set[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """Document frequency per query term. The query has a handful of
-        terms; term_stats is bucket-partitioned + term-sorted, so this is a
-        pruned metadata-sized point lookup (the analog of tantivy's
-        term-dictionary/FST lookup). Results are cached per executor.
+        """Document frequency per query term (0 for an unknown term) —
+        the analog of the doc_freq tantivy keeps in the term dictionary
+        next to the term. Results are cached per executor.
 
-        Like hydrate_ids, the lookup runs DRIVER-SIDE with pyarrow when the
-        store is driver-readable — a cold term must not cost a Spark job's
-        scheduling floor on the serving path — falling back to the pruned
-        Spark scan otherwise."""
+        The lookup runs DRIVER-SIDE (_term_dfs_driver) — a cold term must
+        not cost a Spark job's scheduling floor on the serving path — and
+        falls back to a Spark read of the reader's term_stats view."""
         missing = {ft for ft in terms if ft not in self._df_cache}
         if missing:
             try:
                 found = self._term_dfs_driver(missing)
             except Exception:  # noqa: BLE001 — any driver-read issue → Spark
                 driverexec.note_fallback("term_dfs")
-                ts = self.reader.term_stats
                 cond = functools.reduce(
                     lambda a, b: a | b,
                     [(F.col("field") == f) & (F.col("term") == t)
                      for f, t in missing])
-                buckets = {self._bucket(f, t) for f, t in missing}
-                rows = (ts.filter(F.col("bucket").isin(*buckets)).filter(cond)
-                          .select("field", "term", "df").collect())
+                rows = (self.reader.term_stats.filter(cond)
+                        .select("field", "term", "df").collect())
                 found = {(r["field"], r["term"]): int(r["df"]) for r in rows}
             for ft in missing:
                 self._df_cache[ft] = found.get(ft, 0)
@@ -81,36 +78,18 @@ class SearchExecutor:
 
     def _term_dfs_driver(
             self, missing: set[tuple[str, str]]) -> dict[tuple[str, str], int]:
-        """df per (field, term) via driverexec.read_keys point reads of
-        the term_stats dirs restricted to the terms' bucket=K partitions
-        (the key directory is cached per immutable dir, like read_rows);
-        rows across dirs SUM (one dir per tier in a tiered reader —
-        integer sums equal its term_stats groupBy exactly). Routed through
-        pyarrow.fs (fsutil) so the same point read works on any index URI
-        — posix, file://, s3://, hdfs:// — not just local dirs (VERDICT r5
-        "what's wrong" #2); any failure still falls back to the pruned
-        Spark scan in term_dfs."""
-        from collections import defaultdict
-
-        roots = self.reader.term_stats_dirs()
-        buckets = {self._bucket(f, t) for f, t in missing}
-        out: dict[tuple[str, str], int] = defaultdict(int)
-        for d in roots:
-            tbl = driverexec.read_keys(d, missing, ("field", "term", "df"),
-                                       parts=buckets)
-            for f, t, df in zip(*(tbl.column(c).to_pylist()
-                                  for c in ("field", "term", "df"))):
-                out[(f, t)] += int(df)
-        return dict(out)
-
-    @staticmethod
-    def _bucket(field: str, term: str) -> int:
-        # mirror of build-side bucket_expr: xxhash64(field, term) % N_BUCKETS,
-        # computed driver-side with a bit-identical pure-Python XXH64
-        # (functions/xxhash.py, parity-tested) — zero Spark jobs per term.
-        from cantine_spark.build.builder import N_BUCKETS
-        from cantine_spark.functions.xxhash import bucket_of
-        return bucket_of(field, term, N_BUCKETS)
+        """df per (field, term) = Σ n_total over the term's champion rows
+        (one per shard the term occurs in), summed over every champions
+        dir (one per tier in a tiered reader; integer sums are exact) by
+        driverexec.key_sums: a binary search in the cached key directory,
+        no decode once a file's sums are loaded. Routed through pyarrow.fs
+        (fsutil), so it works on any index URI — posix, file://, s3://,
+        hdfs://."""
+        out: dict[tuple[str, str], int] = {}
+        for d in self.reader.champion_point_spec():
+            for ft, n in driverexec.key_sums(d, missing, "n_total").items():
+                out[ft] = out.get(ft, 0) + n
+        return out
 
     # -------------------------------------------------------------- hydration
     def hydrate_ids(self, ids: list[int],

@@ -4,9 +4,9 @@ cantine/src/index.rs:205-226): open the tables, assert the expected fields
 exist, expose cached collection statistics.
 
 Opening a reader checks that the index has a v2 segments table — the one
-index format every query runs on — and that its fast-field sidecar covers
-docmeta at the segments' shard span, rewriting a stale sidecar
-(open_segments)."""
+index format every query runs on — and a champions table (the term
+dictionary), and that its fast-field sidecar covers docmeta at the
+segments' shard span, rewriting a stale sidecar (open_segments)."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cantine_spark import fsutil
-from cantine_spark.build.builder import N_BUCKETS
 
 REQUIRED = {
     "docs": {"doc_id", "uuid", "repo", "path", "commit", "lang",
@@ -25,9 +24,8 @@ REQUIRED = {
     "docmeta": {"doc_id", "doc_len_content", "doc_len_path", "num_lines",
                 "num_tokens", "content_bytes", "num_functions", "num_imports",
                 "comment_ratio", "avg_line_len", "max_line_len"},
-    "term_stats": {"field", "term", "bucket", "df", "cf"},
     "index_stats": {"field", "n_docs", "total_len", "avgdl"},
-    "uuid_map": {"uuid", "doc_id", "ubucket"},
+    "champions": {"field", "term", "shard", "n_total", "cf"},
 }
 
 # NOTE: the filter/sort/agg feature set is NOT a hardcoded list — it is
@@ -42,12 +40,13 @@ class SchemaMismatch(Exception):
 
 def open_segments(spark: SparkSession, index_dir: str, docmeta_schema) -> int:
     """The shard span of a servable index dir. Raises SchemaMismatch when
-    the dir has no v2 segments table. Rewrites the fast-field sidecar with
-    the build's own writer (write_fastfields) when it is absent, was
-    written at another span, or lacks a numeric column of docmeta (Spark
-    schema `docmeta_schema`; a column added after the build): the sidecar
-    is where the kernel reads every filter, sort and agg value and the
-    candidates of match-all queries."""
+    the dir has no v2 segments table or no champions table. Rewrites the
+    fast-field sidecar with the build's own writer (write_fastfields) when
+    it is absent, was written at another span, or lacks a numeric column
+    of docmeta (Spark schema `docmeta_schema`; a column added after the
+    build): the sidecar is where the kernel reads every filter, sort and
+    agg value and the candidates of match-all queries."""
+    from cantine_spark.build.champions import load_champions_meta
     from cantine_spark.build.segments import (
         fastfield_columns, load_fastfields_meta, write_fastfields,
     )
@@ -62,6 +61,10 @@ def open_segments(spark: SparkSession, index_dir: str, docmeta_schema) -> int:
         raise SchemaMismatch(
             f"{index_dir} has a format-{meta.get('format', 1)} segments "
             "table without positions; rebuild the index (build_index)")
+    if load_champions_meta(index_dir) is None:
+        raise SchemaMismatch(
+            f"{index_dir} has no champions table (the term dictionary); "
+            "rebuild the index (build_index)")
     span = int(meta["shard_span"])
     ff = load_fastfields_meta(index_dir)
     cols = fastfield_columns(docmeta_schema)
@@ -99,18 +102,10 @@ class IndexReader:
         return self.table("docs")
 
     def doc_store_dirs(self) -> list[str]:
-        """Filesystem locations of the doc-store parquet — the executor's
-        driver-side point-lookup path (the reference's resident doc store,
-        readerwriter.rs:61-66) reads these directly with pyarrow."""
+        """Filesystem locations of the doc-store parquet — hydration and
+        the cursor uuid resolve (the reference's resident doc store,
+        readerwriter.rs:30-66) read these directly with pyarrow."""
         return [fsutil.join(self.index_dir, "docs")]
-
-    def term_stats_dirs(self) -> list[str]:
-        """Locations of the bucket-partitioned term dictionary — the
-        executor's driver-side df lookup (tantivy's in-memory term dict /
-        FST analog) point-reads bucket=K subdirs with pyarrow. Rows for
-        one (field, term) across the listed dirs SUM (a tiered reader
-        exposes one dir per tier; integer df sums are exact)."""
-        return [fsutil.join(self.index_dir, "term_stats")]
 
     @cached_property
     def docmeta(self) -> DataFrame:
@@ -118,7 +113,14 @@ class IndexReader:
 
     @cached_property
     def term_stats(self) -> DataFrame:
-        return self.table("term_stats")
+        """(field, term, df, cf), a view over the champions table: it has
+        one row per (field, term, shard) carrying the group's posting
+        count n_total and cf, so df = Σ n_total and cf = Σ cf (over every
+        tier, in a tiered reader). The driver-side df lookup reads the
+        same sums from the key directory (SearchExecutor.term_dfs)."""
+        return (self.table("champions").groupBy("field", "term")
+                .agg(F.sum("n_total").cast("long").alias("df"),
+                     F.sum("cf").cast("long").alias("cf")))
 
     @cached_property
     def features(self) -> dict:
@@ -145,17 +147,6 @@ class IndexReader:
     def num_docs(self) -> int:
         return next(iter(self.stats.values()))["n_docs"]
 
-    @cached_property
-    def uuid_map(self) -> DataFrame:
-        # graceful on pre-uuid_map indexes: a missing directory must raise a
-        # typed SchemaMismatch (not a raw AnalysisException from the parquet
-        # reader) so id_for_uuid can fall back to a doc-store scan (ADVICE r2)
-        if not fsutil.is_dir(fsutil.join(self.index_dir, "uuid_map")):
-            raise SchemaMismatch(
-                "index predates uuid_map (no uuid_map/ directory); rebuild "
-                "for O(1) cursor resolution")
-        return self.table("uuid_map")
-
     # ---- segment-path providers. FastTopK consumes the index through these
     #      methods (never through raw paths), so a reader that spans
     #      MULTIPLE tier directories (tiered.TieredIndexReader — the serving
@@ -179,13 +170,12 @@ class IndexReader:
 
     def champions_spec(self) -> dict | None:
         """Per-term champion sidecar descriptor {shard_span, cap}
-        (build/champions.py), or None when absent. FastTopK serves
-        single-term relevance top-k from it when the lossless tail bound
-        holds; span mismatch (stale sidecar after re-encode) disables it."""
+        (build/champions.py; opening the reader checked that it exists).
+        FastTopK serves single-term relevance top-k from it when the
+        lossless tail bound holds; span mismatch (stale sidecar after
+        re-encode) disables it."""
         from cantine_spark.build.champions import load_champions_meta
         m = load_champions_meta(self.index_dir)
-        if m is None:
-            return None
         return {"shard_span": int(m["shard_span"]), "cap": int(m["cap"])}
 
     # ---- point-read specs (execution/driverexec): the segments and
@@ -210,19 +200,11 @@ class IndexReader:
         doc_id = self.id_for_uuid(uuid)
         return None if doc_id is None else self.find_by_id(doc_id)
 
-    def uuid_map_dirs(self) -> list[str]:
-        """Locations of the hash-bucketed uuid→doc_id side table for the
-        driver-side cursor resolve (one ubucket=K point read per lookup)."""
-        return [fsutil.join(self.index_dir, "uuid_map")]
-
     def id_for_uuid(self, uuid: str) -> int | None:
-        """uuid → doc_id via the hash-bucketed uuid_map side table — the
-        analog of the reference's O(1) uuid HashMap (readerwriter.rs:30-55).
-        The bucket is computed driver-side (pure-Python xxhash64 parity with
-        the build-side Spark expression), so the lookup reads ONE bucket
-        regardless of corpus size: a driver-side point read on the serving
-        path (no Spark job's scheduling floor), a Spark scan as the
-        fallback, a full doc-store scan for indexes built before uuid_map.
+        """uuid → doc_id from the doc store — the analog of the reference's
+        uuid HashMap built over its doc store (readerwriter.rs:30-55): a
+        driver-side point read (no Spark job's scheduling floor on the
+        serving path), a Spark scan of docs/ as the counted fallback.
         Raises on duplicate uuids — a cursor must never silently resume
         from the wrong doc."""
         try:
@@ -233,41 +215,29 @@ class IndexReader:
             # lazy: cantine_spark.execution imports this module
             from cantine_spark.execution import driverexec  # noqa: PLC0415
             driverexec.note_fallback("id_for_uuid")
-        try:
-            um = self.uuid_map
-        except SchemaMismatch:
-            rows = (self.docs.filter(F.col("uuid") == uuid)
-                    .select("doc_id").limit(2).collect())
-        else:
-            from cantine_spark.functions.xxhash import spark_xxhash64_strings
-            n_buckets = int(self.manifest.get("n_buckets", N_BUCKETS))
-            b = spark_xxhash64_strings(uuid) % n_buckets
-            rows = (um.filter((F.col("ubucket") == b) & (F.col("uuid") == uuid))
-                    .limit(2).collect())
-        if not rows:
-            return None
-        if len(rows) > 1:
-            raise ValueError(f"duplicate uuid {uuid!r} in doc store")
-        return int(rows[0]["doc_id"])
+        rows = (self.docs.filter(F.col("uuid") == uuid)
+                .select("doc_id").limit(2).collect())
+        return _one_id(uuid, [r["doc_id"] for r in rows])
 
     def _id_for_uuid_driver(self, uuid: str) -> int | None:
-        """The uuid's `ubucket=K` rows of every uuid_map dir, point-read
-        through driverexec's cached key directory (keyed by uuid, like
-        the term-df lookup's term_stats read): no listing and no dataset
-        per call."""
+        """The uuid's rows of every doc-store dir, point-read through
+        driverexec's cached key directory keyed by uuid (each docs file's
+        uuid column is read and sorted once, on first use): no listing,
+        no dataset and no side table per call."""
         from cantine_spark.execution import driverexec  # noqa: PLC0415
-        from cantine_spark.functions.xxhash import spark_xxhash64_strings
 
-        n_buckets = int(self.manifest.get("n_buckets", N_BUCKETS))
-        b = spark_xxhash64_strings(uuid) % n_buckets
-        ids = [d for dir_ in self.uuid_map_dirs()
-               for d in driverexec.read_keys(
-                   dir_, {uuid}, ("uuid", "doc_id"), parts={b},
-                   key_cols=("uuid",)).column("doc_id").to_pylist()]
-        if len(ids) > 1:
-            raise ValueError(f"duplicate uuid {uuid!r} in doc store")
-        return int(ids[0]) if ids else None
+        return _one_id(uuid, [
+            d for dir_ in self.doc_store_dirs()
+            for d in driverexec.read_keys(
+                dir_, {uuid}, ("uuid", "doc_id"),
+                key_cols=("uuid",)).column("doc_id").to_pylist()])
 
     def uuid_for_id(self, doc_id: int) -> str | None:
         row = self.find_by_id(doc_id)
         return row["uuid"] if row else None
+
+
+def _one_id(uuid: str, ids: list) -> int | None:
+    if len(ids) > 1:
+        raise ValueError(f"duplicate uuid {uuid!r} in doc store")
+    return int(ids[0]) if ids else None

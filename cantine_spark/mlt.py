@@ -12,7 +12,7 @@ Semantics pinned by the reference:
   (topterms.rs:213-241).
 
 The input text is driver-sized (one document), so extraction is a pandas
-value_counts plus ONE pruned term_stats lookup — no distributed work until
+value_counts plus ONE driver-side term-df lookup — no distributed work until
 the resulting query runs.
 """
 

@@ -345,7 +345,8 @@ def range_stats_sql() -> str:
 
 
 # ======================================================================
-# A7: document frequency per term (term_stats build step)
+# A7: document frequency per term (the engine's term dictionary: Σ n_total
+# over the champions table)
 # ======================================================================
 
 def doc_freq(spark, sf_dir, min_df=5) -> DataFrame:
@@ -596,9 +597,9 @@ stats AS (
 
 def topk_page2(spark, sf_dir, term="table", page=10) -> DataFrame:
     """T5 through the real engine: page 1 emits a wire-format cursor whose
-    uuid resolves via the hash-bucketed uuid_map; page 2 applies the
-    pagination condition inside the kernel. Equals OFFSET under the total
-    order (score f32 desc, doc_id asc)."""
+    uuid resolves through the doc store's uuid key directory; page 2
+    applies the pagination condition inside the kernel. Equals OFFSET
+    under the total order (score f32 desc, doc_id asc)."""
     eng = _engine(spark, sf_dir)
     r1 = eng.search({"fulltext": term, "num_items": page})
     if r1.next is None:
@@ -805,7 +806,8 @@ ORDER BY range_idx
 
 
 # ======================================================================
-# C4: TopTerms keyword extraction (tf·idf over one doc, df from term_stats)
+# C4: TopTerms keyword extraction (tf·idf over one doc, df from the term
+# dictionary)
 # ======================================================================
 
 TOPTERMS_DOC_ID = 7
@@ -816,7 +818,8 @@ def top_terms(spark, sf_dir, doc_id=TOPTERMS_DOC_ID,
               limit=TOPTERMS_LIMIT) -> DataFrame:
     """C4 through the REAL engine (VERDICT r2 next-round #7): keyword
     score = tf_in_input · ln(1+(N−df+0.5)/(df+0.5)) with df from the
-    engine's bucket-pruned term_stats and the check_sim acceptor (df>5,
+    engine's term dictionary (SearchExecutor.term_dfs: Σ n_total per term
+    from the champions key directory) and the check_sim acceptor (df>5,
     len>4) — tique/src/topterms.rs:160-209 + check_sim.rs:86-98. Descending
     score, term-asc tie-break."""
     from cantine_spark.mlt import TopTerms, check_sim_acceptor
@@ -835,7 +838,7 @@ def top_terms(spark, sf_dir, doc_id=TOPTERMS_DOC_ID,
 def top_terms_sql(doc_id=TOPTERMS_DOC_ID, limit=TOPTERMS_LIMIT) -> str:
     # engine tokenizer on ASCII text ≡ [a-z0-9]+ on lower() with tokens
     # >= 40 bytes dropped (analysis.py tantivy TEXT pipeline); df counts
-    # docs whose token SET contains the term — identical to term_stats
+    # docs whose token SET contains the term — identical to the engine's df
     return f"""
 WITH tok AS (
   SELECT doc_id,

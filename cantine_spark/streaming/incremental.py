@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from cantine_spark import fsutil
 
 from cantine_spark.build.builder import (
-    N_BUCKETS, TEXT_FIELDS, IndexBuilder, write_index_stats, write_term_stats,
+    TEXT_FIELDS, IndexBuilder, write_index_stats,
 )
 from cantine_spark.build.champions import write_champions
 from cantine_spark.build.merge import merge_segments
@@ -57,7 +57,7 @@ class StreamingIndexer:
     # ------------------------------------------------------------- ingest
     def commit_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """One streaming commit: assign ids past the watermark, build a full
-        generation (docs/docmeta/uuid_map/index_stats/segments/term_stats).
+        generation (docs/docmeta/index_stats/segments and its sidecars).
         Idempotent per epoch — redelivered batches are skipped."""
         state = self._load_state()
         if any(g["epoch"] == epoch_id for g in state["generations"]):
@@ -144,15 +144,6 @@ class StreamingIndexer:
                 max(4, spark.sparkContext.defaultParallelism), "doc_id")
              .sortWithinPartitions("doc_id")
              .write.mode("overwrite").parquet(os.path.join(out, name)))
-        docs_u = spark.read.parquet(os.path.join(out, "docs"))
-        (docs_u.select(
-            "uuid", "doc_id",
-            F.pmod(F.xxhash64("uuid"), F.lit(N_BUCKETS)).cast("int")
-            .alias("ubucket"))
-         .repartition(N_BUCKETS, "ubucket")
-         .sortWithinPartitions("ubucket", "uuid")
-         .write.mode("overwrite").partitionBy("ubucket")
-         .parquet(os.path.join(out, "uuid_map")))
 
         dm = spark.read.parquet(os.path.join(out, "docmeta"))
         # one agg job covers every field; the TEXT_FIELDS-row result is
@@ -182,10 +173,6 @@ class StreamingIndexer:
         # rescales by max(1, avgdl_global/avgdl_tier), mirroring the tiered
         # block-max rescale
         write_champions(spark, out, avgdl, span)
-        # term_stats from the merged champions (Σ n_total, Σ cf), as the
-        # batch build does
-        write_term_stats(spark, os.path.join(out, "champions"),
-                         os.path.join(out, "term_stats"))
 
         if covered is None:
             covered = self._load_state()["generations"]
@@ -194,12 +181,12 @@ class StreamingIndexer:
                          max(int(g["first_doc_id"]) + int(g["n_docs"])
                              for g in covered)]
         else:  # fallback: one tiny agg over the (range-partitioned) docs
-            r = docs_u.agg(F.min("doc_id"), F.max("doc_id")).collect()[0]
+            r = (spark.read.parquet(os.path.join(out, "docs"))
+                 .agg(F.min("doc_id"), F.max("doc_id")).collect()[0])
             doc_range = [int(r[0]), int(r[1]) + 1]
         manifest = {"version": 1, "n_docs": n_docs,
                     "fingerprint": f"compacted-{len(gens)}",
                     "text_fields": list(TEXT_FIELDS),
-                    "n_buckets": N_BUCKETS,
                     "shard_span": span,
                     "doc_id_range": doc_range,
                     "generations": covered,

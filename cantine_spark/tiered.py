@@ -21,7 +21,8 @@ Why the union is exact (bit-identical to full compaction):
 - **scoring**: exact BM25 uses per-posting tf/dl (stored exact) with GLOBAL
   stats computed here — n_docs/total_len summed over tiers (integer sums →
   avgdl is bit-identical to the merged index's), df summed over tiers'
-  term_stats. So scores equal the fully-compacted index's scores exactly.
+  champions (Σ n_total). So scores equal the fully-compacted index's
+  scores exactly.
 - **block-max bounds**: each tier's blocks store max_tfnorm computed with
   that tier's OWN avgdl at encode time. tfnorm is monotone increasing in
   avgdl (tf·(k1+1)/(tf+K1·(1-B+B·dl/avgdl))), and for a_new ≥ a_old,
@@ -43,7 +44,6 @@ from pyspark.sql import functions as F
 
 from cantine_spark import fsutil
 
-from cantine_spark.build.builder import N_BUCKETS
 from cantine_spark.build.segments import load_fastfields_meta, load_segments_meta
 from cantine_spark.index import (
     REQUIRED, IndexReader, SchemaMismatch, open_segments,
@@ -52,8 +52,8 @@ from cantine_spark.index import (
 
 class TieredIndexReader(IndexReader):
     """IndexReader over an ordered list of tier directories (each a complete
-    index: docs/docmeta/uuid_map/term_stats/index_stats/segments/champions/
-    fastfields). Tiers must share shard_span and n_buckets and cover
+    index: docs/docmeta/index_stats/segments/champions/fastfields). Tiers
+    must share shard_span and cover
     disjoint doc_id ranges, ascending in list order."""
 
     def __init__(self, spark: SparkSession, tier_dirs: list[str]):
@@ -80,11 +80,6 @@ class TieredIndexReader(IndexReader):
                     f"tier doc_id ranges overlap or are out of order: "
                     f"[{a_lo},{a_hi}) then [{b_lo},{b_hi})")
         self._ranges = ranges
-        buckets = {int(self._tier_manifest(d).get("n_buckets", N_BUCKETS))
-                   for d in self.tier_dirs}
-        if len(buckets) > 1:
-            raise SchemaMismatch(f"tiers disagree on n_buckets: {buckets}")
-        self._n_buckets = buckets.pop()
 
     def _tier_manifest(self, d: str) -> dict:
         return fsutil.read_json(fsutil.join(d, "manifest.json"))
@@ -120,21 +115,6 @@ class TieredIndexReader(IndexReader):
         return df
 
     @cached_property
-    def term_stats(self) -> DataFrame:
-        # a term present in several tiers has one row per tier — re-aggregate
-        # so term_dfs sees the GLOBAL df/cf (integer sums, exact)
-        return (self._union("term_stats")
-                .groupBy("field", "term", "bucket")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf")))
-
-    @cached_property
-    def uuid_map(self) -> DataFrame:
-        for d in self.tier_dirs:
-            if not fsutil.is_dir(fsutil.join(d, "uuid_map")):
-                raise SchemaMismatch(f"tier {d} predates uuid_map")
-        return self.table("uuid_map")
-
-    @cached_property
     def tier_stats(self) -> list[dict]:
         """Per-tier per-field {n_docs, total_len, avgdl} (encode-time)."""
         out = []
@@ -166,7 +146,6 @@ class TieredIndexReader(IndexReader):
         tiers = [self._tier_manifest(d) for d in self.tier_dirs]
         return {"version": 1, "tiered": True,
                 "n_docs": sum(int(t["n_docs"]) for t in tiers),
-                "n_buckets": self._n_buckets,
                 "text_fields": tiers[0].get("text_fields"),
                 "tiers": [{"dir": d, "n_docs": int(t["n_docs"]),
                            "doc_id_range": list(r)}
@@ -180,18 +159,10 @@ class TieredIndexReader(IndexReader):
         return m
 
     def doc_store_dirs(self) -> list[str]:
-        return [fsutil.join(d, "docs") for d in self.tier_dirs]
-
-    def term_stats_dirs(self) -> list[str]:
-        # one dir per tier — the executor's driver-side df lookup sums the
-        # per-tier rows, matching this class's term_stats groupBy-SUM
-        return [fsutil.join(d, "term_stats") for d in self.tier_dirs]
-
-    def uuid_map_dirs(self) -> list[str]:
         # a uuid lives in exactly one tier (disjoint doc ranges + per-build
-        # uniqueness gate); reading every tier's bucket preserves the
-        # duplicate-uuid invariant check across tiers
-        return [fsutil.join(d, "uuid_map") for d in self.tier_dirs]
+        # uniqueness gate); the uuid resolve reads every tier, so a
+        # duplicate across tiers still raises
+        return [fsutil.join(d, "docs") for d in self.tier_dirs]
 
     def fastfields_spec(self) -> dict:
         metas = [load_fastfields_meta(d) for d in self.tier_dirs]
@@ -204,16 +175,13 @@ class TieredIndexReader(IndexReader):
                                                      self.tier_dirs)]}
 
     def champions_spec(self) -> dict | None:
-        """Champion sidecar across tiers: available only when EVERY tier
-        carries one at the shared span (a tier built pre-champions would
-        make the union lossy — fall back to the block kernel). No avgdl
-        rescale is needed here: each champion row stores its tier's
+        """Champion sidecar across tiers (every tier has one: _open
+        checks it), or None unless every tier's is at the shared span. No
+        avgdl rescale is needed here: each champion row stores its tier's
         avgdl_build, and the query-side tail bound applies
         max(1, avgdl_global/avgdl_build) per row (wand._champ_row_frame)."""
         from cantine_spark.build.champions import load_champions_meta
         metas = [load_champions_meta(d) for d in self.tier_dirs]
-        if any(m is None for m in metas):
-            return None
         if {int(m["shard_span"]) for m in metas} != {self._span}:
             return None
         return {"shard_span": self._span,
@@ -243,5 +211,6 @@ class TieredIndexReader(IndexReader):
 
     def champion_point_spec(self) -> list[str]:
         # no rescale: champion rows store avgdl_build, the query-side tail
-        # bound applies the drift factor per row (wand._champ_row_frame)
+        # bound applies the drift factor per row (wand._champ_row_frame);
+        # the term-df lookup sums n_total over these dirs
         return [fsutil.join(d, "champions") for d in self.tier_dirs]

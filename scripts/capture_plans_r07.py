@@ -52,15 +52,6 @@ def main() -> None:
             ib._docs_df(tokenized).sortWithinPartitions("doc_id"))
         plans["build_docmeta"] = fmt(
             ib._docmeta_df(tokenized).sortWithinPartitions("doc_id"))
-        ch = spark.read.parquet(os.path.join(idx, "champions"))
-        plans["build_term_stats"] = fmt(
-            ch.groupBy("field", "term")
-            .agg(F.sum("n_total").cast("long").alias("df"),
-                 F.sum("cf").cast("long").alias("cf"))
-            .withColumn("bucket", B.bucket_expr(F.col("field"),
-                                                F.col("term")))
-            .repartition(ib.n_buckets, "bucket")
-            .sortWithinPartitions("bucket", "field", "term"))
     else:  # legacy tree
         par = spark.sparkContext.defaultParallelism
         plans["build_docs"] = fmt(
@@ -72,13 +63,6 @@ def main() -> None:
             ib._docmeta_df(tokenized)
             .repartitionByRange(max(4, par // 2), "doc_id")
             .sortWithinPartitions("doc_id"))
-        post = spark.read.parquet(os.path.join(idx, "postings"))
-        plans["build_term_stats"] = fmt(
-            post.groupBy("field", "term", "bucket")
-            .agg(F.count("*").cast("long").alias("df"),
-                 F.sum("tf").cast("long").alias("cf"))
-            .repartition(ib.n_buckets, "bucket")
-            .sortWithinPartitions("bucket", "field", "term"))
 
     # segments encode input→output shape (2 Exchange → 1 claim); a tree
     # without a written posting table encodes the invert lineage

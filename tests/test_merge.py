@@ -86,7 +86,7 @@ def test_build_resume_skips_completed_stages(spark, tmp_path_factory):
     b2.build(corpus)
     assert b2.stages_run == []
     assert set(b2.stages_skipped) >= {"docs", "docmeta", "segments",
-                                      "term_stats", "index_stats"}
+                                      "index_stats"}
 
     # simulate a crash mid-build: segments stage marker lost → only that
     # stage re-runs; output identical
@@ -165,8 +165,8 @@ def test_build_rejects_duplicate_identity(spark, tmp_path_factory):
 
 def test_stage_marker_records_metrics(spark, tmp_path_factory):
     """Stage markers carry their stage's metrics, and a resumed build that
-    skips every stage leaves them intact; the manifest's per-bucket posting
-    counts sum to Σdf of term_stats."""
+    skips every stage leaves them intact; the manifest's per-shard posting
+    counts sum to Σdf of the reader's term_stats."""
     import json
 
     d = str(tmp_path_factory.mktemp("marker"))
@@ -176,9 +176,9 @@ def test_stage_marker_records_metrics(spark, tmp_path_factory):
     with open(marker_path) as f:
         m1 = json.load(f)
     assert m1["metrics"]["n_blocks"] > 0 and m1["metrics"]["format"] == 2
-    n_postings = int(spark.read.parquet(os.path.join(d, "term_stats"))
+    n_postings = int(IndexReader(spark, d).term_stats
                      .agg(F.sum("df")).collect()[0][0])
-    assert sum(man["postings_rows_per_bucket"].values()) == n_postings
+    assert sum(man["postings_per_shard"].values()) == n_postings
     b2 = IndexBuilder(spark, d)
     b2.build(corpus)
     assert "segments" in b2.stages_skipped
@@ -188,21 +188,11 @@ def test_stage_marker_records_metrics(spark, tmp_path_factory):
     corpus.unpersist()
 
 
-def test_uuid_resolution_on_index_without_uuid_map(spark, index_dir,
-                                                   tmp_path_factory):
-    """ADVICE r2: opening an index that predates uuid_map must not crash
-    cursor resolution with a raw AnalysisException — id_for_uuid falls back
-    to a doc-store scan; the uuid_map property raises a typed error."""
-    import shutil
-
-    from cantine_spark.index import SchemaMismatch
-
-    d = str(tmp_path_factory.mktemp("legacy") / "idx")
-    shutil.copytree(index_dir, d)
-    shutil.rmtree(os.path.join(d, "uuid_map"))
-    r = IndexReader(spark, d)
-    with pytest.raises(SchemaMismatch, match="predates uuid_map"):
-        _ = r.uuid_map
-    row = r.docs.orderBy("doc_id").limit(1).collect()[0]
-    assert r.id_for_uuid(row["uuid"]) == int(row["doc_id"])
-    assert r.id_for_uuid("00000000000000000000000000000000") is None
+def test_build_writes_no_side_tables(index_dir):
+    """The term dictionary is the champions table and the uuid resolve
+    reads the doc store: a build writes no term_stats/ or uuid_map/ table
+    and no hash-bucket (bucket= / ubucket=) dir."""
+    for root, dirs, _ in os.walk(index_dir):
+        for name in dirs:
+            assert name not in ("term_stats", "uuid_map"), root
+            assert not name.startswith(("bucket=", "ubucket=")), root

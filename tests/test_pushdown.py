@@ -39,18 +39,25 @@ def test_docs_point_lookup_is_pushed(reader):
     assert "content" not in schema, "point lookup read the content column"
 
 
-def test_uuid_map_lookup_reads_one_bucket(reader):
-    from cantine_spark.functions.xxhash import spark_xxhash64_strings
-    row = reader.docs.select("uuid").first()
-    uuid = row["uuid"]
-    b = spark_xxhash64_strings(uuid) % int(reader.manifest["n_buckets"])
-    df = reader.uuid_map.filter(
-        (F.col("ubucket") == b) & (F.col("uuid") == uuid))
-    plan = plan_of(df)
-    pf = plan.split("PartitionFilters", 1)[1].split("]", 1)[0]
-    assert "ubucket" in pf, "uuid resolve must prune to one bucket directory"
-    # and the resolve itself works through the engine surface
-    assert reader.id_for_uuid(uuid) is not None
+def test_cursor_resolve_starts_no_spark_job(spark, reader):
+    """A page-2 cursor's uuid resolves on the driver from the doc store's
+    uuid key directory — cold (first use on a fresh reader) and warm, for
+    a hit and a miss — without starting a Spark job or falling back."""
+    from cantine_spark.execution import driverexec
+    from cantine_spark.index import IndexReader
+
+    rows = reader.docs.select("uuid", "doc_id").limit(3).collect()
+    fresh = IndexReader(spark, reader.index_dir)
+    driverexec.invalidate_caches()
+    tracker = spark.sparkContext.statusTracker()
+    fallbacks = driverexec.DRIVER_TIER_FALLBACKS
+    before = sorted(tracker.getJobIdsForGroup())
+    for _ in range(2):
+        for r in rows:
+            assert fresh.id_for_uuid(r["uuid"]) == int(r["doc_id"])
+        assert fresh.id_for_uuid("0" * 32) is None
+    assert sorted(tracker.getJobIdsForGroup()) == before
+    assert driverexec.DRIVER_TIER_FALLBACKS == fallbacks
 
 
 def test_kernel_scan_prunes_positions_for_term_queries(reader, monkeypatch):

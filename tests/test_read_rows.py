@@ -312,3 +312,78 @@ def test_dir_without_files_reads_nothing(tmp_path):
     tbl = driverexec.read_keys(str(tmp_path), {("content", "def")},
                                ("field", "term", "df"), parts={3})
     assert tbl.num_rows == 0 and tbl.column_names == ["field", "term", "df"]
+
+
+# ---- key_sums: per-key sums of an integer column from the key directory ----
+
+def brute_sums(d, keys, col, key_cols=driverexec.TERM_KEY) -> dict:
+    """key_sums' contract by hand: a pandas groupby-sum of `col` over the
+    dir's full table, restricted to the wanted keys present in it."""
+    full = pads.dataset(d, format="parquet", partitioning="hive").to_table(
+        columns=[*key_cols, col]).to_pandas()
+    key = (list(zip(*(full[c] for c in key_cols))) if len(key_cols) > 1
+           else list(full[key_cols[0]]))
+    sums = full[col].groupby(pd.Series(key, index=full.index,
+                                       dtype=object)).sum()
+    return {k: int(v) for k, v in sums.items() if k in keys}
+
+
+def _write_uuid_dir(root, rnd) -> tuple[str, list[str]]:
+    """Flat files keyed by a one-column uuid, unsorted, small row groups;
+    some uuids occur in several files."""
+    root.mkdir(parents=True)
+    uuids = [f"{rnd.getrandbits(64):016x}" for _ in range(30)]
+    for i in range(N_FILES):
+        part = [{"uuid": rnd.choice(uuids), "doc_id": rnd.randint(0, 999)}
+                for _ in range(25)]
+        pq.write_table(pa.Table.from_pylist(part),
+                       root / f"part-{i:05d}.parquet", row_group_size=6)
+    return str(root), uuids
+
+
+def test_key_sums_match_groupby(fixture):
+    """Multi-file (a term in several shard dirs), multi-row-group, sorted
+    and unsorted files, with absent keys mixed in; cold and warm."""
+    rnd = random.Random(21)
+    vocab = fixture["vocab"]
+    absent = [("content", "nope"), ("path", "t000x"), ("nofield", "t001")]
+    dirs = ((fixture["seg"], "n_docs"), (fixture["seg_tier2"], "n_docs"),
+            (fixture["champ"], "n_total"))
+    driverexec.invalidate_caches()
+    for d, col in dirs:
+        every = set(vocab) | set(absent)
+        assert driverexec.key_sums(d, every, col) == brute_sums(d, every, col)
+    for _ in range(30):
+        keys = set(rnd.sample(vocab, rnd.randint(1, 8)))
+        keys |= set(rnd.sample(absent, rnd.randint(0, 2)))
+        for d, col in dirs:
+            assert driverexec.key_sums(d, keys, col) == \
+                brute_sums(d, keys, col)
+    assert driverexec.key_sums(fixture["seg"], set(absent), "n_docs") == {}
+
+
+def test_key_sums_one_column_key(tmp_path):
+    d, uuids = _write_uuid_dir(tmp_path / "uuids", random.Random(22))
+    keys = set(uuids[::2]) | {"absent-uuid"}
+    driverexec.invalidate_caches()
+    got = driverexec.key_sums(d, keys, "doc_id", key_cols=("uuid",))
+    assert got == brute_sums(d, keys, "doc_id", ("uuid",)) and got
+
+
+def test_key_sums_decode_each_file_once(fixture, spy):
+    """The column is decoded once per file, on first use; later lookups
+    of other keys are answered from the stored sums."""
+    vocab = fixture["vocab"]
+    driverexec.key_sums(fixture["seg"], set(vocab[:3]), "n_docs")
+    decoded = [p for p, _ in spy["decoded"]]
+    assert decoded and len(decoded) == len(set(decoded))
+    spy["decoded"].clear()
+    driverexec.key_sums(fixture["seg"], set(vocab[3:]), "n_docs")
+    assert spy["decoded"] == []
+
+
+def test_key_sums_of_empty_dir(tmp_path):
+    (tmp_path / "_SUCCESS").write_text("")
+    driverexec.invalidate_caches()
+    assert driverexec.key_sums(str(tmp_path), {("content", "def")},
+                               "n_total") == {}

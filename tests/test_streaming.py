@@ -80,11 +80,11 @@ def test_compacted_index_is_correct(spark, stream_env):
 
 
 def test_compaction_matches_fresh_build(spark, stream_env, tmp_path_factory):
-    """compact_dirs derives the shard span and term_stats by the batch
-    build's own rules (default_span; Σ n_total / Σ cf over the merged
-    champions): the compacted index's span and term_stats equal a fresh
-    build's over the same docs, and no commit or merge writes a posting
-    table."""
+    """compact_dirs derives the shard span and the champions by the batch
+    build's own rules (default_span; one champion row per (field, term,
+    shard)): the compacted index's span and term_stats view (Σ n_total /
+    Σ cf over its champions) equal a fresh build's over the same docs,
+    and no commit or merge writes a posting table or a side table."""
     from cantine_spark.build.builder import build_index
     from cantine_spark.build.segments import load_segments_meta
 
@@ -99,14 +99,14 @@ def test_compaction_matches_fresh_build(spark, stream_env, tmp_path_factory):
     assert load_segments_meta(out)["shard_span"] == span
 
     def term_stats(d):
-        return sorted(tuple(r) for r in spark.read.parquet(
-            os.path.join(d, "term_stats"))
-            .select("field", "term", "bucket", "df", "cf").collect())
+        return sorted(tuple(r) for r in IndexReader(spark, d).term_stats
+                      .select("field", "term", "df", "cf").collect())
 
     assert term_stats(out) == term_stats(fresh)
     dirs = [out, fresh] + [g["dir"] for g in
                            indexer._load_state()["generations"]]
-    assert not any(os.path.exists(os.path.join(d, "postings")) for d in dirs)
+    assert not any(os.path.exists(os.path.join(d, t)) for d in dirs
+                   for t in ("postings", "term_stats", "uuid_map"))
 
 
 def test_cursor_survives_compaction_refresh(spark, tmp_path_factory):

@@ -97,7 +97,7 @@ def test_tiered_agg_equals_compacted(engines):
 
 def test_tiered_cursor_walk_equals_compacted(engines):
     """Exhaustive pagination: both engines walk identical pages to the end
-    (cursor resolution crosses tiers via the unioned uuid_map)."""
+    (cursor resolution crosses tiers via every tier's doc store)."""
     e_full, e_tier = engines
     q = {"fulltext": "def return", "num_items": 7}
     seen_full, seen_tier = [], []
@@ -182,6 +182,31 @@ def test_tiered_point_lookups(spark, tiered_env):
     for row in probe:
         assert r_tier.id_for_uuid(row["uuid"]) == row["doc_id"]
         assert r_tier.find_by_id(row["doc_id"])["uuid"] == row["uuid"]
+
+
+def test_term_dfs_equal_oracle(spark, tiered_env):
+    """The driver-side df lookup (Σ n_total from the champions key
+    directory, summed over tiers) equals the oracle's df for every
+    (field, term) on the compacted reader and on the two-tier reader,
+    and 0 for unknown terms."""
+    from cantine_spark.build.builder import TEXT_FIELDS
+    from cantine_spark.execution import driverexec
+    from cantine_spark.execution.executor import SearchExecutor
+    from cantine_spark.oracle import OracleIndex
+
+    full_dir, tiers, _, _ = tiered_env
+    r_full = IndexReader(spark, full_dir)
+    corpus = (r_full.docs.select("doc_id", *TEXT_FIELDS).toPandas()
+              .sort_values("doc_id").reset_index(drop=True))
+    oracle = OracleIndex.build(corpus, list(TEXT_FIELDS))
+    want = {(f, t): len(p) for f in oracle.fields
+            for t, p in oracle.tfs[f].items()}
+    unknown = {("content", "zzznope"), ("path", "qqqmissing")}
+    fallbacks = driverexec.DRIVER_TIER_FALLBACKS
+    for r in (r_full, TieredIndexReader(spark, tiers)):
+        got = SearchExecutor(r).term_dfs(set(want) | unknown)
+        assert got == {**want, **{ft: 0 for ft in unknown}}
+    assert driverexec.DRIVER_TIER_FALLBACKS == fallbacks
 
 
 def test_tiered_validation_errors(spark, tiered_env):
